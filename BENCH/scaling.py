@@ -20,8 +20,8 @@ Protocol notes (all measured, see BENCH/BASELINE.md):
 
 ``--real-frac`` mixes replicated REAL reference-fixture documents (court
 PDFs/DOCs, ~50 ms/doc vs ~0.2 ms/doc synthetic — a 250× per-row cost
-skew) into the corpus and A/Bs the map-only plan against the salted
-size-bucket ``skew_repartition`` plan at both parallelism levels.  This
+skew) into the corpus and A/Bs the map-only plan against the url-hash
+``skew_repartition`` shuffle plan at both parallelism levels.  This
 is the 100-TB rehearsal: a real crawl's cost distribution, not the
 uniform synthetic one.  With real docs the corpus should be smaller
 (they dominate compute): ``--n-docs 72000 --real-frac 0.1`` ≈ 360

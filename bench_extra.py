@@ -22,6 +22,22 @@ import time
 from pathlib import Path
 
 
+def parse_extra_conf(spec: str) -> dict[str, str]:
+    """Ad-hoc conf A/B: ``SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"``.
+
+    Entries split on ``;`` so values may hold commas (JVM option lists).
+    An entry without ``=`` or with an empty key is an error."""
+    conf = {}
+    for kv in filter(None, (e.strip() for e in spec.split(";"))):
+        k, sep, v = kv.partition("=")
+        if not sep or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF entry {kv!r} is not of the form key=value"
+            )
+        conf[k.strip()] = v.strip()
+    return conf
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -44,10 +60,7 @@ def main() -> None:
         "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     }
-    # ad-hoc conf A/B: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2"
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(",")):
-        k, _, v = kv.partition("=")
-        conf[k.strip()] = v.strip()
+    conf.update(parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")))
     spark = get_spark("doctor_spark-bench-extra", cores=cpus, extra_conf=conf)
     # same warmup as bench.py
     for t in ("documents", "embeddings", "events", "lineitem", "orders"):

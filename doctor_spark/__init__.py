@@ -11,8 +11,10 @@ re-expressed Spark-first:
   that run those kernels over an Iceberg/parquet table of Common-Crawl-style
   pages ``(url, warc_ts, html, text, lang)``;
 - a batch pipeline (``doctor_spark.pipeline``) with classify-then-parse
-  staging, salted size-bucketed repartitioning for skew, per-partition
-  lineage + metrics, and manifest-based resumable writes;
+  staging, a url-hash repartition that spreads extraction cost, a
+  day-grouped write (at most T + D output files for T tasks and D crawl
+  days), per-partition lineage + metrics, and manifest-based resumable
+  writes;
 - large-scale training-data operators (``doctor_spark.operators.dedup``,
   ``similarity``, ``functions.text``): exact/MinHash-LSH/SimHash dedup,
   ANN search over embeddings, language-ID / quality / token statistics.

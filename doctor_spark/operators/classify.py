@@ -1,14 +1,12 @@
-"""Classify + skew-bucketing stage (pre-extraction).
+"""Classify + url-hash repartition stage (pre-extraction).
 
 Cheap, JVM-side column derivations (no Python):
 
 - ``url_ext``     — filename-suffix extension (reference forms.py:24-31),
   a single ``regexp_extract`` that whole-stage-codegens;
-- ``size_bytes`` / ``size_bucket`` — payload-size skew classes; large
-  documents are isolated so one giant PDF cannot straggle a partition of
-  small HTML pages (north_star: "large PDFs isolated into skew buckets");
-- ``salt``        — deterministic hash salt so repartitioning by
-  (size_bucket, salt) spreads each bucket across the cluster.
+- ``size_bytes``  — payload size in bytes;
+- ``salt``        — deterministic url-hash salt, the key of the
+  pre-extraction repartition.
 
 Content-based mime sniffing deliberately does NOT happen here: it would
 ship every payload through Arrow once just to read 8 magic bytes.  The
@@ -20,38 +18,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# size-bucket boundaries (bytes): small HTML/txt, medium, large, giant
-SIZE_BOUNDARIES = (32_768, 262_144, 2_097_152)
-# distinct (size_bucket, salt) keys must be >> the partition count, or
-# balls-in-bins variance leaves partitions 3-4× imbalanced (observed: 64
-# salts → 44 non-empty partitions of 96, max/min doc ratio 4.4)
+# distinct salts must be >> the partition count, or balls-in-bins variance
+# leaves partitions 3-4× imbalanced (observed: 64 salts → 44 non-empty
+# partitions of 96, max/min doc ratio 4.4)
 DEFAULT_SALTS = 4096
 
 _EXT_PATTERN = r"\.([A-Za-z0-9]{1,5})(?:[?#].*)?$"
 
 
 def with_classification(df: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
-    s, m, l = SIZE_BOUNDARIES
     return (
         df.withColumn(
             "url_ext", F.lower(F.regexp_extract(F.col("url"), _EXT_PATTERN, 1))
         )
         .withColumn("size_bytes", F.length(F.col("html")))
-        .withColumn(
-            "size_bucket",
-            F.when(F.col("size_bytes") < s, F.lit("s"))
-            .when(F.col("size_bytes") < m, F.lit("m"))
-            .when(F.col("size_bytes") < l, F.lit("l"))
-            .otherwise(F.lit("xl")),
-        )
         .withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts)))
     )
 
 
 def skew_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Salted, size-bucketed repartition: documents of similar cost land
-    together, each bucket spread over ``n_salts`` partitions.  AQE splits
-    any residual skew at runtime.
+    """Hash repartition on the url-hash ``salt`` into ``num_partitions``.
+
+    Every document lands in a random task whatever its crawl day, size or
+    format, so per-document cost spreads evenly even when it clusters by
+    day (one day of giant court PDFs) or by size.  Nothing cheaper is
+    known about cost before the extract UDF sniffs the payload, and a
+    range partitioning on a key that correlates with cost (crawl day,
+    size) cuts equal-ROW slices, which puts the expensive run into a few
+    tasks.  Every task therefore sees every day; the pipeline
+    re-groups rows by day after extraction so the day-partitioned write
+    stays at most T + D files (``pipeline.run_extraction_pipeline``).
 
     The partition count is always explicit: extraction is CPU-bound Python,
     so AQE's byte-based partition coalescing (advisory 64 MB) would collapse
@@ -61,4 +57,4 @@ def skew_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFr
     if num_partitions is None:
         sc = df.sparkSession.sparkContext
         num_partitions = max(sc.defaultParallelism * 3, 8)
-    return df.repartition(num_partitions, F.col("size_bucket"), F.col("salt"))
+    return df.repartition(num_partitions, F.col("salt"))

@@ -1,10 +1,15 @@
-"""The batch extraction pipeline: scan → classify → skew-repartition →
-extract (Arrow UDF) → write + metrics + lineage, resumable by url.
+"""The batch extraction pipeline: scan → classify → url-hash repartition
+→ extract (Arrow UDF) → day-grouped write + metrics + lineage, resumable
+by url.
 
-Topology (north_star): explicit salted size-bucketed repartition isolates
-giant documents; AQE handles residual skew; extraction is embarrassingly
-parallel (no shuffle after the repartition); metrics/lineage are built-in
-hash aggregates over the written results.
+Topology: when the scan has too few splits, one explicit url-hash
+repartition runs before extraction, so per-document cost spreads evenly
+over the tasks whatever day or size it clusters on.  Every extraction
+task then sees every crawl day, so before the day-partitioned write a
+second, output-side shuffle groups rows by (crawl day, url-hash bucket)
+with ⌈T/D⌉ buckets a day: the write opens at most T + D files (T tasks,
+D days) instead of T × D.  Metrics/lineage are built-in hash aggregates
+over the written results.
 
 Resume: re-running with the same ``out_dir`` anti-joins the input against
 already-extracted urls — idempotent, manifest-free (the written parquet IS
@@ -174,8 +179,9 @@ def run_extraction_pipeline(
 ) -> dict:
     """Run the full pipeline; returns summary counters.
 
-    ``repartition`` controls the salted size-bucketed shuffle before
-    extraction:
+    ``repartition`` controls the url-hash shuffle before extraction
+    (``operators.classify.skew_repartition``) and, with it, the
+    day-grouping shuffle before a ``crawl_date``-partitioned write:
 
     - ``"auto"`` (default): shuffle only when the scan yields too few
       partitions to keep the cluster busy.  Parquet/WARC byte-based splits
@@ -186,6 +192,11 @@ def run_extraction_pipeline(
     - ``True``: always shuffle — for pathological inputs (few giant files,
       wild per-file skew).
     - ``False``: never shuffle.
+
+    ``output_file_buckets`` sets the url-hash buckets per day of the
+    day-grouping shuffle.  Behind the extraction shuffle it defaults to
+    ⌈T/D⌉; on the map-only path the day-grouping shuffle runs only when
+    it is set.
 
     ``sample_band=(lo, hi)`` carves a deterministic url-hash band of the
     corpus (``operators.sampling.hash_sample``) INSIDE the resumable job:
@@ -251,23 +262,35 @@ def run_extraction_pipeline(
         writer = extracted.withColumn(
             "crawl_date", F.date_format("warc_ts", "yyyy-MM-dd")
         )
-        if output_file_buckets:
-            # CLUSTER/OBJECT-STORE MODE: route rows to writers BY DATE
-            # before the partitioned write.  Without it every task opens
-            # a writer for every date it sees — T tasks × D dates output
-            # files, which at 1000 executors × 1000 days is a
-            # 10^6-small-files-per-day explosion (and a committer-rename
-            # storm on S3-style stores).  A deterministic url-hash bucket
-            # caps files at buckets/date while keeping per-date write
-            # parallelism; partition_id is stamped upstream so lineage
-            # still names the extraction task that produced each row.
-            # Default OFF: measured locally (2.88M docs, local[16]) the
-            # extra full-output shuffle costs more than the committer
-            # savings on a single-node filesystem (74 s → 130 s wall);
-            # the trade reverses exactly where the file explosion bites.
+        buckets = output_file_buckets
+        if buckets is None and do_shuffle:
+            # ⌈T/D⌉ buckets a day: at most D·⌈T/D⌉ ≤ T + D files.  D is
+            # counted over the whole input, an upper bound on the days
+            # left after the resume anti-join, so the bound holds for
+            # them.  The count is one more pass over the input: a
+            # one-column read of a parquet scan, but a generated input
+            # (pages_dataframe) is generated again
+            days = pages.select(
+                F.countDistinct(F.date_format("warc_ts", "yyyy-MM-dd"))
+            ).first()[0]
+            buckets = -(-target // max(days, 1))
+        if buckets:
+            # route rows to writers BY DATE before the partitioned write.
+            # Without it every task opens a writer for every date it sees
+            # — T tasks × D dates output files, which at 1000 executors ×
+            # 1000 days is a 10^6-small-files-per-day explosion (and a
+            # committer-rename storm on S3-style stores).  The shuffle
+            # carries extracted rows, not payloads, and its tasks only
+            # write (AQE sizes them by bytes); partition_id is stamped
+            # upstream so lineage still names the extraction task that
+            # produced each row.  On the map-only path it is opt-in:
+            # measured locally (2.88M docs, local[16]) the extra
+            # full-output shuffle cost more than the committer savings
+            # on a single-node filesystem (74 s → 130 s wall); the trade
+            # reverses where the file explosion bites.
             writer = writer.repartition(
                 F.col("crawl_date"),
-                F.pmod(F.xxhash64("url"), F.lit(output_file_buckets)),
+                F.pmod(F.xxhash64("url"), F.lit(buckets)),
             )
         writer.write.mode("append").partitionBy("crawl_date").parquet(results_path)
     elif partition_output_by:
@@ -410,7 +433,8 @@ def main() -> None:
     ap.add_argument("--output-file-buckets", type=int, default=None,
                     help="pre-write repartition to N url-hash buckets per "
                          "output date partition (real-cluster committer "
-                         "pressure; costs a shuffle — off by default)")
+                         "pressure; costs a shuffle).  Default: ceil(T/D) "
+                         "behind the extraction shuffle, off without it")
     args = ap.parse_args()
 
     from .session import get_spark

@@ -21,8 +21,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    - AQE on (runtime re-plan + skew splitting) — the residual-skew handler
-      behind our explicit size-bucketed salting.
+    - AQE on (runtime re-plan + skew-join splitting).
     - Arrow enabled, with a bounded records-per-batch so a batch of fat
       document payloads cannot blow Python-worker memory (the analog of the
       reference's LZW-rasterization memory bound, tasks.py:100-106).

@@ -50,6 +50,8 @@ def _values_equal(a, b) -> bool:
 
 @pytest.mark.parametrize("name", sorted(entry.oracle_sql().keys()))
 def test_query_matches_oracle(spark, name):
+    if name == "reference_fixtures" and not Path(entry._REF_ASSETS).is_dir():
+        pytest.skip(f"reference assets not present ({entry._REF_ASSETS})")
     q = entry.queries()[name]
     spark_pdf = _normalize(q(spark, SF_DIR).toPandas())
     oracle_pdf = _normalize(_oracle_df(entry.oracle_sql()[name]))

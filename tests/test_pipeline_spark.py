@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from doctor_spark.corpus import pages_dataframe
-from doctor_spark.operators.classify import with_classification
+from doctor_spark.operators.classify import DEFAULT_SALTS, with_classification
 from doctor_spark.pipeline import run_extraction_pipeline, verify_extraction
 
 N = 200
@@ -25,8 +25,8 @@ def test_corpus_schema(pages):
 
 def test_classification_stage(pages):
     c = with_classification(pages)
-    buckets = {r["size_bucket"] for r in c.select("size_bucket").distinct().collect()}
-    assert "s" in buckets
+    assert c.where(F.col("size_bytes") != F.length("html")).count() == 0
+    assert c.where((F.col("salt") < 0) | (F.col("salt") >= DEFAULT_SALTS)).count() == 0
     exts = dict(
         c.groupBy("url_ext").count().collect()
     )
@@ -64,11 +64,100 @@ def test_pipeline_end_to_end(spark, pages, tmp_path_factory):
     assert results.select("url").distinct().count() == N
 
 
+def test_shuffle_path_bounds_files_by_tasks_plus_days(spark, pages, tmp_path):
+    """The forced-shuffle resume groups extracted rows by crawl day before
+    the write: it adds at most T + D part files (not T × D), output stays
+    exactly-once and byte-identical, and a resume with nothing left to
+    extract still succeeds."""
+    from doctor_spark.operators.classify import skew_repartition
+    from doctor_spark.operators.extract import extract_operator
+
+    T = 4
+    out = tmp_path / "out"
+    extracted = out / "extracted"
+
+    def part_files():
+        return set(extracted.glob("crawl_date=*/part-*.parquet"))
+
+    half = pages.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
+    n_half = half.count()
+    run_extraction_pipeline(spark, half, str(out), run_id="h", repartition=False)
+    before = part_files()
+
+    s = run_extraction_pipeline(
+        spark, pages, str(out), run_id="r", repartition=True, num_partitions=T
+    )
+    assert s["resumed_skip"] == n_half and s["total_rows"] == N
+    new = spark.read.parquet(str(extracted)).where(F.col("run_id") == "r")
+    D = new.select("crawl_date").distinct().count()
+    assert D > T
+    added = part_files() - before
+    assert 0 < len(added) <= T + D, (len(added), T, D)
+    # extraction itself stayed spread over all T tasks
+    assert new.select("partition_id").distinct().count() == T
+
+    assert verify_extraction(spark, pages, s["results_path"]) == 0
+    results = spark.read.parquet(s["results_path"])
+    assert results.groupBy("url").count().where(F.col("count") != 1).count() == 0
+    assert results.count() == N
+    for table in ("metrics", "lineage"):
+        assert spark.read.parquet(str(out / table)).agg(
+            F.sum("n_docs")).first()[0] == N
+
+    # the one exchange below the extraction node is the url-hash salt
+    staged = extract_operator(
+        skew_repartition(with_classification(pages), T), ocr_available=True
+    )
+    staged.collect()  # runs this Dataset's own plan to its final AQE form
+    plan = staged._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==", 1)[0]
+    below = final.split("MapInPandas", 1)[1]
+    exchanges = [ln for ln in below.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(salt" in exchanges[0], exchanges
+    assert f", {T})" in exchanges[0], exchanges
+
+    # all-already-done resume: empty after the anti-join, nothing written
+    s2 = run_extraction_pipeline(
+        spark, pages, str(out), run_id="z", repartition=True, num_partitions=T
+    )
+    assert s2["resumed_skip"] == N and s2["total_rows"] == N
+    assert part_files() == before | added
+
+
+def test_day_correlated_cost_spreads_over_all_tasks(spark, pages):
+    """Per-document cost that clusters on one crawl day (every PDF/DOCX
+    crawled the same day) must not cluster on a few extraction tasks: a
+    row-balanced split of a day-ordered key would hand that day to about
+    one task in four here."""
+    from doctor_spark.operators.classify import skew_repartition
+    from doctor_spark.operators.extract import extract_operator
+
+    T = 4
+    costly = F.col("url").rlike(r"\.(pdf|docx)$")
+    one_day = pages.withColumn(
+        "warc_ts",
+        F.when(costly, F.lit("2024-01-01 00:00:00").cast("timestamp"))
+        .otherwise(F.col("warc_ts")),
+    )
+    per_task = dict(
+        extract_operator(skew_repartition(with_classification(one_day), T))
+        .withColumn("partition_id", F.spark_partition_id())
+        .where(costly)
+        .groupBy("partition_id").count().collect()
+    )
+    n_costly = pages.where(costly).count()
+    assert sum(per_task.values()) == n_costly > 8 * T
+    assert len(per_task) == T, per_task
+    assert max(per_task.values()) <= 2 * n_costly / T, per_task
+
+
 def test_no_python_in_relational_plan(spark, pages):
     """The classify stage must stay JVM-side (no BatchEvalPython /
     ArrowEvalPython nodes) so it whole-stage-codegens."""
     plan = with_classification(pages).select(
-        "url_ext", "size_bucket", "salt"
+        "url_ext", "size_bytes", "salt"
     )._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
 
