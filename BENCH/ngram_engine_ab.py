@@ -7,7 +7,8 @@ arms equally.  Usage:
 
     python BENCH/ngram_engine_ab.py [SF_DIR] [ROUNDS] [ENGINES...]
 
-Defaults: /tmp/doctor_spark_sf1, 3 rounds, arrow vs hybrid.
+Defaults: /tmp/doctor_spark_sf1, 3 rounds, hybrid vs expr (the two
+engines ``ngram_jaccard_pairs`` accepts).
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from doctor_spark.session import get_spark
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/doctor_spark_sf1"
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    engines = sys.argv[3:] or ["arrow", "hybrid"]
+    engines = sys.argv[3:] or ["hybrid", "expr"]
 
     from doctor_spark.operators.dedup import ngram_jaccard_pairs
 

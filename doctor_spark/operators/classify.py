@@ -1,17 +1,12 @@
 """Classify + url-hash repartition stage (pre-extraction).
 
-Cheap, JVM-side column derivations (no Python):
-
-- ``url_ext``     — filename-suffix extension (reference forms.py:24-31),
-  a single ``regexp_extract`` that whole-stage-codegens;
-- ``size_bytes``  — payload size in bytes;
-- ``salt``        — deterministic url-hash salt, the key of the
-  pre-extraction repartition.
+One cheap, JVM-side column (no Python): ``salt``, a deterministic
+url-hash salt and the key of the pre-extraction repartition.
 
 Content-based mime sniffing deliberately does NOT happen here: it would
 ship every payload through Arrow once just to read 8 magic bytes.  The
 extract UDF classifies per batch instead (classify-then-parse inside one
-Python pass — SURVEY.md §2.2 C1).
+Python pass — SURVEY.md §2.2 C1), and measures payload size itself.
 """
 
 from __future__ import annotations
@@ -23,16 +18,10 @@ from pyspark.sql import DataFrame, functions as F
 # partitions of 96, max/min doc ratio 4.4)
 DEFAULT_SALTS = 4096
 
-_EXT_PATTERN = r"\.([A-Za-z0-9]{1,5})(?:[?#].*)?$"
-
 
 def with_classification(df: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
-    return (
-        df.withColumn(
-            "url_ext", F.lower(F.regexp_extract(F.col("url"), _EXT_PATTERN, 1))
-        )
-        .withColumn("size_bytes", F.length(F.col("html")))
-        .withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts)))
+    return df.withColumn(
+        "salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts))
     )
 
 

@@ -1,19 +1,27 @@
 """Deduplication operators for training-data pipelines.
 
-All four families from the task brief, composed from built-in DataFrame ops
-(no Python UDFs — hashing via ``md5``, set algebra via higher-order array
-functions, candidate generation via hash-key self-joins):
+All four families from the task brief:
 
 - exact:            md5-of-normalized-text groupBy
-- MinHash + LSH:    k seeded min-hashes → bands → bucket self-join
-- SimHash:          per-token hash bits majority-voted into a signature
+- MinHash + LSH:    k min-hashes over 3-gram shingles → bands → bucket
+                    self-join
+- SimHash:          per-token hash bits majority-voted into a signature,
+                    Hamming-banded self-join
 - n-gram Jaccard:   3-token shingles, shingle-inverted-index join, exact
                     Jaccard on candidate pairs
 
-Scale notes: every self-join is on a hash key (band/bucket/shingle), so the
-shuffle is keyed and AQE-skew-splittable; the quadratic blow-up of pairwise
-comparison is bounded to same-bucket candidates, which is the point of
-MinHash-LSH at 10^12 rows.
+Signatures and shingles come from Arrow-batched pandas UDF kernels where
+the equivalent higher-order Catalyst expression would run interpreted
+(each kernel is pinned bit-identical to its expression form or to the
+DuckDB oracle); everything on the pair stream — joins, set algebra,
+rescoring — is built-in JVM expressions.
+
+Scale notes: every candidate-pair generator is the keyed band self-join
+:func:`..operators.hamming.band_pairs` on a hash key (band/bucket/shingle),
+so the shuffle is keyed and AQE-skew-splittable; the quadratic blow-up of
+pairwise comparison is bounded to same-bucket candidates, which is the
+point of MinHash-LSH at 10^12 rows.  ``containment_est_pairs`` is the one
+band join outside it (a conditional join with no exchange of its own).
 """
 
 from __future__ import annotations
@@ -22,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..functions.text import fingerprint, tokens
+from .hamming import band_pairs, banded_hamming_pairs
 
 DEFAULT_SEEDS = ("s0", "s1", "s2", "s3")
 
@@ -198,52 +207,61 @@ def _affine_mins_chunked(h32, a, b, max_elems: int = 4_000_000):
     return mins
 
 
-def _minhash_bands_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
-    """Production-width band kernel (the Lee-et-al./Dolma operating
-    point): ONE md5 per shingle, then ``n_perms`` affine permutations
-    ``(a_i*h + b_i) mod 2^32`` of its 32-bit prefix, numpy-vectorized.
-    The md5-per-(seed,shingle) scheme the 4-seed demo uses costs
-    n_perms× more digests — measured 27.5 s vs ~2 s at sf0.1 for
-    width 128.  Exactly mirrored in SQL: hex-prefix→BIGINT, affine mod,
-    list min, decimal-string band join, md5."""
+def _affine_minhash(text, a, b, n: int, rows_per_band: int):
+    """One document's universal-hash MinHash: ``(n_sh, mins, bands)`` —
+    the distinct ``n``-gram shingle count, the ``len(a)`` affine
+    permutation minima of the shingles' 32-bit md5 prefixes, and the
+    per-band md5 keys over the decimal-joined minima.  Documents with
+    fewer than ``n`` tokens give ``(0, [], [])``."""
     import hashlib
 
     import numpy as np
 
-    a_l, b_l = _affine_params(n_perms)
-    a = np.asarray(a_l, dtype=np.int64)
-    b = np.asarray(b_l, dtype=np.int64)
-    n_bands = n_perms // rows_per_band
+    toks = _java_ws_tokens(text or "")
+    if len(toks) < n:
+        return 0, [], []
+    sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    h32 = np.fromiter(
+        (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) for s in sh),
+        dtype=np.int64, count=len(sh),
+    )
+    mins = _affine_mins_chunked(h32, a, b)
+    bands = [
+        hashlib.md5(
+            "|".join(
+                str(int(v))
+                for v in mins[bi * rows_per_band:(bi + 1) * rows_per_band]
+            ).encode("utf-8")
+        ).hexdigest()
+        for bi in range(len(mins) // rows_per_band)
+    ]
+    return len(sh), mins, bands
+
+
+def _affine_arrays(n_perms: int):
+    """:func:`_affine_params` as the int64 arrays the kernels take."""
+    import numpy as np
+
+    a, b = _affine_params(n_perms)
+    return np.asarray(a, dtype=np.int64), np.asarray(b, dtype=np.int64)
+
+
+def _minhash_bands_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
+    """Production-width band kernel (the Lee-et-al./Dolma operating
+    point): ONE md5 per shingle, then ``n_perms`` affine permutations
+    ``(a_i*h + b_i) mod 2^32`` of its 32-bit prefix, numpy-vectorized
+    (:func:`_affine_minhash`).  The md5-per-(seed,shingle) scheme the
+    4-seed demo uses costs n_perms× more digests — measured 27.5 s vs
+    ~2 s at sf0.1 for width 128.  Exactly mirrored in SQL:
+    hex-prefix→BIGINT, affine mod, list min, decimal-string band join,
+    md5."""
+    a, b = _affine_arrays(n_perms)
 
     @F.pandas_udf("array<string>")
     def bands(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                out.append([])
-                continue
-            sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
-            h32 = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-                    for s in sh
-                ),
-                dtype=np.int64, count=len(sh),
-            )
-            mins = _affine_mins_chunked(h32, a, b)
-            out.append(
-                [
-                    hashlib.md5(
-                        "|".join(
-                            str(int(v))
-                            for v in mins[bi * rows_per_band:(bi + 1) * rows_per_band]
-                        ).encode("utf-8")
-                    ).hexdigest()
-                    for bi in range(n_bands)
-                ]
-            )
-        return pd.Series(out)
+        return pd.Series(
+            [_affine_minhash(t, a, b, n, rows_per_band)[2] for t in texts]
+        )
 
     return bands
 
@@ -274,26 +292,15 @@ def minhash_candidate_pairs(
         bands_udf = _minhash_bands_affine_udf(affine_perms, rows_per_band)
     else:
         bands_udf = _minhash_bands_udf(seeds, rows_per_band)
-    stacked = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-        .select("id", F.posexplode(bands_udf(F.col("__t"))).alias("band_no", "band_key"))
-    )
     # Materialize the (tiny) banded table through ONE exchange and self-join
     # it; identical exchange subtrees on both sides become a ReusedExchange,
     # so signatures are computed exactly once per row.
-    stacked = stacked.repartition(F.col("band_no"), F.col("band_key"))
-    left = stacked.select(
-        F.col("band_no"), F.col("band_key"), F.col("id").alias("id_a")
+    stacked = (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+        .select("id", F.posexplode(bands_udf(F.col("__t"))).alias("band_no", "band_key"))
+        .repartition(F.col("band_no"), F.col("band_key"))
     )
-    right = stacked.select(
-        F.col("band_no"), F.col("band_key"), F.col("id").alias("id_b")
-    )
-    return (
-        left.join(right, ["band_no", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return band_pairs(stacked, ["band_no", "band_key"]).distinct()
 
 
 def _simhash_udf(bits: int):
@@ -355,14 +362,16 @@ def with_simhash(
     min-of-3): for a SINGLE downstream reference the pure expression
     wins (0.43 s vs 0.75 s at w48 — no Arrow boundary, and Spark 4
     evaluates this shape acceptably), so it stays the default; when the
-    signature is referenced by SEVERAL expressions (the band slices in
-    :func:`simhash_near_pairs`), projection collapse re-INLINES the
-    whole simhash expression into every reference (the
+    signature is referenced by SEVERAL expressions (the band slices and
+    the rescore of :func:`..operators.hamming.banded_hamming_pairs`, as
+    :func:`simhash_near_pairs` uses it), projection collapse re-INLINES
+    the whole simhash expression into every reference (the
     ``_shingle_structs_expr`` lesson) and the query pays ~n_bands
-    signature evaluations — there the Arrow kernel (``engine="arrow"``),
-    which materializes ONCE in its ArrowEvalPython node, wins 1.65 s vs
-    1.95+ s.  Both engines are bit-identical
-    (tests/test_plans.py::test_simhash_engines_bit_identical)."""
+    signature evaluations — there the Arrow kernel (``engine="arrow"``,
+    :func:`_simhash_udf`), which materializes ONCE in its ArrowEvalPython
+    node, wins 1.65 s vs 1.95+ s.  The two engines give bit-identical
+    signatures at 16 and 48 bits
+    (tests/test_plans.py::test_simhash_engines_bit_identical runs both)."""
     if engine == "arrow":
         return df.withColumn("simhash", _simhash_udf(bits)(F.col(text_col)))
     toks = tokens(F.col(text_col))
@@ -421,7 +430,8 @@ def _shingles_udf(n: int = 3, hashed: bool = False):
     ``hashed``: emit the 60-bit md5 prefix of each shingle as int64
     (``int(md5(s)[:15 hex], 16)``, the same value DuckDB's
     ``('0x' || substr(md5(s), 1, 15))::BIGINT`` computes) instead of the
-    string — 8-byte shuffle keys for the join-heavy callers."""
+    string — 8-byte join keys for :func:`ngram_novelty`.  The pair
+    joins hash in the JVM instead (:func:`_hashed_shingles`)."""
 
     if hashed:
 
@@ -469,42 +479,33 @@ def _shingles_udf(n: int = 3, hashed: bool = False):
     return sh
 
 
-def _shingle_structs_expr(col, n: int = 3, hashed: bool = True):
-    """Pure-JVM equivalent of :func:`_shingles_udf`: distinct n-gram
-    shingles packed as ``array<struct<n_sh, shingle>>`` so ONE explode
-    yields both the set size and the element — no Python, no Arrow.
+def _shingle_structs_expr(col, n: int = 3):
+    """Pure-JVM equivalent of :func:`_hashed_shingles`: distinct n-gram
+    shingles as 60-bit md5 prefixes, packed as ``array<struct<n_sh,
+    shingle>>`` so ONE explode yields both the set size and the element
+    — no Python, no Arrow.
 
     The naive expression form (``F.size(sh)`` + ``F.explode(sh)`` over a
     projected ``sh``) re-inlines the whole shingling expression into BOTH
     references when Catalyst collapses the projections — the reason the
-    Arrow kernel returned ``struct<n_sh, sh>``.  Here the distinct array
+    Arrow kernel returns ``struct<n_sh, sh>``.  Here the distinct array
     is bound to a higher-order LAMBDA VARIABLE instead:
     ``transform(array(d), dd -> transform(dd, x -> struct(size(dd), x)))``
     evaluates ``d`` exactly once per row and references the bound ``dd``
     for free, giving the single-evaluation property in expression land.
 
-    ``hashed`` emits the 60-bit md5 prefix as int64 — bit-identical to
-    the Arrow kernel (``int(md5_hex[:15], 16)`` ==
-    ``conv(substring(md5(s), 1, 15), 16, 10)``); n_sh counts DISTINCT
-    HASHES (not strings), matching the kernel's collision semantics."""
+    The hash is ``conv(substring(md5(s), 1, 15), 16, 10)``, the JVM
+    form of ``int(md5_hex[:15], 16)``; n_sh counts DISTINCT HASHES (not
+    strings), so the two only differ if two distinct shingles of one
+    document collide in 60 bits."""
     toks = tokens(col)
-    if hashed:
-        elem_type = "long"
 
-        def elem(i):
-            return F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-
-    else:
-        elem_type = "string"
-
-        def elem(i):
-            return F.concat_ws(" ", F.slice(toks, i, n))
+    def elem(i):
+        return F.conv(
+            F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15),
+            16,
+            10,
+        ).cast("long")
 
     raw = F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), elem)
     d = F.array_distinct(raw)
@@ -520,7 +521,7 @@ def _shingle_structs_expr(col, n: int = 3, hashed: bool = True):
         )
     )
     return F.when(F.size(toks) >= n, packed).otherwise(
-        F.array().cast(f"array<struct<n_sh:int,shingle:{elem_type}>>")
+        F.array().cast("array<struct<n_sh:int,shingle:long>>")
     )
 
 
@@ -532,51 +533,16 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     n_bands: int = 4,
 ) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``.
-
-    Band-bucketed and COMPLETE: a signature split into ``n_bands`` equal
-    slices differing in ≤ ``n_bands - 1`` bits must share at least one
-    slice (pigeonhole), so with ``max_hamming < n_bands`` the same-band
-    equi-join loses no true pair.  Candidates rescore with
-    ``bit_count(xor)`` — all JVM bit ops, zero Python.
+    """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``:
+    the ``bits``-wide signature through the pigeonhole-complete band join
+    :func:`..operators.hamming.banded_hamming_pairs` (``max_hamming <
+    n_bands``, and ``n_bands`` must divide ``bits``).  The Arrow engine
+    computes the signature once for all band slices and the rescore.
 
     Columns: id_a, id_b, hamming."""
-    if max_hamming >= n_bands:
-        raise ValueError("completeness needs max_hamming < n_bands")
-    band_width = bits // n_bands
-    mask = (1 << band_width) - 1
-    # arrow engine: the signature feeds n_bands band-slice expressions
-    # plus the rescore column — the expression form would be re-inlined
-    # into every reference (see with_simhash docstring)
-    sigs = with_simhash(df, text_col, bits, engine="arrow").select(
-        F.col(id_col).alias("id"), F.col("simhash").alias("sig")
-    )
-    stacked = sigs.select(
-        "id", "sig",
-        F.posexplode(
-            F.array(*[
-                F.shiftright(F.col("sig"), b * band_width).bitwiseAND(F.lit(mask))
-                for b in range(n_bands)
-            ])
-        ).alias("band_no", "band_val"),
-    ).repartition(F.col("band_no"), F.col("band_val"))
-    left = stacked.select(
-        "band_no", "band_val",
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"),
-    )
-    right = stacked.select(
-        "band_no", "band_val",
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"),
-    )
-    return (
-        left.join(right, ["band_no", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    return banded_hamming_pairs(
+        with_simhash(df, text_col, bits, engine="arrow"), max_hamming,
+        n_bands, id_col=id_col, sig_col="simhash", bits=bits,
     )
 
 
@@ -772,6 +738,62 @@ def shingles(col, n: int = 3):
     )
 
 
+def _hashed_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """``(id, n_sh, shingle)``: one row per distinct ``n``-gram shingle
+    of a document, the shingle as its 60-bit md5 prefix (int64) and
+    ``n_sh`` the document's distinct-shingle count.
+
+    The "hybrid" engine splits the work along the cheap/expensive seam:
+    the Arrow kernel (:func:`_shingles_udf`) emits distinct shingle
+    STRINGS (tokenize + join + dict.fromkeys — pure C string ops, no
+    hashlib), and the md5 lands in the JVM as an ordinary codegen
+    expression on the EXPLODED rows (``conv(substr(md5(s),1,15),16,10)``
+    — no higher-order lambda, so none of the ``"expr"`` interpretation
+    penalty).  The explode and the hash run in the same stage, so the
+    exchange after it carries 8-byte keys.  Strings are deduplicated
+    before hashing, exactly as the DuckDB oracle does (``list_distinct``
+    on shingle text, hash after)."""
+    return df.select(
+        F.col(id_col).alias("id"), _shingles_udf(n)(F.col(text_col)).alias("r")
+    ).select(
+        "id", F.col("r.n_sh").alias("n_sh"),
+        F.explode("r.sh").alias("shingle_str"),
+    ).select(
+        "id", "n_sh",
+        F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
+        .cast("long").alias("shingle"),
+    )
+
+
+def _shingle_overlaps(
+    shingled: DataFrame, max_shingle_df: int | None
+) -> DataFrame:
+    """Inverted-index self-join of ``(id, n_sh, shingle)`` rows →
+    ``(id_a, id_b, n_sh_a, n_sh_b, inter)`` for every pair sharing at
+    least one shingle, ``inter`` = |A∩B| over the kept shingles.
+
+    ONE exchange on the shingle feeds the optional document-frequency
+    cap (a whole-partition window, no extra shuffle) and both sides of
+    the :func:`band_pairs` join.  The cap drops a shingle held by more
+    than ``max_shingle_df`` documents before the join; set sizes stay
+    exact."""
+    shingled = shingled.repartition(F.col("shingle"))
+    if max_shingle_df is not None:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("shingle")
+        shingled = shingled.withColumn("df", F.count("*").over(w)).where(
+            F.col("df") <= max_shingle_df
+        ).drop("df")
+    return (
+        band_pairs(shingled, ["shingle"], ["n_sh"])
+        .groupBy("id_a", "id_b", "n_sh_a", "n_sh_b")
+        .agg(F.count("*").alias("inter"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -779,7 +801,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    hash_shingles: bool = True,
     engine: str = "hybrid",
 ) -> DataFrame:
     """Exact n-gram Jaccard over shingle-sharing candidate pairs.
@@ -804,120 +825,50 @@ def ngram_jaccard_pairs(
        web-scale corpus an uncapped hot shingle (e.g. a footer shared by
        10^6 docs) turns the self-join quadratic.
 
-    Plan shape: shingling runs in ONE Arrow batch kernel (the equivalent
-    higher-order Catalyst expression is interpreted at ~1 ms/row and gets
-    re-inlined into both join branches), behind one exchange on shingle
-    that the DF-cap window and the self-join both reuse.
+    Shingles join on their 60-bit md5 prefix (int64), not the string:
+    the exchange/join/window keys shrink from ~20-40 bytes of UTF-8 to 8
+    bytes, which is most of the shuffle at web scale.  A 2^-60-scale
+    prefix collision could merge two shingles; the cross-engine oracle
+    applies the identical hash, keeping the contract exact by
+    construction.
 
-    ``hash_shingles`` (default True, round 5): join on the 60-bit md5
-    prefix of each shingle (int64) instead of the shingle string — the
-    exchange/join/window keys shrink from ~20-40 bytes of UTF-8 to 8
-    bytes, which is most of the shuffle at web scale.  Distinct-set
-    sizes and intersections are computed over the hashes, so a 2^-60
-    -scale prefix collision could merge two shingles; the cross-engine
-    oracle applies the identical hash, keeping the contract exact by
-    construction.  Pass False for literal string-key semantics.
+    ``engine`` selects the shingling kernel:
 
-    ``engine`` selects the shingling kernel: ``"hybrid"`` (default, see
-    below), ``"arrow"`` (the all-Python Pandas UDF: md5 via hashlib
-    inside the kernel) or ``"expr"`` (pure Catalyst higher-order expressions via
-    :func:`_shingle_structs_expr` — no Python worker in the plan at all).
-    All engines are bit-identical (differential-tested in
-    tests/test_plans.py::test_ngram_shingle_engines_bit_identical).  Measured round
-    5 at sf0.1 (interleaved, warm): arrow 2.0-2.9 s, expr 7.7-21.8 s —
-    Catalyst evaluates higher-order lambdas INTERPRETED (one
-    ``InterpretedEvaluator`` tree walk per element, with a per-shingle
-    md5→conv→substring sub-tree), so even with the single-evaluation
-    lambda-binding trick the JVM path loses 4-8× to the Arrow kernel.
-    The ``"expr"`` path stays as a cross-engine differential validator,
-    not a performance option — recorded in BENCH/BASELINE.md so later
-    rounds do not re-litigate it.
+    - ``"hybrid"`` (default, :func:`_hashed_shingles`): Arrow emits the
+      shingle strings, the JVM hashes them.  It replaced an all-Python
+      kernel that hashed with hashlib in round 5: measured at sf1 synth
+      (50k docs, interleaved min-of-3, BENCH/ngram_engine_ab.py) the
+      shingle map stage was 2.0× faster (3.41 s vs 6.85 s).
+    - ``"expr"`` (:func:`_shingle_structs_expr`): pure Catalyst
+      higher-order expressions, no Python worker in the plan.  It is a
+      cross-engine differential validator, not a performance option:
+      Catalyst evaluates higher-order lambdas INTERPRETED, and round 5
+      measured 7.7-21.8 s against 2.0-2.9 s for the Arrow kernel at
+      sf0.1 (BENCH/BASELINE.md).
 
-    ``"hybrid"`` splits the work along the cheap/expensive seam: the
-    Arrow kernel emits distinct shingle STRINGS (tokenize + join +
-    dict.fromkeys — pure C string ops, no hashlib), and the 60-bit md5
-    lands in the JVM as ordinary codegen expressions on the EXPLODED
-    rows (``conv(substr(md5(s),1,15),16,10)`` — no higher-order lambda,
-    so none of the ``"expr"`` interpretation penalty).  The explode and
-    the hash run in the same stage, so the exchange still carries 8-byte
-    keys.  Note the hybrid is bit-identical to the DuckDB oracle BY
-    CONSTRUCTION even under a 2^-60 prefix collision: the oracle also
-    dedups strings first (``list_distinct`` on shingle text) and hashes
-    after, whereas the ``"arrow"`` int64 kernel dedups the hashes — the
-    three engines only diverge if two distinct shingles of one document
-    collide in 60 bits.  Measured (sf1 synth, 50k docs, interleaved
-    min-of-3, BENCH/ngram_engine_ab.py): the shingle MAP STAGE alone is
-    2.0× faster hybrid (3.41 s vs 6.85 s) — the hashlib loop moves to
-    JVM codegen digest; end-to-end the sf1 wall ties (~10 s both) because
-    the local self-join dominates, but the map stage is the term that
-    scales with corpus size, hence the default."""
-    if engine == "hybrid" and hash_shingles:
-        shingle_udf = _shingles_udf(n, hashed=False)
-        base = df.select(
-            F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-        )
-        exploded = base.select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.explode("r.sh").alias("shingle_str"),
-        ).select(
-            "id", "n_sh",
-            F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
-            .cast("long").alias("shingle"),
-        ).repartition(F.col("shingle"))
+    Both engines give the same pairs
+    (tests/test_plans.py::test_ngram_shingle_engines_bit_identical).
+    Plan shape: one exchange on the shingle hash, reused by the DF-cap
+    window and the self-join (:func:`_shingle_overlaps`)."""
+    if engine == "hybrid":
+        shingled = _hashed_shingles(df, text_col, id_col, n)
     elif engine == "expr":
-        base = df.select(
+        shingled = df.select(
             F.col(id_col).alias("id"),
-            F.explode(
-                _shingle_structs_expr(F.col(text_col), n, hash_shingles)
-            ).alias("r"),
-        )
-        exploded = base.select(
+            F.explode(_shingle_structs_expr(F.col(text_col), n)).alias("r"),
+        ).select(
             "id", F.col("r.n_sh").alias("n_sh"),
             F.col("r.shingle").alias("shingle"),
-        ).repartition(F.col("shingle"))
+        )
     else:
-        shingle_udf = _shingles_udf(n, hashed=hash_shingles)
-        base = df.select(
-            F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-        )
-        exploded = base.select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.explode("r.sh").alias("shingle"),
-        ).repartition(F.col("shingle"))
-    if max_shingle_df is not None:
-        from pyspark.sql import Window
-
-        # whole-partition window count over the shingle partitioning the
-        # self-join below reuses — no extra shuffle
-        w = Window.partitionBy("shingle")
-        exploded = exploded.withColumn("df", F.count("*").over(w)).where(
-            F.col("df") <= max_shingle_df
-        ).drop("df")
-    a = exploded.select(
-        F.col("shingle"),
-        F.col("id").alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = exploded.select(
-        F.col("shingle"),
-        F.col("id").alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count("*").alias("inter"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 4
-            ),
-        )
+        raise ValueError(f"unknown shingle engine {engine!r}")
+    union = F.col("n_sh_a") + F.col("n_sh_b") - F.col("inter")
+    return (
+        _shingle_overlaps(shingled, max_shingle_df)
+        .withColumn("jaccard", F.round(F.col("inter") / union, 4))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return pairs
 
 
 def containment_pairs(
@@ -959,36 +910,8 @@ def containment_pairs(
     boilerplate-hot-shingle contract as ngram_jaccard_pairs — at web
     scale, pass a finite cap.
     """
-    shingle_udf = _shingles_udf(n, hashed=False)
-    base = df.select(
-        F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-    )
-    exploded = base.select(
-        "id", F.col("r.n_sh").alias("n_sh"),
-        F.explode("r.sh").alias("shingle_str"),
-    ).select(
-        "id", "n_sh",
-        F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
-        .cast("long").alias("shingle"),
-    ).repartition(F.col("shingle"))
-    if max_shingle_df is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("shingle")
-        exploded = exploded.withColumn("df", F.count("*").over(w)).where(
-            F.col("df") <= max_shingle_df
-        ).drop("df")
-    a = exploded.select(
-        "shingle", F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    b = exploded.select(
-        "shingle", F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")
-    )
-    undirected = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count("*").alias("inter"))
+    undirected = _shingle_overlaps(
+        _hashed_shingles(df, text_col, id_col, n), max_shingle_df
     )
     directed = undirected.select(
         F.explode(
@@ -996,13 +919,13 @@ def containment_pairs(
                 F.struct(
                     F.col("id_a").alias("src_id"),
                     F.col("id_b").alias("dst_id"),
-                    F.col("n_a").alias("n_src"),
+                    F.col("n_sh_a").alias("n_src"),
                     F.col("inter"),
                 ),
                 F.struct(
                     F.col("id_b").alias("src_id"),
                     F.col("id_a").alias("dst_id"),
-                    F.col("n_b").alias("n_src"),
+                    F.col("n_sh_b").alias("n_src"),
                     F.col("inter"),
                 ),
             )
@@ -1663,14 +1586,7 @@ def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
     ``n_perms`` min-signature (for estimator math) and the LSH band keys
     (for candidate generation) — so the signature table is computed
     once, the way a production dedup materializes it."""
-    import hashlib
-
-    import numpy as np
-
-    a_l, b_l = _affine_params(n_perms)
-    a = np.asarray(a_l, dtype=np.int64)
-    b = np.asarray(b_l, dtype=np.int64)
-    n_bands = n_perms // rows_per_band
+    a, b = _affine_arrays(n_perms)
 
     @F.pandas_udf(
         "struct<n_sh: int, sig: array<long>, bands: array<string>>"
@@ -1678,36 +1594,10 @@ def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
     def sig_bands(texts: pd.Series) -> pd.DataFrame:
         ns, sigs_out, bands_out = [], [], []
         for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                ns.append(0)
-                sigs_out.append([])
-                bands_out.append([])
-                continue
-            sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
-            h32 = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-                    for s in sh
-                ),
-                dtype=np.int64, count=len(sh),
-            )
-            mins = _affine_mins_chunked(h32, a, b)
-            ns.append(len(sh))
+            n_sh, mins, bands = _affine_minhash(text, a, b, n, rows_per_band)
+            ns.append(n_sh)
             sigs_out.append([int(v) for v in mins])
-            bands_out.append(
-                [
-                    hashlib.md5(
-                        "|".join(
-                            str(int(v))
-                            for v in mins[
-                                bi * rows_per_band:(bi + 1) * rows_per_band
-                            ]
-                        ).encode("utf-8")
-                    ).hexdigest()
-                    for bi in range(n_bands)
-                ]
-            )
+            bands_out.append(bands)
         return pd.DataFrame({"n_sh": ns, "sig": sigs_out, "bands": bands_out})
 
     # guide §4.4: the caller filters on n_sh (a field of this UDF's

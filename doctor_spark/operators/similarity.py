@@ -13,6 +13,8 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve by name
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .hamming import band_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -193,14 +195,7 @@ def lsh_candidate_pairs(
     generation is linear in bucket occupancy, not quadratic in corpus
     size, and the bucket signatures are computed once (ReusedExchange)."""
     stacked = stacked_lsh_buckets(df, dim, n_planes, n_tables, id_col, vec_col)
-    left = stacked.select("table_no", "bucket", F.col("id").alias("id_a"))
-    right = stacked.select("table_no", "bucket", F.col("id").alias("id_b"))
-    return (
-        left.join(right, ["table_no", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return band_pairs(stacked, ["table_no", "bucket"]).distinct()
 
 
 def embedding_neardup_pairs(
@@ -470,24 +465,21 @@ def lsh_ann_corpus_topk(
     set is small; when "queries = the whole corpus" the broadcast would
     ship the corpus to every executor.  This form is the scale shape:
 
-    - ONE bucket exchange, self-joined (ReusedExchange) — directed pairs
-      (query_id ≠ neighbor_id), linear in bucket occupancy;
+    - the undirected pairs of :func:`lsh_candidate_pairs` (ONE bucket
+      exchange, self-joined), mirrored to directed pairs (query_id ≠
+      neighbor_id), linear in bucket occupancy;
     - vectors attached by keyed joins (no broadcast anywhere);
     - exact cosine rescore in the Arrow pair kernel (bit-identical to the
       JVM fold / SQL oracle);
     - per-query top-k via one window on query_id.
 
     Columns: query_id, neighbor_id, score, rank."""
-    stacked = stacked_lsh_buckets(df, dim, n_planes, n_tables, id_col, vec_col)
-    left = stacked.select("table_no", "bucket", F.col("id").alias("query_id"))
-    right = stacked.select("table_no", "bucket", F.col("id").alias("neighbor_id"))
     # dedupe UNDIRECTED pairs (half the distinct's shuffle volume), then
     # mirror map-side: the candidate relation is symmetric
-    undirected = (
-        left.join(right, ["table_no", "bucket"])
-        .where(F.col("query_id") < F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    undirected = lsh_candidate_pairs(
+        df, dim, n_planes, n_tables, id_col, vec_col
+    ).select(
+        F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id")
     )
     pairs = undirected.unionByName(
         undirected.select(
@@ -567,19 +559,12 @@ def semdedup(
         .repartition(F.col("cluster"))
         .localCheckpoint()
     )
-    a = clustered.select(
-        "cluster", F.col("id").alias("id_a"), F.col("v").alias("va")
-    )
-    b = clustered.select(
-        "cluster", F.col("id").alias("id_b"), F.col("v").alias("vb")
-    )
     cos_udf = _cosine_pairs_udf(dim)
     pairs = (
-        a.join(b, "cluster")
-        .where(F.col("id_a") < F.col("id_b"))
+        band_pairs(clustered, ["cluster"], ["v"])
         .select(
             "id_b",
-            F.round(cos_udf(F.col("va"), F.col("vb")), 4).alias("cos_sim"),
+            F.round(cos_udf(F.col("v_a"), F.col("v_b")), 4).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )

@@ -85,8 +85,6 @@ def resume_done_urls(
     spark: SparkSession,
     results_path: str,
     pages: DataFrame,
-    *,
-    date_partitioned: bool = True,
 ) -> DataFrame | None:
     """The already-extracted url set for the resume anti-join, or None on
     a fresh start.
@@ -129,7 +127,7 @@ def resume_done_urls(
             if _is_fresh_start_error(exc):
                 return None  # nothing committed yet (or _temporary-only)
             raise  # transient IO / permission error: abort, don't double-write
-        if date_partitioned and "crawl_date" in done.columns:
+        if "crawl_date" in done.columns:
             try:
                 bounds = pages.select(
                     F.date_format(F.min("warc_ts"), "yyyy-MM-dd").alias("lo"),
@@ -172,7 +170,6 @@ def run_extraction_pipeline(
     resume: bool = True,
     num_partitions: int | None = None,
     repartition: bool | str = "auto",
-    partition_output_by: str | None = "crawl_date",
     sample_band: tuple[float, float] | None = None,
     sample_salt: str = "",
     output_file_buckets: int | None = None,
@@ -227,10 +224,7 @@ def run_extraction_pipeline(
 
     already = 0
     if resume:
-        done = resume_done_urls(
-            spark, results_path, pages,
-            date_partitioned=(partition_output_by == "crawl_date"),
-        )
+        done = resume_done_urls(spark, results_path, pages)
         if done is not None:
             already = done.count()
             classified = classified.join(done, "url", "left_anti")
@@ -253,52 +247,44 @@ def run_extraction_pipeline(
         .withColumn("partition_id", F.spark_partition_id())
         .withColumn("run_id", F.lit(run_id))
     )
-    writer = extracted
-    if partition_output_by == "crawl_date":
-        # Iceberg-style table layout: hive-partition the result table by
-        # crawl day so downstream readers prune by date (the analog of an
-        # Iceberg warc_ts day-partition spec; at 10^12 rows this is the
-        # difference between scanning one day's and three years' output)
-        writer = extracted.withColumn(
-            "crawl_date", F.date_format("warc_ts", "yyyy-MM-dd")
+    # Iceberg-style table layout: hive-partition the result table by
+    # crawl day so downstream readers prune by date (the analog of an
+    # Iceberg warc_ts day-partition spec; at 10^12 rows this is the
+    # difference between scanning one day's and three years' output)
+    writer = extracted.withColumn(
+        "crawl_date", F.date_format("warc_ts", "yyyy-MM-dd")
+    )
+    buckets = output_file_buckets
+    if buckets is None and do_shuffle:
+        # ⌈T/D⌉ buckets a day: at most D·⌈T/D⌉ ≤ T + D files.  D is
+        # counted over the whole input, an upper bound on the days
+        # left after the resume anti-join, so the bound holds for
+        # them.  The count is one more pass over the input: a
+        # one-column read of a parquet scan, but a generated input
+        # (pages_dataframe) is generated again
+        days = pages.select(
+            F.countDistinct(F.date_format("warc_ts", "yyyy-MM-dd"))
+        ).first()[0]
+        buckets = -(-target // max(days, 1))
+    if buckets:
+        # route rows to writers BY DATE before the partitioned write.
+        # Without it every task opens a writer for every date it sees
+        # — T tasks × D dates output files, which at 1000 executors ×
+        # 1000 days is a 10^6-small-files-per-day explosion (and a
+        # committer-rename storm on S3-style stores).  The shuffle
+        # carries extracted rows, not payloads, and its tasks only
+        # write (AQE sizes them by bytes); partition_id is stamped
+        # upstream so lineage still names the extraction task that
+        # produced each row.  On the map-only path it is opt-in:
+        # measured locally (2.88M docs, local[16]) the extra
+        # full-output shuffle cost more than the committer savings
+        # on a single-node filesystem (74 s → 130 s wall); the trade
+        # reverses where the file explosion bites.
+        writer = writer.repartition(
+            F.col("crawl_date"),
+            F.pmod(F.xxhash64("url"), F.lit(buckets)),
         )
-        buckets = output_file_buckets
-        if buckets is None and do_shuffle:
-            # ⌈T/D⌉ buckets a day: at most D·⌈T/D⌉ ≤ T + D files.  D is
-            # counted over the whole input, an upper bound on the days
-            # left after the resume anti-join, so the bound holds for
-            # them.  The count is one more pass over the input: a
-            # one-column read of a parquet scan, but a generated input
-            # (pages_dataframe) is generated again
-            days = pages.select(
-                F.countDistinct(F.date_format("warc_ts", "yyyy-MM-dd"))
-            ).first()[0]
-            buckets = -(-target // max(days, 1))
-        if buckets:
-            # route rows to writers BY DATE before the partitioned write.
-            # Without it every task opens a writer for every date it sees
-            # — T tasks × D dates output files, which at 1000 executors ×
-            # 1000 days is a 10^6-small-files-per-day explosion (and a
-            # committer-rename storm on S3-style stores).  The shuffle
-            # carries extracted rows, not payloads, and its tasks only
-            # write (AQE sizes them by bytes); partition_id is stamped
-            # upstream so lineage still names the extraction task that
-            # produced each row.  On the map-only path it is opt-in:
-            # measured locally (2.88M docs, local[16]) the extra
-            # full-output shuffle cost more than the committer savings
-            # on a single-node filesystem (74 s → 130 s wall); the trade
-            # reverses where the file explosion bites.
-            writer = writer.repartition(
-                F.col("crawl_date"),
-                F.pmod(F.xxhash64("url"), F.lit(buckets)),
-            )
-        writer.write.mode("append").partitionBy("crawl_date").parquet(results_path)
-    elif partition_output_by:
-        writer.write.mode("append").partitionBy(partition_output_by).parquet(
-            results_path
-        )
-    else:
-        writer.write.mode("append").parquet(results_path)
+    writer.write.mode("append").partitionBy("crawl_date").parquet(results_path)
 
     # metrics + lineage + row count from the written results in ONE scan:
     # a fine-grained (run_id, extension, partition_id) pre-aggregation is

@@ -25,12 +25,10 @@ def test_corpus_schema(pages):
 
 def test_classification_stage(pages):
     c = with_classification(pages)
-    assert c.where(F.col("size_bytes") != F.length("html")).count() == 0
+    # the salt is the only derived column: nothing downstream reads more
+    assert c.columns == pages.columns + ["salt"]
     assert c.where((F.col("salt") < 0) | (F.col("salt") >= DEFAULT_SALTS)).count() == 0
-    exts = dict(
-        c.groupBy("url_ext").count().collect()
-    )
-    assert exts.get("html", 0) > 0 and exts.get("pdf", 0) > 0
+    assert c.select("salt").distinct().count() > N // 2
 
 
 def test_pipeline_end_to_end(spark, pages, tmp_path_factory):
@@ -157,7 +155,7 @@ def test_no_python_in_relational_plan(spark, pages):
     """The classify stage must stay JVM-side (no BatchEvalPython /
     ArrowEvalPython nodes) so it whole-stage-codegens."""
     plan = with_classification(pages).select(
-        "url_ext", "size_bytes", "salt"
+        "salt"
     )._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
 

@@ -187,12 +187,12 @@ def test_ngram_jaccard_shingle_df_cap(spark):
 
 def test_ngram_shingle_engines_bit_identical(spark):
     """The pure-Catalyst shingle engine (``engine="expr"``) must produce
-    the exact pair set of the Arrow kernel, for both hashed-int64 and
-    string shingle keys — the cross-engine differential that pins the
-    Arrow kernel's tokenization/hash semantics to Spark's own expression
-    evaluator (in addition to the DuckDB oracle).  Perf note: expr
-    measured 4-8x SLOWER at sf0.1 (interpreted higher-order lambdas);
-    it is a validator, not an option — see ngram_jaccard_pairs docs."""
+    the exact pair set of the hybrid Arrow kernel — the cross-engine
+    differential that pins the kernel's tokenization/hash semantics to
+    Spark's own expression evaluator (in addition to the DuckDB oracle).
+    Perf note: expr measured 4-8x SLOWER at sf0.1 (interpreted
+    higher-order lambdas); it is a validator, not an option — see
+    ngram_jaccard_pairs docs."""
     from doctor_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -205,16 +205,12 @@ def test_ngram_shingle_engines_bit_identical(spark):
         (6, "unicode café naïve résumé tokens plus filler words"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for hashed in (True, False):
-        got = {}
-        for engine in ("arrow", "expr", "hybrid"):
-            pairs = ngram_jaccard_pairs(
-                df, threshold=0.1, hash_shingles=hashed, engine=engine
-            ).collect()
-            got[engine] = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs)
-        assert got["arrow"] == got["expr"], (hashed, got)
-        assert got["arrow"] == got["hybrid"], (hashed, got)
-        assert len(got["arrow"]) >= 2  # (0,1) near-dup and (0,5) exact
+    got = {}
+    for engine in ("expr", "hybrid"):
+        pairs = ngram_jaccard_pairs(df, threshold=0.1, engine=engine).collect()
+        got[engine] = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs)
+    assert got["expr"] == got["hybrid"], got
+    assert len(got["expr"]) >= 2  # (0,1) near-dup and (0,5) exact
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -257,24 +253,28 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 def test_simhash_near_pairs_complete(spark):
     """Band-bucketed Hamming search must find EXACTLY the brute-force
     pairs at radius ≤ 3 (pigeonhole completeness, no false positives
-    after rescore)."""
+    after rescore), at the demo width and at the 48-bit production
+    width (12-bit bands)."""
     from doctor_spark.operators.dedup import simhash_near_pairs, with_simhash
 
     rows = [(i, f"the quick brown fox number {i % 9} jumps over dog {i % 7}")
             for i in range(120)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in simhash_near_pairs(df, max_hamming=3, n_bands=4).collect()}
+    for bits in (16, 48):
+        got = {(r.id_a, r.id_b, r.hamming)
+               for r in simhash_near_pairs(
+                   df, bits=bits, max_hamming=3, n_bands=4).collect()}
 
-    sigs = {r.doc_id: r.simhash for r in with_simhash(df).collect()}
-    want = set()
-    ids = sorted(sigs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            h = bin(sigs[a] ^ sigs[b]).count("1")
-            if h <= 3:
-                want.add((a, b, h))
-    assert got == want and len(want) > 0
+        sigs = {r.doc_id: r.simhash
+                for r in with_simhash(df, bits=bits).collect()}
+        want = set()
+        ids = sorted(sigs)
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                h = bin(sigs[a] ^ sigs[b]).count("1")
+                if h <= 3:
+                    want.add((a, b, h))
+        assert got == want and len(want) > 0, bits
 
 
 def test_simhash_engines_bit_identical(spark):
@@ -293,7 +293,7 @@ def test_simhash_engines_bit_identical(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for bits in (16, 48):
         arrow = {r.doc_id: r.simhash
-                 for r in with_simhash(df, bits=bits).collect()}
+                 for r in with_simhash(df, bits=bits, engine="arrow").collect()}
         expr = {r.doc_id: r.simhash
                 for r in with_simhash(df, bits=bits, engine="expr").collect()}
         assert arrow == expr, (bits, arrow, expr)
