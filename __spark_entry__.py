@@ -35,6 +35,8 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from doctor_spark.arrow import row_map, row_udf  # noqa: E402
+
 CORPUS_N = 400  # fixed-size corpus for extraction queries (sf-independent)
 
 # per 100 doc_ids (corpus.py _FORMAT_TABLE): html 55, pdf 10+2+3+5+4=24,
@@ -108,7 +110,7 @@ def _spread_scan_sorted(
     spark: SparkSession, path: str, key: str, cols: list[str] | None = None
 ) -> DataFrame:
     """Input-side global sort for map-only queries that must emit rows in
-    ``key`` order.  A final ``orderBy`` above a mapInPandas executes the
+    ``key`` order.  A final ``orderBy`` above a mapInArrow executes the
     Python stage TWICE: the range exchange's bounds-sampling job runs the
     child lineage once, then the real shuffle map runs it again (measured:
     a trivial 64-partition map stage costs 2.0–2.5 s under a sort vs 1.0 s
@@ -216,40 +218,27 @@ def _pdf_metadata_fixtures() -> list[tuple[str, bytes]]:
 def q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PACER doc-number (P8) + bad-redaction x-ray (P9) + page count (P7)
     over deterministic stamp/redaction fixtures.  Literal oracle."""
-    import pandas as pd
+    from doctor_spark.kernels.pdf import (
+        get_document_number,
+        get_page_count,
+        get_xray,
+    )
 
-    def run(batches):
-        from doctor_spark.kernels.pdf import (
-            get_document_number,
-            get_page_count,
-            get_xray,
+    def metadata(url, data):
+        xr = get_xray(data)
+        n_red = sum(len(v) for v in xr["results"].values())
+        recovered = " | ".join(
+            h["text"] for v in xr["results"].values() for h in v
         )
-
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["payload"]):
-                data = bytes(payload)
-                xr = get_xray(data)
-                n_red = sum(len(v) for v in xr["results"].values())
-                recovered = " | ".join(
-                    h["text"] for v in xr["results"].values() for h in v
-                )
-                rows.append(
-                    (url, get_document_number(data),
-                     get_page_count(data, "pdf"), n_red, recovered)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "doc_number", "page_count", "n_redactions",
-                         "recovered_text"],
-            )
+        return [(url, get_document_number(data),
+                 get_page_count(data, "pdf"), n_red, recovered)]
 
     fixtures = _pdf_metadata_fixtures()
     df = spark.createDataFrame(fixtures, "url string, payload binary")
-    return df.mapInPandas(
-        run,
-        schema="url string, doc_number string, page_count int, "
-               "n_redactions int, recovered_text string",
+    return row_map(
+        df, metadata,
+        "url string, doc_number string, page_count int, "
+        "n_redactions int, recovered_text string",
     ).select(
         "url", "doc_number",
         F.col("page_count").cast("bigint").alias("page_count"),
@@ -261,24 +250,12 @@ def q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_recap_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECAP-mode gate (P4-P6): strip-margin extraction over fixtures whose
     goldens are authored alongside.  Expected: EMPTY."""
-    import pandas as pd
-
-    def run(batches):
-        from doctor_spark.kernels.extract import extract_recap_pdf_bytes
-
-        for pdf in batches:
-            rows = []
-            for url, payload, expected in zip(
-                pdf["url"], pdf["payload"], pdf["expected"]
-            ):
-                content, _by_ocr, _pages = extract_recap_pdf_bytes(
-                    bytes(payload), strip_margin=True
-                )
-                if content != expected:
-                    rows.append((url, content))
-            yield pd.DataFrame(rows, columns=["url", "content"])
-
+    from doctor_spark.kernels.extract import extract_recap_pdf_bytes
     from doctor_spark.kernels.pdfwriter import Line, PageSpec, build_pdf
+
+    def mismatch(url, payload, expected):
+        content, _by_ocr, _pages = extract_recap_pdf_bytes(payload, strip_margin=True)
+        return [] if content == expected else [(url, content)]
 
     fixtures = []
     for i in range(6):
@@ -292,7 +269,7 @@ def q_extract_recap_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixtures.append((f"https://recap.test/{i}.pdf", build_pdf([PageSpec(lines=lines)]), golden))
 
     df = spark.createDataFrame(fixtures, "url string, payload binary, expected string")
-    return df.mapInPandas(run, schema="url string, content string")
+    return row_map(df, mismatch, "url string, content string")
 
 
 _REF_ASSETS = "/root/reference/doctor/test_assets"
@@ -358,7 +335,14 @@ def q_reference_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned to the engine's own deterministic value and carry
     ``source='engine-divergence(...)'`` so a CORRECTNESS pass on them
     reads as regression-pinning, never as reference parity."""
-    import pandas as pd
+    from doctor_spark.kernels.docx import extract_from_docx_bytes
+    from doctor_spark.kernels.extract import (
+        extract_document,
+        extract_recap_pdf_bytes,
+    )
+    from doctor_spark.kernels.msdoc import extract_from_doc_bytes
+    from doctor_spark.kernels.pdf import get_document_number, get_xray
+    from doctor_spark.kernels.wpd import extract_from_wpd_bytes
 
     # read the fixture bytes ONCE on the driver and ship them as payload
     # columns — executors on a real cluster have no /root/reference
@@ -381,72 +365,55 @@ def q_reference_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f, c, _v, r in _ENGINE_DIVERGENCES
     }
 
-    def run(batches):
-        from doctor_spark.kernels.docx import extract_from_docx_bytes
-        from doctor_spark.kernels.extract import (
-            extract_document,
-            extract_recap_pdf_bytes,
-        )
-        from doctor_spark.kernels.msdoc import extract_from_doc_bytes
-        from doctor_spark.kernels.pdf import get_document_number, get_xray
-        from doctor_spark.kernels.wpd import extract_from_wpd_bytes
+    def checks(name, data):
+        rows = []
+        if name.startswith("recap_documents/"):
+            rows.append((name, "doc_number", get_document_number(data)))
+        elif name.startswith("x-ray/"):
+            xr = get_xray(data)
+            found = (not xr["error"]) and len(xr["results"]) > 0
+            rows.append((name, "xray_found", "true" if found else "false"))
+        elif name.startswith("recap_extract/"):
+            content, _ocr, _pages = extract_recap_pdf_bytes(
+                data, strip_margin=True
+            )
+            first = content.splitlines()[0].strip() if content else ""
+            rows.append((name, "recap_first_line_strip_margin", first))
+        elif name == "vector-pdf.pdf":
+            res = extract_document(f"https://x.test/{name}", data)
+            rows.append((name, "first100",
+                         res.content[:100].replace("\n", "").strip()))
+            rows.append((name, "page_count", str(res.page_count)))
+            rows.append((name, "extracted_by_ocr",
+                         "true" if res.extracted_by_ocr else "false"))
+        elif name in ("image-pdf.pdf", "broken-mime.pdf", "missouri.pdf"):
+            res = extract_document(f"https://x.test/blob.bin", data)
+            rows.append((name, "extension", res.extension))
+            if name == "image-pdf.pdf":
+                rows.append((name, "page_count", str(res.page_count)))
+                rows.append((name, "no_text_layer",
+                             "true" if res.content.strip("\x0c") == ""
+                             else "false"))
+        elif name == "word-docx.docx":
+            content, _e, _rc = extract_from_docx_bytes(data)
+            rows.append((name, "first200",
+                         content[:200].replace("\n", "").strip()))
+        elif name == "word-doc.doc":
+            content, _e, _rc = extract_from_doc_bytes(data)
+            rows.append((name, "first100",
+                         content[:100].replace("\n", "").strip()))
+            res = extract_document(f"https://x.test/{name}", data)
+            rows.append((name, "page_count", str(res.page_count)))
+        elif name == "word-perfect.wpd":
+            content, _e, _rc = extract_from_wpd_bytes(data)
+            rows.append((name, "contains_attorney_for_appellant",
+                         "true" if "ATTORNEY FOR APPELLANT" in content
+                         else "false"))
+            rows.append((name, "content_len", str(len(content))))
+        return [(f, c, v, div_note.get((f, c), "reference")) for f, c, v in rows]
 
-        for pdf in batches:
-            rows = []
-            for name, payload in zip(pdf["fixture"], pdf["payload"]):
-                data = bytes(payload)
-                if name.startswith("recap_documents/"):
-                    rows.append((name, "doc_number", get_document_number(data)))
-                elif name.startswith("x-ray/"):
-                    xr = get_xray(data)
-                    found = (not xr["error"]) and len(xr["results"]) > 0
-                    rows.append((name, "xray_found", "true" if found else "false"))
-                elif name.startswith("recap_extract/"):
-                    content, _ocr, _pages = extract_recap_pdf_bytes(
-                        data, strip_margin=True
-                    )
-                    first = content.splitlines()[0].strip() if content else ""
-                    rows.append((name, "recap_first_line_strip_margin", first))
-                elif name == "vector-pdf.pdf":
-                    res = extract_document(f"https://x.test/{name}", data)
-                    rows.append((name, "first100",
-                                 res.content[:100].replace("\n", "").strip()))
-                    rows.append((name, "page_count", str(res.page_count)))
-                    rows.append((name, "extracted_by_ocr",
-                                 "true" if res.extracted_by_ocr else "false"))
-                elif name in ("image-pdf.pdf", "broken-mime.pdf", "missouri.pdf"):
-                    res = extract_document(f"https://x.test/blob.bin", data)
-                    rows.append((name, "extension", res.extension))
-                    if name == "image-pdf.pdf":
-                        rows.append((name, "page_count", str(res.page_count)))
-                        rows.append((name, "no_text_layer",
-                                     "true" if res.content.strip("\x0c") == ""
-                                     else "false"))
-                elif name == "word-docx.docx":
-                    content, _e, _rc = extract_from_docx_bytes(data)
-                    rows.append((name, "first200",
-                                 content[:200].replace("\n", "").strip()))
-                elif name == "word-doc.doc":
-                    content, _e, _rc = extract_from_doc_bytes(data)
-                    rows.append((name, "first100",
-                                 content[:100].replace("\n", "").strip()))
-                    res = extract_document(f"https://x.test/{name}", data)
-                    rows.append((name, "page_count", str(res.page_count)))
-                elif name == "word-perfect.wpd":
-                    content, _e, _rc = extract_from_wpd_bytes(data)
-                    rows.append((name, "contains_attorney_for_appellant",
-                                 "true" if "ATTORNEY FOR APPELLANT" in content
-                                 else "false"))
-                    rows.append((name, "content_len", str(len(content))))
-            out = pd.DataFrame(rows, columns=["fixture", "check", "value"])
-            out["source"] = [
-                div_note.get((f, c), "reference")
-                for f, c in zip(out["fixture"], out["check"])
-            ]
-            yield out
-
-    return paths.mapInPandas(
-        run, schema="fixture string, check string, value string, source string"
+    return row_map(
+        paths, checks, "fixture string, check string, value string, source string"
     )
 
 
@@ -1819,12 +1786,7 @@ def _synth_pattern_png(doc_id: int) -> bytes:
 
 
 def _synth_png_udf():
-    import pandas as pd  # noqa: F401 — annotation namespace below
-
-    def udf(doc_id):
-        return doc_id.map(lambda i: _synth_pattern_png(int(i)))
-
-    return F.pandas_udf(udf, "binary")
+    return row_udf(_synth_pattern_png, "binary")
 
 
 def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1879,12 +1841,7 @@ def _synth_pattern_wav(doc_id: int) -> bytes:
 
 
 def _synth_wav_udf():
-    import pandas as pd  # noqa: F401
-
-    def udf(doc_id):
-        return doc_id.map(lambda i: _synth_pattern_wav(int(i)))
-
-    return F.pandas_udf(udf, "binary")
+    return row_udf(_synth_pattern_wav, "binary")
 
 
 def q_audio_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1938,12 +1895,7 @@ def _synth_pattern_video(doc_id: int) -> bytes:
 
 
 def _synth_video_udf():
-    import pandas as pd  # noqa: F401
-
-    def udf(doc_id):
-        return doc_id.map(lambda i: _synth_pattern_video(int(i)))
-
-    return F.pandas_udf(udf, "binary")
+    return row_udf(_synth_pattern_video, "binary")
 
 
 def q_video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3819,11 +3771,13 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-hop browser budget, cycles and over-long chains marked
     unresolved.  Pointer doubling — ⌈log₂ 16⌉ = 4 keyed self-joins, not
     16 per-hop iterations — with localCheckpoint-bounded lineage; the
-    oracle walks the same chains with a hop-bounded recursive CTE."""
+    oracle walks the same chains with a hop-bounded recursive CTE.  Plain
+    ``_docs`` scan: the query runs no Python and every doubling job would
+    re-pay a spread exchange (measured 0.657× with it)."""
     from doctor_spark.operators.graph import resolve_redirects
 
     src, dst = _redirect_edges_expr("div")
-    edges = _docs_spread(spark, sf_dir).select(
+    edges = _docs(spark, sf_dir).select(
         F.expr(src).alias("src"), F.expr(dst).alias("dst")
     )
     r = resolve_redirects(edges, max_hops=16)
@@ -4474,7 +4428,7 @@ def q_boilerplate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-only main-content pass over the documents table wrapped in the
     static nav/content/footer template: per-doc block counts plus the md5
     of the kept main content.  The scale-bearing form of the boilerplate
-    operator — one mapInPandas stage, zero shuffles."""
+    operator — one mapInArrow stage, zero shuffles."""
     from doctor_spark.operators.boilerplate import justext_doc_summary
 
     docs = _docs(spark, sf_dir)
@@ -4510,7 +4464,7 @@ def q_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extracted text/spans per document"): one row per non-empty block
     with its [start_off, end_off) source char offsets in the page HTML,
     the final jusText-dialect class, and the keep verdict.  Spark side
-    is one mapInPandas stage, zero shuffles; the oracle recomputes every
+    is one mapInArrow stage, zero shuffles; the oracle recomputes every
     offset analytically from the static wrapper geometry plus the
     escaped-text length, so the kernel's HTMLParser position tracking
     (entity source lengths included — the text is &-escaped into the
@@ -4722,41 +4676,33 @@ def q_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer must produce: page_count == n_images, one image per page.
 
     Plan note (guide §4.1): generation and conversion are FUSED into one
-    ``mapInPandas`` (sharing the operator's per-row core) so the generated
+    ``mapInArrow`` (sharing the operator's per-row core) so the generated
     PNG bytes never cross the JVM↔Python boundary — only doc_id in, four
     stat columns out."""
-    from doctor_spark.operators.multimodal import IMAGES_TO_PDF_DDL
+    import numpy as np
+
+    from doctor_spark.kernels.png import encode_png
+    from doctor_spark.operators.multimodal import (
+        IMAGES_TO_PDF_DDL,
+        images_to_pdf_row,
+    )
 
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def gen(did):
+        pngs = []
+        for k in range(1 + did % 3):
+            h = 8 + (did + k) % 5
+            w = 6 + (did * 3 + k) % 7
+            arr = (
+                (np.arange(h * w) * (did + 7 + k)) % 256
+            ).astype(np.uint8).reshape(h, w)
+            pngs.append(encode_png(arr))
+        return [images_to_pdf_row(did, pngs)]
 
-        from doctor_spark.kernels.png import encode_png
-        from doctor_spark.operators.multimodal import images_to_pdf_row
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 1 + did % 3
-                pngs = []
-                for k in range(n):
-                    h = 8 + (did + k) % 5
-                    w = 6 + (did * 3 + k) % 7
-                    arr = (
-                        (np.arange(h * w) * (did + 7 + k)) % 256
-                    ).astype(np.uint8).reshape(h, w)
-                    pngs.append(encode_png(arr))
-                rows.append(images_to_pdf_row(did, pngs))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_images", "page_count", "parse_ok"]
-            )
-
-    return docs.mapInPandas(gen, schema=IMAGES_TO_PDF_DDL)
+    return row_map(docs, gen, IMAGES_TO_PDF_DDL)
 
 
 def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4767,51 +4713,40 @@ def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     one page per image by the V1 writer, metadata-stripped (V3), and
     re-parsed by the independent reader.  Oracle: the page tree matches
     the URL count for every document."""
+    import numpy as np
+
+    from doctor_spark.kernels.pdf import parse_pdf
+    from doctor_spark.kernels.pdfwrite import PdfWriteError
+    from doctor_spark.kernels.png import encode_png
+    from doctor_spark.sources.fetch import images_to_pdf_from_urls
+
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def transport(url: str) -> bytes:
+        did, k = (int(v) for v in url.rsplit("/", 2)[-2:])
+        h = 8 + (did + k) % 5
+        w = 6 + (did * 3 + k) % 7
+        arr = ((np.arange(h * w) * (did + 7 + k)) % 256).astype(
+            np.uint8
+        ).reshape(h, w)
+        return encode_png(arr)
 
-        from doctor_spark.kernels.pdf import parse_pdf
-        from doctor_spark.kernels.pdfwrite import PdfWriteError
-        from doctor_spark.kernels.png import encode_png
-        from doctor_spark.sources.fetch import images_to_pdf_from_urls
-
-        def transport(url: str) -> bytes:
-            did, k = (int(v) for v in url.rsplit("/", 2)[-2:])
-            h = 8 + (did + k) % 5
-            w = 6 + (did * 3 + k) % 7
-            arr = ((np.arange(h * w) * (did + 7 + k)) % 256).astype(
-                np.uint8
-            ).reshape(h, w)
-            return encode_png(arr)
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                urls = [
-                    f"http://img.example/{did}/{k}"
-                    for k in range(1 + did % 3)
-                ]
-                try:
-                    out = images_to_pdf_from_urls(urls, transport=transport)
-                    doc = parse_pdf(out)
-                    ok = doc.page_count == len(urls) and all(
-                        len(pg.images) == 1 for pg in doc.pages
-                    )
-                    rows.append((did, len(urls), doc.page_count, bool(ok)))
-                except (PdfWriteError, ValueError):
-                    rows.append((did, len(urls), 0, False))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_urls", "page_count", "parse_ok"]
+    def gen(did):
+        urls = [f"http://img.example/{did}/{k}" for k in range(1 + did % 3)]
+        try:
+            out = images_to_pdf_from_urls(urls, transport=transport)
+            doc = parse_pdf(out)
+            ok = doc.page_count == len(urls) and all(
+                len(pg.images) == 1 for pg in doc.pages
             )
+            return [(did, len(urls), doc.page_count, bool(ok))]
+        except (PdfWriteError, ValueError):
+            return [(did, len(urls), 0, False)]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, n_urls int, page_count int, parse_ok boolean"
+    return row_map(
+        docs, gen, "doc_id long, n_urls int, page_count int, parse_ok boolean"
     )
 
 
@@ -4826,43 +4761,29 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically in SQL.
 
     Plan note (guide §4.1): generation and transcode are FUSED into one
-    ``mapInPandas`` (sharing the operator's per-row core) so the WAV
+    ``mapInArrow`` (sharing the operator's per-row core) so the WAV
     bytes never cross the JVM↔Python boundary."""
-    from doctor_spark.operators.multimodal import AUDIO_TRANSCODE_DDL
+    import numpy as np
+
+    from doctor_spark.kernels.audio import write_wav
+    from doctor_spark.operators.multimodal import (
+        AUDIO_TRANSCODE_DDL,
+        audio_transcode_row,
+    )
 
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    def gen(did):
+        rate = 11025 * (1 + did % 4)
+        ch = 1 + did % 2
+        n = rate // 2 + (did % 7) * 13
+        t = np.arange(n * ch, dtype=np.int64).reshape(n, ch)
+        samples = ((t * (did % 97 + 3)) % 24001 - 12000).astype(np.int16)
+        return [audio_transcode_row(did, write_wav(rate, samples))]
 
-        from doctor_spark.kernels.audio import write_wav
-        from doctor_spark.operators.multimodal import audio_transcode_row
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rate = 11025 * (1 + did % 4)
-                ch = 1 + did % 2
-                n = rate // 2 + (did % 7) * 13
-                t = np.arange(n * ch, dtype=np.int64).reshape(n, ch)
-                samples = ((t * (did % 97 + 3)) % 24001 - 12000).astype(
-                    np.int16
-                )
-                rows.append(audio_transcode_row(did, write_wav(rate, samples)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "mp3_rate", "mp3_n", "mp3_ch",
-                    "voip_rate", "voip_n", "voip_ch", "duration_sec",
-                    "tag_ok",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=AUDIO_TRANSCODE_DDL)
+    return row_map(docs, gen, AUDIO_TRANSCODE_DDL)
 
 
 def q_pdf_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4875,32 +4796,20 @@ def q_pdf_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document.
 
     Plan note (guide §4.1): generation and rasterization are FUSED into
-    one ``mapInPandas`` (sharing the operator's per-row core) so the PDF
+    one ``mapInArrow`` (sharing the operator's per-row core) so the PDF
     bytes never cross the JVM↔Python boundary."""
-    from doctor_spark.operators.multimodal import THUMBNAIL_DDL
+    from doctor_spark.corpus import _build_text_pdf, _rng
+    from doctor_spark.operators.multimodal import THUMBNAIL_DDL, pdf_thumbnail_row
 
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(did):
+        data, _golden = _build_text_pdf(did, _rng(did))
+        return [pdf_thumbnail_row(did, data)]
 
-        from doctor_spark.corpus import _build_text_pdf, _rng
-        from doctor_spark.operators.multimodal import pdf_thumbnail_row
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                data, _golden = _build_text_pdf(did, _rng(did))
-                rows.append(pdf_thumbnail_row(did, data))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "thumb_w", "thumb_h", "png_ok", "has_ink"],
-            )
-
-    return docs.mapInPandas(gen, schema=THUMBNAIL_DDL)
+    return row_map(docs, gen, THUMBNAIL_DDL)
 
 
 def q_embed_text_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4912,33 +4821,18 @@ def q_embed_text_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the word table in raster reading order.  Oracle: every
     document round-trips (1 page, words present, tokens exact, both
     invisibility mechanisms in the output bytes)."""
-    from doctor_spark.operators.multimodal import EMBED_OVERLAY_DDL
+    from doctor_spark.corpus import _build_image_pdf, _rng
+    from doctor_spark.operators.multimodal import EMBED_OVERLAY_DDL, embed_text_overlay_row
 
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(did):
+        data, _golden = _build_image_pdf(did, _rng(did))
+        return [embed_text_overlay_row(did, data)]
 
-        from doctor_spark.corpus import _build_image_pdf, _rng
-        from doctor_spark.operators.multimodal import embed_text_overlay_row
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                data, _golden = _build_image_pdf(did, _rng(did))
-                rows.append(embed_text_overlay_row(did, data))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page_count", "has_words", "tokens_match",
-                    "overlay_invisible",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=EMBED_OVERLAY_DDL)
+    return row_map(docs, gen, EMBED_OVERLAY_DDL)
 
 
 def q_pdf_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4947,32 +4841,18 @@ def q_pdf_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch re-serializer → round-trip properties: layout text
     unchanged, strip idempotent, size sane.  Oracle: all three hold for
     every document."""
-    from doctor_spark.operators.multimodal import STRIP_ROUNDTRIP_DDL
+    from doctor_spark.corpus import _build_text_pdf, _rng
+    from doctor_spark.operators.multimodal import STRIP_ROUNDTRIP_DDL, pdf_strip_roundtrip_row
 
     docs = _spread_scan_sorted(
         spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(did):
+        data, _golden = _build_text_pdf(did, _rng(did))
+        return [pdf_strip_roundtrip_row(did, data)]
 
-        from doctor_spark.corpus import _build_text_pdf, _rng
-        from doctor_spark.operators.multimodal import pdf_strip_roundtrip_row
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                data, _golden = _build_text_pdf(did, _rng(did))
-                rows.append(pdf_strip_roundtrip_row(did, data))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "text_equal", "strip_stable", "shrunk_or_equal",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=STRIP_ROUNDTRIP_DDL)
+    return row_map(docs, gen, STRIP_ROUNDTRIP_DDL)
 
 
 def q_media_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

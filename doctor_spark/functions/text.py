@@ -13,6 +13,8 @@ import re
 
 from pyspark.sql import Column, functions as F
 
+from ..arrow import row_udf
+
 # stopword inventories for the language-ID heuristic: top function words
 # per language (public frequency-list knowledge).  Dict order is the
 # argmax tie-break order; the first four keys keep round-1..3 precedence
@@ -208,54 +210,35 @@ def lang_guess_udf():
     Column spec on the corpus + hostile strings."""
     import re as _re
 
-    import pandas as pd
-
     script_res = {s: _re.compile(SCRIPT_RANGES[s]) for s in SCRIPT_RANGES}
     latin_re = _re.compile(LATIN_CLASS)
     stop_sets = {lg: frozenset(ws) for lg, ws in LANG_STOPWORDS.items()}
     ws_re = _re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s mirror
 
-    def guess(texts):
-        out = []
-        for text in texts:
-            t = text or ""
-            script_hits = {
-                s: len(r.findall(t)) for s, r in script_res.items()
+    def guess(text):
+        t = text or ""
+        script_hits = {s: len(r.findall(t)) for s, r in script_res.items()}
+        latin = len(latin_re.findall(t))
+        best_script = max(latin, *script_hits.values())
+        if best_script == 0:
+            return "und"
+        if latin == best_script:
+            toks = ws_re.split(t.strip(" ").lower())
+            hits = {
+                lg: sum(1 for tk in toks if tk in sw)
+                for lg, sw in stop_sets.items()
             }
-            latin = len(latin_re.findall(t))
-            best_script = max(latin, *script_hits.values())
-            if best_script == 0:
-                out.append("und")
-                continue
-            if latin == best_script:
-                toks = ws_re.split(t.strip(" ").lower())
-                hits = {
-                    lg: sum(1 for tk in toks if tk in sw)
-                    for lg, sw in stop_sets.items()
-                }
-                best = max(hits.values())
-                if best == 0:
-                    out.append("und")
-                    continue
-                out.append(
-                    next(lg for lg in stop_sets if hits[lg] == best)
-                )
-                continue
-            for s in script_res:
-                if script_hits[s] == best_script:
-                    if s == "zh":
-                        out.append(
-                            "ja" if script_hits["ja"] > 0 else "zh"
-                        )
-                    else:
-                        out.append(s)
-                    break
-        return pd.Series(out)
+            best = max(hits.values())
+            if best == 0:
+                return "und"
+            return next(lg for lg in stop_sets if hits[lg] == best)
+        for s in script_res:
+            if script_hits[s] == best_script:
+                if s == "zh":
+                    return "ja" if script_hits["ja"] > 0 else "zh"
+                return s
 
-    # real-type annotations (from __future__ annotations stringifies the
-    # inline form, which pandas_udf can't resolve)
-    guess.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(guess, "string")
+    return row_udf(guess, "string")
 
 
 # GPT-2-style pre-tokenizer shape (public pattern family): contractions,
@@ -390,34 +373,18 @@ def char_entropy_udf():
     """Arrow kernel for ``char_entropy_micro_row`` — one pass per row,
     map-only (the per-doc counter never leaves the task; only the SQL
     oracle pays an explode-and-groupBy)."""
-    import pandas as pd
-
-    def kernel(texts):
-        return pd.Series(
-            [char_entropy_micro_row(t) for t in texts], dtype="object"
-        )
-
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(kernel, "long")
+    return row_udf(char_entropy_micro_row, "long")
 
 
 def sentence_stats_udf():
     """Arrow kernel over :func:`..kernels.sentences.sentence_stats_row`:
     per-doc (n_sentences, sum_chars, max_chars) in one map-only batch —
     the rollup sentence-level dedup/packing stages key on."""
-    import pandas as pd
-
     from ..kernels.sentences import sentence_stats_row
 
-    def kernel(texts):
-        return pd.DataFrame(
-            [sentence_stats_row(t) for t in texts],
-            columns=["n_sentences", "sum_chars", "max_chars"],
-        )
-
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(
-        kernel, "struct<n_sentences:long, sum_chars:long, max_chars:long>"
+    return row_udf(
+        sentence_stats_row,
+        "struct<n_sentences:long, sum_chars:long, max_chars:long>",
     )
 
 
@@ -430,10 +397,6 @@ def sentence_stats_udf():
 
 def _lines(col: Column) -> Column:
     return F.split(col, "\n")
-
-
-def word_count(col: Column) -> Column:
-    return token_count(col)
 
 
 def symbol_word_ratio(col: Column) -> Column:
@@ -726,46 +689,14 @@ def repetition_metrics_row(s: str | None) -> tuple:
 def repetition_metrics_udf():
     """Arrow-batched struct kernel for the repetition family — one Python
     node, zero shuffles (all counting is per-document)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cols = [f.split(" ")[0] for f in REPETITION_STRUCT.split(", ")]
-
-    def kernel(texts):
-        rows = [repetition_metrics_row(t) for t in texts]
-        return pd.DataFrame(rows, columns=cols, dtype=object)
-
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    struct_ddl = REPETITION_STRUCT.replace(" double", ": double").replace(
-        " boolean", ": boolean"
-    )
-    return pandas_udf(kernel, f"struct<{struct_ddl}>")
+    return row_udf(repetition_metrics_row, f"struct<{REPETITION_STRUCT}>")
 
 
 def gopher_metrics_udf():
     """Arrow-batched struct kernel: SELECT gopher_metrics_udf()(text) then
     project the fields.  One ArrowEvalPython node in the plan regardless
     of how many components downstream reads."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cols = [f.split(" ")[0] for f in GOPHER_STRUCT.split(", ")]
-
-    def kernel(texts):
-        rows = [gopher_metrics_row(t) for t in texts]
-        # object dtype keeps None as NULL (a float column would coerce it
-        # to NaN, which hash-compares differently from SQL NULL)
-        return pd.DataFrame(rows, columns=cols, dtype=object)
-
-    # explicit annotation objects: the module uses `from __future__ import
-    # annotations`, so inline hints would be unresolvable strings here
-    kernel.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    struct_ddl = (
-        GOPHER_STRUCT.replace(" bigint", ": bigint")
-        .replace(" double", ": double")
-        .replace(" boolean", ": boolean")
-    )
-    return pandas_udf(kernel, f"struct<{struct_ddl}>")
+    return row_udf(gopher_metrics_row, f"struct<{GOPHER_STRUCT}>")
 
 
 # ---------------------------------------------------------------------------
@@ -951,15 +882,4 @@ def unicode_clean_udf():
     zero shuffles; the cleaned TEXT itself is oracle-hashed, so the
     NFC implementations of Python and DuckDB (utf8proc) are checked
     against each other on every row."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def k(s):
-        return pd.DataFrame(
-            [unicode_clean_row(v) for v in s],
-            columns=["clean", "n_space_mapped", "n_zero_width",
-                     "n_controls", "changed"],
-        )
-
-    k.__annotations__ = {"s": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(k, UNICODE_CLEAN_STRUCT)
+    return row_udf(unicode_clean_row, UNICODE_CLEAN_STRUCT)

@@ -253,13 +253,10 @@ def html_to_markdown(content: str) -> str:
 
 
 def markdown_udf():
-    """Arrow-batched Spark kernel: html string column → markdown."""
-    global pd
-    import pandas as pd  # module-global: pandas_udf resolves the
-    from pyspark.sql import functions as F  # annotations via __globals__
+    """Row-wise Arrow Spark kernel: html string column → markdown."""
+    from ..arrow import row_udf
 
-    @F.pandas_udf("string")
-    def to_md(html: "pd.Series") -> "pd.Series":
-        return html.map(lambda h: html_to_markdown(h) if h else "")
+    def to_md(h):
+        return html_to_markdown(h) if h else ""
 
-    return to_md
+    return row_udf(to_md, "string")

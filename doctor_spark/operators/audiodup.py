@@ -7,8 +7,9 @@ keyed groupBy, Hamming near pairs via the shared pigeonhole band join
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 __all__ = ["audio_afp", "audio_dup_clusters", "audio_near_pairs"]
 
@@ -28,24 +29,19 @@ def _decode_samples(payload: bytes):
 
 
 def _afp_udf():
-    @F.pandas_udf("bigint")
-    def udf(payload: pd.Series) -> pd.Series:
-        from ..kernels.audiohash import afp64
+    from ..kernels.audiohash import afp64
 
-        def one(b):
-            if b is None:
-                return None
-            try:
-                return afp64(_decode_samples(bytes(b)))
-            except (ValueError, NotImplementedError):
-                return None
+    def udf(b):
+        if b is None:
+            return None
+        try:
+            return afp64(_decode_samples(bytes(b)))
+        except (ValueError, NotImplementedError):
+            return None
 
-        # nullable Int64 + asNondeterministic: same two traps as the
-        # image path (float64 hash rounding past 2^53; Catalyst decoding
-        # twice through pushed predicates) — see operators/imagedup.py
-        return pd.Series((one(b) for b in payload), dtype="Int64")
-
-    return udf.asNondeterministic()
+    # asNondeterministic: Catalyst would otherwise decode twice through
+    # pushed predicates, as on the image path (see operators/imagedup.py)
+    return row_udf(udf, "bigint").asNondeterministic()
 
 
 def audio_afp(

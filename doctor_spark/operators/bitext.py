@@ -21,8 +21,9 @@ parallel per pair.  A pair whose DP table would exceed
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _BEADS_TYPE = (
     "array<struct<bead:int, ok:boolean, src_start:int, n_src:int, "
@@ -31,37 +32,22 @@ _BEADS_TYPE = (
 
 
 def _beads_udf():
-    @F.pandas_udf(_BEADS_TYPE)
-    def beads(src: pd.Series, tgt: pd.Series) -> pd.Series:
-        from ..kernels.bitext import gale_church_align
-        from ..kernels.sentences import split_sentences
+    from ..kernels.bitext import gale_church_align
+    from ..kernels.sentences import split_sentences
 
-        def one(s, t):
-            ss = split_sentences(s)
-            ts = split_sentences(t)
-            al = gale_church_align(
-                [len(x) for x in ss], [len(x) for x in ts]
-            )
-            if al is None:
-                return [{
-                    "bead": -1, "ok": False, "src_start": 0, "n_src": 0,
-                    "tgt_start": 0, "n_tgt": 0,
-                    "src_text": "", "tgt_text": "",
-                }]
-            return [
-                {
-                    "bead": b, "ok": True,
-                    "src_start": si, "n_src": ns,
-                    "tgt_start": ti, "n_tgt": nt,
-                    "src_text": " ".join(ss[si:si + ns]),
-                    "tgt_text": " ".join(ts[ti:ti + nt]),
-                }
-                for b, (si, ns, ti, nt) in enumerate(al)
-            ]
+    def beads(s, t):
+        ss = split_sentences(s)
+        ts = split_sentences(t)
+        al = gale_church_align([len(x) for x in ss], [len(x) for x in ts])
+        if al is None:
+            return [(-1, False, 0, 0, 0, 0, "", "")]
+        return [
+            (b, True, si, ns, ti, nt,
+             " ".join(ss[si:si + ns]), " ".join(ts[ti:ti + nt]))
+            for b, (si, ns, ti, nt) in enumerate(al)
+        ]
 
-        return pd.Series([one(s, t) for s, t in zip(src, tgt)])
-
-    return beads
+    return row_udf(beads, _BEADS_TYPE)
 
 
 def bitext_beads(pairs: DataFrame, src_col: str = "src_text",
@@ -77,12 +63,7 @@ def bitext_beads(pairs: DataFrame, src_col: str = "src_text",
     return pairs.select(
         *carried,
         F.explode(udf(F.col(src_col), F.col(tgt_col))).alias("_b"),
-    ).select(
-        *carried,
-        "_b.bead", "_b.ok",
-        "_b.src_start", "_b.n_src", "_b.tgt_start", "_b.n_tgt",
-        "_b.src_text", "_b.tgt_text",
-    )
+    ).select(*carried, "_b.*")
 
 
 def bitext_url_pairs(pages: DataFrame, url_col: str = "url") -> DataFrame:

@@ -1,6 +1,6 @@
 """Spark operators for the jusText-dialect boilerplate classifier.
 
-Both operators are ``mapInPandas`` over Arrow batches and strictly
+Every operator is one ``mapInArrow`` node (``doctor_spark.arrow.row_map``) and strictly
 map-only: every block of a document is classified inside the task that
 holds the document's row, so there is no shuffle anywhere — the plan a
 100-TB boilerplate pass needs (the context-resolution stage is per-
@@ -15,28 +15,21 @@ this is the statistical stage web-corpus pipelines add on top.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 
+from ..arrow import row_map
 from ..kernels.boilerplate import classify_blocks, stopwords_for
-
-_BLOCK_COLS = ["block_id", "btext", "n_chars", "n_words", "link_chars",
-               "link_milli", "stop_milli", "cf_class", "final_class"]
 
 
 def _as_str(html) -> str:
     """Accept string OR binary html columns (the input-table contract has
     ``html: binary``): bytes decode as utf-8-with-replacement, anything
-    else (NULL, NaN) is an empty document — a poison payload must yield
+    else (NULL) is an empty document — a poison payload must yield
     zero blocks, never a task death."""
     if isinstance(html, (bytes, bytearray)):
         return html.decode("utf-8", "replace")
     return html if isinstance(html, str) else ""
-
-
-_SUMMARY_COLS = ["n_blocks", "n_good", "n_short_cf", "n_neargood_cf",
-                 "good_chars", "main_md5"]
 
 
 def justext_blocks(df: DataFrame, key_col: str = "url",
@@ -47,25 +40,20 @@ def justext_blocks(df: DataFrame, key_col: str = "url",
     link_milli, stop_milli, cf_class, final_class)`` — one row per
     non-empty block, ``block_id`` is the 0-based document order.
     """
-    import pandas as pd
-
     key_type = dict(df.dtypes)[key_col]
     schema = (f"{key_col} {key_type}, block_id long, btext string, "
               "n_chars long, n_words long, link_chars long, "
               "link_milli long, stop_milli long, "
               "cf_class string, final_class string")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for key, html in zip(pdf[key_col], pdf[html_col]):
-                for i, b in enumerate(classify_blocks(_as_str(html))):
-                    rows.append((key, i, b.text, b.n_chars, b.n_words,
-                                 b.link_chars, b.link_milli, b.stop_milli,
-                                 b.cf_class, b.final_class))
-            yield pd.DataFrame(rows, columns=[key_col, *_BLOCK_COLS])
+    def blocks(key, html):
+        return [
+            (key, i, b.text, b.n_chars, b.n_words, b.link_chars,
+             b.link_milli, b.stop_milli, b.cf_class, b.final_class)
+            for i, b in enumerate(classify_blocks(_as_str(html)))
+        ]
 
-    return df.select(key_col, html_col).mapInPandas(run, schema)
+    return row_map(df.select(key_col, html_col), blocks, schema)
 
 
 def justext_doc_summary(df: DataFrame, key_col: str = "url",
@@ -82,30 +70,23 @@ def justext_doc_summary(df: DataFrame, key_col: str = "url",
     repo's per-language lists (jusText ships one per language); unknown
     languages fall back to English, which fails closed (see
     ``stopwords_for``)."""
-    import pandas as pd
-
     key_type = dict(df.dtypes)[key_col]
     schema = (f"{key_col} {key_type}, n_blocks long, n_good long, "
               "n_short_cf long, n_neargood_cf long, "
               "good_chars long, main_md5 string")
     in_cols = [key_col, html_col] + ([lang_col] if lang_col else [])
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            langs = pdf[lang_col] if lang_col else [None] * len(pdf)
-            rows = []
-            for key, html, lang in zip(pdf[key_col], pdf[html_col], langs):
-                blocks = classify_blocks(_as_str(html), stopwords_for(lang))
-                good = [b for b in blocks if b.final_class == "good"]
-                main = "\n".join(b.text for b in good)
-                rows.append((key, len(blocks), len(good),
-                             sum(b.cf_class == "short" for b in blocks),
-                             sum(b.cf_class == "neargood" for b in blocks),
-                             sum(b.n_chars for b in good),
-                             hashlib.md5(main.encode("utf-8")).hexdigest()))
-            yield pd.DataFrame(rows, columns=[key_col, *_SUMMARY_COLS])
+    def summary(key, html, lang=None):
+        blocks = classify_blocks(_as_str(html), stopwords_for(lang))
+        good = [b for b in blocks if b.final_class == "good"]
+        main = "\n".join(b.text for b in good)
+        return [(key, len(blocks), len(good),
+                 sum(b.cf_class == "short" for b in blocks),
+                 sum(b.cf_class == "neargood" for b in blocks),
+                 sum(b.n_chars for b in good),
+                 hashlib.md5(main.encode("utf-8")).hexdigest())]
 
-    return df.select(*in_cols).mapInPandas(run, schema)
+    return row_map(df.select(*in_cols), summary, schema)
 
 
 def justext_spans(df: DataFrame, key_col: str = "url",
@@ -118,11 +99,9 @@ def justext_spans(df: DataFrame, key_col: str = "url",
 
     Output: ``(key_col, block_id, start_off, end_off, n_chars,
     final_class, kept)``.  Map-only like its siblings: spans are
-    per-document by construction, so the pass is one mapInPandas stage
+    per-document by construction, so the pass is one mapInArrow stage
     with zero shuffles at any corpus size.  Offset contract:
     kernels/boilerplate.py (span-lineage section)."""
-    import pandas as pd
-
     from ..kernels.boilerplate import classify_block_spans
 
     key_type = dict(df.dtypes)[key_col]
@@ -130,15 +109,11 @@ def justext_spans(df: DataFrame, key_col: str = "url",
               "end_off long, n_chars long, final_class string, "
               "kept boolean")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for key, html in zip(pdf[key_col], pdf[html_col]):
-                for i, b in enumerate(classify_block_spans(_as_str(html))):
-                    rows.append((key, i, b.start, b.end, b.n_chars,
-                                 b.final_class, b.final_class == "good"))
-            yield pd.DataFrame(
-                rows, columns=[key_col, "block_id", "start_off", "end_off",
-                               "n_chars", "final_class", "kept"])
+    def spans(key, html):
+        return [
+            (key, i, b.start, b.end, b.n_chars, b.final_class,
+             b.final_class == "good")
+            for i, b in enumerate(classify_block_spans(_as_str(html)))
+        ]
 
-    return df.select(key_col, html_col).mapInPandas(run, schema)
+    return row_map(df.select(key_col, html_col), spans, schema)

@@ -43,10 +43,13 @@ it) — pinned by test.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_map, row_udf
 
 SEP = "\x1f"
 END = "</w>"
@@ -128,22 +131,13 @@ def _pairs_after_merges_kernel(pending: tuple[tuple[str, str], ...]):
 
 
 def _apply_merges_kernel(pending: tuple[tuple[str, str], ...]):
-    """(syms, cnt) → (syms, cnt) with ``pending`` merges applied — the
-    checkpoint-refresh form of the fused kernel."""
+    """(syms, cnt) → [(syms, cnt)] with ``pending`` merges applied — the
+    checkpoint-refresh form of the fused kernel, one row at a time."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "syms": [
-                        SEP.join(_apply_merges_list(s.split(SEP), pending))
-                        for s in pdf["syms"]
-                    ],
-                    "cnt": pdf["cnt"],
-                }
-            )
+    def refresh(syms: str, cnt: int) -> list[tuple[str, int]]:
+        return [(SEP.join(_apply_merges_list(syms.split(SEP), pending)), cnt)]
 
-    return kernel
+    return refresh
 
 
 def bpe_train(
@@ -197,8 +191,8 @@ def bpe_train(
         merges.append((rank, left, right, freq))
         pending.append((left, right))
         if len(pending) >= checkpoint_every and rank < n_merges:
-            words = words.mapInPandas(
-                _apply_merges_kernel(tuple(pending)), "syms string, cnt long"
+            words = row_map(
+                words, _apply_merges_kernel(tuple(pending)), "syms string, cnt long"
             ).localCheckpoint()
             pending = []
     return merges
@@ -225,34 +219,29 @@ def bpe_apply_udf(merges: list[tuple[int, str, str, int]]):
     segmentation of the training corpus)."""
     ordered = [(m[1], m[2]) for m in sorted(merges)]
 
-    @F.pandas_udf("array<string>")
-    def tokenize(texts: pd.Series) -> pd.Series:
-        import re
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    cache: dict[str, list[str]] = {}
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        cache: dict[str, list[str]] = {}
+    def word_toks(w: str) -> list[str]:
+        got = cache.get(w)
+        if got is None:
+            s = encode_word(w)
+            for left, right in ordered:
+                if left in s and right in s:
+                    s = merge_syms(s, left, right)
+            if len(cache) >= 1 << 16:  # bounded: vocabulary grows per task
+                cache.clear()
+            got = cache[w] = s.split(SEP)
+        return got
 
-        def word_toks(w: str) -> list[str]:
-            got = cache.get(w)
-            if got is None:
-                s = encode_word(w)
-                for left, right in ordered:
-                    if left in s and right in s:
-                        s = merge_syms(s, left, right)
-                got = s.split(SEP)
-                cache[w] = got
-            return got
+    def tokenize(t):
+        toks: list[str] = []
+        for w in ws.split((t or "").strip(" ").lower()):
+            if w and SEP not in w:
+                toks.extend(word_toks(w))
+        return toks
 
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            for w in ws.split((t or "").strip(" ").lower()):
-                if w and SEP not in w:
-                    toks.extend(word_toks(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    return tokenize
+    return row_udf(tokenize, "array<string>")
 
 
 def bpe_token_counts(

@@ -17,29 +17,20 @@ hash-partitioned shape a dedup store wants to persist anyway.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _CHUNK_SCHEMA = "array<struct<off:int,len:int,hash:string>>"
 
 
 def _chunks_udf(min_size: int, max_size: int, mask: int):
-    @F.pandas_udf(_CHUNK_SCHEMA)
-    def chunks(payload: pd.Series) -> pd.Series:
-        from ..kernels.cdc import chunk_payload
+    from ..kernels.cdc import chunk_payload
 
-        return payload.map(
-            lambda b: [
-                {"off": o, "len": ln, "hash": h}
-                for o, ln, h in chunk_payload(
-                    bytes(b), min_size, max_size, mask
-                )
-            ]
-            if b is not None
-            else None
-        )
+    def chunks(b):
+        return None if b is None else chunk_payload(bytes(b), min_size, max_size, mask)
 
-    return chunks
+    return row_udf(chunks, _CHUNK_SCHEMA)
 
 
 def cdc_chunks(

@@ -22,24 +22,15 @@ that, pre-scale the counts (documented, not silent).
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..arrow import row_map
 
-def _hist_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        chars: list[list[str]] = []
-        counts: list[list[int]] = []
-        for s in pdf["text"]:
-            c = Counter(s if isinstance(s, str) else "")
-            items = sorted(c.items())
-            chars.append([k for k, _ in items])
-            counts.append([v for _, v in items])
-        yield pd.DataFrame({"chars": chars, "counts": counts})
+
+def _hist_row(s) -> list[tuple[list[str], list[int]]]:
+    items = sorted(Counter(s if isinstance(s, str) else "").items())
+    return [([k for k, _ in items], [v for _, v in items])]
 
 
 def char_coverage(
@@ -52,9 +43,7 @@ def char_coverage(
     base = docs.where(F.col(text_col).isNotNull()).select(
         F.col(text_col).alias("text")
     )
-    hist = base.mapInPandas(
-        _hist_batches, "chars array<string>, counts array<int>"
-    )
+    hist = row_map(base, _hist_row, "chars array<string>, counts array<int>")
     per_char = (
         hist.select(
             F.explode(F.arrays_zip("chars", "counts")).alias("z")

@@ -10,8 +10,9 @@ stages group the chunks.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _CHUNKS_TYPE = (
     "array<struct<chunk_idx:int, n_tokens:int, kind:string, "
@@ -20,24 +21,12 @@ _CHUNKS_TYPE = (
 
 
 def _chunks_udf(max_tokens: int):
-    @F.pandas_udf(_CHUNKS_TYPE)
-    def chunks(texts: pd.Series) -> pd.Series:
-        from ..kernels.chunking import chunk_text
+    from ..kernels.chunking import chunk_text
 
-        return pd.Series(
-            [
-                [
-                    {
-                        "chunk_idx": i, "n_tokens": n,
-                        "kind": k, "chunk_text": t,
-                    }
-                    for i, n, k, t in chunk_text(x, max_tokens)
-                ]
-                for x in texts
-            ]
-        )
+    def chunks(x):
+        return chunk_text(x, max_tokens)
 
-    return chunks
+    return row_udf(chunks, _CHUNKS_TYPE)
 
 
 def chunk_documents(
@@ -51,7 +40,4 @@ def chunk_documents(
     return docs.select(
         *carried,
         F.explode(udf(F.col(text_col))).alias("_c"),
-    ).select(
-        *carried,
-        "_c.chunk_idx", "_c.n_tokens", "_c.kind", "_c.chunk_text",
-    )
+    ).select(*carried, "_c.*")

@@ -8,25 +8,20 @@ Map-only; zero shuffles at any scale.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _BLOCKS_TYPE = "array<struct<blk:int, lang_hint:string, code:string>>"
 
 
 def _blocks_udf():
-    @F.pandas_udf(_BLOCKS_TYPE)
-    def blocks(html: pd.Series) -> pd.Series:
-        from ..kernels.codeblocks import extract_code_blocks
+    from ..kernels.codeblocks import extract_code_blocks
 
-        return html.map(
-            lambda h: [
-                {"blk": i, "lang_hint": lang, "code": text}
-                for i, (lang, text) in enumerate(extract_code_blocks(h))
-            ]
-        )
+    def blocks(h):
+        return [(i, *b) for i, b in enumerate(extract_code_blocks(h))]
 
-    return blocks
+    return row_udf(blocks, _BLOCKS_TYPE)
 
 
 def code_blocks(pages: DataFrame, html_col: str = "html") -> DataFrame:

@@ -29,26 +29,18 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 MICRO = 1_000_000
 
 
 def _micro_log10_udf():
-    @F.pandas_udf("long")
-    def ml(n: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else math.floor(
-                    math.log10(v) * MICRO + 0.5
-                )
-                for v in n
-            ],
-            dtype="Int64",
-        )
+    def ml(v):
+        return None if v is None else math.floor(math.log10(v) * MICRO + 0.5)
 
-    return ml
+    return row_udf(ml, "long")
 
 
 def _toks(col):

@@ -10,7 +10,7 @@ All four families from the task brief:
 - n-gram Jaccard:   3-token shingles, shingle-inverted-index join, exact
                     Jaccard on candidate pairs
 
-Signatures and shingles come from Arrow-batched pandas UDF kernels where
+Signatures and shingles come from row-wise Arrow UDF kernels where
 the equivalent higher-order Catalyst expression would run interpreted
 (each kernel is pinned bit-identical to its expression form or to the
 DuckDB oracle); everything on the pair stream — joins, set algebra,
@@ -26,9 +26,12 @@ band join outside it (a conditional join with no exchange of its own).
 
 from __future__ import annotations
 
-import pandas as pd
+import hashlib
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..arrow import row_udf
 from ..functions.text import fingerprint, tokens
 from .hamming import band_pairs, banded_hamming_pairs
 
@@ -38,6 +41,19 @@ DEFAULT_SEEDS = ("s0", "s1", "s2", "s3")
 # ([ \t\n\x0b\f\r]) — python str.split() would also split on NBSP/U+2009
 # etc and diverge from the oracle
 _JAVA_WS = __import__("re").compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _md5_60(s: str) -> int:
+    """The 60-bit md5 prefix ``int(md5(s)[:15 hex], 16)`` — DuckDB's
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``."""
+    return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:8], "big") >> 4
+
+
+@lru_cache(maxsize=1 << 16)
+def _token_hash60(t: str) -> int:
+    """:func:`_md5_60` memoized for tokens (vocabulary repeats across
+    documents; bounded so a task's memory does not grow with it)."""
+    return _md5_60(t)
 
 
 def _java_ws_tokens(text: str) -> list[str]:
@@ -136,30 +152,21 @@ def _minhash_bands_udf(seeds: tuple[str, ...], rows_per_band: int, n: int = 3):
     WHERE len(tokens) >= n)."""
     n_bands = len(seeds) // rows_per_band
 
-    @F.pandas_udf("array<string>")
-    def bands(texts: pd.Series) -> pd.Series:
-        import hashlib
+    def _md5(s: str) -> str:
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
 
-        def _md5(s: str) -> str:
-            return hashlib.md5(s.encode("utf-8")).hexdigest()
+    def bands(text):
+        toks = _java_ws_tokens(text or "")
+        if len(toks) < n:
+            return []
+        sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        mh = [min(_md5(seed + s) for s in sh) for seed in seeds]
+        return [
+            _md5("|".join(mh[b * rows_per_band : (b + 1) * rows_per_band]))
+            for b in range(n_bands)
+        ]
 
-        out = []
-        for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                out.append([])
-                continue
-            sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-            mh = [min(_md5(seed + s) for s in sh) for seed in seeds]
-            out.append(
-                [
-                    _md5("|".join(mh[b * rows_per_band : (b + 1) * rows_per_band]))
-                    for b in range(n_bands)
-                ]
-            )
-        return pd.Series(out)
-
-    return bands
+    return row_udf(bands, "array<string>")
 
 
 def _affine_params(n_perms: int) -> tuple[list[int], list[int]]:
@@ -257,13 +264,10 @@ def _minhash_bands_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
     md5."""
     a, b = _affine_arrays(n_perms)
 
-    @F.pandas_udf("array<string>")
-    def bands(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_affine_minhash(t, a, b, n, rows_per_band)[2] for t in texts]
-        )
+    def bands(text):
+        return _affine_minhash(text, a, b, n, rows_per_band)[2]
 
-    return bands
+    return row_udf(bands, "array<string>")
 
 
 def minhash_candidate_pairs(
@@ -283,7 +287,7 @@ def minhash_candidate_pairs(
     scheme (one md5 per shingle + k affine permutations; ``seeds`` is
     then ignored) — the production form for wide signatures, where the
     seeded-md5 scheme would pay k digests per shingle."""
-    # Band keys via an Arrow-batched pandas UDF: the pure-builtin expression
+    # Band keys via a row-wise Arrow UDF: the pure-builtin expression
     # (see with_minhash) is semantically identical but Catalyst evaluates
     # nested higher-order functions interpreted (no codegen, no CSE) at
     # ~1 ms/row; hashlib in an Arrow batch is ~100× faster and md5-of-utf8
@@ -312,43 +316,28 @@ def _simhash_udf(bits: int):
     48 was the whole wall of the w48 query.  numpy does the vote matrix
     in one shot per document, bounded to 64k-token blocks so a
     pathological 10M-token doc stays ~25 MB transient; the token→hash
-    map is memoized per batch (vocabulary repeats across documents)."""
+    map is memoized in a bounded LRU (vocabulary repeats across
+    documents)."""
+    import numpy as np
 
-    @F.pandas_udf("bigint")
-    def sig(texts: pd.Series) -> pd.Series:
-        from hashlib import md5
+    shift = np.arange(bits, dtype=np.int64)
 
-        import numpy as np
+    def sig(text):
+        if text is None:
+            return None
+        toks = _java_ws_tokens(text)
+        hs = np.fromiter(map(_token_hash60, toks), dtype=np.int64, count=len(toks))
+        votes = np.zeros(bits, dtype=np.int64)
+        for c0 in range(0, hs.shape[0], 65536):
+            blk = hs[c0:c0 + 65536]
+            votes += (2 * ((blk[:, None] >> shift[None, :]) & 1) - 1).sum(axis=0)
+        return int(((votes >= 0).astype(np.int64) << shift).sum())
 
-        shift = np.arange(bits, dtype=np.int64)
-        hcache: dict[str, int] = {}
-
-        def th(t: str) -> int:
-            h = hcache.get(t)
-            if h is None:
-                h = int(md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                hcache[t] = h
-            return h
-
-        out = []
-        for text in texts:
-            if text is None:
-                out.append(None)
-                continue
-            toks = _java_ws_tokens(text)
-            hs = np.fromiter(
-                (th(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            votes = np.zeros(bits, dtype=np.int64)
-            for c0 in range(0, hs.shape[0], 65536):
-                blk = hs[c0:c0 + 65536]
-                votes += (
-                    2 * ((blk[:, None] >> shift[None, :]) & 1) - 1
-                ).sum(axis=0)
-            out.append(int(((votes >= 0).astype(np.int64) << shift).sum()))
-        return pd.Series(out, dtype="object")
-
-    return sig
+    # non-deterministic for the optimizer only (as on containment_est's
+    # signature UDF): an inferred isnotnull filter on a column derived
+    # from the signature otherwise clones the UDF below the spread
+    # exchange, so the kernel ran twice, once on the single input split
+    return row_udf(sig, "bigint").asNondeterministic()
 
 
 def with_simhash(
@@ -407,18 +396,6 @@ def with_simhash(
     return df.withColumn("simhash", sig)
 
 
-def simhash_buckets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
-    """Docs grouped by identical simhash: (simhash, n_docs, keep_id)."""
-    return (
-        with_simhash(df, text_col, bits)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def _shingles_udf(n: int = 3, hashed: bool = False):
     """Arrow-batched distinct n-gram shingles, bit-identical to the JVM
     ``shingles()`` expression and the DuckDB oracle's list_transform.
@@ -433,50 +410,15 @@ def _shingles_udf(n: int = 3, hashed: bool = False):
     string — 8-byte join keys for :func:`ngram_novelty`.  The pair
     joins hash in the JVM instead (:func:`_hashed_shingles`)."""
 
-    if hashed:
+    def sh(text):
+        toks = _java_ws_tokens(text or "")
+        if len(toks) < n:
+            return 0, []
+        grams = (" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+        seen = dict.fromkeys(map(_md5_60, grams) if hashed else grams)
+        return len(seen), list(seen)
 
-        @F.pandas_udf("struct<n_sh: int, sh: array<long>>")
-        def sh(texts: pd.Series) -> pd.DataFrame:
-            from hashlib import md5
-
-            ns, shs = [], []
-            for text in texts:
-                toks = _java_ws_tokens(text or "")
-                if len(toks) < n:
-                    ns.append(0)
-                    shs.append([])
-                else:
-                    seen = dict.fromkeys(
-                        int.from_bytes(
-                            md5(
-                                " ".join(toks[i : i + n]).encode()
-                            ).digest()[:8], "big",
-                        ) >> 4
-                        for i in range(len(toks) - n + 1)
-                    )
-                    ns.append(len(seen))
-                    shs.append(list(seen))
-            return pd.DataFrame({"n_sh": ns, "sh": shs})
-
-        return sh
-
-    @F.pandas_udf("struct<n_sh: int, sh: array<string>>")
-    def sh(texts: pd.Series) -> pd.DataFrame:
-        ns, shs = [], []
-        for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                ns.append(0)
-                shs.append([])
-            else:
-                seen = dict.fromkeys(
-                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                )
-                ns.append(len(seen))
-                shs.append(list(seen))
-        return pd.DataFrame({"n_sh": ns, "sh": shs})
-
-    return sh
+    return row_udf(sh, f"struct<n_sh: int, sh: array<{'long' if hashed else 'string'}>>")
 
 
 def _shingle_structs_expr(col, n: int = 3):
@@ -690,39 +632,29 @@ def winnow_fingerprints(
     # oracle spells the same class out because RE2's \s EXCLUDES \x0b
     ws_re = _re.compile(r"[ \t\n\x0b\f\r]+")
 
-    @F.pandas_udf("array<struct<pos: int, fp: string>>")
-    def winnow(texts: pd.Series) -> pd.Series:
-        import hashlib
+    def winnow(text):
+        t = ws_re.sub(" ", (text or "").lower().strip(" "))
+        n = len(t)
+        if n < k:
+            return []
+        hashes = [
+            hashlib.md5(t[i : i + k].encode("utf-8")).hexdigest()[:15]
+            for i in range(n - k + 1)
+        ]
+        sel: dict[int, str] = {}
+        n_windows = max(1, len(hashes) - w + 1)
+        for p in range(n_windows):
+            window = hashes[p : p + w]
+            m = min(window)
+            # rightmost minimal hash (winnowing's density rule)
+            idx = p + len(window) - 1 - window[::-1].index(m)
+            sel[idx] = m
+        return [(i, sel[i]) for i in sorted(sel)]
 
-        out = []
-        for text in texts:
-            t = ws_re.sub(" ", (text or "").lower().strip(" "))
-            n = len(t)
-            if n < k:
-                out.append([])
-                continue
-            hashes = [
-                hashlib.md5(t[i : i + k].encode("utf-8")).hexdigest()[:15]
-                for i in range(n - k + 1)
-            ]
-            sel: dict[int, str] = {}
-            n_windows = max(1, len(hashes) - w + 1)
-            for p in range(n_windows):
-                window = hashes[p : p + w]
-                m = min(window)
-                # rightmost minimal hash (winnowing's density rule)
-                idx = p + len(window) - 1 - window[::-1].index(m)
-                sel[idx] = m
-            out.append([{"pos": i, "fp": sel[i]} for i in sorted(sel)])
-        return pd.Series(out)
-
-    return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(winnow(F.col(text_col))).alias("s"),
-        )
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
-    )
+    winnow_udf = row_udf(winnow, "array<struct<pos: int, fp: string>>")
+    return df.select(
+        F.col(id_col).alias("doc_id"), F.explode(winnow_udf(F.col(text_col))).alias("s")
+    ).select("doc_id", "s.*")
 
 
 def shingles(col, n: int = 3):
@@ -1119,24 +1051,14 @@ def exact_substring_dedup(
     # recorded for the pure-Catalyst shingle engine.  Tokenization
     # mirrors F.split(trim(text), java-ws) exactly: strip ASCII spaces,
     # split with trailing empties kept, case preserved.
-    @F.pandas_udf("array<string>")
-    def window_strings(texts: pd.Series) -> pd.Series:
-        split = _JAVA_WS.split
-        out = []
-        for t in texts:
-            tk = split(t.strip(" "))
-            n_t = len(tk)
-            if n_t < k:
-                out.append([])
-            else:
-                out.append(
-                    [" ".join(tk[i:i + k]) for i in range(n_t - k + 1)]
-                )
-        return pd.Series(out)
+    def window_strings(t):
+        tk = _JAVA_WS.split(t.strip(" "))
+        return [" ".join(tk[i:i + k]) for i in range(len(tk) - k + 1)]
 
+    windows = row_udf(window_strings, "array<string>")
     wins = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
-        F.posexplode(window_strings(F.col(text_col))).alias("pos", "w"),
+        F.posexplode(windows(F.col(text_col))).alias("pos", "w"),
     ).select("id", "pos", F.md5(F.col("w").cast("binary")).alias("wh"))
 
     from pyspark.sql import Window
@@ -1588,17 +1510,9 @@ def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
     once, the way a production dedup materializes it."""
     a, b = _affine_arrays(n_perms)
 
-    @F.pandas_udf(
-        "struct<n_sh: int, sig: array<long>, bands: array<string>>"
-    )
-    def sig_bands(texts: pd.Series) -> pd.DataFrame:
-        ns, sigs_out, bands_out = [], [], []
-        for text in texts:
-            n_sh, mins, bands = _affine_minhash(text, a, b, n, rows_per_band)
-            ns.append(n_sh)
-            sigs_out.append([int(v) for v in mins])
-            bands_out.append(bands)
-        return pd.DataFrame({"n_sh": ns, "sig": sigs_out, "bands": bands_out})
+    def sig_bands(text):
+        n_sh, mins, bands = _affine_minhash(text, a, b, n, rows_per_band)
+        return n_sh, [int(v) for v in mins], bands
 
     # guide §4.4: the caller filters on n_sh (a field of this UDF's
     # output), and the optimizer pushes that filter below any exchange by
@@ -1607,7 +1521,9 @@ def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
     # (measured: the whole containment_est wall).  Marking it
     # non-deterministic forbids the duplication; the value is of course
     # deterministic, only the optimizer's freedom changes.
-    return sig_bands.asNondeterministic()
+    return row_udf(
+        sig_bands, "struct<n_sh: int, sig: array<long>, bands: array<string>>"
+    ).asNondeterministic()
 
 
 def containment_est_pairs(

@@ -43,8 +43,10 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..arrow import row_udf
 from ..functions.text import _hash_bucket, tokens
 
 DIM = 1024
@@ -204,53 +206,41 @@ def dsir_scores(
 
     llr_local = [int(v) for v in llr]
 
-    @F.pandas_udf("struct<n_tok: bigint, lw_micro: bigint>")
-    def score(texts: pd.Series) -> pd.DataFrame:
-        from .dedup import _java_ws_tokens
+    from .dedup import _java_ws_tokens
 
-        wcache: dict[str, int] = {}
+    wcache: dict[str, int] = {}
 
-        def w(g: str) -> int:
-            v = wcache.get(g)
-            if v is None:
-                v = llr_local[
-                    int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    ) % dim
-                ]
-                wcache[g] = v
-            return v
+    def w(g: str) -> int:
+        v = wcache.get(g)
+        if v is None:
+            if len(wcache) >= 1 << 16:  # bounded: vocabulary grows per task
+                wcache.clear()
+            v = wcache[g] = llr_local[
+                int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16) % dim
+            ]
+        return v
 
-        nt, lw = [], []
-        for t in texts:
-            toks = _java_ws_tokens(t or "")
-            nt.append(len(toks))
-            s = 0
-            for g in toks:
-                s += w(g)
-            for i in range(len(toks) - 1):
-                s += w(toks[i] + " " + toks[i + 1])
-            lw.append(s)
-        return pd.DataFrame({"n_tok": nt, "lw_micro": lw})
+    def score(t):
+        toks = _java_ws_tokens(t or "")
+        s = sum(map(w, toks))
+        s += sum(w(toks[i] + " " + toks[i + 1]) for i in range(len(toks) - 1))
+        return len(toks), s
+
+    score_udf = row_udf(score, "struct<n_tok: bigint, lw_micro: bigint>")
 
     return df.where(
         F.col(text_col).isNotNull()
         & (F.length(F.trim(F.col(text_col))) > 0)
     ).select(
-        F.col(id_col), score(F.col(text_col)).alias("__s")
-    ).select(
-        F.col(id_col),
-        F.col("__s.n_tok").alias("n_tok"),
-        F.col("__s.lw_micro").alias("lw_micro"),
-    )
+        F.col(id_col), score_udf(F.col(text_col)).alias("__s")
+    ).select(F.col(id_col), "__s.*")
 
 
 def _gumbel_micro_udf():
-    @F.pandas_udf("long")
-    def gumbel(h: pd.Series) -> pd.Series:
-        import numpy as np
+    import numpy as np
 
-        u = (h.to_numpy(dtype="float64") + 0.5) / float(_U31)
+    def gumbel(h: pa.Array) -> pa.Array:
+        u = (h.to_numpy().astype("float64") + 0.5) / float(_U31)
         # −log10(−log10 u) is a Gumbel draw shifted by the constant
         # log10(ln 10): argmax/top-k over (log10 w + this) is therefore
         # EXACTLY the Gumbel-top-k set (Kool et al. 2019) — constant
@@ -258,9 +248,12 @@ def _gumbel_micro_udf():
         # inside the one libm primitive (log10) the oracle contract
         # already pins.
         g = -np.log10(-np.log10(u))
-        return pd.Series(np.floor(g * 1e6 + 0.5).astype("int64"))
+        return pa.array(np.floor(g * 1e6 + 0.5).astype("int64"))
 
-    return gumbel
+    # numpy over the whole Arrow batch, as an Arrow UDF (eval type 250):
+    # Catalyst collapses it into the node that evaluates the row-wise
+    # score UDF, and UDFs of two eval types cannot share one node
+    return F.arrow_udf(gumbel, "long")
 
 
 def dsir_resample(

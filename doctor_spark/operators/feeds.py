@@ -9,8 +9,9 @@ Generate → project.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _ENTRY_TYPE = (
     "array<struct<kind:string, title:string, link:string, published:string>>"
@@ -18,25 +19,13 @@ _ENTRY_TYPE = (
 
 
 def _entries_udf():
-    @F.pandas_udf(_ENTRY_TYPE)
-    def entries(body: pd.Series) -> pd.Series:
-        from ..kernels.feeds import parse_feed
+    from ..kernels.feeds import parse_feed
 
-        def one(b):
-            kind, ents = parse_feed(b)
-            return [
-                {
-                    "kind": kind,
-                    "title": e["title"],
-                    "link": e["link"],
-                    "published": e["published"],
-                }
-                for e in ents
-            ]
+    def entries(b):
+        kind, ents = parse_feed(b)
+        return [(kind, e["title"], e["link"], e["published"]) for e in ents]
 
-        return body.map(one)
-
-    return entries
+    return row_udf(entries, _ENTRY_TYPE)
 
 
 def feed_entries(docs: DataFrame, body_col: str = "html") -> DataFrame:
@@ -47,4 +36,4 @@ def feed_entries(docs: DataFrame, body_col: str = "html") -> DataFrame:
     carried = [c for c in docs.columns if c != body_col]
     return docs.select(
         *carried, F.explode(_entries_udf()(F.col(body_col))).alias("_e")
-    ).select(*carried, "_e.kind", "_e.title", "_e.link", "_e.published")
+    ).select(*carried, "_e.*")

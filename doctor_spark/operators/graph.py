@@ -33,8 +33,9 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 START_MICRO = 1_000_000
 TELEPORT_MICRO = 150_000
@@ -42,13 +43,9 @@ DAMPING_PCT = 85
 
 
 def _hrefs_udf():
-    @F.pandas_udf("array<string>")
-    def hrefs(html: pd.Series) -> pd.Series:
-        from ..kernels.links import extract_hrefs
+    from ..kernels.links import extract_hrefs
 
-        return html.map(extract_hrefs)
-
-    return hrefs
+    return row_udf(extract_hrefs, "array<string>")
 
 
 def host_link_edges(
@@ -527,13 +524,9 @@ def textrank_summary(
     key exactly as the link-graph form.  Top-k is a doc_id-partitioned
     window over graph-connected sentences only.
     """
-    import pandas as pd
+    from ..kernels.sentences import split_sentences
 
-    @F.pandas_udf("array<string>")
-    def _sents(texts: pd.Series) -> pd.Series:
-        from ..kernels.sentences import split_sentences
-
-        return texts.map(split_sentences)
+    _sents = row_udf(split_sentences, "array<string>")
 
     nodes = (
         df.select(

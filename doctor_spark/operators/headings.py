@@ -9,8 +9,9 @@ shuffles at any scale — structure-aware chunking then groups by
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _OUTLINE_TYPE = (
     "array<struct<seq:int, level:int, parent:int, text:string, "
@@ -19,23 +20,13 @@ _OUTLINE_TYPE = (
 
 
 def _outline_udf():
-    @F.pandas_udf(_OUTLINE_TYPE)
-    def outline(html: pd.Series) -> pd.Series:
-        from ..kernels.headings import extract_headings
+    from ..kernels.headings import extract_headings
 
-        def one(h):
-            rows, truncated = extract_headings(h)
-            return [
-                {
-                    "seq": seq, "level": level, "parent": parent,
-                    "text": text, "truncated": truncated,
-                }
-                for seq, level, parent, text in rows
-            ]
+    def outline(h):
+        rows, truncated = extract_headings(h)
+        return [(*r, truncated) for r in rows]
 
-        return html.map(one)
-
-    return outline
+    return row_udf(outline, _OUTLINE_TYPE)
 
 
 def heading_outline(pages: DataFrame, html_col: str = "html") -> DataFrame:
@@ -47,7 +38,4 @@ def heading_outline(pages: DataFrame, html_col: str = "html") -> DataFrame:
     return pages.select(
         *carried,
         F.explode(_outline_udf()(F.col(html_col))).alias("_h"),
-    ).select(
-        *carried,
-        "_h.seq", "_h.level", "_h.parent", "_h.text", "_h.truncated",
-    )
+    ).select(*carried, "_h.*")

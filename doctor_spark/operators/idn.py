@@ -28,11 +28,9 @@ scale next to the corpus, and broadcastable when the IDN side is small
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from doctor_spark.arrow import row_map
 from doctor_spark.kernels.punycode import decode_idn_host
 
 # Dominant single-script confusables (Unicode TR39 core): Cyrillic and
@@ -73,39 +71,16 @@ def host_skeleton(host: str) -> str:
     return "".join(CONFUSABLE_TO_LATIN.get(c, c) for c in host)
 
 
-def _idn_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        hosts = pdf["host"]
-        uni: list[str | None] = []
-        is_idn: list[bool | None] = []
-        mixed: list[bool | None] = []
-        skel: list[str | None] = []
-        for h in hosts:
-            if not isinstance(h, str):
-                uni.append(None)
-                is_idn.append(None)
-                mixed.append(None)
-                skel.append(None)
-                continue
-            idn = any(lb.startswith("xn--") for lb in h.split("."))
-            u = decode_idn_host(h) if idn else h
-            mx = any(
-                (lambda s: s[0] and s[1])(_label_scripts(lb))
-                for lb in u.split(".")
-            )
-            uni.append(u)
-            is_idn.append(idn)
-            mixed.append(mx)
-            skel.append(host_skeleton(u))
-        yield pd.DataFrame(
-            {
-                "host": hosts,
-                "unicode_host": uni,
-                "is_idn": is_idn,
-                "mixed_script": mixed,
-                "skeleton": skel,
-            }
-        )
+def _idn_row(h) -> list[tuple]:
+    if not isinstance(h, str):
+        return [(h, None, None, None, None)]
+    idn = any(lb.startswith("xn--") for lb in h.split("."))
+    u = decode_idn_host(h) if idn else h
+    mx = any(
+        (lambda s: s[0] and s[1])(_label_scripts(lb))
+        for lb in u.split(".")
+    )
+    return [(h, u, idn, mx, host_skeleton(u))]
 
 
 def idn_host_table(hosts: DataFrame, host_col: str = "host") -> DataFrame:
@@ -123,8 +98,8 @@ def idn_host_table(hosts: DataFrame, host_col: str = "host") -> DataFrame:
       :func:`homograph_pairs`.
     """
     base = hosts.select(F.col(host_col).alias("host"))
-    return base.mapInPandas(
-        _idn_batches,
+    return row_map(
+        base, _idn_row,
         "host string, unicode_host string, is_idn boolean, "
         "mixed_script boolean, skeleton string",
     )

@@ -20,39 +20,32 @@ Shape at 10^12 images:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 __all__ = ["image_dhash", "image_dup_clusters", "image_near_pairs"]
 
 
 def _dhash_udf():
-    @F.pandas_udf("bigint")
-    def udf(payload: pd.Series) -> pd.Series:
-        from ..kernels.imagehash import dhash64
-        from .multimodal import decode_image_any
+    from ..kernels.imagehash import dhash64
+    from .multimodal import decode_image_any
 
-        def one(b):
-            if b is None:
-                return None
-            try:
-                return dhash64(decode_image_any(bytes(b)))
-            except (ValueError, NotImplementedError):
-                # undecodable payload (or env-gated codec): NULL hash,
-                # never a dead task
-                return None
-
-        # nullable Int64 dtype, NOT .map(): a plain object/float series
-        # with NaNs coerces int64 hashes to float64, which silently
-        # ROUNDS values above 2^53 (observed: batches containing one
-        # undecodable row corrupted every hash in the batch)
-        return pd.Series((one(b) for b in payload), dtype="Int64")
+    def udf(b):
+        if b is None:
+            return None
+        try:
+            return dhash64(decode_image_any(bytes(b)))
+        except (ValueError, NotImplementedError):
+            # undecodable payload (or env-gated codec): NULL hash,
+            # never a dead task
+            return None
 
     # asNondeterministic stops Catalyst from inlining the UDF into
     # pushed-down predicates — without it, any isNotNull filter on the
     # hash column decodes every image TWICE (observed in the physical
     # plan: two ArrowEvalPython nodes for one udf call)
-    return udf.asNondeterministic()
+    return row_udf(udf, "bigint").asNondeterministic()
 
 
 def image_dhash(

@@ -13,17 +13,14 @@ an unbounded list).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..arrow import row_udf
+from ..kernels.layout import layout_fingerprint
 
-@F.pandas_udf("string")
-def layout_fp_udf(html: pd.Series) -> pd.Series:
-    from ..kernels.layout import layout_fingerprint
 
-    return html.map(
-        lambda h: layout_fingerprint(h) if h is not None else None
-    )
+def _layout_fp(html):
+    return layout_fingerprint(html) if html is not None else None
 
 
 def layout_clusters(
@@ -36,7 +33,7 @@ def layout_clusters(
     ``hosts`` is the sorted distinct host list truncated to
     ``host_cap`` entries (joined with ','); ``n_hosts`` is exact."""
     fp = pages.where(F.col(html_col).isNotNull()).select(
-        layout_fp_udf(F.col(html_col)).alias("layout_fp"),
+        row_udf(_layout_fp, "string")(F.col(html_col)).alias("layout_fp"),
         F.col(host_col).alias("host"),
     )
     return fp.groupBy("layout_fp").agg(

@@ -69,6 +69,7 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..arrow import row_udf
 from .dedup import _java_ws_tokens
 
 MICRO = 1_000_000
@@ -95,27 +96,19 @@ def _gram_counts_udf(order: int):
     the hybrid-engine split).  Struct of parallel arrays so ONE UDF
     evaluation feeds arrays_zip + explode."""
 
-    @F.pandas_udf("struct<ord: array<int>, g: array<string>, cx: array<string>>")
-    def grams(texts: pd.Series) -> pd.DataFrame:
-        ords, gs, cxs = [], [], []
-        for text in texts:
-            tk = _java_ws_tokens(text or "")
-            o_l: list[int] = []
-            g_l: list[str] = []
-            c_l: list[str | None] = []
-            for pos in range(len(tk)):
-                for m in range(1, min(pos + 1, order) + 1):
-                    o_l.append(m)
-                    g_l.append(" ".join(tk[pos - m + 1 : pos + 1]))
-                    c_l.append(
-                        " ".join(tk[pos - m + 1 : pos]) if m > 1 else None
-                    )
-            ords.append(o_l)
-            gs.append(g_l)
-            cxs.append(c_l)
-        return pd.DataFrame({"ord": ords, "g": gs, "cx": cxs})
+    def grams(text):
+        tk = _java_ws_tokens(text or "")
+        o_l: list[int] = []
+        g_l: list[str] = []
+        c_l: list[str | None] = []
+        for pos in range(len(tk)):
+            for m in range(1, min(pos + 1, order) + 1):
+                o_l.append(m)
+                g_l.append(" ".join(tk[pos - m + 1 : pos + 1]))
+                c_l.append(" ".join(tk[pos - m + 1 : pos]) if m > 1 else None)
+        return o_l, g_l, c_l
 
-    return grams
+    return row_udf(grams, "struct<ord: array<int>, g: array<string>, cx: array<string>>")
 
 
 def _hash60_col(c):
@@ -135,26 +128,16 @@ def _candidates_udf(order: int):
     JVM-side by the caller."""
     fields = ", ".join(f"g{m}: array<string>" for m in range(1, order + 1))
 
-    @F.pandas_udf(f"struct<pos: array<int>, {fields}>")
-    def cands(texts: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"pos": []}
-        for m in range(1, order + 1):
-            cols[f"g{m}"] = []
-        for text in texts:
-            tk = _java_ws_tokens(text or "")
-            n = len(tk)
-            cols["pos"].append(list(range(n)))
-            cols["g1"].append(tk)
-            for m in range(2, order + 1):
-                cols[f"g{m}"].append(
-                    [
-                        " ".join(tk[p - m + 1 : p + 1]) if p + 1 >= m else None
-                        for p in range(n)
-                    ]
-                )
-        return pd.DataFrame(cols)
+    def cands(text):
+        tk = _java_ws_tokens(text or "")
+        n = len(tk)
+        higher = [
+            [" ".join(tk[p - m + 1 : p + 1]) if p + 1 >= m else None for p in range(n)]
+            for m in range(2, order + 1)
+        ]
+        return (list(range(n)), tk, *higher)
 
-    return cands
+    return row_udf(cands, f"struct<pos: array<int>, {fields}>")
 
 
 def _quantize_lp(num_col: str, den_col: str):

@@ -25,23 +25,18 @@ are part of the training-data-pipeline surface next to
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..arrow import row_udf
 from ..kernels.html_meta import FIELDS
 
 _META_STRUCT = "struct<" + ", ".join(f"{f}:string" for f in FIELDS) + ">"
 
 
 def _meta_udf():
-    @F.pandas_udf(_META_STRUCT)
-    def meta(html: pd.Series) -> pd.DataFrame:
-        from ..kernels.html_meta import extract_page_metadata
+    from ..kernels.html_meta import extract_page_metadata
 
-        recs = [extract_page_metadata(h) for h in html]
-        return pd.DataFrame(recs, columns=list(FIELDS))
-
-    return meta
+    return row_udf(extract_page_metadata, _META_STRUCT)
 
 
 def page_metadata(pages: DataFrame, html_col: str = "html") -> DataFrame:
@@ -55,18 +50,9 @@ def page_metadata(pages: DataFrame, html_col: str = "html") -> DataFrame:
 
 
 def _anchors_udf():
-    @F.pandas_udf("array<struct<href:string, anchor:string>>")
-    def anchors(html: pd.Series) -> pd.Series:
-        from ..kernels.links import extract_anchors
+    from ..kernels.links import extract_anchors
 
-        return html.map(
-            lambda h: [
-                {"href": href, "anchor": text}
-                for href, text in extract_anchors(h)
-            ]
-        )
-
-    return anchors
+    return row_udf(extract_anchors, "array<struct<href:string, anchor:string>>")
 
 
 def anchor_edges(pages: DataFrame, html_col: str = "html") -> DataFrame:
@@ -88,18 +74,9 @@ def anchor_edges(pages: DataFrame, html_col: str = "html") -> DataFrame:
 
 
 def _image_alts_udf():
-    @F.pandas_udf("array<struct<src:string, alt:string>>")
-    def image_alts(html: pd.Series) -> pd.Series:
-        from ..kernels.links import extract_image_alts
+    from ..kernels.links import extract_image_alts
 
-        return html.map(
-            lambda h: [
-                {"src": src, "alt": alt}
-                for src, alt in extract_image_alts(h)
-            ]
-        )
-
-    return image_alts
+    return row_udf(extract_image_alts, "array<struct<src:string, alt:string>>")
 
 
 def image_alt_edges(pages: DataFrame, html_col: str = "html") -> DataFrame:
@@ -111,10 +88,7 @@ def image_alt_edges(pages: DataFrame, html_col: str = "html") -> DataFrame:
     Map-only: scan → one Arrow batch → explode, zero shuffles."""
     rows = pages.select(
         F.explode(_image_alts_udf()(F.col(html_col))).alias("i")
-    ).select(
-        F.col("i.src").alias("src"),
-        F.col("i.alt").alias("alt"),
-    )
+    ).select("i.*")
     return rows.where(F.length("alt") > 0)
 
 
@@ -178,14 +152,9 @@ def robots_meta_flags(pages: DataFrame, key_col: str = "doc_id",
     Map-only like its siblings — one Arrow batch, zero shuffles at any
     corpus size; kernel contract: kernels/html_meta.py
     ``extract_robots_flags`` (undecodable/None pages admit)."""
+    from ..kernels.html_meta import extract_robots_flags
 
-    @F.pandas_udf("struct<noindex:boolean, nofollow:boolean>")
-    def flags(html: pd.Series) -> pd.DataFrame:
-        from ..kernels.html_meta import extract_robots_flags
-
-        recs = [extract_robots_flags(h) for h in html]
-        return pd.DataFrame(recs, columns=["noindex", "nofollow"])
-
+    flags = row_udf(extract_robots_flags, "struct<noindex:boolean, nofollow:boolean>")
     f = flags(F.col(html_col))
     return pages.select(
         key_col,
@@ -214,32 +183,18 @@ def structured_data(pages: DataFrame, key_col: str = "doc_id",
     Map-only like its head-metadata siblings — one Arrow batch, zero
     shuffles at any corpus size; the highest-precision title/date
     source a web corpus has."""
+    from ..kernels.jsonld import extract_structured_data
 
-    @F.pandas_udf(_LD_STRUCT)
-    def ld(html: pd.Series) -> pd.DataFrame:
-        from ..kernels.jsonld import extract_structured_data
-
-        recs = [extract_structured_data(h) for h in html]
-        return pd.DataFrame(recs, columns=list(_LD_COLS))
-
-    f = ld(F.col(html_col))
+    f = row_udf(extract_structured_data, _LD_STRUCT)(F.col(html_col))
     return pages.select(
         key_col, *[f.getField(c).alias(c) for c in _LD_COLS]
     )
 
 
 def _hreflang_udf():
-    @F.pandas_udf("array<struct<hreflang:string, href:string>>")
-    def alts(html: pd.Series) -> pd.Series:
-        from ..kernels.links import extract_hreflang
+    from ..kernels.links import extract_hreflang
 
-        return html.map(
-            lambda h: [
-                {"hreflang": lang, "href": href}
-                for lang, href in extract_hreflang(h)
-            ]
-        )
-
+    alts = row_udf(extract_hreflang, "array<struct<hreflang:string, href:string>>")
     # asNondeterministic: stops Catalyst from inlining the kernel into
     # BOTH explode stages of the pair expansion (same discipline as the
     # image-dup decode kernel) — the plan must carry ONE ArrowEvalPython
@@ -255,11 +210,7 @@ def hreflang_edges(pages: DataFrame, key_col: str = "doc_id",
     rows = pages.select(
         F.col(key_col), F.explode(_hreflang_udf()(F.col(html_col))).alias("a")
     )
-    return rows.select(
-        key_col,
-        F.col("a.hreflang").alias("hreflang"),
-        F.col("a.href").alias("href"),
-    )
+    return rows.select(key_col, "a.*")
 
 
 def language_pair_counts(pages: DataFrame, key_col: str = "doc_id",
@@ -351,15 +302,10 @@ def pagination_chains(pages: DataFrame, url_col: str = "url",
     ``resolved = false``.
 
     Output: ``(url_col, head_url, page_index, resolved)``."""
+    from ..kernels.links import extract_rel_pagination
     from .graph import resolve_redirects
 
-    @F.pandas_udf("struct<next_url:string, prev_url:string>")
-    def pg(html: pd.Series) -> pd.DataFrame:
-        from ..kernels.links import extract_rel_pagination
-
-        recs = [extract_rel_pagination(h) for h in html]
-        return pd.DataFrame(recs, columns=["next_url", "prev_url"])
-
+    pg = row_udf(extract_rel_pagination, "struct<next_url:string, prev_url:string>")
     ext = pages.select(
         F.col(url_col), pg(F.col(html_col)).getField("prev_url").alias("prev")
     )

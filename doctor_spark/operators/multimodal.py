@@ -18,18 +18,18 @@ this environment; per the brief, the *decode* step is pluggable:
 - ``PillowCodec`` / ``FfmpegCodec``: clearly-marked stubs raising
   NotImplementedError until the libraries exist on the cluster.
 
-Every operator is ``mapInPandas``/``pandas_udf`` over numpy — vectorized
-within a batch, no per-row Python at the plan level.
+Every operator is one ``mapInArrow`` node (``doctor_spark.arrow.row_map``):
+numpy per item, one output batch per input batch.
 """
 
 from __future__ import annotations
 
 import struct as _struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_map
 
 MEDIA_SCHEMA_DDL = (
     "media_id long, kind string, payload binary, mime string, "
@@ -175,12 +175,11 @@ MEDIA_WITH_GOLDEN_DDL = MEDIA_SCHEMA_DDL + ", expected_mean double"
 def media_dataframe(spark, n: int, partitions: int | None = None) -> DataFrame:
     parts = partitions or spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield pd.DataFrame([generate_media(int(i)) for i in pdf["id"]])
+    def gen(i):
+        return [tuple(generate_media(i).values())]  # MEDIA_WITH_GOLDEN_DDL order
 
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, schema=MEDIA_WITH_GOLDEN_DDL
+    return row_map(
+        spark.range(0, n, numPartitions=parts), gen, MEDIA_WITH_GOLDEN_DDL
     )
 
 
@@ -198,47 +197,28 @@ def media_features(df: DataFrame) -> DataFrame:
     """Per-item features via one Arrow batch pass: mean/std of pixels
     (image/video) or |PCM| mean + duration (audio)."""
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"], pdf["meta"]
-            ):
-                b = bytes(payload)
-                # Python round() (decimal-correct), NOT np.round — the
-                # scaled-multiply rounding differs at the last digit and
-                # breaks golden equality
-                r4 = lambda v: round(float(v), 4)  # noqa: E731
-                try:
-                    if kind == "image":
-                        px = decode_image_any(b).astype(np.float64)
-                        rows.append(
-                            (mid, kind, r4(px.mean()), r4(px.std()), px.size, None)
-                        )
-                    elif kind == "audio":
-                        samples, rate = decode_audio(b)
-                        s = np.abs(samples.astype(np.float64))
-                        rows.append(
-                            (mid, kind, r4(s.mean()), r4(s.std()), s.size,
-                             len(samples) / rate)
-                        )
-                    else:
-                        fr = decode_video(b).astype(np.float64)
-                        rows.append(
-                            (mid, kind, r4(fr.mean()), r4(fr.std()), fr.size, None)
-                        )
-                except ValueError:
-                    rows.append((mid, kind, None, None, 0, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mean_value", "std_value",
-                    "n_elements", "duration_sec",
-                ],
-            )
+    # Python round() (decimal-correct), NOT np.round — the scaled-multiply
+    # rounding differs at the last digit and breaks golden equality
+    def r4(v):
+        return round(float(v), 4)
 
-    return df.select("media_id", "kind", "payload", "meta").mapInPandas(
-        run, schema=FEATURES_DDL
+    def features(mid, kind, b, meta):
+        try:
+            if kind == "image":
+                px = decode_image_any(b).astype(np.float64)
+                return [(mid, kind, r4(px.mean()), r4(px.std()), px.size, None)]
+            if kind == "audio":
+                samples, rate = decode_audio(b)
+                s = np.abs(samples.astype(np.float64))
+                return [(mid, kind, r4(s.mean()), r4(s.std()), s.size,
+                         len(samples) / rate)]
+            fr = decode_video(b).astype(np.float64)
+            return [(mid, kind, r4(fr.mean()), r4(fr.std()), fr.size, None)]
+        except ValueError:
+            return [(mid, kind, None, None, 0, None)]
+
+    return row_map(
+        df.select("media_id", "kind", "payload", "meta"), features, FEATURES_DDL
     )
 
 
@@ -248,34 +228,27 @@ def image_resize(df: DataFrame, max_dim: int = 350) -> DataFrame:
     (doctor/forms.py:83-92 ``max_dimension`` default 350;
     utils.py:166-189)."""
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "image":
-                    continue
-                px = decode_image_any(bytes(payload))
-                h, w = px.shape[:2]
-                scale = max_dim / max(h, w)
-                nh, nw = max(1, int(h * scale)), max(1, int(w * scale))
-                yi = (np.arange(nh) * (h / nh)).astype(int)
-                xi = (np.arange(nw) * (w / nw)).astype(int)
-                thumb = px[yi][:, xi]
-                if thumb.ndim == 2:
-                    enc = encode_image(thumb)
-                else:
-                    from ..kernels.png import encode_png
+    def resize(mid, kind, payload):
+        if kind != "image":
+            return []
+        px = decode_image_any(payload)
+        h, w = px.shape[:2]
+        scale = max_dim / max(h, w)
+        nh, nw = max(1, int(h * scale)), max(1, int(w * scale))
+        yi = (np.arange(nh) * (h / nh)).astype(int)
+        xi = (np.arange(nw) * (w / nw)).astype(int)
+        thumb = px[yi][:, xi]
+        if thumb.ndim == 2:
+            enc = encode_image(thumb)
+        else:
+            from ..kernels.png import encode_png
 
-                    enc = encode_png(thumb)
-                rows.append((mid, nw, nh, enc))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "thumbnail"]
-            )
+            enc = encode_png(thumb)
+        return [(mid, nw, nh, enc)]
 
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        run, schema="media_id long, width int, height int, thumbnail binary"
+    return row_map(
+        df.select("media_id", "kind", "payload"), resize,
+        "media_id long, width int, height int, thumbnail binary",
     )
 
 
@@ -284,27 +257,18 @@ def video_frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
     (frame re-encoded as an image payload) — the explode-shaped operator a
     training pipeline uses for frame-level feature extraction."""
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video":
-                    continue
-                frames = decode_video(bytes(payload))
-                for fno in range(0, frames.shape[0], every_k):
-                    rows.append(
-                        (mid, fno, encode_image(frames[fno]),
-                         round(float(frames[fno].mean()), 4))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_no", "frame", "frame_mean"]
-            )
+    def frames_of(mid, kind, payload):
+        if kind != "video":
+            return []
+        frames = decode_video(payload)
+        return [
+            (mid, fno, encode_image(frames[fno]), round(float(frames[fno].mean()), 4))
+            for fno in range(0, frames.shape[0], every_k)
+        ]
 
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        run,
-        schema="media_id long, frame_no int, frame binary, frame_mean double",
+    return row_map(
+        df.select("media_id", "kind", "payload"), frames_of,
+        "media_id long, frame_no int, frame binary, frame_mean double",
     )
 
 
@@ -328,9 +292,16 @@ IMAGES_TO_PDF_DDL = (
 
 
 def images_to_pdf_row(did, blobs: list[bytes]) -> tuple:
-    """Per-row core of :func:`images_to_pdf_stats` — shared with the fused
-    generate+convert query in ``__spark_entry__`` so the generated PNG
-    bytes never cross the JVM↔Python boundary (guide §4.1)."""
+    """(doc_id, PNG blobs) → one multi-page PDF via the V1 writer
+    (``kernels.pdfwrite.pdf_from_png_bytes`` — PNG decode by the
+    from-scratch codec, FlateDecode image XObjects, PIL resolution=100
+    page sizing), re-parsed with the independent reader: ``(doc_id,
+    n_images, page_count, parse_ok)``, where ``parse_ok`` asserts the
+    page tree round trips (one page per image, one image per page).
+    The row core of the fused generate+convert query in
+    ``__spark_entry__``, so the generated PNG bytes never cross the
+    JVM↔Python boundary (guide §4.1).  Reference: doctor/tasks.py:55-72
+    (pdf_bytes_from_images) behind /convert/images/pdf/."""
     from ..kernels.pdf import parse_pdf
     from ..kernels.pdfwrite import PdfWriteError, pdf_from_png_bytes
 
@@ -343,31 +314,6 @@ def images_to_pdf_row(did, blobs: list[bytes]) -> tuple:
         return (did, len(blobs), doc.page_count, bool(ok))
     except (PdfWriteError, ValueError):
         return (did, len(blobs), 0, False)
-
-
-def images_to_pdf_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, pngs array<binary>) → one multi-page PDF per row via the
-    V1 writer (``kernels.pdfwrite.pdf_from_png_bytes`` — PNG decode by
-    the from-scratch codec, FlateDecode image XObjects, PIL
-    resolution=100 page sizing), re-parsed with the independent reader;
-    emits structural stats.  ``parse_ok`` asserts the page tree round
-    trips: one page per image, one image per page.
-
-    Reference: doctor/tasks.py:55-72 (pdf_bytes_from_images) behind the
-    /convert/images/pdf/ endpoint (views.py)."""
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = [
-                images_to_pdf_row(did, [bytes(p) for p in pngs])
-                for did, pngs in zip(pdf["doc_id"], pdf["pngs"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_images", "page_count", "parse_ok"],
-            )
-
-    return df.mapInPandas(run, schema=IMAGES_TO_PDF_DDL)
 
 
 AUDIO_TRANSCODE_DDL = (
@@ -389,8 +335,14 @@ AUDIO_TAG_FIXTURE = {
 
 
 def audio_transcode_row(mid, blob: bytes) -> tuple:
-    """Per-row core of :func:`audio_transcode_stats` — shared with the
-    fused generate+transcode query in ``__spark_entry__``."""
+    """(media_id, wav bytes) → V5/V6 transcode properties via the
+    from-scratch RIFF/WAV kernels (``kernels.audio`` — reference
+    tasks.py:467-532 ffmpeg transcodes, 535-603 eyed3 retag,
+    views.py:396-409 duration): the mp3 analog (22050 Hz, channels
+    kept) and the opus-voip analog (8000 Hz mono), each re-parsed, plus
+    an ID3v2.4 retag round trip.  Sample counts follow the resampler's
+    closed form ``(n-1)·out//in + 1``.  The row core of the fused
+    generate+transcode query in ``__spark_entry__``."""
     from ..kernels.audio import (
         WavError,
         audio_duration_sec,
@@ -423,68 +375,19 @@ def audio_transcode_row(mid, blob: bytes) -> tuple:
         return (mid, 0, 0, 0, 0, 0, 0, 0.0, False)
 
 
-def audio_transcode_stats(df: DataFrame) -> DataFrame:
-    """(media_id, wav binary) → V5/V6 transcode properties via the
-    from-scratch RIFF/WAV kernels (``kernels.audio`` — reference
-    tasks.py:467-532 ffmpeg transcodes, 535-603 eyed3 retag,
-    views.py:396-409 duration).
-
-    Both reference output profiles run per row: the mp3 analog
-    (22050 Hz, channels kept) and the opus-voip analog (8000 Hz mono),
-    each re-parsed to verify its header; the ID3v2.4 retag round-trips
-    through the reader (title/publisher/APIC selection exact).  The
-    emitted sample counts follow the resampler's closed form
-    ``(n-1)·out//in + 1`` — the oracle recomputes them in SQL."""
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = [
-                audio_transcode_row(mid, bytes(blob))
-                for mid, blob in zip(pdf["media_id"], pdf["wav"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "mp3_rate", "mp3_n", "mp3_ch",
-                    "voip_rate", "voip_n", "voip_ch", "duration_sec",
-                    "tag_ok",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_TRANSCODE_DDL)
-
-
 THUMBNAIL_DDL = (
     "doc_id long, thumb_w int, thumb_h int, png_ok boolean, "
     "has_ink boolean"
 )
 
 
-def pdf_thumbnail_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, pdf binary) → V2 thumbnail properties via the from-scratch
-    layout rasterizer + PNG encoder (``kernels.raster.pdf_thumbnail`` —
-    reference ``pdftoppm -singlefile -f 1 -scale-to 350 -png``,
-    utils.py:164-189 behind views.py:196-212, default dimension
-    forms.py:83-92).  ``png_ok`` asserts the emitted PNG round-trips
-    through the independent decoder; ``has_ink`` that the page's text
-    actually rendered (non-white pixels present)."""
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = [
-                pdf_thumbnail_row(did, bytes(blob))
-                for did, blob in zip(pdf["doc_id"], pdf["pdf"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "thumb_w", "thumb_h", "png_ok", "has_ink"],
-            )
-
-    return df.mapInPandas(run, schema=THUMBNAIL_DDL)
-
-
 def pdf_thumbnail_row(did, blob: bytes) -> tuple:
-    """Per-row core of :func:`pdf_thumbnail_stats` — shared with the fused
+    """(doc_id, pdf bytes) → V2 thumbnail properties via the
+    from-scratch layout rasterizer + PNG encoder
+    (``kernels.raster.pdf_thumbnail`` — reference ``pdftoppm
+    -singlefile -f 1 -scale-to 350 -png``, utils.py:164-189).
+    ``png_ok``: the PNG round-trips through the independent decoder;
+    ``has_ink``: non-white pixels rendered.  The row core of the fused
     generate+rasterize query in ``__spark_entry__``."""
     from ..kernels.png import decode_png
     from ..kernels.raster import RasterError, pdf_thumbnail
@@ -506,39 +409,15 @@ EMBED_OVERLAY_DDL = (
 )
 
 
-def embed_text_overlay_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, pdf binary) → V4 "embed text" round-trip properties via
-    the overlay writer (``kernels.pdfwrite.embed_text_overlay`` —
-    reference views.py:439-474: rasterize, tesseract ``image_to_data``,
-    alpha-0 Helvetica-9 reportlab layer pypdf-merged per page).
-
-    Per document: run the pluggable OCR backend on each page (here the
-    synthetic backend reading the embedded word table — tesseract's
-    subprocess seam), merge the invisible layer, then verify the closed
-    loop with the independent parser: the re-extracted tokens equal the
-    word table in raster reading order, and the overlay carries both
-    invisibility mechanisms (``3 Tr`` + ``/ca 0``)."""
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = [
-                embed_text_overlay_row(did, bytes(blob))
-                for did, blob in zip(pdf["doc_id"], pdf["pdf"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page_count", "has_words", "tokens_match",
-                    "overlay_invisible",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=EMBED_OVERLAY_DDL)
-
-
 def embed_text_overlay_row(did, b: bytes) -> tuple:
-    """Per-row core of :func:`embed_text_overlay_stats` — shared with the
-    fused generate+overlay query in ``__spark_entry__``."""
+    """(doc_id, pdf bytes) → V4 "embed text" round-trip properties via
+    the overlay writer (``kernels.pdfwrite.embed_text_overlay`` —
+    reference views.py:439-474): OCR each page with the pluggable
+    backend, merge the invisible layer, then check with the independent
+    parser that the re-extracted tokens equal the word table and that
+    the overlay carries both invisibility mechanisms (``3 Tr`` +
+    ``/ca 0``).  The row core of the fused generate+overlay query in
+    ``__spark_entry__``."""
     import re as _re
 
     from ..kernels.pdf import (
@@ -578,33 +457,12 @@ STRIP_ROUNDTRIP_DDL = (
 )
 
 
-def pdf_strip_roundtrip(df: DataFrame) -> DataFrame:
-    """(doc_id, pdf binary) → metadata-strip round-trip properties via
-    the V3 writer (``kernels.pdfwrite.strip_pdf_metadata`` — the
-    reference hashes PDFs after pypdf metadata removal,
-    tasks.py:39-53): layout text unchanged, double-strip deterministic
-    (strip(strip(x)) == strip(x)), output not larger than a rewrite
-    should be."""
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = [
-                pdf_strip_roundtrip_row(did, bytes(blob))
-                for did, blob in zip(pdf["doc_id"], pdf["pdf"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "text_equal", "strip_stable", "shrunk_or_equal",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=STRIP_ROUNDTRIP_DDL)
-
-
 def pdf_strip_roundtrip_row(did, b: bytes) -> tuple:
-    """Per-row core of :func:`pdf_strip_roundtrip` — shared with the fused
-    generate+strip query in ``__spark_entry__``."""
+    """(doc_id, pdf bytes) → metadata-strip round-trip properties via
+    the V3 writer (``kernels.pdfwrite.strip_pdf_metadata`` — reference
+    tasks.py:39-53): layout text unchanged, double-strip deterministic,
+    output not larger than a rewrite should be.  The row core of the
+    fused generate+strip query in ``__spark_entry__``."""
     from ..kernels.pdf import extract_pdf_layout_text
     from ..kernels.pdfwrite import PdfWriteError, strip_pdf_metadata
 

@@ -10,8 +10,9 @@ documents is exactly the n-gram the memorization audit hunts).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _QUOTES_TYPE = (
     "array<struct<quote_idx:int, start_off:int, end_off:int, "
@@ -20,26 +21,12 @@ _QUOTES_TYPE = (
 
 
 def _quotes_udf(min_tokens: int):
-    @F.pandas_udf(_QUOTES_TYPE)
-    def quotes(texts: pd.Series) -> pd.Series:
-        from ..kernels.quotes import extract_quotes
+    from ..kernels.quotes import extract_quotes
 
-        return pd.Series(
-            [
-                [
-                    {
-                        "quote_idx": i + 1, "start_off": s,
-                        "end_off": e, "quote_text": b,
-                    }
-                    for i, (s, e, b) in enumerate(
-                        extract_quotes(x, min_tokens)
-                    )
-                ]
-                for x in texts
-            ]
-        )
+    def quotes(x):
+        return [(i + 1, *q) for i, q in enumerate(extract_quotes(x, min_tokens))]
 
-    return quotes
+    return row_udf(quotes, _QUOTES_TYPE)
 
 
 def quote_spans(
@@ -53,7 +40,4 @@ def quote_spans(
     return docs.select(
         *carried,
         F.explode(udf(F.col(text_col))).alias("_q"),
-    ).select(
-        *carried,
-        "_q.quote_idx", "_q.start_off", "_q.end_off", "_q.quote_text",
-    )
+    ).select(*carried, "_q.*")

@@ -10,8 +10,9 @@ corpus) ever shuffle.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _KW_TYPE = (
     "array<struct<kw_rank:int, phrase:string, score_micro:bigint, "
@@ -20,31 +21,13 @@ _KW_TYPE = (
 
 
 def _rake_udf(top_k: int, max_phrase: int):
-    @F.pandas_udf(_KW_TYPE)
-    def kws(texts: pd.Series) -> pd.Series:
-        from ..kernels.rake import rake_keywords
+    from ..kernels.rake import rake_keywords
 
-        return pd.Series(
-            [
-                [
-                    {
-                        "kw_rank": i,
-                        "phrase": p,
-                        "score_micro": s,
-                        "n_words": n,
-                        "n_occurrences": c,
-                    }
-                    for i, (p, s, n, c) in enumerate(
-                        rake_keywords(
-                            x, top_k=top_k, max_phrase=max_phrase
-                        )
-                    )
-                ]
-                for x in texts
-            ]
-        )
+    def kws(x):
+        kws = rake_keywords(x, top_k=top_k, max_phrase=max_phrase)
+        return [(i, *kw) for i, kw in enumerate(kws)]
 
-    return kws
+    return row_udf(kws, _KW_TYPE)
 
 
 def rake_table(
@@ -62,11 +45,4 @@ def rake_table(
     exploded = docs.select(
         *carried, F.explode(udf(F.col(text_col))).alias("_kw")
     )
-    return exploded.select(
-        *carried,
-        F.col("_kw.kw_rank").alias("kw_rank"),
-        F.col("_kw.phrase").alias("phrase"),
-        F.col("_kw.score_micro").alias("score_micro"),
-        F.col("_kw.n_words").alias("n_words"),
-        F.col("_kw.n_occurrences").alias("n_occurrences"),
-    )
+    return exploded.select(*carried, "_kw.*")

@@ -20,8 +20,9 @@ Scale shape — the part that matters at 10^12 pages:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _RULES_SCHEMA = "array<struct<allow:boolean, plen:int, re:string>>"
 
@@ -29,14 +30,12 @@ _RULES_SCHEMA = "array<struct<allow:boolean, plen:int, re:string>>"
 def compile_robots_rules(agent: str):
     """Arrow kernel: robots.txt body column → compiled, precedence-sorted
     rule array for ``agent`` (one parse per host row, map-only)."""
+    from ..kernels.robots import compile_robots
 
-    @F.pandas_udf(_RULES_SCHEMA)
-    def compile_udf(body: pd.Series) -> pd.Series:
-        from ..kernels.robots import compile_robots
+    def compile_udf(body):
+        return compile_robots(body, agent)
 
-        return body.map(lambda b: compile_robots(b, agent))
-
-    return compile_udf
+    return row_udf(compile_udf, _RULES_SCHEMA)
 
 
 def robots_verdict(rules: Column, path: Column) -> Column:
@@ -64,15 +63,12 @@ def robots_crawl_delays(
     ``(host, crawl_delay_ms)`` — NULL when the host's robots.txt names no
     parseable ``Crawl-delay`` for ``agent``.  One Arrow pass over the
     dimension table (the same ~1-row-per-host side the gate compiles)."""
+    from ..kernels.robots import crawl_delay_ms
 
-    @F.pandas_udf("bigint")
-    def delay_udf(body: pd.Series) -> pd.Series:
-        from ..kernels.robots import crawl_delay_ms
+    def delay(body):
+        return crawl_delay_ms(body, agent)
 
-        # nullable Int64: NULLs in a plain series coerce int64 → float64
-        return pd.Series(
-            (crawl_delay_ms(b, agent) for b in body), dtype="Int64"
-        )
+    delay_udf = row_udf(delay, "bigint")
 
     return robots.select(
         F.col(host_col).alias("host"),

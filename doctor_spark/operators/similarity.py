@@ -282,7 +282,10 @@ def _cosine_pairs_udf(dim: int):
         out[~ok] = float("nan")  # NaN fails the >= threshold, like the
         return pd.Series(out)     # oracle's NULL-row exclusion
 
-    return cos
+    # non-deterministic for the optimizer only (as on containment_est's
+    # signature UDF): otherwise the threshold filter and the projection
+    # each evaluate cos(va, vb), in two Python nodes
+    return cos.asNondeterministic()
 
 
 def _ivf_centroids(df, n_centroids: int, id_col: str, vec_col: str):
@@ -327,7 +330,10 @@ def _ivf_assign_udf(centroids):
         out[~pd.Series(valid)] = None  # NULL bucket never joins a probe
         return out
 
-    return assign
+    # non-deterministic for the optimizer only (as on containment_est's
+    # signature UDF): otherwise the join key's inferred isnotnull filter
+    # clones assign(embedding) into a second Python node
+    return assign.asNondeterministic()
 
 
 def ivf_ann_topk(

@@ -10,8 +10,9 @@ Generate → project, same shape as the link/table ingests.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _ENTRY_TYPE = (
     "array<struct<kind:string, loc:string, lastmod:string, "
@@ -20,26 +21,16 @@ _ENTRY_TYPE = (
 
 
 def _entries_udf():
-    @F.pandas_udf(_ENTRY_TYPE)
-    def entries(body: pd.Series) -> pd.Series:
-        from ..kernels.sitemap import parse_sitemap
+    from ..kernels.sitemap import parse_sitemap
 
-        def one(b):
-            kind, ents = parse_sitemap(b)
-            return [
-                {
-                    "kind": kind,
-                    "loc": e["loc"],
-                    "lastmod": e["lastmod"],
-                    "changefreq": e["changefreq"],
-                    "priority": e["priority"],
-                }
-                for e in ents
-            ]
+    def entries(b):
+        kind, ents = parse_sitemap(b)
+        return [
+            (kind, e["loc"], e["lastmod"], e["changefreq"], e["priority"])
+            for e in ents
+        ]
 
-        return body.map(one)
-
-    return entries
+    return row_udf(entries, _ENTRY_TYPE)
 
 
 def sitemap_entries(docs: DataFrame, body_col: str = "html") -> DataFrame:
@@ -51,7 +42,4 @@ def sitemap_entries(docs: DataFrame, body_col: str = "html") -> DataFrame:
     carried = [c for c in docs.columns if c != body_col]
     return docs.select(
         *carried, F.explode(_entries_udf()(F.col(body_col))).alias("_e")
-    ).select(
-        *carried, "_e.kind", "_e.loc", "_e.lastmod",
-        "_e.changefreq", "_e.priority",
-    )
+    ).select(*carried, "_e.*")

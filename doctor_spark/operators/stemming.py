@@ -16,19 +16,15 @@ family size, never corpus size.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
+from ..kernels.porter import porter_stem
 
 
 def _toks(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
-
-@F.pandas_udf("string")
-def porter_stem_udf(terms: pd.Series) -> pd.Series:
-    from ..kernels.porter import porter_stem
-
-    return terms.map(porter_stem)
 
 
 def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -46,7 +42,7 @@ def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # again.
     vocab = (
         toks.distinct()
-        .select("term", porter_stem_udf(F.col("term")).alias("stem"))
+        .select("term", row_udf(porter_stem, "string")(F.col("term")).alias("stem"))
         .localCheckpoint(eager=True)
     )
     return (

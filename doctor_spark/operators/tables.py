@@ -17,8 +17,9 @@ running text (doctor/tasks.py:361-370).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 _CELLS_TYPE = "array<struct<tbl:int, row:int, col:int, cell:string>>"
 _STATS_TYPE = (
@@ -27,51 +28,30 @@ _STATS_TYPE = (
 
 
 def _cells_udf():
-    @F.pandas_udf(_CELLS_TYPE)
-    def cells(html: pd.Series) -> pd.Series:
-        from ..kernels.tables import extract_tables
+    from ..kernels.tables import extract_tables
 
-        def one(h):
-            out = []
-            for t, rows in enumerate(extract_tables(h)):
-                for r, row in enumerate(rows):
-                    for c, cell in enumerate(row):
-                        out.append(
-                            {"tbl": t, "row": r, "col": c, "cell": cell}
-                        )
-            return out
+    def cells(h):
+        return [
+            (t, r, c, cell)
+            for t, rows in enumerate(extract_tables(h))
+            for r, row in enumerate(rows)
+            for c, cell in enumerate(row)
+        ]
 
-        return html.map(one)
-
-    return cells
+    return row_udf(cells, _CELLS_TYPE)
 
 
 def _stats_udf():
-    @F.pandas_udf(_STATS_TYPE)
-    def stats(html: pd.Series) -> pd.DataFrame:
-        from ..kernels.tables import extract_tables
+    from ..kernels.tables import extract_tables
 
-        recs = []
-        for h in html:
-            tables = extract_tables(h)
-            n_rows = sum(len(t) for t in tables)
-            n_cells = sum(len(r) for t in tables for r in t)
-            max_cols = max(
-                (len(r) for t in tables for r in t), default=0
-            )
-            recs.append(
-                {
-                    "n_tables": len(tables),
-                    "n_rows": n_rows,
-                    "n_cells": n_cells,
-                    "max_cols": max_cols,
-                }
-            )
-        return pd.DataFrame(
-            recs, columns=["n_tables", "n_rows", "n_cells", "max_cols"]
-        )
+    def stats(h):
+        tables = extract_tables(h)
+        n_rows = sum(len(t) for t in tables)
+        n_cells = sum(len(r) for t in tables for r in t)
+        max_cols = max((len(r) for t in tables for r in t), default=0)
+        return len(tables), n_rows, n_cells, max_cols
 
-    return stats
+    return row_udf(stats, _STATS_TYPE)
 
 
 def table_cells(pages: DataFrame, html_col: str = "html") -> DataFrame:
@@ -84,7 +64,7 @@ def table_cells(pages: DataFrame, html_col: str = "html") -> DataFrame:
     carried = [c for c in pages.columns if c != html_col]
     return pages.select(
         *carried, F.explode(_cells_udf()(F.col(html_col))).alias("_c")
-    ).select(*carried, "_c.tbl", "_c.row", "_c.col", "_c.cell")
+    ).select(*carried, "_c.*")
 
 
 def table_stats(pages: DataFrame, html_col: str = "html") -> DataFrame:

@@ -13,30 +13,27 @@ and tested either way.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..arrow import row_udf
 
 __all__ = ["video_vhash", "video_dup_clusters", "video_near_pairs"]
 
 
 def _vhash_udf():
-    @F.pandas_udf("bigint")
-    def udf(payload: pd.Series) -> pd.Series:
-        from ..kernels.imagehash import vhash64
-        from .multimodal import decode_video
+    from ..kernels.imagehash import vhash64
+    from .multimodal import decode_video
 
-        def one(b):
-            if b is None:
-                return None
-            try:
-                return vhash64(decode_video(bytes(b)))
-            except (ValueError, NotImplementedError):
-                return None
+    def udf(b):
+        if b is None:
+            return None
+        try:
+            return vhash64(decode_video(bytes(b)))
+        except (ValueError, NotImplementedError):
+            return None
 
-        # same two guards as the image/audio paths (see imagedup.py)
-        return pd.Series((one(b) for b in payload), dtype="Int64")
-
-    return udf.asNondeterministic()
+    # same guard as the image/audio paths (see imagedup.py)
+    return row_udf(udf, "bigint").asNondeterministic()
 
 
 def video_vhash(

@@ -22,7 +22,7 @@ def assert_jvm_only(df: DataFrame) -> None:
     stages must whole-stage-codegen; only the extraction/media operators
     may cross into Python)."""
     plan = physical_plan(df, "simple")
-    if "EvalPython" in plan or "MapInPandas" in plan:
+    if any(node in plan for node in ("EvalPython", "MapInPandas", "MapInArrow")):
         raise AssertionError(f"Python node in supposedly-JVM plan:\n{plan}")
 
 
@@ -52,6 +52,3 @@ def count_exchanges(df: DataFrame) -> int:
     """Shuffle count — every Exchange is a full write+read of the data."""
     return physical_plan(df, "simple").count("Exchange")
 
-
-def count_codegen_spans(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", physical_plan(df))))

@@ -2,7 +2,7 @@
 
 The converter queries (pdf_thumbnails, audio_transcode, pdf_strip_roundtrip,
 embed_text_overlay, images_to_pdf, fetch_images_to_pdf) are map-only
-mapInPandas stages; their bench wall is (per-row kernel cost x n_docs / 32
+mapInArrow stages; their bench wall is (per-row kernel cost x n_docs / 32
 cores) + constant overhead.  Profiling the kernel chain for a sample of
 doc_ids single-process shows exactly where the CPU goes (guide section 1).
 

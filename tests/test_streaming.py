@@ -255,7 +255,7 @@ def test_streaming_extract_kill_midbatch_exactly_once(spark, tmp_path):
 
 
 def test_streaming_boilerplate_summary_matches_batch(spark, tmp_path):
-    """The jusText summary operator is stateless mapInPandas, so it must
+    """The jusText summary operator is a stateless mapInArrow, so it must
     run unchanged under Structured Streaming and produce exactly the
     batch result on the same files."""
     from doctor_spark.kernels.boilerplate_fixtures import PAGES
