@@ -78,8 +78,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # the converter queries (32 s for ~17 s of single-core kernel CPU).
 # ``_spread_scan`` round-robin-repartitions to 2×defaultParallelism,
 # conditional on the scan's split count so it is a NO-OP at cluster scale
-# (a floor, not a tuned constant); ``_spread_scan_sorted`` is the variant
-# for map-only queries that must emit key-ordered rows.
+# (a floor, not a tuned constant).  The spread carries no order: a query
+# that must return key-ordered rows orders its OUTPUT with ``_present``.
 #
 # scan-width decisions per (app, table path): df.rdd.getNumPartitions()
 # costs ~0.1 s of physical planning per call, and a bench session asks the
@@ -106,32 +106,17 @@ def _spread_scan(
     return df.repartition(target)
 
 
-def _spread_scan_sorted(
-    spark: SparkSession, path: str, key: str, cols: list[str] | None = None
-) -> DataFrame:
-    """Input-side global sort for map-only queries that must emit rows in
-    ``key`` order.  A final ``orderBy`` above a mapInArrow executes the
-    Python stage TWICE: the range exchange's bounds-sampling job runs the
-    child lineage once, then the real shuffle map runs it again (measured:
-    a trivial 64-partition map stage costs 2.0–2.5 s under a sort vs 1.0 s
-    without).  Range-partitioning + in-partition sorting the NARROW input
-    column instead keeps the expensive Python stage single-execution and
-    collapses spread+sort into ONE exchange, with the bounds sampled from
-    the cheap scan.  The collected row order is identical because the map
-    is 1-row-per-row and order-preserving: partitions ordered by range,
-    rows sorted within each → global ``key`` order at collect.  Partition
-    count keeps the scan's width at scale (never narrows below the
-    memoized split count)."""
-    df = spark.read.parquet(path)
-    if cols is not None:
-        df = df.select(*cols)
-    pkey = (spark.sparkContext.applicationId, path)
-    if pkey not in _SCAN_PARTS:
-        _SCAN_PARTS[pkey] = df.rdd.getNumPartitions()
-    target = max(
-        spark.sparkContext.defaultParallelism * 2, _SCAN_PARTS[pkey]
-    )
-    return df.repartitionByRange(target, F.col(key)).sortWithinPartitions(key)
+def _present(df: DataFrame, *keys: str) -> DataFrame:
+    """Order a query result by ``keys`` for the driver's ``collect()``.
+
+    A global ``orderBy`` plans a range exchange whose bounds-sampling job
+    runs the child lineage, Python stages included, once more before the
+    real shuffle.  A ``SinglePartition`` exchange samples nothing, so the
+    tail runs once; and it keeps lineage, so a lost executor means
+    recomputing, not a failed query.  One partition costs no parallelism
+    that matters: the rows go to one ``collect()`` anyway (the largest
+    result, ``verified_neardup``, is 247k rows at sf1)."""
+    return df.repartition(1).sortWithinPartitions(*keys)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,7 +132,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spread documents scan for single-pass Python-kernel-heavy queries
     (measured allowlist, OPTIMIZATION_r06.md): the one-split file
-    otherwise pins the whole Arrow map stage to one core."""
+    otherwise pins the whole Arrow map stage to one core.  The
+    round-robin spread scrambles row order, so a query on it that
+    returns ordered rows sorts its output with :func:`_present`."""
     return _spread_scan(spark, f"{sf_dir}/documents.parquet")
 
 
@@ -1505,7 +1492,7 @@ def q_hll_host_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = hll_distinct(pairs, ["host"], "url")
-    return out.localCheckpoint(eager=False).orderBy("host").select(
+    return _present(out, "host").select(
         "host",
         F.col("n_regs").cast("bigint").alias("n_regs"),
         F.col("v_zero").cast("bigint").alias("v_zero"),
@@ -2083,11 +2070,11 @@ def q_pagination_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
         url.alias("url"), F.encode(html, "utf-8").alias("html")
     )
     out = pagination_chains(pages, max_hops=64)
-    return out.select(
+    return _present(out.select(
         "url", "head_url",
         F.col("page_index").cast("bigint").alias("page_index"),
         "resolved",
-    ).localCheckpoint(eager=False).orderBy("url")
+    ), "url")
 
 
 def q_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2135,10 +2122,10 @@ def q_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     meta = page_metadata(pages).select("doc_id", "url", "canonical_url")
     out = canonical_clusters(meta)
-    return out.select(
+    return _present(out.select(
         "doc_id", "url", "cluster_key", "is_keeper",
         F.col("cluster_size").cast("bigint").alias("cluster_size"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ), "doc_id")
 
 
 def q_host_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2167,11 +2154,11 @@ def q_host_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         host.alias("host"), synth.alias("text"),
     )
     out = host_template_lines(pages, min_frac_pct=60, min_host_docs=2)
-    return out.select(
+    return _present(out.select(
         "host", "line",
         F.col("n_docs").cast("bigint").alias("n_docs"),
         F.col("host_docs").cast("bigint").alias("host_docs"),
-    ).localCheckpoint(eager=False).orderBy("host", "line")
+    ), "host", "line")
 
 
 # deterministic hreflang synthesis: five arms — a 3-language cluster,
@@ -2219,9 +2206,9 @@ def q_hreflang_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_HREFLANG_SYNTH_SQL).alias("html"),
     )
     out = language_pair_counts(pages)
-    return out.select(
+    return _present(out.select(
         "lang_a", "lang_b", F.col("n_pages").cast("bigint").alias("n_pages")
-    ).localCheckpoint(eager=False).orderBy("lang_a", "lang_b")
+    ), "lang_a", "lang_b")
 
 
 # deterministic bitext synthesis: five arms — a 3-sentence 1-1 run
@@ -2275,7 +2262,7 @@ def q_bitext_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_BITEXT_TGT_SQL).alias("tgt_text"),
     )
     out = bitext_beads(pairs)
-    return out.select(
+    return _present(out.select(
         "doc_id",
         F.col("bead").cast("int").alias("bead"),
         "ok",
@@ -2284,7 +2271,7 @@ def q_bitext_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tgt_start").cast("int").alias("tgt_start"),
         F.col("n_tgt").cast("int").alias("n_tgt"),
         "src_text", "tgt_text",
-    ).localCheckpoint(eager=False).orderBy("doc_id", "bead")
+    ), "doc_id", "bead")
 
 
 # deterministic URL-structure synthesis: five path arms (numeric
@@ -2317,11 +2304,11 @@ def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     pages = d.select(F.expr(_URLTMPL_SYNTH_SQL).alias("url"))
     out = url_template_counts(pages)
-    return out.select(
+    return _present(out.select(
         "host", "template",
         F.col("n_urls").cast("bigint").alias("n_urls"),
         "sample_url",
-    ).localCheckpoint(eager=False).orderBy("host", "template")
+    ), "host", "template")
 
 
 # deterministic heading synthesis: four arms — a 4-heading outline
@@ -2358,13 +2345,13 @@ def q_heading_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(F.expr(_HEADINGS_SYNTH_SQL), "utf-8").alias("html"),
     )
     out = heading_outline(pages)
-    return out.select(
+    return _present(out.select(
         "doc_id",
         F.col("seq").cast("int").alias("seq"),
         F.col("level").cast("int").alias("level"),
         F.col("parent").cast("int").alias("parent"),
         "text", "truncated",
-    ).localCheckpoint(eager=False).orderBy("doc_id", "seq")
+    ), "doc_id", "seq")
 
 
 def q_bitext_url_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2396,9 +2383,9 @@ def q_bitext_url_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url")
     )
     out = bitext_url_pairs(pages)
-    return out.select(
+    return _present(out.select(
         "stem", "src_lang", "src_url", "tgt_lang", "tgt_url"
-    ).localCheckpoint(eager=False).orderBy("stem", "src_lang", "tgt_lang")
+    ), "stem", "src_lang", "tgt_lang")
 
 
 def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2430,8 +2417,7 @@ def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
     )
     out = host_quality_gate(docs, min_docs=5, max_fail_pct=50)
-    return out.select("doc_id", "host", "passes", "host_ok") \
-        .localCheckpoint(eager=False).orderBy("doc_id")
+    return _present(out.select("doc_id", "host", "passes", "host_ok"), "doc_id")
 
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2446,14 +2432,14 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
     m = readability_metrics(F.col("text"))
-    return d.select(
+    return _present(d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         m["n_words"].alias("n_words"),
         m["n_sentences"].alias("n_sentences"),
         m["n_syllables"].alias("n_syllables"),
         m["fk_grade"].alias("fk_grade"),
         m["flesch_ease"].alias("flesch_ease"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ), "doc_id")
 
 
 def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2469,11 +2455,11 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     out = collocations(d, min_pair=5)
-    return out.select(
+    return _present(out.select(
         "w1", "w2",
         F.col("n_pair").cast("bigint").alias("n_pair"),
         "pmi_micro",
-    ).localCheckpoint(eager=False).orderBy("w1", "w2")
+    ), "w1", "w2")
 
 
 # chunking synthesis: four arms — paragraph packing, an oversize
@@ -2507,12 +2493,12 @@ def q_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_CHUNK_SYNTH_SQL).alias("text"),
     )
     out = chunk_documents(pages, max_tokens=6)
-    return out.select(
+    return _present(out.select(
         "doc_id",
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("n_tokens").cast("int").alias("n_tokens"),
         "kind", "chunk_text",
-    ).localCheckpoint(eager=False).orderBy("doc_id", "chunk_idx")
+    ), "doc_id", "chunk_idx")
 
 
 def q_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2535,12 +2521,12 @@ def q_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     n_docs = d.where(F.length(F.trim(F.col("text"))) > 0).count()
     out = inverted_postings(d, df_cap=max(100, n_docs // 20))
-    return out.select(
+    return _present(out.select(
         "term",
         F.col("df").cast("bigint").alias("df"),
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "positions",
-    ).localCheckpoint(eager=False).orderBy("term", "doc_id")
+    ), "term", "doc_id")
 
 
 # quote synthesis: constant-string arms so every offset is a literal
@@ -2571,13 +2557,13 @@ def q_quote_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_QUOTE_SYNTH_SQL).alias("text"),
     )
     out = quote_spans(pages, min_tokens=3)
-    return out.select(
+    return _present(out.select(
         "doc_id",
         F.col("quote_idx").cast("int").alias("quote_idx"),
         F.col("start_off").cast("int").alias("start_off"),
         F.col("end_off").cast("int").alias("end_off"),
         "quote_text",
-    ).localCheckpoint(eager=False).orderBy("doc_id", "quote_idx")
+    ), "doc_id", "quote_idx")
 
 
 # mirror synthesis: three mirror payloads replicated across four m-hosts
@@ -2623,7 +2609,7 @@ def q_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_MIRROR_CONTENT_SQL).alias("text"),
     )
     out = host_mirror_pairs(pages, host_cap=8, min_shared=1)
-    return out.localCheckpoint(eager=False).orderBy("host1", "host2")
+    return _present(out, "host1", "host2")
 
 
 def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2638,7 +2624,7 @@ def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.operators.concordance import kwic
 
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return kwic(d, "spark", k=3).localCheckpoint(eager=False).orderBy("doc_id", "pos")
+    return _present(kwic(d, "spark", k=3), "doc_id", "pos")
 
 
 # citation synthesis: five arms — multi-cite prose, series precedence
@@ -2672,7 +2658,7 @@ def q_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.expr(_CITE_SYNTH_SQL).alias("text"),
     )
-    return citation_spans(pages).localCheckpoint(eager=False).orderBy("doc_id", "cite_idx")
+    return _present(citation_spans(pages), "doc_id", "cite_idx")
 
 
 def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2686,7 +2672,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.operators.vocab import vocab_growth
 
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return vocab_growth(d, bucket_docs=100).localCheckpoint(eager=False).orderBy("bucket")
+    return _present(vocab_growth(d, bucket_docs=100), "bucket")
 
 
 def q_revisit_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2722,7 +2708,7 @@ def q_revisit_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     out = revisit_records(revisit_assign(caps))
-    return out.select(
+    return _present(out.select(
         "url",
         "date_s",
         "digest",
@@ -2731,7 +2717,7 @@ def q_revisit_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         "refers_date",
         F.md5(F.col("record")).alias("rec_md5"),
         F.length(F.col("record")).cast("bigint").alias("rec_bytes"),
-    ).localCheckpoint(eager=False).orderBy("url", "date_s", "digest")
+    ), "url", "date_s", "digest")
 
 
 # RAKE synthesis: four constant arms — the paper-style arithmetic doc,
@@ -2765,14 +2751,14 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_RAKE_SYNTH_SQL).alias("text"),
     )
     out = rake_table(pages, top_k=5, max_phrase=3)
-    return out.select(
+    return _present(out.select(
         "doc_id",
         F.col("kw_rank").cast("int").alias("kw_rank"),
         "phrase",
         F.col("score_micro").cast("bigint").alias("score_micro"),
         F.col("n_words").cast("int").alias("n_words"),
         F.col("n_occurrences").cast("int").alias("n_occurrences"),
-    ).localCheckpoint(eager=False).orderBy("doc_id", "kw_rank")
+    ), "doc_id", "kw_rank")
 
 
 def q_char_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2787,7 +2773,7 @@ def q_char_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.operators.charcov import char_coverage
 
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return char_coverage(d).localCheckpoint(eager=False).orderBy("rank")
+    return _present(char_coverage(d), "rank")
 
 
 # Trap-shaped URL synthesis — one SQL snippet parsed by Spark's F.expr
@@ -2850,7 +2836,7 @@ def q_crawler_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _docs(spark, sf_dir).select(
         F.expr(_TRAP_SYNTH_SQL).alias("url")
     )
-    return host_trap_table(pages).localCheckpoint(eager=False).orderBy("host")
+    return _present(host_trap_table(pages), "host")
 
 
 # IDN host arms — constant per residue class so the decoded forms are
@@ -2894,13 +2880,12 @@ def q_idn_homographs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("idn_host").alias("host"),
         F.col("ascii_host").alias("homograph_of"),
     )
-    return (
-        t.join(pairs, "host", "left")
-        .select(
+    return _present(
+        t.join(pairs, "host", "left").select(
             "host", "unicode_host", "is_idn", "mixed_script",
             "skeleton", "homograph_of",
-        )
-        .localCheckpoint(eager=False).orderBy("host")
+        ),
+        "host",
     )
 
 
@@ -2920,7 +2905,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index artifact: four constant queries against every
     document, top-10 each.  The corpus-sized token stream is pruned by
     a BROADCAST semi-join against the query vocabulary BEFORE the one
-    real shuffle (the (doc, term) tf aggregation, localCheckpoint-
+    real shuffle (the (doc, term) tf aggregation, checkpoint-
     pinned so the df count reuses it instead of re-exploding the
     corpus); idf is micro-quantized int64 immediately after the only
     ``ln``, and per-term contributions floor to int64 micro BEFORE the
@@ -2934,7 +2919,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(enumerate(_BM25_QUERIES)), "query_id long, query_text string"
     )
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    return bm25_topk(d, queries, k=10).localCheckpoint(eager=False).orderBy("query_id", "rank")
+    return _present(bm25_topk(d, queries, k=10), "query_id", "rank")
 
 
 # HITS edge generators — a different affine family than _PR_EDGE_GENS so
@@ -2968,11 +2953,11 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = edges.unionByName(p)
     edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
     out = hits(edges, n_iter=3)
-    return out.select(
+    return _present(out.select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("hub_micro").cast("bigint").alias("hub_micro"),
         F.col("auth_micro").cast("bigint").alias("auth_micro"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ), "doc_id")
 
 
 # TrustRank edge generators + seed rule — distinct affine family from
@@ -3010,10 +2995,10 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % F.lit(_TR_SEED_MOD) == 0
     ).select(F.col("doc_id").alias("node"))
     out = trustrank(edges, seeds, n_iter=4)
-    return out.select(
+    return _present(out.select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("trust_micro").cast("bigint").alias("trust_micro"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ), "doc_id")
 
 
 # Porter-stemming synthesis arms — a word inventory exercising every
@@ -3111,7 +3096,7 @@ def q_stem_conflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
         F.expr(_STEM_SYNTH_SQL).alias("text")
     )
-    return stem_conflation(d).localCheckpoint(eager=False).orderBy("stem")
+    return _present(stem_conflation(d), "stem")
 
 
 # Host synthesis for the split query — arms exercise the registrable-
@@ -3145,7 +3130,7 @@ def q_host_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
         F.expr(_SPLIT_HOST_SQL).alias("host")
     )
-    return split_summary(assign_split(d)).localCheckpoint(eager=False).orderBy("split")
+    return _present(split_summary(assign_split(d)), "split")
 
 
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3169,7 +3154,7 @@ def q_freq_of_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-histogram-sized table."""
     from doctor_spark.operators.zipf import freq_of_freqs
 
-    return freq_of_freqs(_docs(spark, sf_dir)).localCheckpoint(eager=False).orderBy("freq")
+    return _present(freq_of_freqs(_docs(spark, sf_dir)), "freq")
 
 
 # Content-defined-chunking synthesis — 8 constant payload arms built
@@ -3292,7 +3277,7 @@ def q_layout_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_LAYOUT_SYNTH_SQL).alias("html"),
         F.expr(_LAYOUT_HOST_SQL).alias("host"),
     )
-    return layout_clusters(d).localCheckpoint(eager=False).orderBy("layout_fp")
+    return _present(layout_clusters(d), "layout_fp")
 
 
 def q_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3311,12 +3296,12 @@ def q_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = verified_neardup_pairs(
         _docs_spread(spark, sf_dir), sim_threshold_micro=600_000
     )
-    return out.select(
+    return _present(out.select(
         F.col("id_a").cast("bigint").alias("id_a"),
         F.col("id_b").cast("bigint").alias("id_b"),
         "lev",
         "sim_micro",
-    ).localCheckpoint(eager=False).orderBy("id_a", "id_b")
+    ), "id_a", "id_b")
 
 
 def q_temporal_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3357,8 +3342,8 @@ def q_best_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(enumerate(_BM25_QUERIES)), "query_id long, query_text string"
     )
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    return best_passages(d, queries, k=5, window=12).localCheckpoint(eager=False).orderBy(
-        "query_id", "rank"
+    return _present(
+        best_passages(d, queries, k=5, window=12), "query_id", "rank"
     )
 
 
@@ -3571,14 +3556,14 @@ def q_unicode_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
     )
     k = unicode_clean_udf()(dirty)
-    return d.select(
+    return _present(d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         k.getField("clean").alias("clean"),
         k.getField("n_space_mapped").alias("n_space_mapped"),
         k.getField("n_zero_width").alias("n_zero_width"),
         k.getField("n_controls").alias("n_controls"),
         k.getField("changed").alias("changed"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ), "doc_id")
 
 
 def q_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3598,7 +3583,7 @@ def q_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.encode(F.expr(_JSONLD_SYNTH_SQL), "utf-8").alias("html"),
     )
-    return structured_data(pages).localCheckpoint(eager=False).orderBy("doc_id")
+    return _present(structured_data(pages), "doc_id")
 
 
 # deterministic robots-meta synthesis: six head arms (noindex+nofollow,
@@ -3770,7 +3755,7 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     url mapped to its terminal target and exact hop count within the
     16-hop browser budget, cycles and over-long chains marked
     unresolved.  Pointer doubling — ⌈log₂ 16⌉ = 4 keyed self-joins, not
-    16 per-hop iterations — with localCheckpoint-bounded lineage; the
+    16 per-hop iterations — with checkpoint-bounded lineage; the
     oracle walks the same chains with a hop-bounded recursive CTE.  Plain
     ``_docs`` scan: the query runs no Python and every doubling job would
     re-pay a spread exchange (measured 0.657× with it)."""
@@ -3904,8 +3889,8 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact every dedup-aware recrawl and every URL lookup service is
     built on): one CDXJ line per capture — SURT key, 14-digit
     timestamp, JSON block with canonical url, payload digest and
-    length — built entirely in JVM codegen, then ranged on the SURT key
-    (``repartitionByRange`` + per-partition sort), because a CDX's
+    length — built entirely in JVM codegen, then globally sorted on the
+    SURT key (one range exchange + per-partition sort), because a CDX's
     defining property is global (surt, ts) order: prefix queries over a
     10^12-row index bind to a contiguous parquet row-group range
     instead of a full scan.  ONE range exchange, zero Python.
@@ -3946,9 +3931,7 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(line).alias("cdx_md5"),
         F.octet_length(line).cast("bigint").alias("cdx_bytes"),
     )
-    return rows.repartitionByRange(8, "surt", "ts").sortWithinPartitions(
-        "surt", "ts"
-    )
+    return rows.orderBy("surt", "ts")
 
 
 def q_wat_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4687,9 +4670,7 @@ def q_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         images_to_pdf_row,
     )
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def gen(did):
         pngs = []
@@ -4702,7 +4683,7 @@ def q_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             pngs.append(encode_png(arr))
         return [images_to_pdf_row(did, pngs)]
 
-    return row_map(docs, gen, IMAGES_TO_PDF_DDL)
+    return _present(row_map(docs, gen, IMAGES_TO_PDF_DDL), "doc_id")
 
 
 def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4720,9 +4701,7 @@ def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.kernels.png import encode_png
     from doctor_spark.sources.fetch import images_to_pdf_from_urls
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def transport(url: str) -> bytes:
         did, k = (int(v) for v in url.rsplit("/", 2)[-2:])
@@ -4745,8 +4724,11 @@ def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         except (PdfWriteError, ValueError):
             return [(did, len(urls), 0, False)]
 
-    return row_map(
-        docs, gen, "doc_id long, n_urls int, page_count int, parse_ok boolean"
+    return _present(
+        row_map(
+            docs, gen, "doc_id long, n_urls int, page_count int, parse_ok boolean"
+        ),
+        "doc_id",
     )
 
 
@@ -4771,9 +4753,7 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_transcode_row,
     )
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def gen(did):
         rate = 11025 * (1 + did % 4)
@@ -4783,7 +4763,7 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
         samples = ((t * (did % 97 + 3)) % 24001 - 12000).astype(np.int16)
         return [audio_transcode_row(did, write_wav(rate, samples))]
 
-    return row_map(docs, gen, AUDIO_TRANSCODE_DDL)
+    return _present(row_map(docs, gen, AUDIO_TRANSCODE_DDL), "media_id")
 
 
 def q_pdf_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4801,15 +4781,13 @@ def q_pdf_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.corpus import _build_text_pdf, _rng
     from doctor_spark.operators.multimodal import THUMBNAIL_DDL, pdf_thumbnail_row
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def gen(did):
         data, _golden = _build_text_pdf(did, _rng(did))
         return [pdf_thumbnail_row(did, data)]
 
-    return row_map(docs, gen, THUMBNAIL_DDL)
+    return _present(row_map(docs, gen, THUMBNAIL_DDL), "doc_id")
 
 
 def q_embed_text_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4824,15 +4802,13 @@ def q_embed_text_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.corpus import _build_image_pdf, _rng
     from doctor_spark.operators.multimodal import EMBED_OVERLAY_DDL, embed_text_overlay_row
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def gen(did):
         data, _golden = _build_image_pdf(did, _rng(did))
         return [embed_text_overlay_row(did, data)]
 
-    return row_map(docs, gen, EMBED_OVERLAY_DDL)
+    return _present(row_map(docs, gen, EMBED_OVERLAY_DDL), "doc_id")
 
 
 def q_pdf_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4844,15 +4820,13 @@ def q_pdf_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctor_spark.corpus import _build_text_pdf, _rng
     from doctor_spark.operators.multimodal import STRIP_ROUNDTRIP_DDL, pdf_strip_roundtrip_row
 
-    docs = _spread_scan_sorted(
-        spark, f"{sf_dir}/documents.parquet", "doc_id", cols=["doc_id"]
-    )
+    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
 
     def gen(did):
         data, _golden = _build_text_pdf(did, _rng(did))
         return [pdf_strip_roundtrip_row(did, data)]
 
-    return row_map(docs, gen, STRIP_ROUNDTRIP_DDL)
+    return _present(row_map(docs, gen, STRIP_ROUNDTRIP_DDL), "doc_id")
 
 
 def q_media_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4972,7 +4946,7 @@ def q_order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        rev.localCheckpoint(eager=False).orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
+        rev.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
         .limit(10)
         .select(
             F.col("o_orderkey").cast("bigint").alias("o_orderkey"),

@@ -36,7 +36,11 @@ _META_STRUCT = "struct<" + ", ".join(f"{f}:string" for f in FIELDS) + ">"
 def _meta_udf():
     from ..kernels.html_meta import extract_page_metadata
 
-    return row_udf(extract_page_metadata, _META_STRUCT)
+    # non-deterministic for the optimizer only (as on SimHash's signature
+    # UDF): an inferred isnotnull filter on a join key derived from its
+    # output (canonical_clusters) otherwise clones the kernel below the
+    # projection, so each document ran it twice
+    return row_udf(extract_page_metadata, _META_STRUCT).asNondeterministic()
 
 
 def page_metadata(pages: DataFrame, html_col: str = "html") -> DataFrame:

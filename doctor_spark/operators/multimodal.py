@@ -202,7 +202,7 @@ def media_features(df: DataFrame) -> DataFrame:
     def r4(v):
         return round(float(v), 4)
 
-    def features(mid, kind, b, meta):
+    def features(mid, kind, b):
         try:
             if kind == "image":
                 px = decode_image_any(b).astype(np.float64)
@@ -217,9 +217,7 @@ def media_features(df: DataFrame) -> DataFrame:
         except ValueError:
             return [(mid, kind, None, None, 0, None)]
 
-    return row_map(
-        df.select("media_id", "kind", "payload", "meta"), features, FEATURES_DDL
-    )
+    return row_map(df.select("media_id", "kind", "payload"), features, FEATURES_DDL)
 
 
 def image_resize(df: DataFrame, max_dim: int = 350) -> DataFrame:

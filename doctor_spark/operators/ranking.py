@@ -49,16 +49,23 @@ def _toks(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
-@F.pandas_udf("long")
-def _bm25_idf_micro(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
-    import numpy as np
+def _bm25_idf_micro(n_docs_col, df_col):
+    """int64 micro BM25 idf — numpy/libm kernel over the whole batch.
+    Built per call: a module-level pandas UDF needs a SparkContext at
+    import time."""
 
-    n = n_docs.to_numpy("float64")
-    d = df_t.to_numpy("float64")
-    return pd.Series(
-        np.floor(np.log((n - d + 0.5) / (d + 0.5) + 1.0) * MICRO + 0.5)
-        .astype("int64")
-    )
+    @F.pandas_udf("long")
+    def idf(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
+        import numpy as np
+
+        n = n_docs.to_numpy("float64")
+        d = df_t.to_numpy("float64")
+        return pd.Series(
+            np.floor(np.log((n - d + 0.5) / (d + 0.5) + 1.0) * MICRO + 0.5)
+            .astype("int64")
+        )
+
+    return idf(n_docs_col, df_col)
 
 
 def _bm25_topk_with_stats(

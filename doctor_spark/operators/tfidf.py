@@ -39,16 +39,23 @@ from ..functions.text import tokens
 MICRO = 1_000_000
 
 
-@F.pandas_udf("long")
-def _idf_micro(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
-    import numpy as np
+def _idf_micro(n_docs_col, df_col):
+    """int64 micro log10 idf — numpy/libm kernel over the whole batch.
+    Built per call: a module-level pandas UDF needs a SparkContext at
+    import time."""
 
-    return pd.Series(
-        np.floor(
-            np.log10(n_docs.to_numpy(float) / df_t.to_numpy(float)) * MICRO
-            + 0.5
-        ).astype("int64")
-    )
+    @F.pandas_udf("long")
+    def idf(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
+        import numpy as np
+
+        return pd.Series(
+            np.floor(
+                np.log10(n_docs.to_numpy(float) / df_t.to_numpy(float)) * MICRO
+                + 0.5
+            ).astype("int64")
+        )
+
+    return idf(n_docs_col, df_col)
 
 
 def tfidf_top_terms(

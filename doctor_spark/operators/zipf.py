@@ -36,14 +36,21 @@ def _toks(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
-@F.pandas_udf("long")
-def _ln_micro(x: pd.Series) -> pd.Series:
-    import numpy as np
+def _ln_micro(col):
+    """int64 micro natural log — numpy/libm kernel over the whole batch.
+    Built per call: a module-level pandas UDF needs a SparkContext at
+    import time."""
 
-    return pd.Series(
-        np.floor(np.log(x.to_numpy("float64")) * MICRO + 0.5)
-        .astype("int64")
-    )
+    @F.pandas_udf("long")
+    def ln(x: pd.Series) -> pd.Series:
+        import numpy as np
+
+        return pd.Series(
+            np.floor(np.log(x.to_numpy("float64")) * MICRO + 0.5)
+            .astype("int64")
+        )
+
+    return ln(col)
 
 
 def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:

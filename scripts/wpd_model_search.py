@@ -8,7 +8,8 @@ combination can reach, showing the residual is serialization framing, not
 a dropped structure this grid could recover.
 """
 import itertools, sys
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from doctor_spark.kernels.wpd import RenderOpts, extract_from_wpd_bytes
 
 data = open("/root/reference/doctor/test_assets/word-perfect.wpd", "rb").read()

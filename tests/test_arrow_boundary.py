@@ -156,11 +156,11 @@ PANDAS_SITES = {
         "numpy math over the whole batch",
     ("doctor_spark/operators/nbayes.py", "_mlog10_ratio.lp"):
         "numpy math over the whole batch",
-    ("doctor_spark/operators/zipf.py", "_ln_micro"):
+    ("doctor_spark/operators/zipf.py", "_ln_micro.ln"):
         "numpy math over the whole batch",
-    ("doctor_spark/operators/ranking.py", "_bm25_idf_micro"):
+    ("doctor_spark/operators/ranking.py", "_bm25_idf_micro.idf"):
         "numpy math over the whole batch",
-    ("doctor_spark/operators/tfidf.py", "_idf_micro"):
+    ("doctor_spark/operators/tfidf.py", "_idf_micro.idf"):
         "numpy math over the whole batch",
     ("doctor_spark/operators/lm.py", "_quantize_lp.lp"):
         "numpy math over the whole batch",
@@ -239,7 +239,13 @@ def _final_plan(df) -> str:
 
 @pytest.mark.parametrize(
     "name",
-    ["dedup_simhash_near", "dedup_simhash_near_w48", "embedding_neardup", "ivf_ann_topk"],
+    [
+        "canonical_clusters",
+        "dedup_simhash_near",
+        "dedup_simhash_near_w48",
+        "embedding_neardup",
+        "ivf_ann_topk",
+    ],
 )
 def test_no_python_udf_evaluated_twice(spark, name):
     if not Path(SF_DIR).is_dir():

@@ -1,8 +1,10 @@
 """Replicates the driver's correctness gate: every ``queries()`` entry run
 via Spark at sf0.01 must match its ``oracle_sql()`` DuckDB result —
-row count, column names, and order-insensitive values."""
+row count, column names, and order-insensitive values; and where the
+oracle ends in a top-level ``ORDER BY``, the rows come out in its order."""
 
 import math
+import re
 import sys
 from pathlib import Path
 
@@ -48,13 +50,70 @@ def _values_equal(a, b) -> bool:
     return a == b
 
 
+def _order_keys(sql: str) -> list[str] | None:
+    """Output columns of the SQL's top-level ``ORDER BY``, or None when it
+    has none: the last ``ORDER BY`` outside every parenthesis, string
+    literal and ``--`` comment, without qualifiers, ASC/DESC/NULLS and
+    LIMIT."""
+    masked = re.sub(
+        r"'(?:[^']|'')*'|\"[^\"]*\"|--[^\n]*", lambda m: " " * len(m[0]), sql
+    )
+    top = [
+        m for m in re.finditer(r"\border\s+by\b", masked, re.I)
+        if masked.count("(", 0, m.start()) == masked.count(")", 0, m.start())
+    ]
+    if not top:
+        return None
+    clause = re.split(r"\b(?:limit|offset)\b|;", masked[top[-1].end():], flags=re.I)[0]
+    return [
+        re.split(r"\s+(?:asc|desc|nulls)\b", k.strip(), flags=re.I)[0].split(".")[-1]
+        for k in clause.split(",")
+    ]
+
+
+def _key_rows(df: pd.DataFrame, keys: list[str]) -> list[tuple]:
+    return [
+        tuple(None if pd.isna(v) else v for v in row)
+        for row in df[keys].itertuples(index=False, name=None)
+    ]
+
+
+def test_order_keys_found_for_every_ordered_oracle():
+    ordered = {
+        name: keys
+        for name, sql in entry.oracle_sql().items()
+        if (keys := _order_keys(sql)) is not None
+    }
+    assert len(ordered) == 43, sorted(ordered)
+    assert ordered["order_revenue_topk"] == ["revenue", "o_orderkey"]
+    assert ordered["pagination_chains"] == ["url"]
+    assert _order_keys("SELECT x FROM (SELECT x FROM t ORDER BY x) s") is None
+    assert _order_keys("SELECT 'ORDER BY y' AS x FROM t -- ORDER BY z") is None
+
+
 @pytest.mark.parametrize("name", sorted(entry.oracle_sql().keys()))
 def test_query_matches_oracle(spark, name):
     if name == "reference_fixtures" and not Path(entry._REF_ASSETS).is_dir():
         pytest.skip(f"reference assets not present ({entry._REF_ASSETS})")
     q = entry.queries()[name]
-    spark_pdf = _normalize(q(spark, SF_DIR).toPandas())
-    oracle_pdf = _normalize(_oracle_df(entry.oracle_sql()[name]))
+    sql = entry.oracle_sql()[name]
+    spark_raw, oracle_raw = q(spark, SF_DIR).toPandas(), _oracle_df(sql)
+
+    # ordered oracles: the key columns in the oracle's row order (rows
+    # with equal keys may come in any order, so only keys are compared)
+    keys = _order_keys(sql)
+    if keys is not None:
+        got, want = _key_rows(spark_raw, keys), _key_rows(oracle_raw, keys)
+        first = next(
+            (i for i, (a, b) in enumerate(zip(got, want)) if a != b),
+            min(len(got), len(want)),
+        )
+        assert got == want, (
+            f"{name}: rows not in ORDER BY {keys} order from row {first}: "
+            f"{got[first:first + 3]} vs {want[first:first + 3]}"
+        )
+
+    spark_pdf, oracle_pdf = _normalize(spark_raw), _normalize(oracle_raw)
 
     assert list(spark_pdf.columns) == list(oracle_pdf.columns), (
         f"{name}: columns {list(spark_pdf.columns)} vs {list(oracle_pdf.columns)}"

@@ -3,11 +3,7 @@ tie-break, short-doc clamp."""
 
 import pytest
 
-
-def best_passages(*a, **kw):
-    from doctor_spark.operators.ranking import best_passages as f
-
-    return f(*a, **kw)
+from doctor_spark.operators.ranking import best_passages
 
 
 def _queries(spark, *texts):

@@ -1212,6 +1212,27 @@ def test_cdx_index_single_range_exchange(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.parametrize("name", ["pdf_thumbnails", "structured_data"])
+def test_ordered_result_sorts_one_partition(spark, name):
+    """An ordered result (a converter over the spread scan, a kernel
+    query over the plain scan) is sorted in ONE partition above an
+    ``Exchange SinglePartition``: no range exchange, whose bounds-sampling
+    job would run the Python stage a second time, and no checkpoint
+    (``Scan ExistingRDD``), which would cut lineage."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()[name](spark, SF)
+    q.collect()
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert "Scan ExistingRDD" not in plan, plan
+    lines = final.splitlines()
+    sort = next(i for i, ln in enumerate(lines) if " Sort [" in ln)
+    single = next(i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln)
+    assert sort < single and "], false, 0" in lines[sort], final
+
+
 def test_wat_export_map_only(spark):
     """WAT serialization: one Arrow-batched map stage (title+links
     kernels), record framing in codegen, ZERO shuffles."""

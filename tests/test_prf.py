@@ -1,11 +1,7 @@
 """Pseudo-relevance-feedback expansion — query-term exclusion,
 co-occurrence selection, integer weights, rank tie-break."""
 
-
-def prf_expansion(*a, **kw):
-    from doctor_spark.operators.ranking import prf_expansion as f
-
-    return f(*a, **kw)
+from doctor_spark.operators.ranking import prf_expansion
 
 
 def _queries(spark, *texts):

@@ -6,17 +6,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from doctor_spark.operators.ranking import bm25_topk
 from doctor_spark.plans.checks import count_exchanges, physical_plan
 
 MICRO = 1_000_000
-
-
-def bm25_topk(*a, **kw):
-    # lazy: the module defines a pandas_udf at import time, which needs
-    # an active SparkSession (repo convention, see test_plans.py)
-    from doctor_spark.operators.ranking import bm25_topk as f
-
-    return f(*a, **kw)
 
 
 def _expected_bm25(corpus, query, k1=1.2, b=0.75):
