@@ -79,10 +79,10 @@ def materialize(args) -> str:
 
 
 def run_leg(cores: int, corpus: str, args) -> dict:
-    import __spark_entry__ as entry
+    from doctor_spark.queries.quality import _BP_POST, _BP_PRE
 
     code = _LEG.format(repo=_repo(), cores=cores, corpus=corpus,
-                       pre=entry._BP_PRE, post=entry._BP_POST)
+                       pre=_BP_PRE, post=_BP_POST)
     out = subprocess.run([sys.executable, "-c", code],
                          capture_output=True, text=True, check=True)
     return json.loads(out.stdout.strip().splitlines()[-1])

@@ -34,7 +34,7 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from doctor_spark.session import get_spark
-import __spark_entry__ as entry
+from doctor_spark.queries.quality import _c4_pages
 
 spark = get_spark("c4-corpus")
 docs = spark.read.parquet({sf_dir!r} + "/documents.parquet")
@@ -43,7 +43,7 @@ big = (docs.select("doc_id", "text")
        .select((F.col("doc_id") * {reps} + F.col("r")).alias("doc_id"),
                "text")
        .repartition(128))
-pages = entry._c4_pages(big)
+pages = _c4_pages(big)
 pages.write.mode("overwrite").parquet({corpus!r})
 print(spark.read.parquet({corpus!r}).count())
 """

@@ -108,14 +108,14 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/tmp/doctor_spark_sf1")
     args = ap.parse_args()
     sys.path.insert(0, _repo())
-    import __spark_entry__ as entry
+    from doctor_spark.queries.web import _META_HTML_SYNTH_SQL
 
     corpus = materialize(args)
     walls_n, walls_4n, rows = [], [], 0
     for _ in range(args.rounds):  # interleave to spread box drift
-        r = run_leg(args.n, corpus, entry._META_HTML_SYNTH_SQL)
+        r = run_leg(args.n, corpus, _META_HTML_SYNTH_SQL)
         walls_n.append(r["wall"]); rows = r["rows"]
-        r = run_leg(4 * args.n, corpus, entry._META_HTML_SYNTH_SQL)
+        r = run_leg(4 * args.n, corpus, _META_HTML_SYNTH_SQL)
         walls_4n.append(r["wall"])
     tp_n = rows / (sum(walls_n) / len(walls_n))
     tp_4n = rows / (sum(walls_4n) / len(walls_4n))

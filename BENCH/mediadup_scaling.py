@@ -29,12 +29,12 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from doctor_spark.session import get_spark
-import __spark_entry__ as entry
+from doctor_spark.queries.media import _synth_png_udf
 
 spark = get_spark("md-corpus")
 ids = spark.range({n_docs}).select(F.col("id").alias("doc_id"))
 pngs = ids.select(
-    "doc_id", entry._synth_png_udf()(F.col("doc_id")).alias("payload"))
+    "doc_id", _synth_png_udf()(F.col("doc_id")).alias("payload"))
 pngs.repartition(128).write.mode("overwrite").parquet({corpus!r})
 print(spark.read.parquet({corpus!r}).count())
 """

@@ -113,9 +113,9 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/tmp/doctor_spark_sf1")
     args = ap.parse_args()
     sys.path.insert(0, _repo())
-    import __spark_entry__ as entry
+    from doctor_spark.queries.linkgraph import _redirect_edges_expr
 
-    src, dst = entry._redirect_edges_expr("div")
+    src, dst = _redirect_edges_expr("div")
     corpus = materialize(args)
     walls_n, walls_4n, rows = [], [], 0
     for _ in range(args.rounds):  # interleave to spread box drift

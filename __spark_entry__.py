@@ -3,12 +3,11 @@
 ``entry(spark)`` — flagship extraction over the deterministic synthetic
 pages corpus (BASELINE.json input_hint shape).
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator
-family (SURVEY.md §2 + the training-data operators).  Extraction queries
-run on the self-contained corpus (payload + golden emitted together);
-relational / dedup / similarity / text-analysis queries run on the
-driver-provided tables at ``sf_dir``.  Every oracle is an *exact* ANSI-SQL
-mirror (hashing via md5, decimal-exact sums, fixed rounding) — verified
+``queries()`` / ``oracle_sql()`` — the query registry in ``ORDER``: each
+query and its DuckDB oracle are declared once, with ``@query(oracle=...)``,
+in an operator-family module of ``doctor_spark.queries`` (SURVEY.md §2 +
+the training-data operators).  Every oracle is an *exact* ANSI-SQL mirror
+(hashing via md5, decimal-exact sums, fixed rounding) — verified
 cross-engine by tests/test_entry_contract.py.
 
 Cross-engine ``lower`` safety is an ENFORCED invariant, not a caveat:
@@ -27,7 +26,7 @@ import sys
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 # the doctor_spark package lives next to this file; make the import robust
 # to whatever cwd/sys.path the grading driver uses
@@ -35,29 +34,7 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from doctor_spark.arrow import row_map, row_udf  # noqa: E402
-
-CORPUS_N = 400  # fixed-size corpus for extraction queries (sf-independent)
-
-# per 100 doc_ids (corpus.py _FORMAT_TABLE): html 55, pdf 10+2+3+5+4=24,
-# txt 10, docx 5, doc 2, wpd 1, bin 3 (junk)
-_FORMAT_COUNTS = {
-    "bin": 3, "doc": 2, "docx": 5, "html": 55, "pdf": 24, "txt": 10, "wpd": 1,
-}
-
-
-def _corpus(spark: SparkSession, n: int = CORPUS_N) -> DataFrame:
-    from doctor_spark.corpus import pages_dataframe
-
-    return pages_dataframe(spark, n)
-
-
-def _extracted(spark: SparkSession, n: int = CORPUS_N) -> DataFrame:
-    from doctor_spark.operators.classify import skew_repartition, with_classification
-    from doctor_spark.operators.extract import extract_operator
-
-    pages = with_classification(_corpus(spark, n))
-    return extract_operator(skew_repartition(pages), ocr_available=True)
+from doctor_spark.queries import CORPUS_N, _extracted, registered  # noqa: E402, F401
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -66,9633 +43,173 @@ def entry(spark: SparkSession) -> DataFrame:
     return _extracted(spark, 200)
 
 
-# --------------------------------------------------------------------------
-# queries
-# --------------------------------------------------------------------------
-
-
-# Scale-adaptive parallelism floor for narrow scans (guide §2.5 "input
-# skew", §6).  The driver tables arrive as ONE small parquet file with one
-# row group, so the scan yields a single split and every Arrow/Python map
-# stage downstream runs on ONE core — at sf0.1 that was the entire wall of
-# the converter queries (32 s for ~17 s of single-core kernel CPU).
-# ``_spread_scan`` round-robin-repartitions to 2×defaultParallelism,
-# conditional on the scan's split count so it is a NO-OP at cluster scale
-# (a floor, not a tuned constant).  The spread carries no order: a query
-# that must return key-ordered rows orders its OUTPUT with ``_present``.
-#
-# scan-width decisions per (app, table path): df.rdd.getNumPartitions()
-# costs ~0.1 s of physical planning per call, and a bench session asks the
-# same question about the same three files ~400 times
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
-
-
-def _spread_scan(
-    spark: SparkSession, path: str, cols: list[str] | None = None
-) -> DataFrame:
-    """:func:`_spread` for a parquet scan, with the split count memoized
-    per (session, file) — the file's layout cannot change mid-session.
-    ``cols`` projects before the exchange so only those columns shuffle
-    (guide §2.3: project before the exchange)."""
-    df = spark.read.parquet(path)
-    if cols is not None:
-        df = df.select(*cols)
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    target = spark.sparkContext.defaultParallelism * 2
-    if _SCAN_PARTS[key] >= target:
-        return df
-    return df.repartition(target)
-
-
-def _present(df: DataFrame, *keys: str) -> DataFrame:
-    """Order a query result by ``keys`` for the driver's ``collect()``.
-
-    A global ``orderBy`` plans a range exchange whose bounds-sampling job
-    runs the child lineage, Python stages included, once more before the
-    real shuffle.  A ``SinglePartition`` exchange samples nothing, so the
-    tail runs once; and it keeps lineage, so a lost executor means
-    recomputing, not a failed query.  One partition costs no parallelism
-    that matters: the rows go to one ``collect()`` anyway (the largest
-    result, ``verified_neardup``, is 247k rows at sf1)."""
-    return df.repartition(1).sortWithinPartitions(*keys)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain documents scan — the default.  Spreading is OPT-IN per query
-    (``_docs_spread``): full-matrix A/B at sf0.1 showed the spread exchange
-    wins ≥0.4 s only on single-pass queries whose wall is per-row
-    Python/Arrow kernel work, while iterative/multi-job queries (BPE,
-    PageRank, k-means — which re-execute the scan subtree every job) and
-    light JVM queries regress by the exchange + 64-task stage cost."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spread documents scan for single-pass Python-kernel-heavy queries
-    (measured allowlist, OPTIMIZATION_r06.md): the one-split file
-    otherwise pins the whole Arrow map stage to one core.  The
-    round-robin spread scrambles row order, so a query on it that
-    returns ordered rows sorts its output with :func:`_present`."""
-    return _spread_scan(spark, f"{sf_dir}/documents.parquet")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread: every events query is a pure-JVM aggregation where the
-    # single-split scan is already fast under codegen — measured +0.5 s per
-    # query from the extra exchange, zero benefit (no Python stage)
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread: similarity queries score in the JVM (zero-shuffle plans);
-    # spreading the embedding arrays measured as a small regression
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def q_extract_mismatches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-identical gate: rows whose extracted content differs from the
-    golden text column.  Expected: EMPTY."""
-    results = _extracted(spark).select("url", "content")
-    golden = _corpus(spark).select("url", F.col("text").alias("expected"))
-    return (
-        results.join(golden, "url")
-        .where(~F.col("content").eqNullSafe(F.col("expected")))
-        .select("url", "content")
-    )
-
-
-def q_extract_format_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-extension doc counts over the fixed corpus (mime/extension
-    classification + dispatch coverage)."""
-    return (
-        _extracted(spark)
-        .groupBy("extension")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
-
-
-def q_extract_ocr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OCR-gate accounting: image-only PDFs are exactly 5% of the corpus."""
-    return _extracted(spark).select(
-        F.sum(F.col("extracted_by_ocr").cast("bigint")).alias("n_ocr"),
-        F.sum((F.col("err") != "").cast("bigint")).alias("n_err"),
-        F.count("*").cast("bigint").alias("n_total"),
-    )
-
-
-def _pdf_metadata_fixtures() -> list[tuple[str, bytes]]:
-    """Deterministic header-stamp + redaction PDF fixtures (built by our own
-    writer; pure function, safe to call on executors)."""
-    from doctor_spark.kernels.pdfwriter import Line, PageSpec, build_pdf
-
-    fixtures = []
-    for i, docnum in enumerate(["1-1", "7-2", "12-3", "", "9"]):
-        lines = [Line(row=2, col=0, text=f"Body of document {i}")]
-        if docnum:
-            lines.append(
-                Line(row=0, col=0, header_stamp=True,
-                     text=f"Case: 2{i}-5555 Document: {docnum} Page: 1")
-            )
-        spec = PageSpec(lines=lines)
-        if i % 2 == 0:
-            spec.redactions = [(2, 0, len(f"Body of document {i}"))]
-        fixtures.append((f"https://pacer.test/doc{i}.pdf", build_pdf([spec])))
-    return fixtures
-
-
-def q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PACER doc-number (P8) + bad-redaction x-ray (P9) + page count (P7)
-    over deterministic stamp/redaction fixtures.  Literal oracle."""
-    from doctor_spark.kernels.pdf import (
-        get_document_number,
-        get_page_count,
-        get_xray,
-    )
-
-    def metadata(url, data):
-        xr = get_xray(data)
-        n_red = sum(len(v) for v in xr["results"].values())
-        recovered = " | ".join(
-            h["text"] for v in xr["results"].values() for h in v
-        )
-        return [(url, get_document_number(data),
-                 get_page_count(data, "pdf"), n_red, recovered)]
-
-    fixtures = _pdf_metadata_fixtures()
-    df = spark.createDataFrame(fixtures, "url string, payload binary")
-    return row_map(
-        df, metadata,
-        "url string, doc_number string, page_count int, "
-        "n_redactions int, recovered_text string",
-    ).select(
-        "url", "doc_number",
-        F.col("page_count").cast("bigint").alias("page_count"),
-        F.col("n_redactions").cast("bigint").alias("n_redactions"),
-        "recovered_text",
-    )
-
-
-def q_extract_recap_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RECAP-mode gate (P4-P6): strip-margin extraction over fixtures whose
-    goldens are authored alongside.  Expected: EMPTY."""
-    from doctor_spark.kernels.extract import extract_recap_pdf_bytes
-    from doctor_spark.kernels.pdfwriter import Line, PageSpec, build_pdf
-
-    def mismatch(url, payload, expected):
-        content, _by_ocr, _pages = extract_recap_pdf_bytes(payload, strip_margin=True)
-        return [] if content == expected else [(url, content)]
-
-    fixtures = []
-    for i in range(6):
-        body = [f"paragraph {j} of recap doc {i}" for j in range(3)]
-        lines = [Line(row=j * 2, col=4, text=t) for j, t in enumerate(body)]
-        lines.append(Line(row=1, col=40, text="STAMP", skew=True))
-        lines.append(Line(row=0, col=0, text="HEADER EDGE", y_override=792 - 30))
-        # strip_margin crops header+skew; per-page left-shift removes the
-        # 4-col indent; blank rows between paragraphs survive
-        golden = "\n\n".join(body)
-        fixtures.append((f"https://recap.test/{i}.pdf", build_pdf([PageSpec(lines=lines)]), golden))
-
-    df = spark.createDataFrame(fixtures, "url string, payload binary, expected string")
-    return row_map(df, mismatch, "url string, content string")
-
-
-_REF_ASSETS = "/root/reference/doctor/test_assets"
-
-# literal goldens from the reference's own test suite
-# (doctor/tests.py:114-242, 301-378, 416-465); OCR-output goldens are
-# excluded (tesseract is a pluggable backend, absent in this sandbox)
-_REF_EXPECTED: list[tuple[str, str, str]] = [
-    ("vector-pdf.pdf", "first100",
-     "(Slip Opinion)              OCTOBER TERM, 2012"
-     "                                       1"),
-    ("vector-pdf.pdf", "page_count", "30"),
-    ("vector-pdf.pdf", "extracted_by_ocr", "false"),
-    ("image-pdf.pdf", "page_count", "2"),
-    ("image-pdf.pdf", "extension", "pdf"),
-    ("image-pdf.pdf", "no_text_layer", "true"),
-    ("broken-mime.pdf", "extension", "pdf"),
-    ("missouri.pdf", "extension", "pdf"),
-    ("word-docx.docx", "first200",
-     "ex- Cpl,                                                      "
-     "                                           Current Discharge "
-     "and Applicant's RequestApplication R"),
-    ("word-doc.doc", "first100",
-     "Attorneys for Appellant                            "
-     "Attorneys for AppelleeSteve Carter"),
-    ("word-doc.doc", "page_count", "None"),
-    ("word-perfect.wpd", "contains_attorney_for_appellant", "true"),
-    ("recap_extract/gov.uscourts.azd.1085839.3.0.pdf",
-     "recap_first_line_strip_margin", "1   WO"),
-    ("recap_extract/gov.uscourts.cacd.652774.40.0.pdf",
-     "recap_first_line_strip_margin", "1"),
-    ("recap_documents/ca10_010110462922.pdf", "doc_number", "010110462922"),
-    ("recap_documents/ca1_00117684624.pdf", "doc_number", "00117684624"),
-    ("recap_documents/ca2_1-1.pdf", "doc_number", "1-1"),
-    ("recap_documents/ca3_003112692106.pdf", "doc_number", "003112692106"),
-    ("recap_documents/ca4_17.pdf", "doc_number", "17"),
-    ("recap_documents/ca5_00516242060.pdf", "doc_number", "00516242060"),
-    ("recap_documents/ca6_1-3.pdf", "doc_number", "1-3"),
-    ("recap_documents/ca7_3.pdf", "doc_number", "3"),
-    ("recap_documents/ca8_.pdf", "doc_number", ""),
-    ("recap_documents/ca9_19.pdf", "doc_number", "19"),
-    ("x-ray/rectangles_yes.pdf", "xray_found", "true"),
-    ("x-ray/rectangles_yes_2.pdf", "xray_found", "true"),
-    ("x-ray/rectangles_no.pdf", "xray_found", "false"),
-]
-
-# Known divergences from the upstream reference, pinned to the ENGINE'S
-# deterministic output so regressions are still caught, but explicitly NOT
-# reference goldens: (fixture, check, engine_value, reference_value).
-# word-perfect.wpd: cleaned-HTML length is 11,928 here vs the reference's
-# 14,259 (83.7%); the residual is libwpd serialization framing — see
-# tests/test_reference_fixtures.py for the char-by-char account.
-_ENGINE_DIVERGENCES: list[tuple[str, str, str, str]] = [
-    ("word-perfect.wpd", "content_len", "11928", "14259"),
-]
-
-
-def q_reference_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star gate: kernels over doctor's REAL fixture files, checked
-    against the literal goldens of the reference's own test suite.  The
-    oracle is those literals, so any regression on real-world documents
-    hash-mismatches here.  Checks listed in ``_ENGINE_DIVERGENCES`` are
-    pinned to the engine's own deterministic value and carry
-    ``source='engine-divergence(...)'`` so a CORRECTNESS pass on them
-    reads as regression-pinning, never as reference parity."""
-    from doctor_spark.kernels.docx import extract_from_docx_bytes
-    from doctor_spark.kernels.extract import (
-        extract_document,
-        extract_recap_pdf_bytes,
-    )
-    from doctor_spark.kernels.msdoc import extract_from_doc_bytes
-    from doctor_spark.kernels.pdf import get_document_number, get_xray
-    from doctor_spark.kernels.wpd import extract_from_wpd_bytes
-
-    # read the fixture bytes ONCE on the driver and ship them as payload
-    # columns — executors on a real cluster have no /root/reference
-    names = sorted(
-        {f for f, _c, _v in _REF_EXPECTED}
-        | {f for f, _c, _v, _r in _ENGINE_DIVERGENCES}
-    )
-    rows = []
-    for n in names:
-        with open(f"{_REF_ASSETS}/{n}", "rb") as f:
-            rows.append((n, f.read()))
-    paths = spark.createDataFrame(
-        rows, "fixture string, payload binary"
-    ).repartition(8)
-
-    # (fixture, check) → source tag; closed over by value so executors
-    # never need the module global
-    div_note = {
-        (f, c): f"engine-divergence(reference={r})"
-        for f, c, _v, r in _ENGINE_DIVERGENCES
-    }
-
-    def checks(name, data):
-        rows = []
-        if name.startswith("recap_documents/"):
-            rows.append((name, "doc_number", get_document_number(data)))
-        elif name.startswith("x-ray/"):
-            xr = get_xray(data)
-            found = (not xr["error"]) and len(xr["results"]) > 0
-            rows.append((name, "xray_found", "true" if found else "false"))
-        elif name.startswith("recap_extract/"):
-            content, _ocr, _pages = extract_recap_pdf_bytes(
-                data, strip_margin=True
-            )
-            first = content.splitlines()[0].strip() if content else ""
-            rows.append((name, "recap_first_line_strip_margin", first))
-        elif name == "vector-pdf.pdf":
-            res = extract_document(f"https://x.test/{name}", data)
-            rows.append((name, "first100",
-                         res.content[:100].replace("\n", "").strip()))
-            rows.append((name, "page_count", str(res.page_count)))
-            rows.append((name, "extracted_by_ocr",
-                         "true" if res.extracted_by_ocr else "false"))
-        elif name in ("image-pdf.pdf", "broken-mime.pdf", "missouri.pdf"):
-            res = extract_document(f"https://x.test/blob.bin", data)
-            rows.append((name, "extension", res.extension))
-            if name == "image-pdf.pdf":
-                rows.append((name, "page_count", str(res.page_count)))
-                rows.append((name, "no_text_layer",
-                             "true" if res.content.strip("\x0c") == ""
-                             else "false"))
-        elif name == "word-docx.docx":
-            content, _e, _rc = extract_from_docx_bytes(data)
-            rows.append((name, "first200",
-                         content[:200].replace("\n", "").strip()))
-        elif name == "word-doc.doc":
-            content, _e, _rc = extract_from_doc_bytes(data)
-            rows.append((name, "first100",
-                         content[:100].replace("\n", "").strip()))
-            res = extract_document(f"https://x.test/{name}", data)
-            rows.append((name, "page_count", str(res.page_count)))
-        elif name == "word-perfect.wpd":
-            content, _e, _rc = extract_from_wpd_bytes(data)
-            rows.append((name, "contains_attorney_for_appellant",
-                         "true" if "ATTORNEY FOR APPELLANT" in content
-                         else "false"))
-            rows.append((name, "content_len", str(len(content))))
-        return [(f, c, v, div_note.get((f, c), "reference")) for f, c, v in rows]
-
-    return row_map(
-        paths, checks, "fixture string, check string, value string, source string"
-    )
-
-
-def q_doc_metrics_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _docs(spark, sf_dir)
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.sum(F.length("text")).cast("bigint").alias("total_text_len"),
-        )
-    )
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.dedup import exact_duplicate_groups
-
-    g = exact_duplicate_groups(_docs(spark, sf_dir))
-    return g.select(
-        "text_hash",
-        F.col("n_dups").cast("bigint").alias("n_dups"),
-        F.col("keep_id").cast("bigint").alias("keep_id"),
-    )
-
-
-def q_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.dedup import dedup_stats
-
-    s = dedup_stats(_docs(spark, sf_dir))
-    return s.select(
-        F.col("n_total").cast("bigint").alias("n_total"),
-        F.col("n_unique").cast("bigint").alias("n_unique"),
-    )
-
-
-def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.dedup import minhash_candidate_pairs
-
-    p = minhash_candidate_pairs(_docs_spread(spark, sf_dir))
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-    )
-
-
-# the Lee-et-al./Dolma-style production operating point: 128 permutations,
-# 16 bands x 8 rows — the width at which the band fan-out (16 rows/doc)
-# and the per-doc kernel cost actually bite at scale.  Signature scheme at
-# this width is the universal-hash family (one md5 per shingle + affine
-# permutations mod 2^32); md5-per-(seed,shingle) costs 128x more digests.
-MINHASH_PROD_PERMS = 128
-MINHASH_PROD_ROWS_PER_BAND = 8
-
-
-def q_dedup_minhash_pairs_w128(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash LSH at production width (128 perms / 16 bands), same ONE-
-    exchange plan as the demo width — proves the operator at the point a
-    real 100 TB dedup would run it, not just the 4-seed demo."""
-    from doctor_spark.operators.dedup import minhash_candidate_pairs
-
-    p = minhash_candidate_pairs(
-        _docs_spread(spark, sf_dir),
-        affine_perms=MINHASH_PROD_PERMS,
-        rows_per_band=MINHASH_PROD_ROWS_PER_BAND,
-    )
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-    )
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.dedup import with_simhash
-
-    return with_simhash(_docs_spread(spark, sf_dir)).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("simhash").cast("bigint").alias("simhash"),
-    )
-
-
-def q_dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-radius near-dup pairs (band-bucketed, complete for
-    hamming ≤ 3 with 4 bands)."""
-    from doctor_spark.operators.dedup import simhash_near_pairs
-
-    p = simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3, n_bands=4)
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.col("hamming").cast("bigint").alias("hamming"),
-    )
-
-
-def q_dedup_simhash_near_w48(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-pairs at PRODUCTION width: 48-bit signature, 4 bands
-    of 12 bits (4096 band values).  The 16-bit demo above has 16 values
-    per band — at 50k docs every bucket holds ~3k docs and the candidate
-    join goes quadratic (~3×10^8 candidates; found by the round-5 sf1
-    sweep, where the demo query DNF'd).  Band-key entropy, not the band
-    COUNT, is what keeps LSH linear — same lesson as MinHash w128."""
-    from doctor_spark.operators.dedup import simhash_near_pairs
-
-    p = simhash_near_pairs(
-        _docs_spread(spark, sf_dir), bits=48, max_hamming=3, n_bands=4
-    )
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.col("hamming").cast("bigint").alias("hamming"),
-    )
-
-
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters: connected components over the MinHash candidate
-    pairs, every member labeled with the cluster's smallest id."""
-    from doctor_spark.operators.dedup import (
-        duplicate_components,
-        minhash_candidate_pairs,
-    )
-
-    comp = duplicate_components(minhash_candidate_pairs(_docs(spark, sf_dir)))
-    return comp.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("component_id").cast("bigint").alias("component_id"),
-    )
-
-
-def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full C4/Dolma-style cleaning recipe as ONE query: Gopher
-    quality gate AND repetition gate AND language filter (en) in a single
-    map stage (three Arrow kernels, zero shuffles), exact-dup removal
-    (keep min doc_id per fingerprint — one keyed window exchange), and
-    PII scrubbing on the survivors.  Output: kept doc_id + md5 of the
-    scrubbed text.  This is the shape a training-data pipeline actually
-    runs — filters fused per-row before any shuffle, dedup on the
-    already-filtered (smaller) set, scrub last so dropped docs never pay
-    for it."""
-    from pyspark.sql import Window
-
-    from doctor_spark.functions.text import (
-        fingerprint,
-        gopher_metrics_udf,
-        lang_guess_udf,
-        repetition_metrics_udf,
-        scrub_pii,
-    )
-
-    g = gopher_metrics_udf()
-    rep = repetition_metrics_udf()
-    lg = lang_guess_udf()
-    d = _docs(spark, sf_dir)
-    scored = d.select(
-        "doc_id", "text",
-        g(F.col("text")).alias("g"),
-        rep(F.col("text")).alias("r"),
-        lg(F.col("text")).alias("lg"),
-        fingerprint(F.col("text")).alias("fp"),
-    )
-    kept = scored.where(
-        F.col("g.passes") & F.col("r.passes") & (F.col("lg") == "en")
-    )
-    w = Window.partitionBy("fp")
-    return (
-        kept.withColumn("keep_id", F.min("doc_id").over(w))
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.md5(scrub_pii(F.col("text")).cast("binary")).alias("clean_md5"),
-        )
-    )
-
-
-def q_dedup_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused fuzzy-dedup end-to-end: pairs → components → keeper → kept
-    corpus, one job (verdict r3 item 5)."""
-    from doctor_spark.operators.dedup import dedup_filtered_corpus
-
-    kept = dedup_filtered_corpus(_docs_spread(spark, sf_dir))
-    return kept.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.dedup import ngram_jaccard_pairs
-
-    p = ngram_jaccard_pairs(
-        _docs_spread(spark, sf_dir), threshold=0.3, max_shingle_df=100
-    )
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.col("jaccard").cast("double").alias("jaccard"),
-    )
-
-
-def q_dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr dedup (Lee et al. 2021) via the duplicated-k-window
-    identity: every token inside a corpus-duplicated span of ≥8 tokens is
-    erased, sparing the lexicographically-first occurrence of each
-    window.  One exchange on the window hash (count + row_number share
-    it), one keyed agg of the marked positions, one join back — the
-    distributed-exact replacement for the paper's suffix array."""
-    from doctor_spark.operators.dedup import exact_substring_dedup
-
-    out = exact_substring_dedup(_docs(spark, sf_dir), k=8)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_tokens",
-        "n_windows",
-        "n_dup_windows",
-        "n_dropped",
-        F.md5(F.col("text").cast("binary")).alias("text_hash"),
-    )
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing local fingerprints (k=8 char-grams, window w=4,
-    rightmost-min selection) — matching is a keyed join on fp."""
-    from doctor_spark.operators.dedup import winnow_fingerprints
-
-    p = winnow_fingerprints(_docs(spark, sf_dir), k=8, w=4)
-    return p.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("pos").cast("bigint").alias("pos"),
-        F.col("fp"),
-    )
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.functions.text import (
-        mean_word_len,
-        punct_ratio,
-        quality_score,
-        stopword_ratio,
-        token_count,
-    )
-
-    t = F.col("text")
-    return _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        token_count(t).cast("bigint").alias("n_tokens"),
-        punct_ratio(t).cast("double").alias("punct_ratio"),
-        stopword_ratio(t).cast("double").alias("stopword_ratio"),
-        mean_word_len(t).cast("double").alias("mean_word_len"),
-        quality_score(t).cast("double").alias("quality_score"),
-    )
-
-
-def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher quality-filter rules (Rae et al. 2021 §A1.1) — the standard
-    LLM-corpus web-text gate.  Computed by ONE Arrow struct kernel per row
-    (doctor_spark/functions/text.py:gopher_metrics_udf); the pure Column
-    expressions remain as the semantic contract and are differential-tested
-    bit-identical (tests/test_text_functions.py).  The interpreted
-    higher-order forms re-tokenized each row ~8× (round-2 perf-weak item);
-    the hoist makes the plan a single ArrowEvalPython node."""
-    from doctor_spark.functions.text import gopher_metrics_udf
-
-    k = gopher_metrics_udf()
-    return (
-        _docs(spark, sf_dir)
-        .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                k(F.col("text")).alias("g"))
-        .select("doc_id", "g.*")
-    )
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition gate (Gopher's other axis): per document, the occurrence
-    fraction of the most frequent token bigram.  Keyed shuffles only —
-    explode → hash-agg on (doc, bigram) → per-doc max."""
-    from doctor_spark.functions.text import tokens
-
-    t = F.col("text")
-    toks = tokens(t)
-    bigrams = F.when(F.size(toks) < 2, F.array()).otherwise(
-        F.zip_with(
-            F.slice(toks, 1, F.size(toks) - 1),
-            F.slice(toks, 2, F.size(toks) - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    )
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id"), F.explode(bigrams).alias("bg")
-    )
-    counts = d.groupBy("doc_id", "bg").agg(F.count("*").alias("n"))
-    per_doc = counts.groupBy("doc_id").agg(
-        F.sum("n").alias("total"), F.max("n").alias("top")
-    )
-    return per_doc.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("total").cast("bigint").alias("n_bigrams"),
-        F.round(F.col("top") / F.col("total"), 4)
-        .cast("double")
-        .alias("top_bigram_frac"),
-    )
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style cross-document line dedup: strip lines occurring more
-    than ``max_line_df`` times corpus-wide (nav bars / cookie banners /
-    copyright footers).  The documents table is single-line synthetic
-    text, so the query first derives a multi-line web-page shape
-    deterministically (sentence breaks + boilerplate header/footer) —
-    mirrored exactly in the oracle — then runs the operator.
-
-    Plan: posexplode → one exchange on the normalized line (frequency
-    window + keep-filter share it) → one exchange on doc_id to
-    re-assemble.  No driver-side state, no broadcast of a hot-line set."""
-    from doctor_spark.operators.dedup import strip_common_lines
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    body = F.regexp_replace(F.col("text"), r"\. ", ".\n")
-    aug = d.select(
-        F.col("doc_id"),
-        F.concat_ws(
-            "\n",
-            F.lit("Subscribe to our newsletter!"),
-            body,
-            F.when(F.col("doc_id") % 2 == 0, F.lit("All Rights Reserved."))
-            .otherwise(F.lit("Privacy Policy | Terms of Use")),
-        ).alias("text"),
-    )
-    out = strip_common_lines(aug, max_line_df=30)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("n_kept").cast("bigint").alias("n_kept"),
-        F.col("n_dropped").cast("bigint").alias("n_dropped"),
-        F.md5(F.col("text").cast("binary")).alias("text_hash"),
-    )
-
-
-def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dolma-style paragraph dedup: corpus-wide, only the first occurrence
-    of each exact paragraph survives.  The single-line synthetic docs are
-    given a web-page paragraph shape deterministically (sentence breaks →
-    blank-line paragraphs + a shared share-bar paragraph) — mirrored
-    exactly in the oracle — then the operator runs.  Plan: ONE exchange
-    on the paragraph fingerprint (row_number window), ONE exchange back
-    on doc_id."""
-    from doctor_spark.operators.dedup import dedup_paragraphs
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    body = F.regexp_replace(F.col("text"), r"\. ", ".\n\n")
-    aug = d.select(
-        F.col("doc_id"),
-        F.concat_ws(
-            "\n\n", F.lit("Share this article on social media."), body
-        ).alias("text"),
-    )
-    out = dedup_paragraphs(aug)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("n_paras").cast("bigint").alias("n_paras"),
-        F.col("n_kept").cast("bigint").alias("n_kept"),
-        F.col("n_dropped").cast("bigint").alias("n_dropped"),
-        F.md5(F.col("text").cast("binary")).alias("text_hash"),
-    )
-
-
-def q_para_dedup_intra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document paragraph dedup: the zero-shuffle first rung of the
-    dedup ladder — repeated in-page boilerplate (here a share-bar stamped
-    at the top AND bottom of every synthesized page, mirrored exactly in
-    the oracle) is dropped per-document before any corpus-wide stage
-    pays an exchange for it.  Plan: pure map (split → prefix-exists
-    filter → array_join), no explode, no window, no shuffle."""
-    from doctor_spark.operators.dedup import dedup_paragraphs_within
-
-    d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
-    bar = "Connect with us on social media."
-    body = F.regexp_replace(F.col("text"), r"\. ", ".\n\n")
-    aug = d.select(
-        "doc_id",
-        F.concat_ws("\n\n", F.lit(bar), body, F.lit(bar)).alias("text"),
-    )
-    out = dedup_paragraphs_within(aug)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("n_paras").cast("bigint").alias("n_paras"),
-        F.col("n_kept").cast("bigint").alias("n_kept"),
-        F.col("n_dropped").cast("bigint").alias("n_dropped"),
-        F.md5(F.col("text").cast("binary")).alias("text_hash"),
-    )
-
-
-# deterministic messy-URL synthesis for the URL-stage queries: one SQL
-# snippet, parsed by Spark via F.expr AND spliced verbatim into the DuckDB
-# oracle — the two engines can never drift on the input side.  Exercises
-# every canonicalization rule: mixed-case scheme/host, www prefix, default
-# and non-default ports (incl. :443 under plain http, which must be KEPT),
-# tracking params in both positions, trailing slashes, fragments.
-_URL_SYNTH_SQL = """
-'HtTp' || CASE WHEN doc_id % 4 = 0 THEN 'S' ELSE '' END || '://' ||
-CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
-'Site' || CAST(doc_id % 23 AS VARCHAR(8)) ||
-CASE WHEN doc_id % 5 = 0 THEN '.co.uk' WHEN doc_id % 5 = 1 THEN '.org'
-     WHEN doc_id % 5 = 2 THEN '.io' WHEN doc_id % 5 = 3 THEN '.com.au'
-     ELSE '.com' END ||
-CASE WHEN doc_id % 6 = 0 THEN ':80' WHEN doc_id % 6 = 1 THEN ':8080'
-     WHEN doc_id % 6 = 2 THEN ':443' ELSE '' END ||
-'/Articles/' || CAST(doc_id AS VARCHAR(20)) ||
-CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END ||
-CASE WHEN doc_id % 3 = 0
-     THEN '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR(20))
-     WHEN doc_id % 3 = 1
-     THEN '?id=' || CAST(doc_id AS VARCHAR(20)) || '&utm_campaign=x'
-     ELSE '' END ||
-CASE WHEN doc_id % 2 = 1 THEN '#section-2' ELSE '' END
-"""
-
-_URL_BLOCKLIST = ("site0.co.uk", "site7.io", "site16.org")
-_BL_VALUES = ", ".join(f"('{d}')" for d in _URL_BLOCKLIST)
-
-
-def _canon_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.functions.urls import (
-        canonicalize_url,
-        registrable_domain,
-        url_host,
-    )
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "n_chars", F.expr(_URL_SYNTH_SQL).alias("url")
-    )
-    host = url_host(F.col("url"))
-    return d.select(
-        "doc_id",
-        "n_chars",
-        canonicalize_url(F.col("url")).alias("canon_url"),
-        host.alias("host"),
-        registrable_domain(host).alias("domain"),
-    )
-
-
-def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL stage of a web-corpus pipeline: canonicalize (lowercase
-    scheme/host, drop fragment/default port/tracking params, sort query,
-    strip trailing slash), registrable domain under a two-label-suffix
-    table, and a domain-blocklist flag via a broadcast left join (the
-    100 TB form — the blocklist is a dimension table, never a driver-side
-    set).  Pure Column expressions: zero Python, zero shuffles besides
-    the broadcast."""
-    bl = spark.createDataFrame(
-        [(d,) for d in _URL_BLOCKLIST], "domain string"
-    ).withColumn("hit", F.lit(True))
-    out = _canon_urls(spark, sf_dir).join(F.broadcast(bl), "domain", "left")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "canon_url",
-        "host",
-        "domain",
-        F.coalesce(F.col("hit"), F.lit(False)).alias("blocked"),
-    )
-
-
-def q_domain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain corpus stats + deterministic top-10 (docs desc, chars
-    desc, domain asc): the quota/reporting aggregate every crawl pipeline
-    runs.  ONE keyed exchange on the domain (partial agg map-side); the
-    top-k is a single-partition window over the tiny aggregate."""
-    from pyspark.sql import Window
-
-    agg = (
-        _canon_urls(spark, sf_dir)
-        .groupBy("domain")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-    )
-    w = Window.orderBy(
-        F.col("n_docs").desc(), F.col("sum_chars").desc(), F.col("domain")
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 10)
-        .select(
-            F.col("rank").cast("bigint").alias("rank"),
-            "domain",
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.col("sum_chars").cast("bigint").alias("sum_chars"),
-        )
-    )
-
-
-def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-style hashed-linear quality scoring (the CCNet/GPT-3
-    filter stage): Σ W[md5(token) mod 1024] as a JVM aggregate over the
-    token array — zero shuffles, zero Python; the weight table is a
-    deterministic md5-derived stand-in (docstring in functions/text.py
-    documents the real-model swap, which keeps the identical plan)."""
-    from doctor_spark.functions.text import quality_classifier
-
-    return (
-        _docs_spread(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            quality_classifier(F.col("text")).alias("q"),
-        )
-        .select("doc_id", "q.*")
-    )
-
-
-def q_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality gate (Wenzek et al. 2019): train a
-    stupid-backoff trigram LM on a deterministic hash-band half of the
-    corpus (the "Wikipedia" stand-in), score EVERY document's average
-    log10-probability per token, and bucket head/middle/tail by
-    per-language terciles — the filter stage CCNet/RedPajama/FineWeb
-    pipelines run between dedup and mixing.
-
-    Engine-exactness: all log-probs are quantized once to int64
-    micro-log10 (floor(log10·1e6 + 0.5)) so every sum is associative and
-    the DuckDB oracle replays the arithmetic bit-for-bit; log10 itself
-    is libm on both sides (numpy kernel / DuckDB), never Java's.
-
-    Plan: training is ONE (ord, gram-hash) count exchange + per-order
-    denominator equi-joins; scoring is a map-only candidate expansion
-    with THREE BROADCAST joins (the pruned model is the thing KenLM
-    ships to every node) + one groupBy(doc) exchange + one per-lang
-    window exchange.  ``broadcast_model=False`` documented for models
-    beyond executor memory."""
-    from doctor_spark.operators.lm import (
-        perplexity_buckets,
-        score_perplexity,
-        train_ngram_lm,
-    )
-    from doctor_spark.operators.sampling import hash_sample
-
-    d = _docs_spread(spark, sf_dir)
-    ref = hash_sample(d, key_col="doc_id", rate=0.5, salt="lm")
-    model, n_tokens = train_ngram_lm(ref, order=3, min_count=2)
-    scores = score_perplexity(
-        d, model, n_tokens, order=3, alpha=0.4, keep_cols=("lang",)
-    )
-    return perplexity_buckets(scores).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "lang",
-        F.col("n_tok").cast("bigint").alias("n_tok"),
-        "sum_lp_micro",
-        "score",
-        "bucket",
-    )
-
-
-def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data selection (Xie et al. 2023): fit hashed uni+bigram
-    bag-of-ngrams models for a target band (md5 salt 'dsir-t', rate
-    0.25 — the "Wikipedia" stand-in) and the raw corpus in ONE keyed
-    exchange, score every doc's importance log-weight as a zero-shuffle
-    JVM aggregate over the embedded 1024-int llr table, Gumbel-top-k
-    (k=100) resample with md5-derived deterministic noise.  All
-    log-probs int64 micro-log10 (libm both engines); selection is
-    TakeOrdered, never a global sort."""
-    from doctor_spark.operators.dsir import (
-        dsir_llr_table,
-        dsir_resample,
-        dsir_scores,
-    )
-    from doctor_spark.operators.sampling import sample_bucket
-
-    d = _docs_spread(spark, sf_dir).where(
-        F.col("text").isNotNull()
-        & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    is_t = sample_bucket(F.col("doc_id"), "dsir-t") < F.lit("4000")
-    llr = dsir_llr_table(d, is_t)
-    scored = dsir_scores(d, llr)
-    return dsir_resample(scored, k=100, salt="dsir").select(
-        "rank",
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_tok",
-        "lw_micro",
-        "key_micro",
-    )
-
-
-def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based domain mixing weights (GPT-3/Llama recipe
-    stage): w_d ∝ p_d^0.5 over the source column, plus the per-doc
-    expected-copy rate that rebuilds a same-sized corpus.  pow() is
-    quantized straight to int64 (libm on both engines) so the
-    normalizer and rates are exact integer arithmetic; ONE
-    groupBy(domain) exchange with map-side partials."""
-    from doctor_spark.operators.sampling import mixture_weights
-
-    return mixture_weights(
-        _docs(spark, sf_dir), domain_col="source", alpha=0.5
-    ).select(
-        "domain",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        "p",
-        "weight",
-        "rate_micro",
-    )
-
-
-def q_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized temperature mixture: every doc appears
-    floor(rate) times plus one more iff its md5 bucket clears the
-    fractional remainder — deterministic multinomial-expectation
-    resampling on any engine/cluster/retry.  Map-only over a broadcast
-    domain→rate table + explode(sequence); the only exchange is the
-    weights' domain count."""
-    from doctor_spark.operators.sampling import (
-        mixture_weights,
-        temperature_resample,
-    )
-
-    d = _docs(spark, sf_dir)
-    w = mixture_weights(d, domain_col="source", alpha=0.5)
-    return temperature_resample(
-        d, w, domain_col="source", key_col="doc_id", salt="mix"
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("source").alias("domain"),
-        F.col("copy_no").cast("bigint").alias("copy_no"),
-    )
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain TF-IDF keywords (corpus-audit stage): top-10 terms per
-    source by tf·idf with idf quantized to int64 micro-log10 (libm on
-    both engines) and the ranking key a single IEEE multiply of exact
-    int64s — bit-identical ordering on any engine.  Plan: two keyed
-    aggregation exchanges (tf, doc-level df), a vocab-keyed equi-join
-    (never broadcast — crawl vocab is huge), min_df tail pruning before
-    the per-domain top-k window."""
-    from doctor_spark.operators.tfidf import tfidf_top_terms
-
-    return tfidf_top_terms(
-        _docs(spark, sf_dir), k=10, min_df=2
-    ).select(
-        "domain",
-        "rank",
-        "term",
-        F.col("tf").cast("bigint").alias("tf"),
-        F.col("df_docs").cast("bigint").alias("df_docs"),
-        "score",
-    )
-
-
-def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 5-gram novelty vs a hash-band reference half — the
-    memorization/overlap audit (Lee/Carlini lineage): |doc shingles not
-    in ref| / |doc shingles|.  ONE distinct exchange on the ref side,
-    ONE keyed 60-bit-hash equi-join (never broadcast by default — a
-    crawl-scale reference can't be), ONE groupBy(doc) fold-back."""
-    from doctor_spark.operators.dedup import ngram_novelty
-    from doctor_spark.operators.sampling import hash_sample
-
-    d = _docs(spark, sf_dir)
-    ref = hash_sample(d, key_col="doc_id", rate=0.5, salt="nov")
-    return ngram_novelty(d, ref, n=5).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_sh",
-        "n_seen",
-        "novel_frac",
-    )
-
-
-def q_token_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-language token-count deciles (corpus audit): type-1
-    quantiles at rank ceil(q·n/10) — pure integer rank arithmetic, no
-    estimator, engine-exact.  One window per language + one tiny rank-
-    target join; the pre-aggregate-to-(value,count) variant for a
-    single global group is documented in the operator."""
-    from doctor_spark.functions.text import token_count
-    from doctor_spark.operators.stats import grouped_deciles
-
-    d = (
-        _docs(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select("lang", token_count(F.col("text")).alias("tok"))
-    )
-    return grouped_deciles(d, "tok", "lang").select(
-        "lang", "q", "n", F.col("value").cast("bigint").alias("value")
-    )
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mix quota sampling: 5 documents per (lang, source)
-    stratum, ranked by the engine-portable (md5-bucket, key) order — the
-    deterministic complement to rate-based corpus_sample.  ONE exchange
-    on the strata columns; the hot-stratum prefilter path is documented
-    and tested in the operator."""
-    from doctor_spark.operators.sampling import stratified_sample
-
-    out = stratified_sample(
-        _docs(spark, sf_dir), ["lang", "source"], quota=5
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "lang",
-        "source",
-        F.col("sample_rank").cast("bigint").alias("sample_rank"),
-    )
-
-
-def q_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass corpus health rollup (the per-snapshot dashboard row):
-    doc/NULL counts, token mass, exact distinct fingerprints (dup rate),
-    language spread.  ONE aggregate over ONE scan — partial map-side
-    aggregation makes this a near-free pass even at 10^12 rows; the only
-    exchange carries a handful of partial states."""
-    from doctor_spark.functions.text import fingerprint, token_count
-
-    d = _docs(spark, sf_dir)
-    tok = F.coalesce(token_count(F.col("text")), F.lit(0))
-    return d.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(F.col("text").isNull().cast("long")).alias("n_null_text"),
-        F.sum(tok).cast("bigint").alias("total_tokens"),
-        F.countDistinct(fingerprint(F.col("text"))).alias("n_distinct_fp"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.countDistinct("source").alias("n_sources"),
-        F.round(F.avg(tok), 4).alias("avg_tokens"),
-        F.max(F.length("text")).cast("bigint").alias("max_chars"),
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style sequence packing lineage: each document's placement in
-    the per-source concatenated token stream (offset, first/last
-    sequence id at L=256 tokens).  ONE keyed exchange on the stream
-    column + a window prefix sum."""
-    from doctor_spark.operators.packing import pack_sequences
-
-    out = pack_sequences(_docs(spark, sf_dir), seq_len=256)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("source"),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("start_offset").cast("bigint").alias("start_offset"),
-        F.col("seq_first").cast("bigint").alias("seq_first"),
-        F.col("seq_last").cast("bigint").alias("seq_last"),
-        F.col("n_seqs").cast("bigint").alias("n_seqs"),
-    )
-
-
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX-style incremental crawl diff: snapshot B vs snapshot A derived
-    deterministically from the documents table (A drops doc_id % 7 == 0,
-    B drops doc_id % 5 == 0 and edits the text of doc_id % 3 == 0), full-
-    outer join on the key with fingerprint-only comparison — no text
-    crosses the wire."""
-    from doctor_spark.operators.incremental import snapshot_diff
-
-    d = _docs(spark, sf_dir)
-    a = d.where(F.col("doc_id") % 7 != 0).select("doc_id", "text")
-    b = (
-        d.where(F.col("doc_id") % 5 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(F.coalesce(F.col("text"), F.lit("")), F.lit(" v2")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-    )
-    out = snapshot_diff(a, b, key_col="doc_id")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "status",
-        "old_fp",
-        "new_fp",
-    )
-
-
-def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dolma/BFF-style Bloom-filter cross-corpus dedup, in the shape it
-    is used for: snapshot B of a crawl probed against the Bloom filter of
-    the previous snapshot A, where the snapshots overlap (A = doc_id <
-    250, B = doc_id >= 200 — the 50-document overlap guarantees true
-    hits, everything else exercises the negative path + Bloom false
-    positives).  m=4096 bits / k=4 hashes, in the exactly-mirrorable
-    JOIN form (build = bounded distinct-set-bits aggregate, probe = one
-    keyed equi-join + all-k having).  The production dense-bitmap
-    broadcast form is pinned identical by tests/test_plans.py."""
-    from doctor_spark.operators.dedup import bloom_maybe_in, bloom_set_bits
-
-    d = _docs(spark, sf_dir)
-    a = d.where(F.col("doc_id") < 250)
-    b = d.where(F.col("doc_id") >= 200)
-    bits = bloom_set_bits(a, m_bits=4096, k_hashes=4)
-    out = bloom_maybe_in(b, bits, m_bits=4096, k_hashes=4)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "maybe_in_a"
-    )
-
-
-def q_repetition_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full Gopher repetition family (Rae et al. 2021 §A1.1): top
-    {2,3,4}-gram and duplicate {5..10}-gram character fractions + the
-    composite gate.  One Arrow struct kernel per row — n-gram counting is
-    document-local, so the plan has zero shuffles (scan → ArrowEvalPython
-    → project), embarrassingly parallel at any corpus size."""
-    from doctor_spark.functions.text import repetition_metrics_udf
-
-    k = repetition_metrics_udf()
-    return (
-        _docs_spread(spark, sf_dir)
-        .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                k(F.col("text")).alias("r"))
-        .select("doc_id", "r.*")
-    )
-
-
-def q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash sampling (training-mix building block): a ~20%
-    sample plus a disjoint validation band from the same hashing, keyed
-    on md5 hex-prefix order — reproducible on any engine/cluster/retry,
-    zero shuffles (pure codegen'd filter over the scan)."""
-    from doctor_spark.operators.sampling import hash_sample, sample_bucket
-
-    d = _docs(spark, sf_dir)
-    train = hash_sample(d, key_col="doc_id", rate=0.2, salt="mix1").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.lit("train").alias("split"),
-        sample_bucket(F.col("doc_id"), "mix1").alias("bucket"),
-    )
-    val = hash_sample(
-        d, key_col="doc_id", salt="mix1", band=(0.2, 0.25)
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.lit("val").alias("split"),
-        sample_bucket(F.col("doc_id"), "mix1").alias("bucket"),
-    )
-    return train.unionByName(val)
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (GPT-3-appendix / Dolma method): flag
-    training documents sharing any 8-token n-gram with an evaluation set.
-    The synthetic corpus has no real contamination, so the query derives
-    one deterministically — every doc_id % 50 == 0 document is "the
-    benchmark", and docs with doc_id % 10 == 3 leak the first 80 chars of
-    their block's benchmark doc into their text — mirrored exactly in the
-    oracle.  One keyed equi-join on md5(n-gram); no cross product."""
-    from doctor_spark.operators.dedup import decontaminate
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    bench = d.where(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    leak = bench.select(
-        F.col("bench_id").alias("leak_src"),
-        F.substring("text", 1, 80).alias("snippet"),
-    )
-    train = (
-        d.where(F.col("doc_id") % 50 != 0)
-        .withColumn("leak_src", F.col("doc_id") - (F.col("doc_id") % 50))
-        .join(leak, "leak_src", "left")
-        .select(
-            "doc_id",
-            F.when(
-                (F.col("doc_id") % 10 == 3) & F.col("snippet").isNotNull(),
-                F.concat(F.col("text"), F.lit(" "), F.col("snippet")),
-            ).otherwise(F.col("text")).alias("text"),
-        )
-    )
-    out = decontaminate(train, bench, n=8)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("n_hits").cast("bigint").alias("n_hits"),
-        F.col("n_bench_docs").cast("bigint").alias("n_bench_docs"),
-    )
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction (emails/phones/SSNs/IPv4 → typed placeholders) — the
-    standard pre-training scrub, as whole-stage-codegen'd Column exprs
-    (zero shuffles, zero Python).  The synthetic documents carry no PII,
-    so the query plants deterministic PII derived from doc_id (mirrored
-    exactly in the oracle), then scrubs it."""
-    from doctor_spark.functions.text import pii_counts, scrub_pii
-
-    d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
-    planted = F.concat(
-        F.col("text"),
-        F.lit(" Contact user"), F.col("doc_id").cast("string"),
-        F.lit("@example.com or 555-010-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.lit(" ssn 123-45-"),
-                     F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit(" from 10.0."),
-                     (F.col("doc_id") % 256).cast("string"), F.lit(".7")),
-        ).otherwise(F.lit("")),
-    )
-    aug = d.select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                   planted.alias("text"))
-    counts = pii_counts(F.col("text"))
-    return aug.select(
-        "doc_id",
-        counts["email"].cast("bigint").alias("n_emails"),
-        counts["phone"].cast("bigint").alias("n_phones"),
-        counts["ssn"].cast("bigint").alias("n_ssns"),
-        counts["ip"].cast("bigint").alias("n_ips"),
-        F.md5(scrub_pii(F.col("text")).cast("binary")).alias("scrubbed_hash"),
-    )
-
-
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace vs BPE-ish token counts per document (token-budget
-    accounting for training pipelines)."""
-    from doctor_spark.functions.text import bpe_token_count, token_count
-
-    t = F.col("text")
-    return _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        token_count(t).cast("bigint").alias("ws_tokens"),
-        bpe_token_count(t).cast("bigint").alias("bpe_tokens"),
-    )
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow kernel, bit-identical to the lang_guess Column spec
-    # (differential-tested in tests/test_text_functions.py) — the Column
-    # form evaluates 18 interpreted higher-order filters per row
-    from doctor_spark.functions.text import lang_guess_udf
-
-    guess = lang_guess_udf()
-    return (
-        _docs(spark, sf_dir)
-        .select(F.col("lang"), guess(F.col("text")).alias("lang_guess"))
-        .groupBy("lang", "lang_guess")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.functions.text import fingerprint
-
-    return _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        fingerprint(F.col("text")).alias("fp"),
-    )
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doctor_spark.operators.similarity import brute_force_topk
-
-    t = brute_force_topk(_emb(spark, sf_dir), query_ids=list(range(10)), k=3)
-    return t.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.col("score").cast("double").alias("score"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN (scale path): the md5-seeded hyperplanes are
-    deterministic, so the SQL oracle enumerates the exact same buckets;
-    recall vs brute force is additionally pytest-gated."""
-    from doctor_spark.operators.similarity import lsh_ann_topk
-
-    t = lsh_ann_topk(
-        _emb(spark, sf_dir), query_ids=list(range(10)), dim=64, k=3,
-        n_planes=4, n_tables=3,
-    )
-    return t.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.col("score").cast("double").alias("score"),
-    )
-
-
-def q_lsh_ann_corpus_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-vs-corpus ANN: top-2 neighbors for EVERY vector via the
-    bucket self-join (no broadcast of a query set anywhere — the scale
-    form when 'queries = the whole corpus').  ONE bucket exchange feeds
-    both join sides (ReusedExchange); exact-cosine rescore in the Arrow
-    pair kernel."""
-    from doctor_spark.operators.similarity import lsh_ann_corpus_topk
-
-    t = lsh_ann_corpus_topk(
-        _emb(spark, sf_dir), dim=64, k=2, n_planes=4, n_tables=3
-    )
-    return t.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.col("score").cast("double").alias("score"),
-    )
-
-
-def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN (scale path #2): centroid choice (smallest ids) and
-    assignment (rounded-argmax) are deterministic and mirrored exactly in
-    the SQL oracle; recall vs brute force is additionally pytest-gated."""
-    from doctor_spark.operators.similarity import ivf_ann_topk
-
-    t = ivf_ann_topk(
-        _emb(spark, sf_dir), query_ids=list(range(10)), k=3,
-        n_centroids=16, nprobe=6,
-    )
-    return t.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.col("score").cast("double").alias("score"),
-    )
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup family): LSH-bucketed
-    candidates + exact cosine rescore at 0.35 — the scale path (same-bucket
-    keyed joins, never an all-pairs crossJoin).  The md5-seeded hyperplanes
-    are mirrored exactly in the SQL oracle."""
-    from doctor_spark.operators.similarity import embedding_neardup_pairs
-
-    p = embedding_neardup_pairs(
-        _emb(spark, sf_dir), threshold=0.35, dim=64, n_planes=4, n_tables=3
-    )
-    return p.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.col("cos_sim").cast("double").alias("cos_sim"),
-    )
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): deterministic coarse-quantizer
-    clusters + within-cluster keep-first cosine dedup.  The assignment
-    mirrors the IVF oracle (normalize, round-12 dot, first-max
-    tie-break); pair cosine mirrors the neardup oracle (raw-vector
-    cosine, round 4)."""
-    from doctor_spark.operators.similarity import semdedup
-
-    out = semdedup(_emb(spark, sf_dir), n_clusters=16, threshold=0.35,
-                   dim=64)
-    return out.select(
-        F.col("id").cast("bigint").alias("id"),
-        F.col("cluster").cast("int").alias("cluster"),
-        F.col("kept").alias("kept"),
-    )
-
-
-def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-frequency heavy hitters: count-min-sketch candidate
-    prefilter + exact rescore — output provably identical to the naive
-    full groupBy (CMS never underestimates), which is exactly what the
-    oracle runs.  The sketch exists to shrink the token exchange at
-    crawl scale, not to approximate the answer."""
-    from doctor_spark.operators.sketches import heavy_hitters
-
-    hh = heavy_hitters(_docs_spread(spark, sf_dir), threshold=200, width=2048)
-    return hh.select(
-        F.col("token"),
-        F.col("cnt").cast("bigint").alias("cnt"),
-    )
-
-
-def q_hll_host_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host distinct-URL cardinality via the integer-exact
-    HyperLogLog sketch (operators/hll.py): the crawl-coverage
-    ``count(distinct url)`` per host WITHOUT shuffling url occurrences
-    — two bounded keyed exchanges (register table with map-side max
-    partials, then a per-host rollup of ≤4096 rows/key), zero Python.
-    Every register and the raw estimate are replayed bit-for-bit by
-    the oracle (60-bit md5-prefix hash, scaled-integer harmonic sum,
-    mod-subtract exact floor division); the float linear-counting
-    correction is deliberately caller-side (``hll_correct``) so the
-    hashed result stays integer-exact.  Synthetic (host, url) pairs:
-    8 urls per document over 41 hosts with per-host moduli."""
-    from doctor_spark.operators.hll import hll_distinct
-
-    host_id = (F.col("doc_id") * 7 + F.col("i")) % 41
-    pairs = (
-        _docs(spark, sf_dir)
-        .select("doc_id",
-                F.explode(F.sequence(F.lit(0), F.lit(7))).alias("i"))
-        .select(
-            F.concat(F.lit("host-"), host_id).alias("host"),
-            F.concat(
-                F.lit("/p/"),
-                (F.col("doc_id") * 13 + F.col("i") * 97)
-                % (F.lit(120) + host_id * 11),
-            ).alias("url"),
-        )
-    )
-    out = hll_distinct(pairs, ["host"], "url")
-    return _present(out, "host").select(
-        "host",
-        F.col("n_regs").cast("bigint").alias("n_regs"),
-        F.col("v_zero").cast("bigint").alias("v_zero"),
-        F.col("sum_scaled").cast("bigint").alias("sum_scaled"),
-        F.col("est_distinct").cast("bigint").alias("est_distinct"),
-    )
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training, first 8 merges: ONE
-    corpus-scale exchange builds the word-count table, then each merge
-    is a map-side Arrow pair kernel + a tiny keyed agg + a single-row
-    argmax collect.  The oracle unrolls the identical loop in SQL
-    (list_reduce == the trainer's LTR fold), so the iterative operator
-    is hash-exact, not rows-only."""
-    from doctor_spark.operators.bpe import bpe_merge_table
-
-    t = bpe_merge_table(_docs(spark, sf_dir), n_merges=8)
-    return t.select(
-        F.col("rank").cast("int").alias("rank"),
-        F.col("left"),
-        F.col("right"),
-        F.col("freq").cast("bigint").alias("freq"),
-    )
-
-
-def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token histogram after applying the 8 learned merges — closes the
-    train→apply loop: the oracle reads its own final CTE level, so any
-    drift between the trainer's evolution and the apply kernel
-    hash-mismatches."""
-    from doctor_spark.operators.bpe import bpe_token_counts
-
-    t = bpe_token_counts(_docs(spark, sf_dir), n_merges=8)
-    return t.select(F.col("token"), F.col("cnt").cast("bigint").alias("cnt"))
-
-
-# the three affine edge generators for the deterministic link graph
-# (shared between the Spark query and the SQL oracle — one source of
-# truth so the two can never drift)
-_PR_EDGE_GENS = ((37, 11), (101, 7), (193, 3))
-
-
-def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cc-webgraph-style rank for crawl prioritization: integer-exact
-    PageRank (int64 micro-mass, truncating DIV both engines share) over
-    a deterministic affine link graph on doc_ids.  The ITERATIVE
-    distributed operator is hash-checked against a 4-level unrolled CTE
-    oracle."""
-    from doctor_spark.operators.graph import pagerank
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
-    pr = pagerank(edges, n_iter=4)
-    return pr.select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("rank_micro").cast("bigint").alias("rank_micro"),
-    )
-
-
-# deterministic page-markup synthesis for the link-graph query: one SQL
-# snippet parsed by Spark's F.expr AND spliced verbatim into the DuckDB
-# oracle (the _URL_SYNTH_SQL discipline).  Exercises the href kernel's
-# rules: entity refs (&amp;), uppercase tag/attr/scheme/host, whitespace
-# inside the quotes, single-quoted attrs, and the dropped link classes
-# (relative, javascript:, mailto:, anchors without href).
-_LINK_HOST_MOD = 997
-_LINK_SRC_HOST_SQL = (
-    f"'h' || CAST(doc_id % {_LINK_HOST_MOD} AS VARCHAR(8)) || '.example'"
+# Registry order is DELIBERATE: the grading driver's oracle check
+# covers the first 50 entries, so that window carries one query per
+# operator family with the newest/riskiest first (round-5 verdict
+# item 1) - flagship extraction goldens, the V1-V6 converter family,
+# every dedup rung, similarity/ANN, quality/LM, DSIR/mixing, BPE/NB
+# trainers, sketches, link graph, web ingest, retrieval,
+# multilingual.  Entries 51+ keep their historical order.  The SET
+# of queries and every oracle's SQL text are unchanged.
+ORDER = (
+    "extract_mismatches",
+    "extract_format_metrics",
+    "extract_ocr_stats",
+    "pdf_metadata",
+    "extract_recap_mismatch",
+    "reference_fixtures",
+    "doc_metrics_by_lang",
+    "markdown_goldens",
+    "images_to_pdf",
+    "fetch_images_to_pdf",
+    "audio_transcode",
+    "pdf_thumbnails",
+    "embed_text_overlay",
+    "pdf_strip_roundtrip",
+    "media_features_mismatch",
+    "dedup_exact",
+    "dedup_minhash_pairs_w128",
+    "dedup_simhash_near_w48",
+    "dedup_components",
+    "dedup_filtered_corpus",
+    "dedup_ngram_jaccard",
+    "dedup_exact_substring",
+    "paragraph_dedup",
+    "bloom_dedup",
+    "decontaminate",
+    "cdc_dedup",
+    "verified_neardup",
+    "containment_est",
+    "embedding_neardup",
+    "semdedup",
+    "lsh_ann_corpus_topk",
+    "kmeans_clusters",
+    "gopher_quality",
+    "repetition_gopher",
+    "quality_classifier",
+    "ccnet_perplexity",
+    "dsir_select",
+    "mix_resample",
+    "bpe_merges",
+    "nb_confusion",
+    "heavy_hitters",
+    "hll_host_distinct",
+    "link_pagerank",
+    "crawl_depth",
+    "boilerplate_corpus",
+    "page_metadata",
+    "structured_data",
+    "c4_span_dedup",
+    "bm25_topk",
+    "para_lang",
+    "dedup_stats",
+    "dedup_minhash_pairs",
+    "dedup_simhash",
+    "dedup_simhash_near",
+    "clean_corpus",
+    "winnow_fingerprints",
+    "para_dedup_intra",
+    "url_canonicalize",
+    "domain_topk",
+    "mix_weights",
+    "tfidf_top_terms",
+    "ngram_novelty",
+    "token_deciles",
+    "stratified_sample",
+    "pack_sequences",
+    "snapshot_diff",
+    "corpus_health",
+    "text_quality",
+    "repetition_stats",
+    "line_dedup",
+    "pii_scrub",
+    "corpus_sample",
+    "token_stats",
+    "lang_id",
+    "fingerprint",
+    "ann_cosine_topk",
+    "lsh_ann_topk",
+    "ivf_ann_topk",
+    "bpe_token_counts",
+    "link_host_rank",
+    "robots_gate",
+    "domain_blocklist",
+    "image_dup_clusters",
+    "audio_dup_clusters",
+    "video_dup_clusters",
+    "url_admission",
+    "anchor_text_topk",
+    "image_caption_table",
+    "redirect_resolve",
+    "sentence_stats",
+    "wet_export",
+    "fetch_schedule",
+    "table_cells",
+    "cdx_index",
+    "wat_export",
+    "host_degree_stats",
+    "soft404_gate",
+    "sitemap_entries",
+    "feed_entries",
+    "frontier_admission",
+    "date_normalize",
+    "code_blocks",
+    "boilerplate_blocks",
+    "boilerplate_corpus_lang",
+    "content_spans",
+    "robots_meta",
+    "unicode_clean",
+    "hreflang_pairs",
+    "bitext_align",
+    "bitext_url_pairs",
+    "host_quality",
+    "readability",
+    "collocations",
+    "chunk_spans",
+    "inverted_postings",
+    "quote_spans",
+    "mirror_pairs",
+    "kwic",
+    "citations",
+    "vocab_growth",
+    "revisit_records",
+    "rake_keywords",
+    "char_coverage",
+    "crawler_traps",
+    "idn_homographs",
+    "hits_scores",
+    "trustrank",
+    "stem_conflation",
+    "host_split",
+    "zipf_fit",
+    "freq_of_freqs",
+    "layout_clusters",
+    "temporal_leakage",
+    "best_passages",
+    "containment_pairs",
+    "textrank_keywords",
+    "prf_expansion",
+    "textrank_summary",
+    "postings_compression",
+    "url_templates",
+    "heading_outline",
+    "host_template_lines",
+    "canonical_clusters",
+    "pagination_chains",
+    "c4_clean",
+    "char_entropy",
+    "media_kind_stats",
+    "events_daily",
+    "events_user_topk",
+    "events_sessionize",
+    "lineitem_pricing",
+    "order_revenue_topk",
 )
-_LINK_HTML_SYNTH_SQL = f"""
-'<html><head><title>d' || CAST(doc_id AS VARCHAR(20)) ||
-'</title></head><body><p>' || substr(text, 1, 48) || '</p>' ||
-'<a href="http://h' || CAST((doc_id * 7 + 3) % {_LINK_HOST_MOD} AS VARCHAR(8)) ||
-'.example/p/' || CAST(doc_id AS VARCHAR(20)) || '?a=1&amp;b=2">one</a>' ||
-CASE WHEN doc_id % 2 = 0
-     THEN '<A HREF=" HTTP://H' ||
-          CAST((doc_id * 11 + 5) % {_LINK_HOST_MOD} AS VARCHAR(8)) ||
-          '.Example/q ">two</A>'
-     ELSE '<a href="/relative/path">rel</a>' END ||
-CASE WHEN doc_id % 3 = 0 THEN '<a href="javascript:void(0)">js</a>'
-     WHEN doc_id % 3 = 1 THEN '<a href="mailto:x@example.com">m</a>'
-     ELSE '<a name="anchor">plain</a>' END ||
-'<a href=''https://h' ||
-CAST((doc_id * 13 + 9) % {_LINK_HOST_MOD} AS VARCHAR(8)) ||
-'.example/r''>three</a></body></html>'
-"""
-
-
-def q_link_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full cc-webgraph loop on actual markup: synthesize
-    deterministic tag-soup pages (BINARY html, per the input contract),
-    extract absolute ``<a href>`` targets with the tag-soup
-    ``HTMLParser`` kernel, roll them up to lowercased hosts, and run the
-    integer-exact PageRank over the host graph.  The oracle replays the
-    extraction with regexes (exact on this synthesis; the kernel's
-    generality beyond it is pytest-gated) and an unrolled 4-level CTE.
-
-    Plan: ONE Arrow batch for extraction (map-only), one distinct
-    exchange for the edge table, then the pagerank joins."""
-    from doctor_spark.operators.graph import host_link_edges, pagerank
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.expr(_LINK_SRC_HOST_SQL).alias("src_host"),
-        F.encode(F.expr(_LINK_HTML_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    pr = pagerank(host_link_edges(pages), n_iter=4)
-    return pr.select(
-        F.col("node").alias("host"),
-        F.col("rank_micro").cast("bigint").alias("rank_micro"),
-    )
-
-
-# deterministic URL synthesis for the robots gate: one SQL snippet parsed
-# by Spark's F.expr AND spliced verbatim into the DuckDB oracle (the
-# _URL_SYNTH_SQL discipline).  101 hosts x 7 path shapes exercise every
-# rule form the RFC 9309 kernel implements: plain prefixes, longest-match
-# Allow-under-Disallow, specific-agent groups that EXCLUDE the '*' group,
-# '*' wildcards, '$' end anchors, the ''->'/' path normalization, query
-# stripping, and hosts with no robots.txt at all.
-_ROBOTS_HOST_MOD = 101
-_ROBOTS_URL_SQL = f"""
-'https://h' || CAST(doc_id % {_ROBOTS_HOST_MOD} AS VARCHAR(8)) || '.example' ||
-CASE CAST(doc_id % 7 AS INT)
-  WHEN 0 THEN '/private/x' || CAST(doc_id AS VARCHAR(20))
-  WHEN 1 THEN '/private/public/x' || CAST(doc_id AS VARCHAR(20))
-  WHEN 2 THEN '/no-train/x' || CAST(doc_id AS VARCHAR(20))
-  WHEN 3 THEN ''
-  WHEN 4 THEN '/docs/a' || CAST(doc_id AS VARCHAR(20)) || '.pdf'
-  WHEN 5 THEN '/tmp' || CAST(doc_id AS VARCHAR(20)) || '/logs/y'
-  ELSE '/ok?q=1'
-END
-"""
-
-# per-host robots.txt templates (host_idx % 4 selects; tpl 3 hosts have NO
-# robots row).  The oracle never parses these bodies — it replays the RFC
-# verdict per template straight from the spec, so the kernel's parser,
-# group selection, and precedence sort are verified independently.
-_ROBOTS_TPL = (
-    "User-agent: *\nDisallow: /private/\nAllow: /private/public/\n",
-    "User-agent: trainingbot\nDisallow: /no-train/\n\n"
-    "User-agent: *\nDisallow: /\n",
-    "User-agent: *\nDisallow: /*.pdf$\nDisallow: /tmp*/logs/\n",
-)
-
-
-def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-politeness gate (RFC 9309) over synthesized page URLs: per-host
-    robots.txt bodies are compiled ONCE on the dimension side (the only
-    Python stage), the 10^12-row page side gets its verdict from a JVM
-    first-match fold (F.aggregate + RLIKE) after a keyed host join.  The
-    oracle re-derives host/path from doc_id and replays each template's
-    RFC verdict with hand-written spec SQL — parser, URL split, group
-    selection, and longest-match precedence are all independently pinned.
-
-    No reference counterpart (doctor receives documents over HTTP); this
-    is the web-corpus politeness stage next to functions/urls.py."""
-    from doctor_spark.operators.robots import robots_gate
-
-    pages = (
-        _docs_spread(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.expr(_ROBOTS_URL_SQL).alias("url"))
-    )
-    hosts = spark.range(_ROBOTS_HOST_MOD).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".example")).alias(
-            "host"
-        ),
-        (F.col("id") % 4).alias("tpl"),
-    )
-    robots = hosts.where(F.col("tpl") < 3).select(
-        "host",
-        F.when(F.col("tpl") == 0, F.lit(_ROBOTS_TPL[0]))
-        .when(F.col("tpl") == 1, F.lit(_ROBOTS_TPL[1]))
-        .otherwise(F.lit(_ROBOTS_TPL[2]))
-        .alias("robots_body"),
-    )
-    out = robots_gate(pages, robots, agent="trainingbot/1.0")
-    return out.select("url", "host", "path", "allowed")
-
-
-# deterministic URL synthesis for the blocklist gate (shared F.expr/DuckDB
-# snippet): 4 subdomain shapes x 101 apex domains; the blocklist carries a
-# parent-domain family (j%5), a deeper more-specific family (bad.*, j%7)
-# and non-matching noise, so suffix matching, label-exactness, and
-# most-specific-match precedence are all exercised.
-_BL_URL_SQL = f"""
-'https://' ||
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN ''
-  WHEN 1 THEN 'www.'
-  WHEN 2 THEN 'bad.'
-  ELSE 'x.y.' END
-|| 'h' || CAST(doc_id % {_ROBOTS_HOST_MOD} AS VARCHAR(8)) || '.example/p'
-|| CAST(doc_id AS VARCHAR(20))
-"""
-
-
-def q_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UT1/RefinedWeb-style domain blocklist gate: label-suffix match of
-    each page host against a blocked-domains dimension, most specific
-    entry wins.  Zero shuffles on the page side — the suffix chain is
-    unrolled into depth-indexed broadcast probes (operators/blocklist.py).
-    The oracle re-derives host and verdict from doc_id arithmetic, so the
-    URL split, suffix logic, and precedence are pinned independently."""
-    from doctor_spark.operators.blocklist import domain_blocklist_mark
-
-    pages = (
-        _docs_spread(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.expr(_BL_URL_SQL).alias("url"))
-    )
-    r = spark.range(_ROBOTS_HOST_MOD)
-    apex = F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".example"))
-    blocklist = (
-        r.where(F.col("id") % 5 == 0).select(apex.alias("domain"))
-        .unionByName(
-            r.where(F.col("id") % 7 == 0).select(
-                F.concat(F.lit("bad."), apex).alias("domain")
-            )
-        )
-        .unionByName(
-            r.select(
-                F.concat(F.lit("zz"), F.col("id").cast("string"),
-                         F.lit(".example")).alias("domain")
-            )
-        )
-    )
-    return domain_blocklist_mark(pages, blocklist).select(
-        "url", "host", "blocked_domain", "blocked"
-    )
-
-
-# deterministic PNG synthesis for the perceptual image dedup query.
-# 50 base patterns; each document renders its pattern (doc_id % 50) as a
-# REAL PNG (the from-scratch encoder) with a per-document ±1 pixel noise
-# field whose per-cell ones-count is EXACTLY 32 (13 odd ⇒ parity
-# alternates along each row ⇒ 4 ones per 8 pixels), so every dHash cell
-# mean is bit-identical across copies: hash(pattern, any doc) ==
-# hash(pattern).  Pattern grids are 8-level pseudo-random per cell;
-# all 50 hashes are pairwise distinct (pinned in tests/test_imagedup.py),
-# so perceptual clusters == doc_id % 50 classes by construction and the
-# oracle reduces to doc_id arithmetic.
-_IMG_PATTERNS = 50
-
-
-def _synth_pattern_png(doc_id: int) -> bytes:
-    import numpy as np
-
-    from doctor_spark.kernels.png import encode_png
-
-    p = doc_id % _IMG_PATTERNS
-    # integer hash with avalanche (xorshift-multiply): a plain
-    # linear-mix-mod-8 has period 8 in p and collides patterns
-    v = (np.uint64(p) * np.uint64(1000003)) + np.arange(72, dtype=np.uint64)
-    v ^= v >> np.uint64(7)
-    v *= np.uint64(2654435761)
-    v ^= v >> np.uint64(13)
-    grid = (8 + 32 * (v % np.uint64(8))).astype(np.uint8).reshape(8, 9)
-    img = np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)  # 64 x 72
-    x = np.arange(72, dtype=np.int64)[None, :]
-    y = np.arange(64, dtype=np.int64)[:, None]
-    noise = ((doc_id + 13 * x + 7 * y) % 2).astype(np.uint8)
-    return encode_png(img + noise)
-
-
-def _synth_png_udf():
-    return row_udf(_synth_pattern_png, "binary")
-
-
-def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup (dHash over the from-scratch PNG codec):
-    decode + hash in one Arrow map stage, exact clusters via ONE keyed
-    groupBy on the 64-bit hash (map-side partial agg collapses each
-    cluster before the exchange).  The synthesis guarantees clusters ==
-    doc_id % 50 classes (noise-exact cell means, distinct pattern
-    hashes), so the oracle is pure doc_id arithmetic while the Spark
-    side exercises the full encode→decode→hash→group path."""
-    from doctor_spark.operators.imagedup import image_dup_clusters
-
-    imgs = (
-        _docs_spread(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select("doc_id", _synth_png_udf()(F.col("doc_id")).alias("payload"))
-    )
-    out = image_dup_clusters(imgs, payload_col="payload", id_col="doc_id")
-    return out.select(
-        F.col("rep_id").cast("bigint").alias("rep_doc"),
-        F.col("n_images").cast("bigint").alias("n_images"),
-    )
-
-
-# deterministic WAV synthesis for the perceptual audio dedup query — the
-# image construction transposed to time: 40 envelope patterns, 65 frames
-# of 64 samples; every sample is positive (A + {0,1} noise with exactly
-# 32 ones per frame, so each frame's integer mean energy is EXACTLY its
-# pattern level) ⇒ fingerprint(pattern, any doc) == fingerprint(pattern),
-# and clusters == doc_id % 40 classes.  Distinctness of the 40
-# fingerprints is pinned in tests/test_audiodup.py.
-_AUD_PATTERNS = 40
-
-
-def _synth_pattern_wav(doc_id: int) -> bytes:
-    import numpy as np
-
-    from doctor_spark.kernels.audio import write_wav
-
-    p = doc_id % _AUD_PATTERNS
-    v = (np.uint64(p) * np.uint64(9176) + np.uint64(77)) + np.arange(
-        65, dtype=np.uint64
-    )
-    v ^= v >> np.uint64(7)
-    v *= np.uint64(2654435761)
-    v ^= v >> np.uint64(13)
-    levels = (64 * (1 + (v % np.uint64(8)))).astype(np.int64)  # 64..512
-    samples = np.repeat(levels, 64)  # 65 frames x 64 samples
-    j = np.arange(samples.shape[0], dtype=np.int64)
-    samples = (samples + (doc_id + j) % 2).astype(np.int16)
-    return write_wav(8000, samples)
-
-
-def _synth_wav_udf():
-    return row_udf(_synth_pattern_wav, "binary")
-
-
-def q_audio_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual audio dedup (energy-envelope fingerprint over the
-    from-scratch RIFF/WAV parser): decode + hash in one Arrow map stage,
-    exact clusters via ONE keyed groupBy.  Synthesis guarantees clusters
-    == doc_id % 40 classes, so the oracle is doc_id arithmetic while the
-    Spark side exercises the full WAV-encode→parse→hash→group path."""
-    from doctor_spark.operators.audiodup import audio_dup_clusters
-
-    clips = (
-        _docs(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select("doc_id", _synth_wav_udf()(F.col("doc_id")).alias("payload"))
-    )
-    out = audio_dup_clusters(clips, payload_col="payload", id_col="doc_id")
-    return out.select(
-        F.col("rep_id").cast("bigint").alias("rep_doc"),
-        F.col("n_clips").cast("bigint").alias("n_clips"),
-    )
-
-
-# deterministic frame-stack synthesis for the video dedup query: 30
-# patterns; each doc renders its pattern as 8 frames whose per-pixel
-# noise has EXACTLY 4 ones across the frame axis ((doc+x+y+t) % 2 with 8
-# frames ⇒ 4), so the integer temporal-mean frame is bit-identical to
-# the base pattern and vhash(pattern, any doc) == vhash(pattern).
-# Distinctness of the 30 fingerprints is pinned in tests/test_videodup.py.
-_VID_PATTERNS = 30
-
-
-def _synth_pattern_video(doc_id: int) -> bytes:
-    import numpy as np
-
-    from doctor_spark.operators.multimodal import encode_video
-
-    p = doc_id % _VID_PATTERNS
-    v = (np.uint64(p) * np.uint64(524287) + np.uint64(11)) + np.arange(
-        72, dtype=np.uint64
-    )
-    v ^= v >> np.uint64(7)
-    v *= np.uint64(2654435761)
-    v ^= v >> np.uint64(13)
-    grid = (8 + 32 * (v % np.uint64(8))).astype(np.uint8).reshape(8, 9)
-    base = np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)  # 64 x 72
-    x = np.arange(72, dtype=np.int64)[None, None, :]
-    y = np.arange(64, dtype=np.int64)[None, :, None]
-    t = np.arange(8, dtype=np.int64)[:, None, None]
-    noise = ((doc_id + x + y + t) % 2).astype(np.uint8)
-    return encode_video(base[None, :, :] + noise)
-
-
-def _synth_video_udf():
-    return row_udf(_synth_pattern_video, "binary")
-
-
-def q_video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual video dedup (temporal-mean-frame dHash): decode + hash
-    in one Arrow map stage, exact clusters via ONE keyed groupBy.  The
-    synthesis guarantees clusters == doc_id % 30 classes, so the oracle
-    is doc_id arithmetic while the Spark side exercises the full
-    frame-stack encode→decode→mean→hash→group path."""
-    from doctor_spark.operators.videodup import video_dup_clusters
-
-    clips = (
-        _docs_spread(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select("doc_id", _synth_video_udf()(F.col("doc_id")).alias("payload"))
-    )
-    out = video_dup_clusters(clips, payload_col="payload", id_col="doc_id")
-    return out.select(
-        F.col("rep_id").cast("bigint").alias("rep_doc"),
-        F.col("n_clips").cast("bigint").alias("n_clips"),
-    )
-
-
-def q_url_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused page-admission recipe (the first stage a FineWeb/
-    RefinedWeb-style crawl pipeline runs): domain blocklist THEN robots
-    verdict, composed in ONE plan where both dimensions broadcast — the
-    10^12-row page side never shuffles.  ``reason`` reports the first
-    failing gate (blocklist outranks robots, matching the order a real
-    pipeline applies them — a blocked domain is never even fetched).
-    Reuses the robots synthesis (101 hosts × 7 paths × 4 templates) plus
-    an apex blocklist on k%9==0 hosts, so the oracle is the two spec
-    replays composed."""
-    from doctor_spark.operators.blocklist import domain_blocklist_mark
-    from doctor_spark.operators.robots import robots_gate
-
-    pages = (
-        _docs(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.expr(_ROBOTS_URL_SQL).alias("url"))
-    )
-    r = spark.range(_ROBOTS_HOST_MOD)
-    blocklist = r.where(F.col("id") % 9 == 0).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".example"))
-        .alias("domain")
-    )
-    hosts = r.select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".example"))
-        .alias("host"),
-        (F.col("id") % 4).alias("tpl"),
-    )
-    robots = hosts.where(F.col("tpl") < 3).select(
-        "host",
-        F.when(F.col("tpl") == 0, F.lit(_ROBOTS_TPL[0]))
-        .when(F.col("tpl") == 1, F.lit(_ROBOTS_TPL[1]))
-        .otherwise(F.lit(_ROBOTS_TPL[2]))
-        .alias("robots_body"),
-    )
-    marked = domain_blocklist_mark(pages, blocklist).drop("host")
-    gated = robots_gate(marked, robots, agent="trainingbot/1.0")
-    reason = (
-        F.when(F.col("blocked"), F.lit("blocklist"))
-        .when(~F.col("allowed"), F.lit("robots"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return gated.select(
-        "url",
-        "host",
-        reason.alias("reason"),
-        (~F.col("blocked") & F.col("allowed")).alias("admitted"),
-    )
-
-
-# deterministic head-markup synthesis for the page-metadata query (the
-# _URL_SYNTH_SQL discipline: ONE snippet parsed by Spark's F.expr AND
-# spliced verbatim into the DuckDB oracle).  Six arms by doc_id % 6
-# exercise the kernel's rules: lowercase/UPPERCASE tags+attrs, double vs
-# single quotes, entity refs in title text AND attribute values,
-# whitespace collapse, rel token lists, meta-vs-<time> publication
-# precedence, duplicate-field first-wins, comment decoys, valueless
-# meta, and the all-absent arm.  The oracle never parses markup — it
-# replays the EXPECTED six fields per arm, so parser, RCDATA title
-# mode, attr unescaping and precedence are verified independently.
-_META_HTML_SYNTH_SQL = """
-CASE CAST(doc_id % 6 AS INT)
-  WHEN 0 THEN '<html lang="en"><head><title>Doc ' || CAST(doc_id AS VARCHAR(20)) ||
-    ' &amp; more</title><meta name="description" content="desc ' ||
-    CAST(doc_id AS VARCHAR(20)) || '"><link rel="canonical" href="https://ex.com/d/' ||
-    CAST(doc_id AS VARCHAR(20)) || '"><meta property="og:title" content="og ' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '"><meta property="article:published_time" content="2024-01-02T03:04:05Z">' ||
-    '</head><body><p>b</p></body></html>'
-  WHEN 1 THEN '<HTML LANG=''fr''><HEAD><TITLE>  T   ' || CAST(doc_id AS VARCHAR(20)) ||
-    '  </TITLE><META NAME=''Description'' CONTENT=''D ' || CAST(doc_id AS VARCHAR(20)) ||
-    '''><META HTTP-EQUIV=''Content-Type'' CONTENT=''text/html; charset=ISO-8859-1''>' ||
-    '</HEAD><BODY><TIME DATETIME=''2023-12-31T23:59:59Z''>then</TIME></BODY></HTML>'
-  WHEN 2 THEN '<html><head><meta charset="UTF-8">' ||
-    '<link rel="alternate canonical" href="https://c.example/p/' ||
-    CAST(doc_id AS VARCHAR(20)) || '"><meta property="og:title" content="OG ' ||
-    CAST(doc_id AS VARCHAR(20)) || '"></head><body>x</body></html>'
-  WHEN 3 THEN '<p>plain ' || CAST(doc_id AS VARCHAR(20)) || '</p>'
-  WHEN 4 THEN '<html lang="de"><head><meta name="description" content="first ' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '"><meta name="description" content="second"><title>A ' ||
-    CAST(doc_id AS VARCHAR(20)) || '</title><title>B</title>' ||
-    '<meta property="article:published_time" content="2020-05-06T07:08:09Z">' ||
-    '<meta http-equiv="refresh" content="0; url=https://m.example/' ||
-    CAST(doc_id AS VARCHAR(20)) || '">' ||
-    '</head><body><time datetime="1999-01-01">old</time></body></html>'
-  ELSE '<html lang="pt"><head><!-- <title>not this</title> --><title>R ' ||
-    CAST(doc_id AS VARCHAR(20)) || '</title><meta name="description" content="x &amp; y ' ||
-    CAST(doc_id AS VARCHAR(20)) || '"><link rel="canonical" href="/relative/' ||
-    CAST(doc_id AS VARCHAR(20)) || '"><meta content="no-name"></head></html>'
-END
-"""
-
-
-def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-metadata extraction (trafilatura/htmldate's stage): title,
-    meta description, canonical link, og:title, publication timestamp
-    (meta article:published_time beats <time datetime>), and the <html>
-    lang attribute, pulled from tag-soup BINARY html by the RCDATA-aware
-    HTMLParser kernel.  Map-only — one Arrow batch, zero shuffles; the
-    plan at 10^12 pages is scan → ArrowEvalPython → project.
-
-    No reference counterpart: doctor's HTML path discards <head>
-    entirely (doctor/tasks.py:361-370); this is the metadata stage a
-    web-corpus pipeline runs next to extraction."""
-    from doctor_spark.operators.metadata import page_metadata
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_META_HTML_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    return page_metadata(pages).drop("html")
-
-
-# deterministic JSON-LD synthesis: six arms — full NewsArticle with
-# Person/Organization objects, a Yoast-style @graph wrapper, a
-# top-level array with a type LIST and a bare-string author (plus mime
-# params on the type attr), a malformed block followed by a valid one
-# (strict-JSON isolation), a non-article-type-only page, and a page
-# with no ld+json at all.
-_JSONLD_SYNTH_SQL = """
-'<html><head><title>t</title>' ||
-CASE CAST(doc_id % 6 AS INT)
-  WHEN 0 THEN '<script type="application/ld+json">{"@context":"https://schema.org","@type":"NewsArticle","headline":"Ruling ' || CAST(doc_id AS VARCHAR(20)) || '","datePublished":"2024-03-0' || CAST(doc_id % 9 + 1 AS VARCHAR(20)) || 'T08:00:00Z","author":{"@type":"Person","name":"A. Reporter"},"publisher":{"@type":"Organization","name":"The Daily"}}</script>'
-  WHEN 1 THEN '<script type="application/ld+json">{"@graph":[{"@type":"Organization","name":"Pub"},{"@type":"NewsArticle","headline":"H-' || CAST(doc_id AS VARCHAR(20)) || '"}]}</script>'
-  WHEN 2 THEN '<script type="application/LD+JSON; charset=utf-8">[{"@type":["Thing","BlogPosting"],"headline":"Blog é ' || CAST(doc_id AS VARCHAR(20)) || '","author":"bare-author"}]</script>'
-  WHEN 3 THEN '<script type="application/ld+json">{"@type":"NewsArticle","headline":"oops",}</script><script type="application/ld+json">{"@type":"Article","headline":"good ' || CAST(doc_id AS VARCHAR(20)) || '"}</script>'
-  WHEN 4 THEN '<script type="application/ld+json">{"@type":"Organization","name":"Acme"}</script>'
-  ELSE '<script>var x = 1;</script>'
-END || '</head><body><p>body</p></body></html>'
-"""
-
-
-def q_pagination_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-page-article stitching: every page mapped to the head of
-    its ``rel=prev`` chain and its exact position — the grouping that
-    reassembles paginated articles into ONE training document.  The
-    prev links are declared IN THE HTML (Arrow extraction), the chain
-    walk reuses the redirect resolver's pointer doubling (6 keyed
-    self-joins for a 64-hop budget, settled rows leave the probe
-    side).  Synthesis: 4-page chains; the oracle re-derives the edge
-    set from the same arms and walks it with a hop-bounded recursive
-    CTE — the iterative operator's sequential twin."""
-    from doctor_spark.operators.metadata import pagination_chains
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    art = F.concat(F.lit("https://s.example/art/"),
-                   (F.col("doc_id") - F.col("doc_id") % 4).cast("string"))
-    url = F.concat(art, F.lit("/p"), (F.col("doc_id") % 4).cast("string"))
-    prev_url = F.concat(art, F.lit("/p"),
-                        (F.col("doc_id") % 4 - 1).cast("string"))
-    html = F.concat(
-        F.lit("<html><head><title>t</title>"),
-        F.when(
-            F.col("doc_id") % 4 > 0,
-            F.concat(F.lit('<link rel="prev" href="'), prev_url,
-                     F.lit('">')),
-        ).otherwise(F.lit("")),
-        F.lit("</head><body><p>b</p></body></html>"),
-    )
-    pages = d.select(
-        url.alias("url"), F.encode(html, "utf-8").alias("html")
-    )
-    out = pagination_chains(pages, max_hops=64)
-    return _present(out.select(
-        "url", "head_url",
-        F.col("page_index").cast("bigint").alias("page_index"),
-        "resolved",
-    ), "url")
-
-
-def q_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL dedup clustering end-to-end: synthesize base /
-    print-view / m-dot variant pages (variants declare ``rel=
-    canonical`` to the base IN THE HTML), run the page_metadata Arrow
-    extraction, then cluster on the declared target — the cheapest
-    dedup rung a crawl runs, before any content hashing.  GroupBy+join
-    form (NOT a window — canonical spam is a real hot key; the join is
-    AQE-skew-splittable).  Closed-form oracle: every output column is
-    CASE arithmetic on doc_id."""
-    from doctor_spark.operators.metadata import (
-        canonical_clusters,
-        page_metadata,
-    )
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    base_url = F.concat(
-        F.lit("https://site.example/a/"),
-        (F.col("doc_id") - F.col("doc_id") % 3).cast("string"),
-    )
-    url = (
-        F.when(F.col("doc_id") % 3 == 0, base_url)
-        .when(F.col("doc_id") % 3 == 1, F.concat(base_url, F.lit("?print=1")))
-        .otherwise(
-            F.concat(
-                F.lit("https://m.site.example/a/"),
-                (F.col("doc_id") - F.col("doc_id") % 3).cast("string"),
-            )
-        )
-    )
-    html = F.concat(
-        F.lit('<html><head><title>t</title>'),
-        F.when(
-            F.col("doc_id") % 3 != 0,
-            F.concat(F.lit('<link rel="canonical" href="'), base_url,
-                     F.lit('">')),
-        ).otherwise(F.lit("")),
-        F.lit("</head><body><p>b</p></body></html>"),
-    )
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        url.alias("url"),
-        F.encode(html, "utf-8").alias("html"),
-    )
-    meta = page_metadata(pages).select("doc_id", "url", "canonical_url")
-    out = canonical_clusters(meta)
-    return _present(out.select(
-        "doc_id", "url", "cluster_key", "is_keeper",
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-    ), "doc_id")
-
-
-def q_host_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host template-line detection (host-scoped CCNet variant):
-    normalized lines on ≥60% of a host's pages — the site-chrome table
-    (nav bars, cookie banners, footers) a cleaning pass strips with
-    one semi-join.  Row-local distinct (array_distinct BEFORE the
-    explode — no dedup exchange), ONE row-volume keyed aggregate on
-    (host, line), tiny host-count aggregate joined host-keyed, pure
-    integer fraction predicate.  Synthesis plants a per-host welcome
-    line on 100% of pages and a cookie line on the even half; the
-    oracle replays the whole computation (split/normalize/distinct/
-    fraction) in DuckDB — independent engine, not closed-form."""
-    from doctor_spark.operators.dedup import host_template_lines
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    host = F.concat(F.lit("h"), (F.col("doc_id") % 13).cast("string"))
-    synth = F.concat(
-        F.lit("Welcome to "), host, F.lit("\n"),
-        F.when(F.col("doc_id") % 2 == 0,
-               F.lit("Cookie notice - accept all\n")).otherwise(F.lit("")),
-        F.col("text"),
-    )
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        host.alias("host"), synth.alias("text"),
-    )
-    out = host_template_lines(pages, min_frac_pct=60, min_host_docs=2)
-    return _present(out.select(
-        "host", "line",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        F.col("host_docs").cast("bigint").alias("host_docs"),
-    ), "host", "line")
-
-
-# deterministic hreflang synthesis: five arms — a 3-language cluster,
-# a region-tagged pair, an x-default+single (pseudo-tag excluded from
-# pairs), a single language (no pairs), and no alternates at all.
-_HREFLANG_SYNTH_SQL = """
-'<html><head>' ||
-CASE CAST(doc_id % 5 AS INT)
-  WHEN 0 THEN '<link rel="alternate" hreflang="en" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/en">'
-              || '<link rel="alternate" hreflang="fr" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/fr">'
-              || '<link rel="alternate" hreflang="de" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/de">'
-  WHEN 1 THEN '<link rel="alternate" hreflang="en-us" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/">'
-              || '<link rel="alternate" hreflang="ES" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/es">'
-  WHEN 2 THEN '<link rel="alternate" hreflang="x-default" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/">'
-              || '<link rel="alternate" hreflang="en" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/en">'
-  WHEN 3 THEN '<link rel="alternate" hreflang="fr" href="https://s'
-              || CAST(doc_id AS VARCHAR(20)) || '.example/fr">'
-  ELSE ''
-END || '</head><body><p>b</p></body></html>'
-"""
-
-
-def q_hreflang_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parallel-corpus language-pair inventory from hreflang alternate
-    declarations — the planning table a bitext harvest (ParaCrawl/
-    CCMatrix-style) runs before fetching any alternate: which language
-    pairs exist in the crawl, at what page volume.  One Arrow
-    extraction batch (asNondeterministic so Catalyst cannot duplicate
-    it into both explode stages — plan-pinned), JVM-side pair
-    expansion bounded by a site's locale count, ONE keyed exchange
-    with map-side partials.  The oracle replays each synthesis arm's
-    expected pairs with count guards, closed-form."""
-    from doctor_spark.operators.metadata import language_pair_counts
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_HREFLANG_SYNTH_SQL).alias("html"),
-    )
-    out = language_pair_counts(pages)
-    return _present(out.select(
-        "lang_a", "lang_b", F.col("n_pages").cast("bigint").alias("n_pages")
-    ), "lang_a", "lang_b")
-
-
-# deterministic bitext synthesis: five arms — a 3-sentence 1-1 run
-# (doc_id embedded symmetrically so lengths stay matched), a 2-1 merge
-# between anchors, a short insertion that canonically absorbs into a
-# 1-2 bead, an empty target (1-0 beads), and a single-sentence pair.
-_BITEXT_SRC_SQL = """
-CASE CAST(doc_id % 5 AS INT)
-  WHEN 0 THEN 'Alpha alpha ' || CAST(doc_id AS VARCHAR(20))
-              || ' one. Bravo bravo two. Charlie charlie three.'
-  WHEN 1 THEN 'Anchor number ' || CAST(doc_id AS VARCHAR(20))
-              || ' one here. Aa bb. Cc dd. Anchor sentence number two here.'
-  WHEN 2 THEN 'Anchor number ' || CAST(doc_id AS VARCHAR(20))
-              || ' one here. Anchor sentence number two here.'
-  WHEN 3 THEN 'Solo one. Solo two.'
-  ELSE 'Only one sentence here.'
-END
-"""
-
-_BITEXT_TGT_SQL = """
-CASE CAST(doc_id % 5 AS INT)
-  WHEN 0 THEN 'Alfa alfa ' || CAST(doc_id AS VARCHAR(20))
-              || ' eins. Brava brava zwei. Karla karla drei.'
-  WHEN 1 THEN 'Anker nummer ' || CAST(doc_id AS VARCHAR(20))
-              || ' eins hier. Aa bb und cc dd zusammen. Anker satz nummer zwei hier.'
-  WHEN 2 THEN 'Anker nummer ' || CAST(doc_id AS VARCHAR(20))
-              || ' eins hier. Eingefugt. Anker satz nummer zwei hier.'
-  WHEN 3 THEN ''
-  ELSE 'Nur ein satz hier.'
-END
-"""
-
-
-def q_bitext_align(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gale–Church sentence alignment over parallel page pairs — the
-    bead-extraction stage of a ParaCrawl/CCMatrix-style bitext harvest
-    that runs AFTER ``hreflang_pairs`` has inventoried which pairs
-    exist.  Published 1993 constants, deterministic move-order
-    tie-break, bead INDEX output only (no float column).  One Arrow
-    batch → explode — map-only, zero shuffles at any scale; an
-    over-budget DP pair is an ok=false marker row, never a silent
-    truncation.  The oracle replays each synthesis arm's expected
-    beads (verified against the kernel spec in tests/test_bitext.py)
-    as UNION ALL literals."""
-    from doctor_spark.operators.bitext import bitext_beads
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pairs = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_BITEXT_SRC_SQL).alias("src_text"),
-        F.expr(_BITEXT_TGT_SQL).alias("tgt_text"),
-    )
-    out = bitext_beads(pairs)
-    return _present(out.select(
-        "doc_id",
-        F.col("bead").cast("int").alias("bead"),
-        "ok",
-        F.col("src_start").cast("int").alias("src_start"),
-        F.col("n_src").cast("int").alias("n_src"),
-        F.col("tgt_start").cast("int").alias("tgt_start"),
-        F.col("n_tgt").cast("int").alias("n_tgt"),
-        "src_text", "tgt_text",
-    ), "doc_id", "bead")
-
-
-# deterministic URL-structure synthesis: five path arms (numeric
-# article id, hex asset id, uuid, static path, two-placeholder tag
-# pagination) spread over seven hosts.
-_URLTMPL_SYNTH_SQL = """
-'https://h' || CAST(doc_id % 7 AS VARCHAR(2)) || '.example' ||
-CASE CAST(doc_id % 5 AS INT)
-  WHEN 0 THEN '/article/' || CAST(doc_id AS VARCHAR(20))
-  WHEN 1 THEN '/img/cafe' || lpad(CAST(doc_id AS VARCHAR(20)), 8, '0')
-  WHEN 2 THEN '/u/123e4567-e89b-12d3-a456-426614174000'
-  WHEN 3 THEN '/about/team'
-  ELSE '/tag/' || CAST(doc_id % 10 AS VARCHAR(2)) || '/page/'
-       || CAST(doc_id AS VARCHAR(20))
-END
-"""
-
-
-def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host URL path-template inventory — the site-structure table
-    a crawl planner derives from a 10^12-row frontier before spending
-    fetch budget (``/article/{n}`` is content, ``/tag/{n}/page/{n}``
-    is pagination chaff).  Whole-segment uuid/digits/hex placeholder
-    rules in pure codegen (functions/urls.url_path_template), ONE
-    keyed aggregate with map-side partials, no window.  The oracle
-    replays host, template, and the sample-url min per synthesis arm
-    closed-form in DuckDB."""
-    from doctor_spark.operators.metadata import url_template_counts
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(F.expr(_URLTMPL_SYNTH_SQL).alias("url"))
-    out = url_template_counts(pages)
-    return _present(out.select(
-        "host", "template",
-        F.col("n_urls").cast("bigint").alias("n_urls"),
-        "sample_url",
-    ), "host", "template")
-
-
-# deterministic heading synthesis: four arms — a 4-heading outline
-# with an entity, a deep-start + empty-dropped arm, a script-excluded
-# + implicit-close arm, and a no-headings arm.
-_HEADINGS_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN '<h1>Doc ' || CAST(doc_id AS VARCHAR(20))
-              || '</h1><h2>Intro</h2><h3>Sub &amp; more</h3><h2>End</h2>'
-  WHEN 1 THEN '<h3>Deep ' || CAST(doc_id AS VARCHAR(20))
-              || '</h3><h2 id="a"></h2><h1>Top</h1>'
-  WHEN 2 THEN '<h1>Real<script>var x = 1;</script> one<h2>Two</h2>'
-  ELSE '<p>nothing</p>'
-END
-"""
-
-
-def q_heading_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """h1–h6 heading-outline extraction — the page skeleton a
-    structure-aware chunker (split-at-h2, section-title metadata per
-    chunk) consumes downstream of boilerplate stripping.  Kernel spec:
-    document-order headings, inline markup transparent, entities
-    decoded, empties dropped, script/style excluded, parent = nearest
-    prior strictly-smaller level.  One Arrow batch → explode —
-    map-only, zero shuffles; the per-page heading cap is a counted
-    ``truncated`` flag, never silent.  The oracle replays each
-    synthesis arm's expected outline (verified against the kernel
-    spec in tests/test_headings.py) as UNION ALL literals."""
-    from doctor_spark.operators.headings import heading_outline
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_HEADINGS_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    out = heading_outline(pages)
-    return _present(out.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        F.col("level").cast("int").alias("level"),
-        F.col("parent").cast("int").alias("parent"),
-        "text", "truncated",
-    ), "doc_id", "seq")
-
-
-def q_bitext_url_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STRAND/ParaCrawl URL-matching bitext candidates — the frontier
-    rung of the bitext harvest, BEFORE hreflang (declared) and
-    Gale–Church (content): URLs differing only in a language marker
-    are paired with no content fetch at all.  Stem/lang are pure
-    codegen (functions/urls.py); TWO keyed aggs on the stem, JVM-side
-    pair expansion bounded by locale count — no self-join, no window,
-    no Python.  Synthesis: each doc explodes into six URLs (en / fr /
-    de-DE path markers on one site, es./pt. host markers on another,
-    and a marker-less page), so every stem group is complete and the
-    oracle replays the four expected pairs per doc closed-form."""
-    from doctor_spark.operators.bitext import bitext_url_pairs
-
-    d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
-    i = F.col("doc_id").cast("string")
-    site = F.concat(F.lit("https://w.site"), i, F.lit(".example"))
-    pages = d.select(
-        F.explode(
-            F.array(
-                F.concat(site, F.lit("/en/page"), i),
-                F.concat(site, F.lit("/fr/page"), i),
-                F.concat(site, F.lit("/de-DE/page"), i),
-                F.concat(F.lit("https://es.h"), i, F.lit(".example/p/x")),
-                F.concat(F.lit("https://pt.h"), i, F.lit(".example/p/x")),
-                F.concat(F.lit("https://plain"), i, F.lit(".example/about")),
-            )
-        ).alias("url")
-    )
-    out = bitext_url_pairs(pages)
-    return _present(out.select(
-        "stem", "src_lang", "src_url", "tgt_lang", "tgt_url"
-    ), "stem", "src_lang", "tgt_lang")
-
-
-def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level quality rollup gate (RefinedWeb-style site curation,
-    content-informed): per-document Gopher verdicts rolled up per host
-    — ONE map-side-combined keyed agg — then the integer-fraction host
-    verdict (``n_fail*100 <= n_docs*50``, small hosts ``< 5`` docs
-    admitted on benefit of the doubt) joined back to every document
-    (keyed join, NOT broadcast: a real crawl's host dimension is
-    10^8+ rows; AQE splits mega-host skew).  Synthesis: seven head
-    hosts (``doc_id % 7``) whose fail fractions differ by text arm,
-    plus single-document tail hosts every 25th doc exercising the
-    min-docs rule.  The oracle replays the Gopher CTE + the same
-    integer arithmetic."""
-    from doctor_spark.operators.hostgate import host_quality_gate
-
-    d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
-    host = F.when(
-        F.col("doc_id") % 25 == 0,
-        F.concat(F.lit("t"), F.col("doc_id").cast("string"),
-                 F.lit(".example")),
-    ).otherwise(
-        F.concat(F.lit("h"), (F.col("doc_id") % 7).cast("string"),
-                 F.lit(".example"))
-    )
-    docs = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        host.alias("host"),
-        "text",
-    )
-    out = host_quality_gate(docs, min_docs=5, max_fail_pct=50)
-    return _present(out.select("doc_id", "host", "passes", "host_ok"), "doc_id")
-
-
-def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch–Kincaid / Flesch reading-ease over the corpus — the
-    audience-level signal education-filtered corpora bucket on.  Both
-    sub-measures are spec'd SQL-replayable simplifications
-    (functions/text.py: vowel-group syllables, terminal-run
-    sentences), so the oracle replays the FULL computation on the raw
-    document text — not a synthesis-arm replay.  Pure Column exprs,
-    map-only, zero Python, zero shuffles."""
-    from doctor_spark.functions.text import readability_metrics
-
-    d = _docs_spread(spark, sf_dir).where(F.col("text").isNotNull())
-    m = readability_metrics(F.col("text"))
-    return _present(d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        m["n_words"].alias("n_words"),
-        m["n_sentences"].alias("n_sentences"),
-        m["n_syllables"].alias("n_syllables"),
-        m["fk_grade"].alias("fk_grade"),
-        m["flesch_ease"].alias("flesch_ease"),
-    ), "doc_id")
-
-
-def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI collocation table (Church & Hanks 1990) — corpus-level word
-    association: multi-word entities surface as high-PMI pairs,
-    tokenizer-merge candidates as high-count high-PMI.  All
-    probabilities stay as COUNTS; one micro-log10 per count (libm both
-    engines, the LM/entropy idiom) makes pmi_micro a pure int64 sum.
-    Corpus path is JVM arrays (zip_with over slices) + ONE keyed count
-    per gram order; Python touches only the vocab-sized aggregate.
-    The oracle replays the FULL computation on the raw text."""
-    from doctor_spark.operators.collocations import collocations
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    out = collocations(d, min_pair=5)
-    return _present(out.select(
-        "w1", "w2",
-        F.col("n_pair").cast("bigint").alias("n_pair"),
-        "pmi_micro",
-    ), "w1", "w2")
-
-
-# chunking synthesis: four arms — paragraph packing, an oversize
-# paragraph that sentence-splits, an oversize sentence that hard-splits,
-# and a blank doc that produces no rows.  max_tokens=6.
-_CHUNK_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'alpha bravo charlie.' || chr(10) || chr(10) ||
-              'delta echo.' || chr(10) || chr(10) ||
-              'fox golf hotel india juliet kilo.'
-  WHEN 1 THEN 'Aa bb cc. Dd ee ff. Gg hh ii jj kk ll mm nn.'
-  WHEN 2 THEN 'w1 w2 w3 w4 w5 w6 w7 w8'
-  ELSE '   '
-END
-"""
-
-
-def q_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boundary-aware chunking — the pretraining/RAG segmentation
-    stage: ≤max_tokens chunks breaking at the strongest boundary
-    (paragraph → sentence → hard token split), deterministic greedy
-    spec in kernels/chunking.py.  One Arrow batch → explode, map-only,
-    zero shuffles.  The oracle replays each synthesis arm's expected
-    chunks (verified against the kernel spec in tests/test_chunking.py)
-    as UNION ALL literals."""
-    from doctor_spark.operators.chunking import chunk_documents
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_CHUNK_SYNTH_SQL).alias("text"),
-    )
-    out = chunk_documents(pages, max_tokens=6)
-    return _present(out.select(
-        "doc_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.col("n_tokens").cast("int").alias("n_tokens"),
-        "kind", "chunk_text",
-    ), "doc_id", "chunk_idx")
-
-
-def q_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted posting-list shard — term-keyed (term, df, doc_id,
-    positions) rows over the corpus, the search-index artifact that
-    backs decontamination probes and show-me-the-docs debugging.  The
-    stopword problem is handled BEFORE materializing lists: df counts
-    from a row-local distinct (ONE keyed count), the tiny over-cap
-    term list broadcast-ANTI-joins the token stream, then ONE
-    (term, doc) aggregation; position lists are bounded by document
-    length, never corpus size.  The cap is corpus-proportional —
-    ``max(100, n_docs DIV 20)``, i.e. "a stopword is a term in >5% of
-    documents" with a small-corpus floor — so the shard stays
-    non-trivial at every sf (a fixed cap empties it once every vocab
-    term's df outgrows the constant).  The one driver-side ``count()``
-    is metadata-scale.  The oracle replays the FULL computation
-    (list_zip positions, string_agg, the same greatest() cap)."""
-    from doctor_spark.operators.postings import inverted_postings
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    n_docs = d.where(F.length(F.trim(F.col("text"))) > 0).count()
-    out = inverted_postings(d, df_cap=max(100, n_docs // 20))
-    return _present(out.select(
-        "term",
-        F.col("df").cast("bigint").alias("df"),
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "positions",
-    ), "term", "doc_id")
-
-
-# quote synthesis: constant-string arms so every offset is a literal
-# (expected spans pinned against the kernel in tests/test_quotes.py)
-_QUOTE_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'He said "the motion is denied" in open court.'
-  WHEN 1 THEN '“Curly quoted span here” trailing.'
-  WHEN 2 THEN 'A "tiny" quote and "an unclosed one'
-  ELSE 'no quotes at all here.'
-END
-"""
-
-
-def q_quote_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quotation-span extraction — verbatim quoted passages with
-    source offsets, the span table a memorization/contamination audit
-    joins against the dedup machinery.  Deterministic pair spec
-    (straight toggles, curly must match curly, min-token gate, no
-    nesting) in kernels/quotes.py; one Arrow batch → explode,
-    map-only, zero shuffles.  The oracle replays each constant-string
-    arm's expected spans as UNION ALL literals."""
-    from doctor_spark.operators.quotes import quote_spans
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_QUOTE_SYNTH_SQL).alias("text"),
-    )
-    out = quote_spans(pages, min_tokens=3)
-    return _present(out.select(
-        "doc_id",
-        F.col("quote_idx").cast("int").alias("quote_idx"),
-        F.col("start_off").cast("int").alias("start_off"),
-        F.col("end_off").cast("int").alias("end_off"),
-        "quote_text",
-    ), "doc_id", "quote_idx")
-
-
-# mirror synthesis: three mirror payloads replicated across four m-hosts
-# (host index decorrelated from the content arm via doc_id DIV 8), one
-# boilerplate string on all thirteen h-hosts (over the cap: dropped from
-# pairs but counted in sizes), unique tails.  One snippet parsed by BOTH
-# engines (the _URL_SYNTH_SQL discipline).
-_MIRROR_CONTENT_SQL = """
-CASE CAST(doc_id % 8 AS INT)
-  WHEN 0 THEN 'mirror payload zero'
-  WHEN 1 THEN 'mirror payload one'
-  WHEN 2 THEN 'mirror payload two'
-  WHEN 3 THEN 'shared boilerplate footer'
-  ELSE 'unique doc ' || CAST(doc_id AS STRING)
-END
-"""
-
-_MIRROR_HOST_SQL = """
-CASE WHEN CAST(doc_id % 8 AS INT) < 3
-  THEN 'm' || CAST(CAST(floor(doc_id / 8) AS BIGINT) % 4 AS STRING)
-       || '.example'
-  ELSE 'h' || CAST(doc_id % 13 AS STRING) || '.example'
-END
-"""
-
-
-def q_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mirror-site detection — host pairs serving identical content
-    (software-archive replicas, syndication networks, ccTLD clones),
-    the admission-time signal that retires a whole mirror before
-    per-page dedup pays for it.  ONE (host, fp) distinct exchange; the
-    boilerplate guard drops fingerprints carried by more hosts than
-    ``host_cap`` BEFORE the bounded JVM-side pair expansion (no
-    self-join on the corpus); integer overlap_micro arithmetic is
-    exact in both engines.  The oracle replays the full computation —
-    distinct, sizes, cap, pair expansion via fp self-join, least() —
-    over the same synthesis."""
-    from doctor_spark.operators.mirrors import host_mirror_pairs
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.expr(_MIRROR_HOST_SQL).alias("host"),
-        F.expr(_MIRROR_CONTENT_SQL).alias("text"),
-    )
-    out = host_mirror_pairs(pages, host_cap=8, min_shared=1)
-    return _present(out, "host1", "host2")
-
-
-def q_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KWIC concordance for the probe term 'spark' — keyword-in-context
-    lines with 0-based token position and 3-token contexts, the
-    show-me-the-term-in-context debugging view every quality rule and
-    contamination probe eventually needs.  Hit positions found
-    ROW-LOCALLY (explode fans out per hit, not per token); map-only,
-    zero shuffles, zero Python.  The oracle replays the FULL
-    computation (list_zip positions, clamped slices) on the raw
-    text."""
-    from doctor_spark.operators.concordance import kwic
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return _present(kwic(d, "spark", k=3), "doc_id", "pos")
-
-
-# citation synthesis: five arms — multi-cite prose, series precedence
-# (F. Supp. 2d vs F. Supp. vs F.), Lawyers' Edition prefix pair, no
-# citations, and boundary misfires that must stay out.  One snippet
-# parsed by BOTH engines; the oracle replays the SAME regex.
-_CITE_SYNTH_SQL = """
-CASE CAST(doc_id % 5 AS INT)
-  WHEN 0 THEN 'Roe v. Wade, 410 U.S. 113, 93 S. Ct. 705, reh. denied.'
-  WHEN 1 THEN 'See Smith, 100 F. Supp. 2d 999; affirmed 250 F.3d 44.'
-  WHEN 2 THEN 'Contrast 9 L. Ed. 2d 10 with 1 L. Ed. 2 and 7 F. 44.'
-  WHEN 3 THEN 'Plain prose with no citation, page 113 alone.'
-  ELSE 'Misfires: x1410 U.S. 113 and 410 U.S. 113a stay out.'
-END
-"""
-
-
-def q_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Legal citation extraction — the reference's OWN downstream: doctor
-    feeds CourtListener, whose flagship analysis (eyecite) is exactly
-    this volume/reporter/page cite table.  Java∩RE2 pattern over a
-    longest-prefix-first reporter inventory (both engines share
-    leftmost-first alternation, verified per series in
-    tests/test_citations.py); regexp_extract_all + row-local group
-    extraction, map-only, zero shuffles, zero Python.  The oracle runs
-    the IDENTICAL regex in DuckDB's RE2 over the same synthesis."""
-    from doctor_spark.functions.citations import citation_spans
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_CITE_SYNTH_SQL).alias("text"),
-    )
-    return _present(citation_spans(pages), "doc_id", "cite_idx")
-
-
-def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth curve — the corpus-card diagnostic
-    for crawl diversity (flattening = template-farm re-crawl; jumps =
-    new language/domain).  Term arrival = min doc_id via ONE keyed agg
-    over row-locally distinct tokens; the cumulative window runs over
-    the BUCKET table, metadata-scale by construction.  The oracle
-    replays the full computation (list_distinct, min, floor-bucket,
-    running sums) on the raw text."""
-    from doctor_spark.operators.vocab import vocab_growth
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return _present(vocab_growth(d, bucket_docs=100), "bucket")
-
-
-def q_revisit_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC revisit assignment + record bytes — the capture-time dedup
-    artifact (WARC 1.1 §6.7.2 identical-payload-digest; what Common
-    Crawl writes instead of re-storing identical payloads).  Original
-    = min(struct(date, url)) per digest via ONE map-side-combined agg
-    (NOT a window: a hot digest would land every capture on one
-    reducer) + ONE keyed join; record bytes pure codegen.  Synthesis:
-    50 urls × 28 dates with each payload served at TWO urls, so
-    same-url recaptures, cross-url dedup, and date/url tie-breaks all
-    occur.  The oracle replays the pick via a lexicographic
-    ``min(date || '#' || url)`` (fixed-width ISO dates make it
-    identical to the struct order) and the exact record byte layout."""
-    from doctor_spark.operators.revisit import (
-        revisit_assign,
-        revisit_records,
-    )
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    caps = d.select(
-        F.concat(
-            F.lit("https://cap.example/"),
-            (F.col("doc_id") % 50).cast("string"),
-        ).alias("url"),
-        F.concat(
-            F.lit("2024-02-"),
-            F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
-            F.lit("T00:00:00Z"),
-        ).alias("date_s"),
-        F.concat(
-            F.lit("capture body "), (F.col("doc_id") % 25).cast("string")
-        ).alias("text"),
-    )
-    out = revisit_records(revisit_assign(caps))
-    return _present(out.select(
-        "url",
-        "date_s",
-        "digest",
-        "is_revisit",
-        "refers_url",
-        "refers_date",
-        F.md5(F.col("record")).alias("rec_md5"),
-        F.length(F.col("record")).cast("bigint").alias("rec_bytes"),
-    ), "url", "date_s", "digest")
-
-
-# RAKE synthesis: four constant arms — the paper-style arithmetic doc,
-# a max_phrase=3 run-splitting doc with a 9e6 tie broken by phrase
-# order, a stopwords-only-plus-one doc, and a no-candidates doc.
-# Expected rows are literals pinned against the kernel in
-# tests/test_rake.py.
-_RAKE_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'deep learning of deep networks, deep learning wins'
-  WHEN 1 THEN 'the quick brown fox jumps over a lazy dog'
-  WHEN 2 THEN 'stop the of and to in'
-  ELSE '12345 67; ..'
-END
-"""
-
-
-def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyword extraction (Rose et al. 2010) — per-document
-    keyphrases from degree/frequency word scores, integer micro
-    arithmetic so ranks replay exactly.  Per-document by design: one
-    Arrow kernel batch → explode, map-only, zero shuffles at any
-    corpus size.  The oracle replays each constant arm's expected
-    keyword rows as literals (pinned against the kernel in
-    tests/test_rake.py)."""
-    from doctor_spark.operators.rake import rake_table
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_RAKE_SYNTH_SQL).alias("text"),
-    )
-    out = rake_table(pages, top_k=5, max_phrase=3)
-    return _present(out.select(
-        "doc_id",
-        F.col("kw_rank").cast("int").alias("kw_rank"),
-        "phrase",
-        F.col("score_micro").cast("bigint").alias("score_micro"),
-        F.col("n_words").cast("int").alias("n_words"),
-        F.col("n_occurrences").cast("int").alias("n_occurrences"),
-    ), "doc_id", "kw_rank")
-
-
-def q_char_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-coverage table — SentencePiece's character_coverage
-    input: corpus character counts ranked with cumulative micro
-    coverage.  The Arrow kernel emits PER-DOCUMENT histograms so the
-    explode fans out per distinct character per doc (alphabet-bounded,
-    never text-length-bounded); ONE map-side-combined keyed sum; the
-    rank/cumulative window runs over the alphabet-sized aggregate.
-    The oracle replays the full computation (char split, counts,
-    row_number, running sum, integer DIV) on the raw text."""
-    from doctor_spark.operators.charcov import char_coverage
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return _present(char_coverage(d), "rank")
-
-
-# Trap-shaped URL synthesis — one SQL snippet parsed by Spark's F.expr
-# AND spliced verbatim into the DuckDB oracle (_URL_SYNTH_SQL
-# discipline).  Three host tiers: news* (clean: shallow calendar pages
-# + 2-param articles), blog* (~1/3 param explosions → above zero,
-# below the flag line), archive* (all five trap arms: deep calendar,
-# path cycle, deep path, ;jsessionid path param, ?phpsessid query
-# param) — so the rollup exercises zero / sub-threshold / flagged.
-_TRAP_SYNTH_SQL = """
-'http://' ||
-CASE WHEN doc_id % 10 < 4
-     THEN 'news' || CAST(doc_id % 3 AS VARCHAR(4)) || '.example.org'
-     WHEN doc_id % 10 < 7
-     THEN 'blog' || CAST(doc_id % 2 AS VARCHAR(4)) || '.example.com'
-     ELSE 'archive' || CAST(doc_id % 4 AS VARCHAR(4)) || '.example.net'
-END ||
-CASE WHEN doc_id % 10 < 4 THEN
-  CASE WHEN doc_id % 2 = 0
-       THEN '/' || CAST(2010 + doc_id % 10 AS VARCHAR(8)) || '/' ||
-            CAST(1 + doc_id % 12 AS VARCHAR(4)) || '/' ||
-            CAST(1 + doc_id % 28 AS VARCHAR(4))
-       ELSE '/articles/' || CAST(doc_id AS VARCHAR(20)) || '?id=' ||
-            CAST(doc_id AS VARCHAR(20)) || '&page=2'
-  END
-WHEN doc_id % 10 < 7 THEN
-  CASE WHEN doc_id % 3 = 0
-       THEN '/item?id=' || CAST(doc_id AS VARCHAR(20)) ||
-            '&a=1&b=2&c=3&d=4&e=5'
-       ELSE '/posts/' || CAST(doc_id AS VARCHAR(20))
-  END
-ELSE
-  CASE CAST(doc_id % 5 AS INT)
-    WHEN 0 THEN '/blog/' || CAST(2010 + doc_id % 10 AS VARCHAR(8)) ||
-                '/' || CAST(1 + doc_id % 12 AS VARCHAR(4)) || '/' ||
-                CAST(1 + doc_id % 28 AS VARCHAR(4)) || '/post-' ||
-                CAST(doc_id AS VARCHAR(20))
-    WHEN 1 THEN '/forum/thread/forum/thread/view'
-    WHEN 2 THEN '/a/b/c/d/e/f/g/h/' || CAST(doc_id AS VARCHAR(20))
-    WHEN 3 THEN '/cart;jsessionid=' ||
-                substr(md5(CAST(doc_id AS VARCHAR(20))), 1, 12)
-    ELSE '/login?phpsessid=' ||
-         substr(md5(CAST(doc_id AS VARCHAR(20))), 1, 16)
-  END
-END
-"""
-
-
-def q_crawler_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawler-trap detection (the Heritrix/Nutch URL-space pathology
-    gate): per-URL trap signals — path depth, repeated-segment excess,
-    /YYYY/MM/DD calendar shape, query-param count, session-id minting —
-    as pure codegen'd Column expressions (zero Python, zero shuffles),
-    rolled up to a per-host quarantine table in ONE map-side-combined
-    keyed sum.  The oracle replays the FULL computation (host/path
-    parse, every regex, the threshold disjunction, int64-micro trap
-    fraction) in DuckDB over the shared synth snippet."""
-    from doctor_spark.operators.traps import host_trap_table
-
-    pages = _docs(spark, sf_dir).select(
-        F.expr(_TRAP_SYNTH_SQL).alias("url")
-    )
-    return _present(host_trap_table(pages), "host")
-
-
-# IDN host arms — constant per residue class so the decoded forms are
-# pinnable literals (the RAKE discipline; punycode is not expressible
-# in SQL).  Arms: honest IDN (münchen), pure-Cyrillic lookalike,
-# mixed-script lookalike, pure-Cyrillic non-colliding (пример.рф),
-# the imitated ASCII host, an ASCII near-miss (munchen.de — skeleton
-# does NOT fold ü, proving precision), a plain host, and a malformed
-# xn-- label (fail-open pass-through).
-_IDN_SYNTH_SQL = """
-CASE CAST(doc_id % 8 AS INT)
-  WHEN 0 THEN 'xn--mnchen-3ya.de'
-  WHEN 1 THEN 'xn--80ak6aa92e.com'
-  WHEN 2 THEN 'xn--pple-43d.com'
-  WHEN 3 THEN 'xn--e1afmkfd.xn--p1ai'
-  WHEN 4 THEN 'apple.com'
-  WHEN 5 THEN 'munchen.de'
-  WHEN 6 THEN 'example.org'
-  ELSE 'xn--!!!.com'
-END
-"""
-
-
-def q_idn_homographs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IDN decoding + homograph screening: every xn-- label punycode-
-    decoded (clean-room RFC 3492, kernels/punycode.py — differential-
-    tested against the stdlib codec on 1500 random strings), TR39-style
-    mixed-script flag, confusable skeleton, and the skeleton-collision
-    join against the corpus's ASCII hosts (broadcast — the IDN side of
-    a real crawl is <1%% of hosts).  Runs on the DISTINCT host table so
-    the Python decode cost lands on host cardinality, not page count.
-    Oracle: pinned literals per constant arm (tests/test_idn.py pins
-    the same rows against the kernel)."""
-    from doctor_spark.operators.idn import homograph_pairs, idn_host_table
-
-    hosts = _docs(spark, sf_dir).select(
-        F.expr(_IDN_SYNTH_SQL).alias("host")
-    )
-    t = idn_host_table(hosts.distinct())
-    pairs = homograph_pairs(hosts).select(
-        F.col("idn_host").alias("host"),
-        F.col("ascii_host").alias("homograph_of"),
-    )
-    return _present(
-        t.join(pairs, "host", "left").select(
-            "host", "unicode_host", "is_idn", "mixed_script",
-            "skeleton", "homograph_of",
-        ),
-        "host",
-    )
-
-
-# BM25 query set — terms drawn from the synthetic documents vocabulary,
-# shared verbatim with the oracle's VALUES list.
-_BM25_QUERIES = (
-    "sort merge join",
-    "window agg",
-    "spark stream batch",
-    "customer data table scan",
-)
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 ranked retrieval over the corpus (Lucene's
-    non-negative idf variant) — the scoring stage on top of the
-    inverted-index artifact: four constant queries against every
-    document, top-10 each.  The corpus-sized token stream is pruned by
-    a BROADCAST semi-join against the query vocabulary BEFORE the one
-    real shuffle (the (doc, term) tf aggregation, checkpoint-
-    pinned so the df count reuses it instead of re-exploding the
-    corpus); idf is micro-quantized int64 immediately after the only
-    ``ln``, and per-term contributions floor to int64 micro BEFORE the
-    score sum, so aggregation order cannot move the result.  The
-    oracle replays the FULL computation — tokenize, tf, df, the exact
-    parenthesization of the tf-normalization double arithmetic, floor/
-    micro discipline, (score DESC, doc_id) row_number — in DuckDB."""
-    from doctor_spark.operators.ranking import bm25_topk
-
-    queries = spark.createDataFrame(
-        list(enumerate(_BM25_QUERIES)), "query_id long, query_text string"
-    )
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return _present(bm25_topk(d, queries, k=10), "query_id", "rank")
-
-
-# HITS edge generators — a different affine family than _PR_EDGE_GENS so
-# the two graph queries do not share a fixture.
-_HITS_EDGE_GENS = ((29, 5), (83, 13), (157, 17))
-
-
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact HITS hubs & authorities (int64 micro scores, L-inf
-    normalization via the truncating DIV both engines share) over a
-    deterministic affine link graph on doc_ids — the query-independent
-    hub/authority table webgraph toolkits ship next to PageRank.  The
-    ITERATIVE distributed operator (edge table checkpointed twice,
-    partitioned by src and by dst, so per-iteration joins never
-    re-shuffle edges) is hash-checked against a 3-iteration unrolled
-    CTE oracle."""
-    from doctor_spark.operators.graph import hits
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _HITS_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
-    out = hits(edges, n_iter=3)
-    return _present(out.select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("hub_micro").cast("bigint").alias("hub_micro"),
-        F.col("auth_micro").cast("bigint").alias("auth_micro"),
-    ), "doc_id")
-
-
-# TrustRank edge generators + seed rule — distinct affine family from
-# _PR_EDGE_GENS/_HITS_EDGE_GENS; seeds are every 97th doc_id (a curated
-# trusted list is tiny by contract, and 97 is coprime to the generators'
-# moduli so seeds scatter across the graph).
-_TR_EDGE_GENS = ((41, 3), (127, 19), (211, 23))
-_TR_SEED_MOD = 97
-
-
-def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact TrustRank (Gyongyi et al., VLDB 2004): personalized
-    PageRank whose teleport lands only on a trusted seed set — the
-    link-spam demotion stage.  Same int64-micro/truncating-DIV
-    discipline as link_pagerank, seed-weighted teleport; ITERATIVE
-    distributed operator hash-checked against a 4-level unrolled CTE
-    oracle.  Pages unreachable from any seed settle at exactly 0."""
-    from doctor_spark.operators.graph import trustrank
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _TR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
-    seeds = docs.where(
-        F.col("doc_id") % F.lit(_TR_SEED_MOD) == 0
-    ).select(F.col("doc_id").alias("node"))
-    out = trustrank(edges, seeds, n_iter=4)
-    return _present(out.select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("trust_micro").cast("bigint").alias("trust_micro"),
-    ), "doc_id")
-
-
-# Porter-stemming synthesis arms — a word inventory exercising every
-# step of the 1980 algorithm (plural strip, -eed/-ed/-ing with the
-# recoding rules, y->i, the step-2/3 suffix tables, step-4 removal,
-# step-5 e-drop / ll-single).  Constant per residue class so the
-# (term -> stem) map is a pinned literal table; _STEM_MAP is asserted
-# against the kernel in tests/test_stemming.py (the RAKE/IDN
-# discipline: the oracle stays honest because the literals are pinned).
-_STEM_ARMS = (
-    "caresses ponies ties caress cats connect connected",
-    "feed agreed plastered motoring sing connecting connection",
-    "conflated troubled sized hopping tanned falling hissing",
-    "happy sky relational conditional rational connections",
-    "digitizer operator feudalism decisiveness hopefulness",
-    "formative formalize electrical electriciti hopeful goodness",
-    "revival allowance inference airliner gyroscopic adjustable defensible",
-    "probate rate cease controll roll running runs argument arguments",
-)
-
-_STEM_MAP = {
-    "adjustable": "adjust",
-    "agreed": "agre",
-    "airliner": "airlin",
-    "allowance": "allow",
-    "argument": "argument",
-    "arguments": "argument",
-    "caress": "caress",
-    "caresses": "caress",
-    "cats": "cat",
-    "cease": "ceas",
-    "conditional": "condit",
-    "conflated": "conflat",
-    "connect": "connect",
-    "connected": "connect",
-    "connecting": "connect",
-    "connection": "connect",
-    "connections": "connect",
-    "controll": "control",
-    "decisiveness": "decis",
-    "defensible": "defens",
-    "digitizer": "digit",
-    "electrical": "electr",
-    "electriciti": "electr",
-    "falling": "fall",
-    "feed": "feed",
-    "feudalism": "feudal",
-    "formalize": "formal",
-    "formative": "form",
-    "goodness": "good",
-    "gyroscopic": "gyroscop",
-    "happy": "happi",
-    "hissing": "hiss",
-    "hopeful": "hope",
-    "hopefulness": "hope",
-    "hopping": "hop",
-    "inference": "infer",
-    "motoring": "motor",
-    "operator": "oper",
-    "plastered": "plaster",
-    "ponies": "poni",
-    "probate": "probat",
-    "rate": "rate",
-    "rational": "ration",
-    "relational": "relat",
-    "revival": "reviv",
-    "roll": "roll",
-    "running": "run",
-    "runs": "run",
-    "sing": "sing",
-    "sized": "size",
-    "sky": "sky",
-    "tanned": "tan",
-    "ties": "ti",
-    "troubled": "troubl",
-}
-
-_STEM_SYNTH_SQL = "CASE CAST(doc_id % 8 AS INT) " + " ".join(
-    f"WHEN {i} THEN '{arm}'" for i, arm in enumerate(_STEM_ARMS[:-1])
-) + f" ELSE '{_STEM_ARMS[-1]}' END"
-
-
-def q_stem_conflation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Porter stem-conflation rollup (M. F. Porter 1980, clean-room
-    kernels/porter.py): the index-normalization stage between
-    tokenization and postings/BM25.  The Python stemmer runs over the
-    DISTINCT vocabulary only (IDN distinct-host discipline — cost on
-    vocab cardinality, never token count) and the (term, stem) map
-    re-attaches by keyed join; the conflation aggregate is bounded by
-    inflection-family size.  Oracle: pinned literal CASE map over the
-    synthesis arms, asserted against the kernel in
-    tests/test_stemming.py."""
-    from doctor_spark.operators.stemming import stem_conflation
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
-        F.expr(_STEM_SYNTH_SQL).alias("text")
-    )
-    return _present(stem_conflation(d), "stem")
-
-
-# Host synthesis for the split query — arms exercise the registrable-
-# domain rule: plain eTLD+1, second-level registries (.co.uk/.com.au,
-# needing the 3-label form), mixed case, a dotless single label, and a
-# deep subdomain chain.
-_SPLIT_HOST_SQL = """
-CASE CAST(doc_id % 6 AS INT)
-  WHEN 0 THEN 'www.news' || CAST(doc_id % 23 AS VARCHAR(4)) || '.example.com'
-  WHEN 1 THEN 'a.b.site' || CAST(doc_id % 17 AS VARCHAR(4)) || '.co.uk'
-  WHEN 2 THEN 'cdn.shop' || CAST(doc_id % 13 AS VARCHAR(4)) || '.com.au'
-  WHEN 3 THEN 'Blog' || CAST(doc_id % 11 AS VARCHAR(4)) || '.Example.ORG'
-  WHEN 4 THEN 'host' || CAST(doc_id % 7 AS VARCHAR(4)) || 'nodots'
-  ELSE 'deep.x.y.site' || CAST(doc_id % 19 AS VARCHAR(4)) || '.net'
-END
-"""
-
-
-def q_host_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-disjoint train/val/test split audit — the leakage gate:
-    every page of a registrable domain (eTLD+1 approximation, known
-    second-level registries handled) lands in exactly one split via
-    md5-bucket thresholds (no RNG — reproducible on any cluster size /
-    engine / retry).  Assignment is a pure projection (zero shuffles
-    over 10^12 rows); the audit rollup pre-combines on (split, domain)
-    so hot sites collapse map-side.  The oracle replays the FULL
-    computation — domain regexes + suffix list, md5 bucketing,
-    thresholds, two-level rollup — in DuckDB."""
-    from doctor_spark.operators.splits import assign_split, split_summary
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
-        F.expr(_SPLIT_HOST_SQL).alias("host")
-    )
-    return _present(split_summary(assign_split(d)), "split")
-
-
-def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf rank-frequency fit over the corpus vocabulary — OLS of
-    ln(freq) on ln(rank), top-1000 ranks (the statistically honest
-    HEAD fit, and the int64 overflow bound).  ln is micro-quantized
-    immediately; moment sums are int64 (order-free); only the final
-    slope/intercept ratios are doubles with a fixed association order
-    the oracle mirrors parenthesis-for-parenthesis.  ONE corpus-sized
-    exchange (tf agg); ranking window runs on the vocabulary-sized
-    aggregate."""
-    from doctor_spark.operators.zipf import zipf_fit
-
-    return zipf_fit(_docs(spark, sf_dir))
-
-
-def q_freq_of_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing count-of-counts: how many vocabulary terms occur
-    exactly ``freq`` times — the unseen-mass input to Good-Turing /
-    Katz smoothing.  Two stacked keyed aggregates, the second over a
-    frequency-histogram-sized table."""
-    from doctor_spark.operators.zipf import freq_of_freqs
-
-    return _present(freq_of_freqs(_docs(spark, sf_dir)), "freq")
-
-
-# Content-defined-chunking synthesis — 8 constant payload arms built
-# from shared blocks (B1/B2/B3) plus unique prefixes/suffixes, so the
-# chunk table exercises: shared 192-byte prefix chunks across arms
-# (0/1 and 3/4), intra-arm repeated chunks (the period-62 B3 block),
-# forced max-size cuts, natural gear cuts, and a singleton payload.
-# _CDC_CHUNKS pins the kernel's exact output per arm; asserted in
-# tests/test_cdc.py (the pinned-literal oracle discipline).
-_CDC_B1 = ("the quick brown fox jumps over the lazy dog and runs far "
-           "away. " * 4).strip()
-_CDC_B2 = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed "
-           "do eiusmod. " * 4).strip()
-_CDC_B3 = ("header nav footer sidebar template chrome banner widget "
-           "menu. " * 3).strip()
-_CDC_ARMS = (
-    _CDC_B1,
-    _CDC_B1 + " " + "unique-zero-suffix-0123456789abcdef",
-    "unique-one-prefix-fedcba9876543210 " + _CDC_B1,
-    _CDC_B2,
-    _CDC_B2 + " " + _CDC_B3,
-    _CDC_B3 + " tail-five-aaaaaaaaaaaaaaaa",
-    "solo-six-payload " + "x" * 150 + " end-of-six",
-    _CDC_B1[:120] + " spliced " + _CDC_B2[:120],
-)
-
-_CDC_CHUNKS = (
-    (0, 0, 192, "d3455b55f699107f465ebe048144b630"),
-    (0, 192, 59, "71e6fd09d4626cad297da9cdba4fbc48"),
-    (1, 0, 192, "d3455b55f699107f465ebe048144b630"),
-    (1, 192, 95, "475b519e6014a3b507bf6b130b42e4af"),
-    (2, 0, 192, "07b3bd245013f9bcb1eb79f30887e6cf"),
-    (2, 192, 94, "d4b23b817cd235c75e081b9790394360"),
-    (3, 0, 192, "5ba5cba0b4f89d36958a5e400d5862e2"),
-    (3, 192, 91, "c13ec9a0cd933e78340b85bb3f9de686"),
-    (4, 0, 192, "5ba5cba0b4f89d36958a5e400d5862e2"),
-    (4, 192, 147, "cbb351ae4708fb85dd4210038841e58e"),
-    (4, 339, 62, "ef45dc67735884c7d697206d829b3cd5"),
-    (4, 401, 62, "ef45dc67735884c7d697206d829b3cd5"),
-    (4, 463, 6, "e4b80fa15c7f04feb0e6a4062da9c578"),
-    (5, 0, 55, "abdad92c28ffd66e31b43aa57a844016"),
-    (5, 55, 62, "ef45dc67735884c7d697206d829b3cd5"),
-    (5, 117, 62, "ef45dc67735884c7d697206d829b3cd5"),
-    (5, 179, 33, "ad872440c21c683b401b6077c405732a"),
-    (6, 0, 178, "308900d556faf2236c70cd63b56b55d1"),
-    (7, 0, 192, "37516dea36cfbbeaeec76df86849bbfb"),
-    (7, 192, 57, "697124197c63b55f97ee6c3ecaf07424"),
-)
-
-_CDC_SYNTH_SQL = "CASE CAST(doc_id % 8 AS INT) " + " ".join(
-    f"WHEN {i} THEN '{arm}'" for i, arm in enumerate(_CDC_ARMS[:-1])
-) + f" ELSE '{_CDC_ARMS[-1]}' END"
-
-
-def q_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined-chunking dedup accounting (gear-CDC, the FastCDC
-    core loop, kernels/cdc.py): chunk every payload on content-defined
-    boundaries, store each distinct chunk once, report the byte-level
-    dedup ratio — the sub-payload complement to WARC revisit dedup.
-    ONE Arrow chunking pass + ONE chunk-hash keyed aggregate (map-side
-    combine absorbs hot chunks).  Oracle: per-arm chunk tables as
-    pinned VALUES literals (asserted against the kernel in
-    tests/test_cdc.py) joined to arm counts — pure closed-form
-    arithmetic."""
-    from doctor_spark.operators.cdc import cdc_chunks, cdc_dedup_stats
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
-        F.encode(F.expr(_CDC_SYNTH_SQL), "UTF-8").alias("payload")
-    )
-    ch = cdc_chunks(d, min_size=24, max_size=192, mask=0x3F)
-    np = d.agg(F.count("*").alias("n_payloads"))
-    return cdc_dedup_stats(ch, np)
-
-
-# Layout-fingerprint synthesis — arm 0 and 1 share a template with
-# different copy (SAME fingerprint: the operator's point), arms 2-4 are
-# distinct structures incl. a tag-soup arm.  Note the arms avoid single
-# quotes so they splice into both engines' CASE literals verbatim.
-# _LAYOUT_FPS pins the kernel's fingerprints (tests/test_layout.py).
-_LAYOUT_ARMS = (
-    "<html><body><div class=art-x><h1>First story</h1><p>alpha beta"
-    "</p><p>gamma</p></div></body></html>",
-    "<html><body><div class=art-y><h1>Second story</h1><p>delta epsilon"
-    " zeta</p><p>eta</p></div></body></html>",
-    "<html><body><div><div class=inner><h1>Nested</h1><p>copy</p></div>"
-    "</div></body></html>",
-    "<html><body><table><tr><td>cell</td><td>cell2</td></tr></table>"
-    "</body></html>",
-    "<div><p>unclosed<li>stray</div></td><span>tail</span>",
-)
-_LAYOUT_FPS = (
-    "93d0acdf3f3f25a2a940b500e096a998",
-    "93d0acdf3f3f25a2a940b500e096a998",
-    "a170a67b72e48d6bd302cf95a49b4472",
-    "09c5915179cf4ad381961e875fca82ac",
-    "4eaeefc0a2f3b74ca01d78c911f5fa2f",
-)
-
-_LAYOUT_SYNTH_SQL = "CASE CAST(doc_id % 5 AS INT) " + " ".join(
-    f"WHEN {i} THEN '{arm}'" for i, arm in enumerate(_LAYOUT_ARMS[:-1])
-) + f" ELSE '{_LAYOUT_ARMS[-1]}' END"
-
-_LAYOUT_HOST_SQL = (
-    "'site' || CAST(doc_id % 7 AS VARCHAR(4)) || '.example.org'"
-)
-
-
-def q_layout_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Template-family clustering by DOM tag-path fingerprint
-    (kernels/layout.py — structural twin of content fingerprinting:
-    same template + different copy = same family).  ONE Arrow pass +
-    ONE map-side-combined keyed agg; per-family host lists capped (the
-    mirror-operator bounded-collect discipline), counts exact.
-    Oracle: pinned per-arm fingerprints (asserted against the kernel
-    in tests/test_layout.py) + closed-form host-set arithmetic over
-    the shared synthesis."""
-    from doctor_spark.operators.layout import layout_clusters
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
-        F.expr(_LAYOUT_SYNTH_SQL).alias("html"),
-        F.expr(_LAYOUT_HOST_SQL).alias("host"),
-    )
-    return _present(layout_clusters(d), "layout_fp")
-
-
-def q_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The candidate->verify rung of production near-dup dedup: MinHash
-    LSH proposes pairs (banding = cheap recall + band-collision false
-    positives), exact Levenshtein similarity verifies each candidate —
-    sketch to propose, exact-verify to decide, never all-pairs.  The
-    verify stage is pure JVM codegen (F.levenshtein); the only Python
-    is the band-signature UDF the minhash family already pays.  Oracle:
-    the minhash replay wrapped as a subquery, then DuckDB levenshtein +
-    the same integer similarity arithmetic (engines agree exactly on
-    ASCII; the byte-vs-codepoint divergence on non-ASCII is documented
-    on the operator)."""
-    from doctor_spark.operators.dedup import verified_neardup_pairs
-
-    out = verified_neardup_pairs(
-        _docs_spread(spark, sf_dir), sim_threshold_micro=600_000
-    )
-    return _present(out.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        "lev",
-        "sim_micro",
-    ), "id_a", "id_b")
-
-
-def q_temporal_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal-cutoff contamination audit: verified near-dup pairs
-    (the minhash->levenshtein rung) crossing a train/test time
-    boundary — re-crawls and syndication duplicate content across
-    time, so a temporal split leaks where a host-disjoint split cannot;
-    this query MEASURES that residual.  Partition arm is deterministic
-    (crawl day = doc_id % 30, cutoff at day 15 — the timestamp-free
-    stand-in the shared synthesis discipline allows).  Oracle: the
-    verified-neardup replay as a subquery + the same crossing-count
-    arithmetic."""
-    from doctor_spark.operators.dedup import verified_neardup_pairs
-    from doctor_spark.operators.splits import cross_split_leakage
-
-    d = _docs_spread(spark, sf_dir)
-    pairs = verified_neardup_pairs(d, sim_threshold_micro=600_000)
-    assign = d.select(
-        F.col("doc_id").alias("id"),
-        F.when(F.col("doc_id") % 30 < 15, "train")
-        .otherwise("test").alias("part"),
-    )
-    return cross_split_leakage(pairs, assign)
-
-
-def q_best_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passage/snippet extraction over the BM25 top-5: the densest
-    12-token window of query-term hits per winning document, earliest
-    window on ties — the snippet rung of the retrieval stack (postings
-    -> BM25 -> passages).  Corpus cost is bm25_topk's; the sliding-
-    window arithmetic (pure integer higher-order Column exprs, zero
-    Python) touches only the k-times-|Q| winners attached by one keyed
-    text join.  Oracle: the BM25 replay as a subquery + the same list
-    arithmetic (list_sum over clamped slices, list_position argmax)."""
-    from doctor_spark.operators.ranking import best_passages
-
-    queries = spark.createDataFrame(
-        list(enumerate(_BM25_QUERIES)), "query_id long, query_text string"
-    )
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return _present(
-        best_passages(d, queries, k=5, window=12), "query_id", "rank"
-    )
-
-
-# clean-split summarization synthesis: every '. ' is a real boundary
-# (uppercase opener, no abbreviations/decimals/quotes), so the kernel
-# splitter and the oracle's split-and-reappend provably agree — the
-# agreement is pinned per arm in tests/test_summary.py.  Arm 0 has a
-# 3-sentence chain + an isolated sentence; arm 1 a triangle; arm 2 a
-# single edge; arm 3 no edges (emits no rows).
-_SUMM_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'The court granted the motion today. The motion cited three prior rulings. Those rulings shaped the court docket. Unrelated weather news follows here.'
-  WHEN 1 THEN 'Counsel filed the appeal brief. The appeal brief raised two claims. Judges reviewed the appeal brief.'
-  WHEN 2 THEN 'Spark executes the query plan. The query plan shuffles data.'
-  ELSE 'Alpha beta gamma. Delta epsilon zeta. Eta theta iota.'
-END
-"""
-
-
-def q_textrank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document extractive summarization (TextRank §4): integer
-    PageRank over each doc's sentence graph (edge = >= 2 shared distinct
-    [a-z]+ words), top-2 sentences per doc.  Sentences come from the
-    REAL kernel splitter; the synthesis arms are clean-split by
-    construction so the oracle's split-and-reappend replay is provably
-    identical (pinned in tests/test_summary.py).  Edge build is a
-    doc_id-keyed self-join (sentences² per doc, never corpus-sized);
-    ranking reuses the link-graph integer PageRank on encoded
-    (doc_id*1024+sidx) nodes."""
-    from doctor_spark.operators.graph import textrank_summary
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_SUMM_SYNTH_SQL).alias("text")
-    )
-    return textrank_summary(d, k=2).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "sidx", "rank", "rank_micro", "sentence",
-    )
-
-
-def q_postings_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index storage accounting: per-term VByte posting-list size from
-    delta-encoded doc ids (first gap = doc_id+1, then diffs; 1 byte per
-    started 7-bit group) vs the 8-byte fixed baseline, ratio in int64
-    micro.  One exchange on term feeds both the lag window and the
-    per-term aggregate.  Oracle: identical lag/CASE arithmetic."""
-    from doctor_spark.operators.postings import postings_compression
-
-    return postings_compression(_docs(spark, sf_dir)).select(
-        "term", "df", "vbyte_bytes", "fixed_bytes", "ratio_micro",
-    )
-
-
-def q_containment_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-ESTIMATED directed containment — the sketch path for
-    containment_pairs at web scale: production-width signatures (128
-    perms / 16 bands) generate candidates through the single-exchange
-    band join, then c_est = m·(|A|+|B|)·1e6 DIV ((128+m)·|A|) from the
-    signature-agreement count m and the EXACT shingle counts — pure
-    int64, so the estimator is bit-exact across engines while only
-    approximating the true containment (quality bounded vs the exact
-    operator in tests/test_containment_est.py)."""
-    from doctor_spark.operators.dedup import containment_est_pairs
-
-    p = containment_est_pairs(
-        _docs_spread(spark, sf_dir), threshold=0.5, min_shingles=5,
-    )
-    return p.select(
-        F.col("src_id").cast("bigint").alias("src_id"),
-        F.col("dst_id").cast("bigint").alias("dst_id"),
-        F.col("m").cast("bigint").alias("m"),
-        F.col("c_est_micro").cast("bigint").alias("c_est_micro"),
-    )
-
-
-def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl depth from a trusted seed set: multi-source BFS (unrolled
-    integer Bellman-Ford, 4 rounds) over the shared affine link graph,
-    seeds = doc_id % 100 == 0 (the TrustRank-style deterministic seed
-    rule).  Nodes within 4 hops carry exact depth; farther nodes are
-    absent.  Each round is one keyed join + one order-free min
-    aggregate.  Oracle: the identical 4-level min-relaxation CTE."""
-    from doctor_spark.operators.graph import seed_distances
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
-    seeds = docs.where(F.col("doc_id") % 100 == 0).select("doc_id")
-    d = seed_distances(edges, seeds, n_iter=4)
-    return d.select(
-        F.col("node").cast("bigint").alias("doc_id"),
-        F.col("depth").cast("bigint").alias("depth"),
-    )
-
-
-def q_para_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-level language segmentation (CCNet's processing unit,
-    Wenzek et al. 2020): newline paragraphs, the shared 27-language
-    identifier per paragraph (same single source of truth as lang_id),
-    rolled up to a per-doc profile — plurality language (ties by lang
-    asc), int64-micro plurality fraction, mixed flag.  Row-local Arrow
-    vote + one (doc_id, lang) map-side-combined aggregate; the doc_id
-    window and final rollup reuse the partitioning.  Oracle: unnest on
-    chr(10) + the parameterized lang_guess SQL mirror per paragraph +
-    identical integer rollup."""
-    from doctor_spark.operators.paralang import paragraph_langs
-
-    return paragraph_langs(_docs(spark, sf_dir)).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_paras", "n_langs", "major_lang", "major_frac_micro", "mixed",
-    )
-
-
-def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pseudo-relevance-feedback expansion (Rocchio/Robertson term
-    selection): BM25 top-5 docs per query as assumed-relevant, candidate
-    terms scored sum-tf × micro-idf (int64, order-free), query terms
-    excluded, top-5 per query by (weight DESC, term ASC).  Both
-    corpus-sized token streams broadcast-pruned before their exchanges
-    (winning doc_ids / candidate vocabulary).  Oracle: the BM25 replay's
-    CTEs + identical integer weight arithmetic."""
-    from doctor_spark.operators.ranking import prf_expansion
-
-    queries = spark.createDataFrame(
-        list(enumerate(_BM25_QUERIES)), "query_id long, query_text string"
-    )
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return prf_expansion(d, queries, k_fb=5, m=5)
-
-
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broder (1997) shingle CONTAINMENT c(A->B) = |S(A)∩S(B)| / |S(A)|
-    — the asymmetric dedup rung Jaccard misses: a syndicated article
-    pasted into a longer page has low resemblance but containment ≈ 1
-    in one direction.  DIRECTED output (src contained in dst); same
-    inverted-index cost envelope as dedup_ngram_jaccard (one shingle
-    exchange reused by DF-cap window + self-join), directed rows
-    projected from the undirected aggregate so the join pays a<b only.
-    Oracle: the jaccard oracle's shingle/hash/cap CTEs + a two-way
-    directed projection."""
-    from doctor_spark.operators.dedup import containment_pairs
-
-    p = containment_pairs(
-        _docs(spark, sf_dir), threshold=0.5, max_shingle_df=100,
-        min_shingles=5,
-    )
-    return p.select(
-        F.col("src_id").cast("bigint").alias("src_id"),
-        F.col("dst_id").cast("bigint").alias("dst_id"),
-        F.col("containment").cast("double").alias("containment"),
-    )
-
-
-def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank (Mihalcea & Tarau 2004) corpus keywords: integer-exact
-    PageRank over the word co-occurrence graph (adjacent kept-token
-    pairs, undirected/unweighted, 0.15/0.85 teleport/damping).  Token
-    gate: ^[a-z]{3,}$ minus the shared 'en' stopword inventory (the
-    single source of truth the lang_id oracle also splices).  Pair
-    generation is row-local array work; the graph is vocabulary-sized;
-    top-50 by (rank_micro DESC, word) via TakeOrderedAndProject.
-    Oracle: list_transform pair synthesis + the unrolled integer
-    PageRank CTE of link_pagerank."""
-    from doctor_spark.operators.graph import textrank_keywords
-
-    return textrank_keywords(
-        _docs(spark, sf_dir),
-        stopwords=tuple(sorted(_LANG_STOPWORDS["en"])),
-        min_len=3, k=50, n_iter=4,
-    )
-
-
-def q_unicode_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode normalization cleanup (the ftfy/NFC rung of a C4/Dolma
-    cleaning recipe): NFC composition + explicit space-like /
-    zero-width / control sets (functions/text.py module constants —
-    the oracle replays the same sets as RE2 classes).  Map-only Arrow
-    kernel, zero shuffles.  The cleaned TEXT is hash-compared, so
-    Python's unicodedata NFC and DuckDB's utf8proc NFC are checked
-    against each other on every row; six dirty-prefix arms exercise
-    combining composition, jamo, the NFC-keeps-ligatures property,
-    and each character set."""
-    from doctor_spark.functions.text import unicode_clean_udf
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    arm = (F.col("doc_id") % 6).cast("int")
-    dirty = (
-        # combining acute (NFC composes) + ZWSP
-        F.when(arm == 0, F.concat(F.lit("Cafe\u0301\u200b "), F.col("text")))
-        # NBSP + IDEOGRAPHIC SPACE
-        .when(arm == 1, F.concat(F.lit("A\u00a0B\u3000C "), F.col("text")))
-        # C0 control, DEL, C1 NEL
-        .when(arm == 2,
-              F.concat(F.lit("X\u0001Y\u007f\u0085Z "), F.col("text")))
-        # fi ligature (NFC KEEPS it) + soft hyphen (dropped)
-        .when(arm == 3, F.concat(F.lit("\ufb01\u00adle "), F.col("text")))
-        # hangul jamo pair (NFC composes to a syllable)
-        .when(arm == 4, F.concat(F.lit("\u1100\u1161 "), F.col("text")))
-        .otherwise(F.col("text"))
-    )
-    k = unicode_clean_udf()(dirty)
-    return _present(d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        k.getField("clean").alias("clean"),
-        k.getField("n_space_mapped").alias("n_space_mapped"),
-        k.getField("n_zero_width").alias("n_zero_width"),
-        k.getField("n_controls").alias("n_controls"),
-        k.getField("changed").alias("changed"),
-    ), "doc_id")
-
-
-def q_structured_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """schema.org JSON-LD extraction (the highest-precision title/date
-    source a web corpus has): first article-like ld+json node per page
-    — type string-or-list matching, @graph traversal in document
-    order, Person/Organization author/publisher shapes, strict
-    per-block JSON with malformed blocks counted and isolated.
-    Map-only — one Arrow batch, zero shuffles.  The oracle replays
-    each synthesis arm's expected record as closed-form CASE
-    arithmetic — the kernel is verified against the spec, never
-    against itself."""
-    from doctor_spark.operators.metadata import structured_data
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_JSONLD_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    return _present(structured_data(pages), "doc_id")
-
-
-# deterministic robots-meta synthesis: six head arms (noindex+nofollow,
-# uppercase NONE, googlebot-padded NoFollow, noindex then a later
-# index/follow that must NOT clear it, non-restrictive all, no meta)
-# plus an independent body-position nofollow arm on doc_id % 7 == 5 so
-# the cross-tag union is exercised against every head arm.
-_ROBOTS_META_SYNTH_SQL = """
-'<html><head><title>t</title>' ||
-CASE CAST(doc_id % 6 AS INT)
-  WHEN 0 THEN '<meta name="robots" content="noindex, nofollow">'
-  WHEN 1 THEN '<META NAME="ROBOTS" CONTENT="NONE">'
-  WHEN 2 THEN '<meta name="googlebot" content=" NoFollow ">'
-  WHEN 3 THEN '<meta name="robots" content="noindex">' ||
-              '<meta name="robots" content="index, follow">'
-  WHEN 4 THEN '<meta name="robots" content="all">'
-  ELSE ''
-END || '</head><body><p>body text</p>' ||
-CASE WHEN doc_id % 7 = 5 THEN '<meta name=robots content=nofollow>'
-     ELSE '' END || '</body></html>'
-"""
-
-
-def q_robots_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-level robots-meta admission gate (REP meta-tag semantics):
-    noindex/nofollow flags with most-restrictive union across all
-    robots/googlebot metas, head or body; `index_ok = NOT noindex` is
-    the corpus-admission verdict between the robots.txt gate and the
-    quality gates.  Map-only — one Arrow batch, zero shuffles.  The
-    oracle replays each synthesis arm's expected flags as closed-form
-    CASE arithmetic — the kernel is verified against the spec, never
-    against itself."""
-    from doctor_spark.operators.metadata import robots_meta_flags
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_ROBOTS_META_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    out = robots_meta_flags(pages)
-    return out.select(
-        "doc_id", "noindex", "nofollow",
-        (~F.col("noindex")).alias("index_ok"),
-    )
-
-
-# deterministic anchor-markup synthesis for the link-text query: 13
-# target hosts, three anchor shapes per page (a high-frequency 'home'
-# text vs a per-host 'about k' minority, an entity-ref + whitespace-noise
-# text on an UPPERCASE-scheme href, an image-only empty-text anchor that
-# must be dropped) plus relative/javascript links that carry no edge.
-_ANCHOR_HOST_MOD = 13
-_ANCHOR_HTML_SYNTH_SQL = f"""
-'<html><body><a href="http://t' || CAST(doc_id % {_ANCHOR_HOST_MOD} AS VARCHAR(4)) ||
-'.example/a">' ||
-CASE WHEN doc_id % 4 = 3
-     THEN 'about ' || CAST(doc_id % {_ANCHOR_HOST_MOD} AS VARCHAR(4))
-     ELSE 'home' END ||
-'</a><A HREF=" HTTP://T' || CAST((doc_id * 3 + 1) % {_ANCHOR_HOST_MOD} AS VARCHAR(4)) ||
-'.Example/q ">' ||
-CASE WHEN doc_id % 2 = 0 THEN ' news  &amp; views ' ELSE 'contact' END ||
-'</A><a href="http://t' || CAST(doc_id % {_ANCHOR_HOST_MOD} AS VARCHAR(4)) ||
-'.example/i"><img src="x"></a>' ||
-'<a href="/rel">rel</a><a href="javascript:void(0)">js</a></body></html>'
-"""
-
-
-def q_anchor_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-text table (anchor-text corpora / link relevance signals):
-    per target host, the top-3 anchor strings by count with the
-    deterministic (count DESC, anchor ASC) tie-break.  The single
-    row-volume exchange is the keyed (host, anchor) count — map-side
-    combined; the rank window runs over already-aggregated rows.  The
-    oracle replays the synthesis arms as UNION ALL branches and ranks
-    with the same window — extraction (entity refs, whitespace
-    collapse, empty-text drop, scheme admission, host lowercasing) is
-    verified against the replay, never against the kernel."""
-    from doctor_spark.operators.metadata import anchor_text_topk
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.encode(F.expr(_ANCHOR_HTML_SYNTH_SQL), "utf-8").alias("html")
-    )
-    t = anchor_text_topk(pages, k=3)
-    return t.select(
-        "dst_host",
-        "anchor",
-        F.col("n_links").cast("bigint").alias("n_links"),
-        F.col("rank").cast("int").alias("rnk"),
-    )
-
-
-# deterministic <img> markup synthesis for the caption-pairing query:
-# 7 image hosts, three admitted arms per page (a modal-vs-minority alt
-# on a shared src — 'logo' 1-in-3 loses to 'photo k' — an entity-ref +
-# whitespace-noise alt on a whitespace-padded SRC, a srcset-only
-# lazy-load arm whose even/odd alt split exercises the (count DESC,
-# alt ASC) tie-break) plus decorative empty-alt, relative and data:-URI
-# images that must be dropped.
-_IMG_SRC_MOD = 7
-_IMG_HTML_SYNTH_SQL = f"""
-'<html><body><img src="http://img' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4)) ||
-'.example/a.png" alt="' ||
-CASE WHEN doc_id % 3 = 0 THEN 'logo'
-     ELSE 'photo ' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4)) END ||
-'"><IMG alt=" a &amp;  b " SRC=" http://img' ||
-CAST((doc_id * 2 + 1) % {_IMG_SRC_MOD} AS VARCHAR(4)) || '.example/b.jpg ">' ||
-'<img srcset="http://lazy' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4)) ||
-'.example/c.png 2x, http://other.example/d.png" alt="lazy ' ||
-CAST(doc_id % 2 AS VARCHAR(2)) || '">' ||
-'<img src="http://img0.example/deco.png" alt="">' ||
-'<img src="/rel.png" alt="rel">' ||
-'<img src="data:image/png;base64,AA" alt="data"></body></html>'
-"""
-
-
-def q_image_caption_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image/alt-text pairing table (LAION/DataComp-style caption
-    ingest): per image URL the modal alt text with the deterministic
-    (count DESC, alt ASC) tie-break.  The single row-volume exchange is
-    the keyed (src, alt) count — map-side combined; the rank window
-    runs over already-aggregated rows.  The oracle replays the three
-    admitted synthesis arms as UNION ALL branches — extraction (srcset
-    fallback, entity decode, whitespace collapse, empty-alt drop,
-    scheme admission) is verified against the replay, never against
-    the kernel."""
-    from doctor_spark.operators.metadata import image_caption_table
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.encode(F.expr(_IMG_HTML_SYNTH_SQL), "utf-8").alias("html")
-    )
-    t = image_caption_table(pages)
-    return t.select(
-        "src", "alt", F.col("n_pairs").cast("bigint").alias("n_pairs")
-    )
-
-
-# deterministic redirect-edge synthesis: docs form blocks of 24; inside
-# a block each url redirects to the next.  Every 7th block closes into a
-# 24-cycle (all 24 unresolved — too-many-redirects); other blocks end in
-# a per-block terminal sink, so positions ≥8 resolve with hop counts
-# 1..16 and positions 0-7 sit 17-24 hops out and exceed the browser
-# budget.  A partial trailing block's last url points at a nonexistent
-# page — no out-edge, terminal, identically in both engines.
-_REDIR_BLOCK = 24
-_REDIR_CYCLE_MOD = 7
-
-
-def _redirect_edges_expr(div: str) -> tuple[str, str]:
-    """(src, dst) SQL exprs; ``div`` is the integer-division operator —
-    ``div`` on Spark, ``//`` on DuckDB (same truncation for non-negative
-    operands)."""
-    b = f"(doc_id {div} {_REDIR_BLOCK})"
-    src = "'http://r.example/' || CAST(doc_id AS VARCHAR(12))"
-    dst = f"""CASE
-  WHEN doc_id % {_REDIR_BLOCK} < {_REDIR_BLOCK - 1}
-    THEN 'http://r.example/' || CAST(doc_id + 1 AS VARCHAR(12))
-  WHEN {b} % {_REDIR_CYCLE_MOD} = 0
-    THEN 'http://r.example/' || CAST({b} * {_REDIR_BLOCK} AS VARCHAR(12))
-  ELSE 'http://final.example/' || CAST({b} AS VARCHAR(12))
-END"""
-    return src, dst
-
-
-def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution (the canonicalization step after
-    page_metadata surfaces WHATWG refresh targets): every redirecting
-    url mapped to its terminal target and exact hop count within the
-    16-hop browser budget, cycles and over-long chains marked
-    unresolved.  Pointer doubling — ⌈log₂ 16⌉ = 4 keyed self-joins, not
-    16 per-hop iterations — with checkpoint-bounded lineage; the
-    oracle walks the same chains with a hop-bounded recursive CTE.  Plain
-    ``_docs`` scan: the query runs no Python and every doubling job would
-    re-pay a spread exchange (measured 0.657× with it)."""
-    from doctor_spark.operators.graph import resolve_redirects
-
-    src, dst = _redirect_edges_expr("div")
-    edges = _docs(spark, sf_dir).select(
-        F.expr(src).alias("src"), F.expr(dst).alias("dst")
-    )
-    r = resolve_redirects(edges, max_hops=16)
-    return r.select(
-        "url",
-        "final_url",
-        F.col("n_hops").cast("bigint").alias("n_hops"),
-        "resolved",
-    )
-
-
-# deterministic sentence synthesis: five pieces with KNOWN splits under
-# the kernels/sentences.py spec — abbreviation guards (Dr./Mr./Fig.), a
-# decimal that must not split, a ?!-run, a quote-closed boundary — so
-# the oracle replays per-piece sentence counts/lengths as CASE
-# arithmetic and never parses text in SQL.  Pieces A (1 sentence, 24
-# chars) and C (2: 8+4) appear on every doc; B (1: 21) on even doc_ids,
-# D (2: 36+13) on doc_id%3=0, E (2: 23+9) on doc_id%5=0.
-_SENT_SYNTH_SQL = """
-'Dr. Smith saw Mr. Jones.'
-|| CASE WHEN doc_id % 2 = 0 THEN ' The rate is 3.14 now.' ELSE '' END
-|| ' Really?! Yes.'
-|| CASE WHEN doc_id % 3 = 0
-        THEN ' He said "Stop right there, counsel." Then he left.'
-        ELSE '' END
-|| CASE WHEN doc_id % 5 = 0
-        THEN ' See Fig. 3 for details. It grows.' ELSE '' END
-"""
-
-
-def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sentence segmentation rollup (the stage before sentence-level
-    dedup / sequence packing): per doc the sentence count, total and max
-    sentence length under the deterministic boundary spec
-    (kernels/sentences.py — terminal-run + opener lookahead with an
-    abbreviation guard).  Map-only: one Arrow struct batch, zero
-    shuffles; the oracle replays each synthesis piece's known split as
-    CASE arithmetic."""
-    from doctor_spark.functions.text import sentence_stats_udf
-
-    d = _docs(spark, sf_dir)
-    s = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        sentence_stats_udf()(F.expr(_SENT_SYNTH_SQL)).alias("s"),
-    )
-    return s.select("doc_id", "s.n_sentences", "s.sum_chars", "s.max_chars")
-
-
-# deterministic frontier synthesis for the scheduler: 31 hosts, a
-# host-derived RFC 9309 crawl delay, doc_id-derived priorities, and a
-# 12-slot per-host cap that BINDS at every sf (≥16 urls/host at sf0.01)
-# so the skew-bounding path is exercised, not just declared.
-_SCHED_HOSTS = 31
-_SCHED_CAP = 12
-_SCHED_WORKERS = 8
-
-
-def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness-aware fetch scheduling (frontier → per-worker
-    queues): host-keyed md5 worker bands, (priority DESC, url ASC)
-    queue positions, crawl-delay fetch slots, and a per-host cap that
-    Spark pushes down as WindowGroupLimit so a hot host is a bounded
-    top-N, never a full sort.  ONE keyed exchange; the oracle replays
-    the same window + the same '0x'||md5 band arithmetic."""
-    from doctor_spark.operators.scheduler import fetch_schedule
-
-    d = _docs(spark, sf_dir)
-    host = F.concat(
-        F.lit("h"),
-        (F.col("doc_id") % _SCHED_HOSTS).cast("string"),
-        F.lit(".example"),
-    )
-    frontier = d.select(
-        F.concat(
-            F.lit("https://"), host, F.lit("/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        host.alias("host"),
-        (F.col("doc_id") % 17).cast("long").alias("priority"),
-        ((F.col("doc_id") % _SCHED_HOSTS) % 4 * 5 + 1)
-        .cast("long")
-        .alias("crawl_delay_sec"),
-    )
-    s = fetch_schedule(
-        frontier, k_workers=_SCHED_WORKERS, per_host_cap=_SCHED_CAP
-    )
-    return s.select(
-        "url", "host", F.col("worker").cast("bigint").alias("worker"),
-        "seq", "fetch_at_sec",
-    )
-
-
-def q_wet_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WET serialization (Common Crawl's extracted-text distribution —
-    the canonical OUTPUT of the extraction tier): every doc rendered as
-    a complete WARC conversion record (CRLF headers, md5(url)-derived
-    record id, Content-Length in UTF-8 bytes) entirely in JVM codegen —
-    zero Python, zero shuffles.  The query emits per-doc record digest
-    and size; the oracle replays the exact byte layout as string
-    concatenation in SQL.  The file-shaped sink
-    (sources/warc.py:wet_partition_files) is round-trip-tested against
-    the sequential parse_wet twin in tests/test_warc.py."""
-    from doctor_spark.sources.warc import wet_record
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    url = F.concat(
-        F.lit("https://doc.example/"), F.col("doc_id").cast("string")
-    )
-    date_s = F.concat(
-        F.lit("2024-01-"),
-        F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
-        F.lit("T00:00:00Z"),
-    )
-    rec = wet_record(url, date_s, F.col("text"))
-    return d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.md5(rec).alias("wet_md5"),
-        F.length(rec).cast("bigint").alias("wet_bytes"),
-    )
-
-
-def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX URL index (Common Crawl's cdx-*.gz / wayback's index: the
-    artifact every dedup-aware recrawl and every URL lookup service is
-    built on): one CDXJ line per capture — SURT key, 14-digit
-    timestamp, JSON block with canonical url, payload digest and
-    length — built entirely in JVM codegen, then globally sorted on the
-    SURT key (one range exchange + per-partition sort), because a CDX's
-    defining property is global (surt, ts) order: prefix queries over a
-    10^12-row index bind to a contiguous parquet row-group range
-    instead of a full scan.  ONE range exchange, zero Python.
-
-    The query emits per-capture digest+size of the exact line bytes;
-    the oracle replays SURT (host labels reversed through the shared
-    URL-canonicalization CTE), timestamp arithmetic and the byte layout
-    as string concatenation."""
-    from doctor_spark.functions.urls import canonicalize_url, surt_key
-
-    d = (
-        _docs(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select("doc_id", "text", F.expr(_URL_SYNTH_SQL).alias("url"))
-    )
-    ts = F.concat(
-        F.lit("202401"),
-        F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
-        F.lpad((F.col("doc_id") % 24).cast("string"), 2, "0"),
-        F.lit("0000"),
-    )
-    line = F.concat(
-        surt_key(F.col("url")),
-        F.lit(" "),
-        ts,
-        F.lit(' {"url": "'),
-        canonicalize_url(F.col("url")),
-        F.lit('", "digest": "'),
-        F.md5(F.col("text")),
-        F.lit('", "length": "'),
-        F.octet_length(F.col("text")).cast("string"),
-        F.lit('"}'),
-    )
-    rows = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        surt_key(F.col("url")).alias("surt"),
-        ts.alias("ts"),
-        F.md5(line).alias("cdx_md5"),
-        F.octet_length(line).cast("bigint").alias("cdx_bytes"),
-    )
-    return rows.orderBy("surt", "ts")
-
-
-def q_wat_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAT serialization (Common Crawl's page-metadata distribution,
-    the third of the WARC/WAT/WET artifact trio): per page, a complete
-    ``WARC-Type: metadata`` record whose JSON payload carries the
-    extracted title, absolute-outlink count, payload length and text
-    digest.  Title and outlinks come from the REAL tag-soup kernels
-    (html_meta title RCDATA rules, links absolute-http(s) filter) over
-    the shared link-graph page synthesis — one Arrow-batched map stage —
-    and the envelope/record framing is pure JVM codegen
-    (sources/warc.py:wat_record, the wet_record byte discipline).
-    Map-only: zero shuffles at any corpus size.
-
-    The oracle replays each synthesis arm's expected title/outlink
-    count (robots discipline) and the exact byte layout."""
-    from doctor_spark.operators.graph import _hrefs_udf
-    from doctor_spark.operators.metadata import _meta_udf
-    from doctor_spark.sources.warc import wat_record
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        "doc_id",
-        "text",
-        F.encode(F.expr(_LINK_HTML_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    url = F.concat(
-        F.lit("https://"),
-        F.expr(_LINK_SRC_HOST_SQL),
-        F.lit("/p/"),
-        F.col("doc_id").cast("string"),
-    )
-    date_s = F.concat(
-        F.lit("2024-01-"),
-        F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
-        F.lit("T00:00:00Z"),
-    )
-    title = _meta_udf()(F.col("html")).getField("title")
-    n_links = F.size(_hrefs_udf()(F.col("html")))
-    payload = F.concat(
-        F.lit('{"Envelope":{"WARC-Header-Metadata":{"WARC-Target-URI":"'),
-        url,
-        F.lit('"},"Payload-Metadata":{"Title":"'),
-        title,
-        F.lit('","Outlinks":'),
-        n_links.cast("string"),
-        F.lit(',"Actual-Content-Length":"'),
-        F.octet_length(F.col("text")).cast("string"),
-        F.lit('","Text-Digest":"md5:'),
-        F.md5(F.col("text")),
-        F.lit('"}}}'),
-    )
-    rec = wat_record(url, date_s, payload)
-    return pages.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.md5(rec).alias("wat_md5"),
-        F.length(rec).cast("bigint").alias("wat_bytes"),
-    )
-
-
-def q_host_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Webgraph degree distribution (cc-webgraph's stats artifact, the
-    power-law diagnostic every graph release ships): distinct out- and
-    in-degree per node over the deterministic affine link graph, rolled
-    into one histogram row per (direction, degree).  ONE distinct
-    exchange shared by both directions, two keyed aggregates whose
-    outputs are histogram-sized; hot (power-law) nodes are absorbed by
-    map-side partial aggregation before the exchange."""
-    from doctor_spark.operators.graph import degree_histogram
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
-    # hub term: every node also links to one of 50 hubs, so the in-degree
-    # side carries the power-law-style mass concentration a real webgraph
-    # has (the affine generators alone are permutation-like — uniform)
-    parts.append(ids.select("src", (F.col("src") % 50).alias("dst")))
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    h = degree_histogram(edges)
-    return h.select(
-        "side",
-        F.col("deg").cast("bigint").alias("deg"),
-        F.col("n_nodes").cast("bigint").alias("n_nodes"),
-    )
-
-
-# deterministic soft-404 synthesis: title/body arms over doc_id % 11.
-# Arm 0 is a hard 404 title (title rule wins over its also-matching
-# body), arm 1 an 'error page' title with a clean body, arm 2 a short
-# 'does not exist' body, arm 3 a LONG body that merely contains the
-# not-found phrase (the token-length guard must keep it), arm 4 a short
-# 'has been removed' body, arm 5 a mid-title 404 numeral (the
-# standalone-number rule — '1404'/'4041' must NOT match); the rest are
-# clean, with a digit-free ELSE title so no synthetic id can collide
-# with the numeral rule.  One SQL snippet parsed by Spark's F.expr AND
-# spliced into the oracle (_URL_SYNTH_SQL discipline).
-_SOFT404_TITLE_SQL = """
-CASE CAST(doc_id % 11 AS INT)
-  WHEN 0 THEN '404 Not Found'
-  WHEN 1 THEN 'Error Page - site'
-  WHEN 5 THEN 'Page 404 - gone'
-  ELSE 'Document page ' || CAST(doc_id % 7 AS VARCHAR(8)) END
-"""
-_SOFT404_BODY_SQL = """
-CASE CAST(doc_id % 11 AS INT)
-  WHEN 0 THEN 'The page you requested was not found.'
-  WHEN 2 THEN 'This article does not exist.'
-  WHEN 3 THEN repeat('lorem ipsum dolor sit amet ', 12) ||
-              'the page was not found.'
-  WHEN 4 THEN 'Content has been removed.'
-  ELSE 'Regular content for document ' || CAST(doc_id AS VARCHAR(20))
-       || '.' END
-"""
-
-
-def q_soft404_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft-404 gate (200-status error pages — the most duplicated
-    template class on the web, filtered before dedup by every
-    CC-derived corpus): title-rule then short-body-rule, long documents
-    that merely DISCUSS missing pages stay clean
-    (functions/text.py:soft404_flags).  Pure Column exprs: zero Python,
-    zero shuffles — a map over the scan at 10^12 rows.  The oracle
-    replays each synthesis arm's expected verdict."""
-    from doctor_spark.functions.text import soft404_flags
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_SOFT404_TITLE_SQL).alias("title"),
-        F.expr(_SOFT404_BODY_SQL).alias("body"),
-    )
-    flags = soft404_flags(F.col("title"), F.col("body"))
-    return d.select("doc_id", flags.getField("soft404").alias("soft404"),
-                    flags.getField("reason").alias("reason"))
-
-
-# deterministic table-markup synthesis: four arms exercise th/td cells
-# with entity refs and whitespace (0), tag soup with implicit row/cell
-# closes and UPPERCASE tags (1), a nested table that must become its own
-# document-order-indexed table without leaking text into the outer cell
-# (2), and a no-table page contributing zero rows (3).
-_TABLE_HTML_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN '<table><tr><th>H1</th><th> H2 </th></tr><tr><td>a' ||
-    CAST(doc_id AS VARCHAR(20)) || '</td><td>b &amp; c</td></tr></table>'
-  WHEN 1 THEN '<TABLE><TR><TD> x ' || CAST(doc_id AS VARCHAR(20)) ||
-    ' <TD>y<TR><TD>z</TABLE>'
-  WHEN 2 THEN '<div><table><tr><td>outer' || CAST(doc_id AS VARCHAR(20)) ||
-    '<table><tr><td>inner</td></tr></table></td></tr></table></div>'
-  ELSE '<p>plain ' || CAST(doc_id AS VARCHAR(20)) || '</p>'
-END
-"""
-
-
-def q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-table ingest (WebTables/TableBank's stage): every <table> of
-    every page as long-form (tbl, row, col, cell) rows — the input a
-    relation-extraction or table-QA corpus builder consumes.  Map-only
-    with a Generate fan-out: scan → one Arrow batch → explode; zero
-    shuffles at any scale.  The oracle replays each synthesis arm's
-    expected grid as UNION ALL literals (robots discipline), so the
-    browser-lite table model — implicit row/cell closes, nested-table
-    isolation, entity decode, whitespace collapse — is pinned
-    independently of the kernel.
-
-    No reference counterpart: doctor flattens tables into running text
-    (doctor/tasks.py:361-370)."""
-    from doctor_spark.operators.tables import table_cells
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_TABLE_HTML_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    t = table_cells(pages)
-    return t.select(
-        "doc_id",
-        F.col("tbl").cast("int").alias("tbl"),
-        F.col("row").cast("int").alias("rw"),
-        F.col("col").cast("int").alias("cl"),
-        "cell",
-    )
-
-
-# deterministic sitemap-document synthesis: urlset with a full entry
-# (entity ref in loc) + a minimal entry + a loc-less entry that must be
-# skipped (0), sitemapindex (1), the plain-text one-URL-per-line form
-# with a comment line (2), and a non-sitemap HTML page contributing
-# zero rows (3).
-_SITEMAP_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN '<?xml version="1.0"?><urlset><url><loc>https://s.example/p/' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '?a=1&amp;b=2</loc><lastmod>2026-01-02</lastmod><changefreq>daily</changefreq>' ||
-    '<priority>0.8</priority></url><url><loc> https://s.example/q/' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    ' </loc></url><url><lastmod>2026-01-01</lastmod></url></urlset>'
-  WHEN 1 THEN '<sitemapindex><sitemap><loc>https://s.example/sm/' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '.xml</loc><lastmod>2025-12-31</lastmod></sitemap></sitemapindex>'
-  WHEN 2 THEN 'https://t.example/' || CAST(doc_id AS VARCHAR(20)) ||
-    CHR(10) || '# comment' || CHR(10) || 'https://t.example/' ||
-    CAST(doc_id AS VARCHAR(20)) || '/more'
-  ELSE '<html><body>plain ' || CAST(doc_id AS VARCHAR(20)) || '</body></html>'
-END
-"""
-
-
-def q_sitemap_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier ingest (sitemaps.org protocol): fetched sitemap
-    documents → one row per entry with kind routing (urlset page /
-    sitemapindex child / plain-text line).  Map-only with a Generate
-    fan-out, zero shuffles.  The oracle replays each synthesis arm's
-    expected entries as UNION ALL literals — XML-lite parsing, CDATA/
-    entity decode, loc-less skip, namespace handling are pinned by the
-    kernel pytests, the CONTRACT here.
-
-    No reference counterpart (doctor receives documents over HTTP);
-    sits next to the robots gate on the crawl side."""
-    from doctor_spark.operators.sitemaps import sitemap_entries
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_SITEMAP_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    return sitemap_entries(pages)
-
-
-# deterministic feed-document synthesis: RSS with a CDATA title +
-# pubDate + a title-only item (0), Atom where rel=alternate must beat a
-# rel=self link and updated fills published (1), RSS item with entity
-# title and dc:date fallback (2), non-feed HTML contributing zero rows
-# (3).
-_FEED_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN '<rss version="2.0"><channel><title>chan</title>' ||
-    '<item><title><![CDATA[News ' || CAST(doc_id AS VARCHAR(20)) ||
-    ' & more]]></title><link>https://f.example/' || CAST(doc_id AS VARCHAR(20)) ||
-    '</link><pubDate>Tue, 18 Aug 2026 06:00:00 GMT</pubDate></item>' ||
-    '<item><title>only-title ' || CAST(doc_id AS VARCHAR(20)) ||
-    '</title></item></channel></rss>'
-  WHEN 1 THEN '<feed><title>a</title><entry><title>E ' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '</title><link rel="self" href="https://a.example/self"/>' ||
-    '<link rel="alternate" href="https://a.example/e/' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '"/><updated>2026-08-18T00:00:00Z</updated></entry></feed>'
-  WHEN 2 THEN '<rss><channel><item><title>T &amp; ' ||
-    CAST(doc_id AS VARCHAR(20)) ||
-    '</title><dc:date>2026-08-1' || CAST(doc_id % 10 AS VARCHAR(2)) ||
-    '</dc:date></item></channel></rss>'
-  ELSE '<html><body>page ' || CAST(doc_id AS VARCHAR(20)) || '</body></html>'
-END
-"""
-
-
-def q_feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feed ingest (CC-News' discovery stage): fetched RSS 2.0 / Atom
-    documents → one row per item/entry with (kind, title, link,
-    published).  Map-only with a Generate fan-out, zero shuffles —
-    completing the discovery trio (links → sitemaps → feeds).  The
-    oracle replays each synthesis arm's expected entries as UNION ALL
-    literals; CDATA titles, rel=alternate precedence, the
-    pubDate→published→updated→date fallback and the no-title-no-link
-    skip are pinned by the kernel pytests.
-
-    No reference counterpart (doctor receives documents over HTTP)."""
-    from doctor_spark.operators.feeds import feed_entries
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_FEED_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    return feed_entries(pages)
-
-
-def q_frontier_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused frontier-scheduler step: sitemap ingest → page rows
-    only (child sitemaps routed away by kind) → host extraction →
-    UT1-style blocklist verdict → already-crawled mark — one plan where
-    the blocklist probes broadcast (zero corpus-side shuffle) and the
-    seen-set mark is ONE keyed left join on the canonical loc (the only
-    row-volume exchange; at real scale the seen set is a 10^12-row
-    table, so the join is keyed, not broadcast — AQE may still
-    broadcast it at test scale).  ``admitted = NOT blocked AND NOT
-    seen`` — the FineWeb/Nutch generate-step in one query.
-
-    Oracle: entries, hosts, blocklist suffix verdicts and the seen
-    arithmetic replayed in SQL over the shared synthesis."""
-    from doctor_spark.operators.blocklist import domain_blocklist_mark
-    from doctor_spark.operators.sitemaps import sitemap_entries
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_SITEMAP_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    cand = (
-        sitemap_entries(pages)
-        .where(F.col("kind") != "sitemapindex")
-        .select("doc_id", F.col("loc").alias("url"))
-    )
-    bl = spark.createDataFrame([("t.example",)], "domain string")
-    marked = domain_blocklist_mark(cand, bl)
-    # the crawl's seen set: the arm-0 primary locs of every 8th document
-    seen = d.where((F.col("doc_id") % 8) == 0).select(
-        F.concat(
-            F.lit("https://s.example/p/"),
-            F.col("doc_id").cast("string"),
-            F.lit("?a=1&b=2"),
-        ).alias("url"),
-        F.lit(True).alias("seen"),
-    )
-    seen_b = F.coalesce(F.col("seen"), F.lit(False))
-    return marked.join(seen, "url", "left").select(
-        "doc_id",
-        "url",
-        "host",
-        "blocked",
-        seen_b.alias("seen"),
-        ((~F.col("blocked")) & (~seen_b)).alias("admitted"),
-    )
-
-
-# deterministic raw-date synthesis: the wild formats the ingest fields
-# actually carry, plus garbage that must stay NULL.  The oracle replays
-# the EXPECTED UTC date per arm (robots discipline) — arm 2 pins the
-# cross-offset day-roll (+05:30 01:30 is the PREVIOUS UTC day).
-_DATE_SYNTH_SQL = """
-CASE CAST(doc_id % 6 AS INT)
-  WHEN 0 THEN '2026-08-19T06:30:00Z'
-  WHEN 1 THEN 'Tue, 18 Aug 2026 23:59:59 GMT'
-  WHEN 2 THEN '2026-08-19T01:30:00+05:30'
-  WHEN 3 THEN '2026/08/0' || CAST(doc_id % 9 + 1 AS VARCHAR(2))
-  WHEN 4 THEN ' 2026-08-19 '
-  ELSE 'not a date ' || CAST(doc_id AS VARCHAR(20))
-END
-"""
-
-
-def q_date_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed cast for the ingest date fields (sitemap lastmod, feed
-    pubDate/published, metadata published_at): wild formats → canonical
-    UTC yyyy-MM-dd, malformed → NULL.  Pure JVM Column expressions
-    (try_to_timestamp coalesce under the pinned UTC session timezone) —
-    whole-stage codegen, zero Python, zero shuffles."""
-    from doctor_spark.functions.dates import parse_web_date
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr(_DATE_SYNTH_SQL).alias("raw"),
-        parse_web_date(F.expr(_DATE_SYNTH_SQL)).alias("day"),
-    )
-
-
-# deterministic code-listing synthesis: labeled block with entities +
-# preserved indentation (0), two unlabeled blocks incl. the spec's
-# post-<pre> newline drop (1), <br> + inline markup inside a block (2),
-# inline <code> that is NOT a block (3).
-_CODE_SYNTH_SQL = """
-CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN '<pre><code class="language-python">def f_' ||
-    CAST(doc_id AS VARCHAR(20)) || '():' || CHR(10) || '    return ' ||
-    CAST(doc_id AS VARCHAR(20)) || ' &lt; 2</code></pre>'
-  WHEN 1 THEN '<PRE>a ' || CAST(doc_id AS VARCHAR(20)) || '</PRE><pre>' ||
-    CHR(10) || 'b ' || CAST(doc_id AS VARCHAR(20)) || '</pre>'
-  WHEN 2 THEN '<pre>x<br>y' || CAST(doc_id AS VARCHAR(20)) ||
-    '<b>!</b></pre>'
-  ELSE '<p>inline <code>x' || CAST(doc_id AS VARCHAR(20)) ||
-    '</code> only</p>'
-END
-"""
-
-
-def q_code_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-corpus ingest (StarCoder-style <pre>/<code> mining): blocks
-    with VERBATIM whitespace — the one contract every other kernel's
-    collapse would destroy — plus highlight.js/GFM language hints and
-    JVM-side shape columns.  Map-only with a Generate fan-out.  The
-    oracle replays expected blocks (newlines via CHR(10)) per arm;
-    the spec's post-<pre> newline drop, <br> line breaks, entity decode
-    and the inline-code exclusion are all pinned.
-
-    No reference counterpart: doctor flattens <pre> like any tag
-    (doctor/tasks.py:361-370)."""
-    from doctor_spark.operators.codeblocks import code_blocks
-
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    pages = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.encode(F.expr(_CODE_SYNTH_SQL), "utf-8").alias("html"),
-    )
-    t = code_blocks(pages)
-    return t.select(
-        "doc_id",
-        F.col("blk").cast("int").alias("blk"),
-        "lang_hint",
-        "code",
-        F.col("n_lines").cast("int").alias("n_lines"),
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-    )
-
-
-def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Naive Bayes language classifier trained distributed on the
-    corpus, self-prediction confusion matrix.  All weights are int64
-    micro-log10 (libm log10 both engines), scores are integer sums —
-    the oracle replays counts, Laplace smoothing, quantization, and
-    the (score DESC, label ASC) argmax exactly."""
-    from doctor_spark.operators.nbayes import nb_confusion
-
-    out = nb_confusion(_docs(spark, sf_dir))
-    return out.select(
-        F.col("lang"),
-        F.col("predicted"),
-        F.col("n").cast("bigint").alias("n"),
-    )
-
-
-def q_markdown_goldens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML→Markdown kernel vs HAND-AUTHORED goldens (the
-    reference_fixtures pattern): the oracle carries literal md5s of
-    expected markdown written by hand from the dialect spec — never
-    generated by the kernel — so the driver hash-gates the converter
-    itself (headings, nested lists, GFM tables, fences, escaping, tag
-    soup)."""
-    from doctor_spark.kernels.markdown import markdown_udf
-    from doctor_spark.kernels.markdown_goldens import GOLDENS
-
-    df = spark.createDataFrame(
-        [(n, h) for n, h, _want in GOLDENS], "golden string, html string"
-    )
-    md = markdown_udf()
-    return df.select(
-        "golden",
-        F.md5(F.encode(md(F.col("html")), "UTF-8")).alias("md_hash"),
-    )
-
-
-# Static wrapper for the boilerplate corpus query: nav (pure links ->
-# link_milli 1000 -> bad) + the document text as the single content block +
-# a copyright footer (-> bad).  Both engines agree on the wrapper by
-# construction; only the content block's classification varies per doc.
-_BP_PRE = ('<html><body><nav><a href="/">Home</a> '
-           '<a href="/about">About</a></nav><p>')
-_BP_POST = "</p><footer>© 2024 Example Corp</footer></body></html>"
-
-
-def q_boilerplate_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """jusText-dialect block classification over the hand-authored fixture
-    pages (kernels/boilerplate_fixtures.py).  The oracle carries the block
-    catalog as literals and recomputes every feature, the context-free
-    CASE, and the context-sensitive stage as window functions — so the
-    HTML-parsing path and the classification logic are pinned
-    independently.  Reference anchor: doctor/lib/html.py boilerplate
-    strip; algorithm: Pomikalek 2011 (jusText), dialect documented in
-    kernels/boilerplate.py."""
-    from doctor_spark.kernels.boilerplate_fixtures import PAGES
-    from doctor_spark.operators.boilerplate import justext_blocks
-
-    df = spark.createDataFrame(sorted(PAGES.items()), "url string, html string")
-    return justext_blocks(df)
-
-
-def q_boilerplate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-only main-content pass over the documents table wrapped in the
-    static nav/content/footer template: per-doc block counts plus the md5
-    of the kept main content.  The scale-bearing form of the boilerplate
-    operator — one mapInArrow stage, zero shuffles."""
-    from doctor_spark.operators.boilerplate import justext_doc_summary
-
-    docs = _docs(spark, sf_dir)
-    esc = F.expr("replace(replace(replace(coalesce(text, ''),"
-                 " '&', '&amp;'), '<', '&lt;'), '>', '&gt;')")
-    pages = docs.select(
-        "doc_id", F.concat(F.lit(_BP_PRE), esc, F.lit(_BP_POST)).alias("html")
-    )
-    return justext_doc_summary(pages, key_col="doc_id", html_col="html")
-
-
-def q_boilerplate_corpus_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multilingual form of q_boilerplate_corpus: the stopword
-    inventory is selected PER ROW from the document's ``lang`` column
-    (jusText's per-language lists; unknown langs fall back to English,
-    failing closed).  Same map-only plan; the oracle mirrors the
-    inventory dispatch as a CASE of list literals."""
-    from doctor_spark.operators.boilerplate import justext_doc_summary
-
-    docs = _docs(spark, sf_dir)
-    esc = F.expr("replace(replace(replace(coalesce(text, ''),"
-                 " '&', '&amp;'), '<', '&lt;'), '>', '&gt;')")
-    pages = docs.select(
-        "doc_id", "lang",
-        F.concat(F.lit(_BP_PRE), esc, F.lit(_BP_POST)).alias("html"),
-    )
-    return justext_doc_summary(pages, key_col="doc_id", html_col="html",
-                               lang_col="lang")
-
-
-def q_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span lineage for the main-content pass (the north rule's
-    "extracted text/spans per document"): one row per non-empty block
-    with its [start_off, end_off) source char offsets in the page HTML,
-    the final jusText-dialect class, and the keep verdict.  Spark side
-    is one mapInArrow stage, zero shuffles; the oracle recomputes every
-    offset analytically from the static wrapper geometry plus the
-    escaped-text length, so the kernel's HTMLParser position tracking
-    (entity source lengths included — the text is &-escaped into the
-    wrapper) is pinned end-to-end."""
-    from doctor_spark.operators.boilerplate import justext_spans
-
-    docs = _docs(spark, sf_dir)
-    esc = F.expr("replace(replace(replace(coalesce(text, ''),"
-                 " '&', '&amp;'), '<', '&lt;'), '>', '&gt;')")
-    pages = docs.select(
-        "doc_id", F.concat(F.lit(_BP_PRE), esc, F.lit(_BP_POST)).alias("html")
-    )
-    return justext_spans(pages, key_col="doc_id", html_col="html")
-
-
-def _c4_pages(docs: DataFrame) -> DataFrame:
-    """Deterministic multi-line web-page synthesis for the C4 queries,
-    mirrored 1:1 in SQL (``_C4_PAGES_CTE``).  The single-line synthetic
-    documents become pages whose arms exercise every rule: 6-word body
-    lines with terminal punctuation on odd lines only (line filter
-    discriminates), a short tail line (< 5 words → dropped), a shared
-    3-line social block on doc_id % 7 == 0 (span dedup fires corpus-wide,
-    keeper = min doc), a javascript line on % 5 == 0, "lorem ipsum" page
-    poison on % 11 == 3, a ``{`` code line on % 13 == 1, and the
-    stand-in banned token on % 17 == 2."""
-    toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    body = F.transform(
-        F.sequence(F.lit(1), F.greatest(
-            F.ceil(F.size(toks) / 6).cast("int"), F.lit(1))),
-        lambda i: F.concat(
-            F.concat_ws(" ", F.slice(toks, (i - 1) * 6 + 1, 6)),
-            F.when(i % 2 == 1, F.lit(".")).otherwise(F.lit("")),
-        ),
-    )
-    social = F.when(
-        F.col("doc_id") % 7 == 0,
-        F.array(F.lit("Follow our updates on social media today!"),
-                F.lit("Share this story with all your friends now."),
-                F.lit("Sign up for the daily newsletter right here.")),
-    ).otherwise(F.array().cast("array<string>"))
-    extras = F.concat(
-        F.when(F.col("doc_id") % 5 == 0,
-               F.array(F.lit("Please enable javascript to continue "
-                             "reading this article.")))
-        .otherwise(F.array().cast("array<string>")),
-        F.when(F.col("doc_id") % 11 == 3,
-               F.array(F.lit("This page is filled with lorem ipsum "
-                             "placeholder content.")))
-        .otherwise(F.array().cast("array<string>")),
-        F.when(F.col("doc_id") % 13 == 1,
-               F.array(F.lit("function f() { return 1; }")))
-        .otherwise(F.array().cast("array<string>")),
-        F.when(F.col("doc_id") % 17 == 2,
-               F.array(F.lit("An unsafeword token appears right here in "
-                             "this line.")))
-        .otherwise(F.array().cast("array<string>")),
-    )
-    page = F.concat_ws(
-        "\n",
-        F.array_join(social, "\n"),
-        F.array_join(body, "\n"),
-        F.array_join(extras, "\n"),
-        F.lit("tail words"),
-    )
-    # concat_ws skips nothing here (arms emit '' when empty) — collapse
-    # the empty segments so line counts stay meaningful on both engines
-    page = F.regexp_replace(page, "\n{2,}", "\n")
-    page = F.regexp_replace(page, "^\n+|\n+$", "")
-    return docs.select("doc_id", page.alias("text"))
-
-
-_C4_PAGES_CTE = """
-WITH pages AS (
-  SELECT doc_id,
-    regexp_replace(
-      concat_ws(chr(10),
-        CASE WHEN doc_id % 7 = 0 THEN
-          'Follow our updates on social media today!' || chr(10) ||
-          'Share this story with all your friends now.' || chr(10) ||
-          'Sign up for the daily newsletter right here.'
-        ELSE '' END,
-        array_to_string(
-          list_transform(range(1, greatest(
-              cast(ceil(len(regexp_split_to_array(coalesce(text, ''), ' '))
-                   / 6.0) AS INT), 1) + 1),
-            i -> array_to_string(list_slice(
-                   regexp_split_to_array(coalesce(text, ''), ' '),
-                   (i - 1) * 6 + 1, (i - 1) * 6 + 6), ' ')
-                 || CASE WHEN i % 2 = 1 THEN '.' ELSE '' END),
-          chr(10)),
-        concat_ws(chr(10),
-          CASE WHEN doc_id % 5 = 0 THEN
-            'Please enable javascript to continue reading this article.'
-          ELSE '' END,
-          CASE WHEN doc_id % 11 = 3 THEN
-            'This page is filled with lorem ipsum placeholder content.'
-          ELSE '' END,
-          CASE WHEN doc_id % 13 = 1 THEN
-            'function f() { return 1; }' ELSE '' END,
-          CASE WHEN doc_id % 17 = 2 THEN
-            'An unsafeword token appears right here in this line.'
-          ELSE '' END),
-        'tail words'),
-      chr(10) || '{2,}', chr(10), 'g') AS text0
-  FROM documents
-), pagesx AS (
-  SELECT doc_id,
-         regexp_replace(text0, '^' || chr(10) || '+|' || chr(10) || '+$',
-                        '', 'g') AS text
-  FROM pages
-)
-"""
-
-
-def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 line-retention + page-poison pass (Raffel et al. 2020 §2.2)
-    over the synthesized multi-line pages.  Spark side is pure Column
-    expressions — zero shuffles, zero Python, whole-stage codegen; the
-    oracle replays the trim/terminal-punct/word-count/javascript line
-    rule and the four page gates over the identical page CTE."""
-    from doctor_spark.operators.c4 import c4_line_filter
-
-    pages = _c4_pages(_docs(spark, sf_dir))
-    out = c4_line_filter(pages, banned_words=("unsafeword",))
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_lines",
-        "n_kept",
-        "drop_reason",
-        "page_ok",
-        F.md5(F.col("cleaned_text").cast("binary")).alias("clean_hash"),
-    )
-
-
-def q_c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 corpus-level three-line-span dedup over the synthesized pages:
-    the shared social block survives only in the minimum doc_id taking
-    it; every other occurrence's three lines are removed.  Plan: span
-    hashing per-row in codegen, the exploded stream carries (doc_id,
-    start, h) only — ONE exchange on the span hash, ONE on doc_id, ONE
-    keyed join back.  Oracle replays spans/keeper/removal with DuckDB
-    list lambdas over the identical page CTE."""
-    from doctor_spark.operators.c4 import c4_span_dedup
-
-    pages = _c4_pages(_docs(spark, sf_dir))
-    out = c4_span_dedup(pages)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_lines",
-        "n_removed",
-        F.md5(F.col("cleaned_text").cast("binary")).alias("clean_hash"),
-    )
-
-
-def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-entropy gibberish gate (RefinedWeb/Dolma-class signal:
-    base64 blobs, aaaa-runs, binary spill all score low).  Spark side is
-    one map-only Arrow kernel (the per-doc counter never leaves the
-    task); the oracle pays an explode+groupBy to recompute the same
-    int64 micro-log10 arithmetic from scratch."""
-    from doctor_spark.functions.text import (
-        LOW_ENTROPY_MICRO,
-        char_entropy_udf,
-    )
-
-    ent = char_entropy_udf()(F.col("text")).alias("entropy_micro")
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        ent,
-    ).select(
-        "doc_id", "entropy_micro",
-        (F.col("entropy_micro") < LOW_ENTROPY_MICRO).alias("low_entropy"),
-    )
-
-
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means TRAINING (operators/kmeans.py): 3
-    integer-exact iterations over the embeddings table, per-cluster
-    member counts + the final centroid pinned by value (c0 + md5 of the
-    full int64 vector).  The oracle unrolls all three assign/update
-    rounds plus the final assignment as CTEs — the PageRank/BPE pattern
-    for iterative trainers."""
-    from doctor_spark.operators.kmeans import kmeans_clusters
-
-    return kmeans_clusters(_emb(spark, sf_dir))
-
-
-def q_media_features_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal gate: decoded feature values must equal the generator's
-    goldens.  Expected: EMPTY."""
-    from doctor_spark.operators.multimodal import media_dataframe, media_features
-
-    media = media_dataframe(spark, 120)
-    feats = media_features(media)
-    joined = feats.join(media.select("media_id", "expected_mean"), "media_id")
-    return joined.where(
-        ~F.col("mean_value").eqNullSafe(F.col("expected_mean"))
-    ).select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        F.col("mean_value").cast("double").alias("mean_value"),
-    )
-
-
-def q_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V1 (reference tasks.py:55-72): per document, 1 + doc_id % 3
-    deterministic PNG rasters → one multi-page PDF via the from-scratch
-    writer (kernels/pdfwrite.pdf_from_png_bytes), re-parsed with the
-    independent reader.  The oracle is the page-tree structure the
-    writer must produce: page_count == n_images, one image per page.
-
-    Plan note (guide §4.1): generation and conversion are FUSED into one
-    ``mapInArrow`` (sharing the operator's per-row core) so the generated
-    PNG bytes never cross the JVM↔Python boundary — only doc_id in, four
-    stat columns out."""
-    import numpy as np
-
-    from doctor_spark.kernels.png import encode_png
-    from doctor_spark.operators.multimodal import (
-        IMAGES_TO_PDF_DDL,
-        images_to_pdf_row,
-    )
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def gen(did):
-        pngs = []
-        for k in range(1 + did % 3):
-            h = 8 + (did + k) % 5
-            w = 6 + (did * 3 + k) % 7
-            arr = (
-                (np.arange(h * w) * (did + 7 + k)) % 256
-            ).astype(np.uint8).reshape(h, w)
-            pngs.append(encode_png(arr))
-        return [images_to_pdf_row(did, pngs)]
-
-    return _present(row_map(docs, gen, IMAGES_TO_PDF_DDL), "doc_id")
-
-
-def q_fetch_images_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 + the /convert/images/pdf/ chain (reference tasks.py:436-458 +
-    views.py:370-393): per document, 1 + doc_id % 3 image URLs fetched
-    through the pluggable transport (deterministic PNG fake — the
-    network seam, like the OCR backend's tesseract seam), assembled to
-    one page per image by the V1 writer, metadata-stripped (V3), and
-    re-parsed by the independent reader.  Oracle: the page tree matches
-    the URL count for every document."""
-    import numpy as np
-
-    from doctor_spark.kernels.pdf import parse_pdf
-    from doctor_spark.kernels.pdfwrite import PdfWriteError
-    from doctor_spark.kernels.png import encode_png
-    from doctor_spark.sources.fetch import images_to_pdf_from_urls
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def transport(url: str) -> bytes:
-        did, k = (int(v) for v in url.rsplit("/", 2)[-2:])
-        h = 8 + (did + k) % 5
-        w = 6 + (did * 3 + k) % 7
-        arr = ((np.arange(h * w) * (did + 7 + k)) % 256).astype(
-            np.uint8
-        ).reshape(h, w)
-        return encode_png(arr)
-
-    def gen(did):
-        urls = [f"http://img.example/{did}/{k}" for k in range(1 + did % 3)]
-        try:
-            out = images_to_pdf_from_urls(urls, transport=transport)
-            doc = parse_pdf(out)
-            ok = doc.page_count == len(urls) and all(
-                len(pg.images) == 1 for pg in doc.pages
-            )
-            return [(did, len(urls), doc.page_count, bool(ok))]
-        except (PdfWriteError, ValueError):
-            return [(did, len(urls), 0, False)]
-
-    return _present(
-        row_map(
-            docs, gen, "doc_id long, n_urls int, page_count int, parse_ok boolean"
-        ),
-        "doc_id",
-    )
-
-
-def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V5/V6 (reference tasks.py:467-603, views.py:396-409): per
-    document id, a deterministic PCM16 WAV (rate 11025·(1+id%4),
-    channels 1+id%2, n = rate/2 + (id%7)·13 samples) → both reference
-    transcode profiles via the from-scratch RIFF kernels + the ID3v2.4
-    retag round-trip.  Oracle: the resampler's closed-form output
-    lengths ((n−1)·out//in + 1), rates, channel policy (mp3 keeps,
-    voip folds to mono), duration, and tag equality — all recomputed
-    arithmetically in SQL.
-
-    Plan note (guide §4.1): generation and transcode are FUSED into one
-    ``mapInArrow`` (sharing the operator's per-row core) so the WAV
-    bytes never cross the JVM↔Python boundary."""
-    import numpy as np
-
-    from doctor_spark.kernels.audio import write_wav
-    from doctor_spark.operators.multimodal import (
-        AUDIO_TRANSCODE_DDL,
-        audio_transcode_row,
-    )
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def gen(did):
-        rate = 11025 * (1 + did % 4)
-        ch = 1 + did % 2
-        n = rate // 2 + (did % 7) * 13
-        t = np.arange(n * ch, dtype=np.int64).reshape(n, ch)
-        samples = ((t * (did % 97 + 3)) % 24001 - 12000).astype(np.int16)
-        return [audio_transcode_row(did, write_wav(rate, samples))]
-
-    return _present(row_map(docs, gen, AUDIO_TRANSCODE_DDL), "media_id")
-
-
-def q_pdf_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V2 (reference utils.py:164-189, views.py:196-212): per document, a
-    deterministic multi-page text PDF (the corpus writer, always US
-    letter portrait) → page-1 PNG thumbnail at the reference's default
-    max_dimension=350 via the from-scratch layout rasterizer + PNG
-    codec.  Oracle: pdftoppm's -scale-to geometry (350 tall,
-    round(350·612/792)=270 wide) and a decodable, non-blank raster for
-    every document.
-
-    Plan note (guide §4.1): generation and rasterization are FUSED into
-    one ``mapInArrow`` (sharing the operator's per-row core) so the PDF
-    bytes never cross the JVM↔Python boundary."""
-    from doctor_spark.corpus import _build_text_pdf, _rng
-    from doctor_spark.operators.multimodal import THUMBNAIL_DDL, pdf_thumbnail_row
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def gen(did):
-        data, _golden = _build_text_pdf(did, _rng(did))
-        return [pdf_thumbnail_row(did, data)]
-
-    return _present(row_map(docs, gen, THUMBNAIL_DDL), "doc_id")
-
-
-def q_embed_text_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V4 (reference views.py:439-474 + utils.py:317-356): per document,
-    a deterministic image-only scan PDF (the corpus writer's OCR bucket
-    shape), OCR word table via the pluggable backend, invisible text
-    layer merged by the from-scratch overlay writer, then the closed
-    loop: the independent parser re-extracts the layer and the tokens
-    must equal the word table in raster reading order.  Oracle: every
-    document round-trips (1 page, words present, tokens exact, both
-    invisibility mechanisms in the output bytes)."""
-    from doctor_spark.corpus import _build_image_pdf, _rng
-    from doctor_spark.operators.multimodal import EMBED_OVERLAY_DDL, embed_text_overlay_row
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def gen(did):
-        data, _golden = _build_image_pdf(did, _rng(did))
-        return [embed_text_overlay_row(did, data)]
-
-    return _present(row_map(docs, gen, EMBED_OVERLAY_DDL), "doc_id")
-
-
-def q_pdf_strip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V3 (reference tasks.py:39-53): per document, a deterministic
-    multi-page text PDF (the corpus writer) → metadata strip via the
-    from-scratch re-serializer → round-trip properties: layout text
-    unchanged, strip idempotent, size sane.  Oracle: all three hold for
-    every document."""
-    from doctor_spark.corpus import _build_text_pdf, _rng
-    from doctor_spark.operators.multimodal import STRIP_ROUNDTRIP_DDL, pdf_strip_roundtrip_row
-
-    docs = _spread_scan(spark, f"{sf_dir}/documents.parquet", cols=["doc_id"])
-
-    def gen(did):
-        data, _golden = _build_text_pdf(did, _rng(did))
-        return [pdf_strip_roundtrip_row(did, data)]
-
-    return _present(row_map(docs, gen, STRIP_ROUNDTRIP_DDL), "doc_id")
-
-
-def q_media_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal metadata rollup (kinds cycle 1:1:1 over 120 items)."""
-    from doctor_spark.operators.multimodal import media_dataframe, media_kind_stats
-
-    return media_kind_stats(media_dataframe(spark, 120)).select(
-        "kind", F.col("n_items").cast("bigint").alias("n_items")
-    )
-
-
-def q_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-def q_events_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    totals = (
-        _events(spark, sf_dir)
-        .groupBy("event_type", "user_id")
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("tv"))
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("tv").desc(), F.col("user_id").asc()
-    )
-    return (
-        totals.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-        .select(
-            "event_type",
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("tv").cast("double").alias("total_value"),
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
-    )
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity) via window functions —
-    the relational form of the stateful-streaming operator; per-session
-    stats with decimal-exact totals."""
-    from pyspark.sql import Window
-
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # interval arithmetic on TIMESTAMP_NTZ is session-TZ-free and
-    # microsecond-exact (unix_timestamp would depend on the driver's TZ)
-    gap = F.col("ts") - F.lag(F.col("ts")).over(w)
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(gap > F.expr("INTERVAL 30 MINUTES"), 1).otherwise(0),
-    ).withColumn(
-        "session_no",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return flagged.groupBy("user_id", "session_no").agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
-        .cast("double")
-        .alias("total_value"),
-    ).select(
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.col("session_no").cast("bigint").alias("session_no"),
-        "n_events", "session_start", "total_value",
-    )
-
-
-def q_lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary (relational/agg capability proof)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    d = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(d("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(d("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (d("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - d("l_discount")))
-            ).cast("double").alias("sum_disc_price"),
-            F.count("*").cast("bigint").alias("count_order"),
-        )
-    )
-
-
-def q_order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style join+agg+topk over orders ⋈ lineitem."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderkey")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (
-                    F.lit(1).cast("decimal(18,2)")
-                    - F.col("l_discount").cast("decimal(18,2)")
-                )
-            ).alias("revenue")
-        )
-    )
-    return (
-        rev.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-        .select(
-            F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
-            F.col("revenue").cast("double").alias("revenue"),
-        )
-    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry order is DELIBERATE: the grading driver's oracle check
-    # covers the first 50 entries, so that window carries one query per
-    # operator family with the newest/riskiest first (round-5 verdict
-    # item 1) - flagship extraction goldens, the V1-V6 converter family,
-    # every dedup rung, similarity/ANN, quality/LM, DSIR/mixing, BPE/NB
-    # trainers, sketches, link graph, web ingest, retrieval,
-    # multilingual.  Entries 51+ keep their historical order.  The SET
-    # of queries and every oracle's SQL text are unchanged.
-    return {
-        "extract_mismatches": q_extract_mismatches,
-        "extract_format_metrics": q_extract_format_metrics,
-        "extract_ocr_stats": q_extract_ocr_stats,
-        "pdf_metadata": q_pdf_metadata,
-        "extract_recap_mismatch": q_extract_recap_mismatch,
-        "reference_fixtures": q_reference_fixtures,
-        "doc_metrics_by_lang": q_doc_metrics_by_lang,
-        "markdown_goldens": q_markdown_goldens,
-        "images_to_pdf": q_images_to_pdf,
-        "fetch_images_to_pdf": q_fetch_images_to_pdf,
-        "audio_transcode": q_audio_transcode,
-        "pdf_thumbnails": q_pdf_thumbnails,
-        "embed_text_overlay": q_embed_text_overlay,
-        "pdf_strip_roundtrip": q_pdf_strip_roundtrip,
-        "media_features_mismatch": q_media_features_mismatch,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_pairs_w128": q_dedup_minhash_pairs_w128,
-        "dedup_simhash_near_w48": q_dedup_simhash_near_w48,
-        "dedup_components": q_dedup_components,
-        "dedup_filtered_corpus": q_dedup_filtered_corpus,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_exact_substring": q_dedup_exact_substring,
-        "paragraph_dedup": q_paragraph_dedup,
-        "bloom_dedup": q_bloom_dedup,
-        "decontaminate": q_decontaminate,
-        "cdc_dedup": q_cdc_dedup,
-        "verified_neardup": q_verified_neardup,
-        "containment_est": q_containment_est,
-        "embedding_neardup": q_embedding_neardup,
-        "semdedup": q_semdedup,
-        "lsh_ann_corpus_topk": q_lsh_ann_corpus_topk,
-        "kmeans_clusters": q_kmeans_clusters,
-        "gopher_quality": q_gopher_quality,
-        "repetition_gopher": q_repetition_gopher,
-        "quality_classifier": q_quality_classifier,
-        "ccnet_perplexity": q_ccnet_perplexity,
-        "dsir_select": q_dsir_select,
-        "mix_resample": q_mix_resample,
-        "bpe_merges": q_bpe_merges,
-        "nb_confusion": q_nb_confusion,
-        "heavy_hitters": q_heavy_hitters,
-        "hll_host_distinct": q_hll_host_distinct,
-        "link_pagerank": q_link_pagerank,
-        "crawl_depth": q_crawl_depth,
-        "boilerplate_corpus": q_boilerplate_corpus,
-        "page_metadata": q_page_metadata,
-        "structured_data": q_structured_data,
-        "c4_span_dedup": q_c4_span_dedup,
-        "bm25_topk": q_bm25_topk,
-        "para_lang": q_para_lang,
-        "dedup_stats": q_dedup_stats,
-        "dedup_minhash_pairs": q_dedup_minhash_pairs,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_simhash_near": q_dedup_simhash_near,
-        "clean_corpus": q_clean_corpus,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "para_dedup_intra": q_para_dedup_intra,
-        "url_canonicalize": q_url_canonicalize,
-        "domain_topk": q_domain_topk,
-        "mix_weights": q_mix_weights,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "ngram_novelty": q_ngram_novelty,
-        "token_deciles": q_token_deciles,
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "snapshot_diff": q_snapshot_diff,
-        "corpus_health": q_corpus_health,
-        "text_quality": q_text_quality,
-        "repetition_stats": q_repetition_stats,
-        "line_dedup": q_line_dedup,
-        "pii_scrub": q_pii_scrub,
-        "corpus_sample": q_corpus_sample,
-        "token_stats": q_token_stats,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "lsh_ann_topk": q_lsh_ann_topk,
-        "ivf_ann_topk": q_ivf_ann_topk,
-        "bpe_token_counts": q_bpe_token_counts,
-        "link_host_rank": q_link_host_rank,
-        "robots_gate": q_robots_gate,
-        "domain_blocklist": q_domain_blocklist,
-        "image_dup_clusters": q_image_dup_clusters,
-        "audio_dup_clusters": q_audio_dup_clusters,
-        "video_dup_clusters": q_video_dup_clusters,
-        "url_admission": q_url_admission,
-        "anchor_text_topk": q_anchor_text_topk,
-        "image_caption_table": q_image_caption_table,
-        "redirect_resolve": q_redirect_resolve,
-        "sentence_stats": q_sentence_stats,
-        "wet_export": q_wet_export,
-        "fetch_schedule": q_fetch_schedule,
-        "table_cells": q_table_cells,
-        "cdx_index": q_cdx_index,
-        "wat_export": q_wat_export,
-        "host_degree_stats": q_host_degree_stats,
-        "soft404_gate": q_soft404_gate,
-        "sitemap_entries": q_sitemap_entries,
-        "feed_entries": q_feed_entries,
-        "frontier_admission": q_frontier_admission,
-        "date_normalize": q_date_normalize,
-        "code_blocks": q_code_blocks,
-        "boilerplate_blocks": q_boilerplate_blocks,
-        "boilerplate_corpus_lang": q_boilerplate_corpus_lang,
-        "content_spans": q_content_spans,
-        "robots_meta": q_robots_meta,
-        "unicode_clean": q_unicode_clean,
-        "hreflang_pairs": q_hreflang_pairs,
-        "bitext_align": q_bitext_align,
-        "bitext_url_pairs": q_bitext_url_pairs,
-        "host_quality": q_host_quality,
-        "readability": q_readability,
-        "collocations": q_collocations,
-        "chunk_spans": q_chunk_spans,
-        "inverted_postings": q_inverted_postings,
-        "quote_spans": q_quote_spans,
-        "mirror_pairs": q_mirror_pairs,
-        "kwic": q_kwic,
-        "citations": q_citations,
-        "vocab_growth": q_vocab_growth,
-        "revisit_records": q_revisit_records,
-        "rake_keywords": q_rake_keywords,
-        "char_coverage": q_char_coverage,
-        "crawler_traps": q_crawler_traps,
-        "idn_homographs": q_idn_homographs,
-        "hits_scores": q_hits_scores,
-        "trustrank": q_trustrank,
-        "stem_conflation": q_stem_conflation,
-        "host_split": q_host_split,
-        "zipf_fit": q_zipf_fit,
-        "freq_of_freqs": q_freq_of_freqs,
-        "layout_clusters": q_layout_clusters,
-        "temporal_leakage": q_temporal_leakage,
-        "best_passages": q_best_passages,
-        "containment_pairs": q_containment_pairs,
-        "textrank_keywords": q_textrank_keywords,
-        "prf_expansion": q_prf_expansion,
-        "textrank_summary": q_textrank_summary,
-        "postings_compression": q_postings_compression,
-        "url_templates": q_url_templates,
-        "heading_outline": q_heading_outline,
-        "host_template_lines": q_host_template_lines,
-        "canonical_clusters": q_canonical_clusters,
-        "pagination_chains": q_pagination_chains,
-        "c4_clean": q_c4_clean,
-        "char_entropy": q_char_entropy,
-        "media_kind_stats": q_media_kind_stats,
-        "events_daily": q_events_daily,
-        "events_user_topk": q_events_user_topk,
-        "events_sessionize": q_events_sessionize,
-        "lineitem_pricing": q_lineitem_pricing,
-        "order_revenue_topk": q_order_revenue_topk,
-    }
-
-
-# --------------------------------------------------------------------------
-# oracles (DuckDB SQL) — exact mirrors of the Spark expressions
-# --------------------------------------------------------------------------
-
-# Java \s is [ \t\n\x0b\f\r]; RE2's \s EXCLUDES \x0b (vertical tab), so
-# every oracle regex spells the class out explicitly — a VT in a document
-# must tokenize identically on both engines (caught by the adversarial
-# differential test, not by the sf tables)
-_JAVA_WS_CLASS = "[ \\t\\n\\x0b\\f\\r]"
-
-# stupid-backoff penalty literal, generated from the LM module's own
-# quantizer so the Spark side and the oracle can never drift
-from doctor_spark.operators.lm import _lp_micro as _lm_lp_micro  # noqa: E402
-
-# unicode-clean character sets — single source of truth in
-# functions/text.py; rendered as RE2 \x{...} classes so no raw control
-# bytes appear in the oracle SQL text
-from doctor_spark.functions.text import (  # noqa: E402
-    UC_CONTROLS as _UC_CONTROLS,
-    UC_SPACE_LIKE as _UC_SPACE_LIKE,
-    UC_ZERO_WIDTH as _UC_ZERO_WIDTH,
-)
-
-
-def _re2_class(chars: str) -> str:
-    return "[" + "".join(f"\\x{{{ord(c):x}}}" for c in chars) + "]"
-
-
-_UC_SP_CLS = _re2_class(_UC_SPACE_LIKE)
-_UC_ZW_CLS = _re2_class(_UC_ZERO_WIDTH)
-_UC_CTL_CLS = _re2_class(_UC_CONTROLS)
-
-# HLL constants — single source of truth in the operator module
-from doctor_spark.operators.hll import (  # noqa: E402
-    DEN_MIN as _HLL_DEN_MIN,
-    EST_NUM as _HLL_EST_NUM,
-    M as _HLL_M,
-    Q as _HLL_Q,
-    RHO_CAP as _HLL_RHO_CAP,
-    RHO_MAX as _HLL_RHO_MAX,
-)
-
-_LM_ALPHA_MICRO = _lm_lp_micro(0.4)
-_TOKS = f"regexp_split_to_array(trim(lower(text)), '{_JAVA_WS_CLASS}+')"
-
-# generated from the single source of truth so the Spark side and the
-# oracle can never drift (round-4: 18 Latin-script inventories)
-from doctor_spark.functions.text import (  # noqa: E402
-    LANG_STOPWORDS as _LANG_STOPWORDS,
-    LATIN_CLASS as _LATIN_CLASS,
-    SCRIPT_RANGES as _SCRIPT_RANGES,
-)
-
-_STOPS = {
-    lg: "(" + ",".join("'" + w.replace("'", "''") + "'" for w in ws) + ")"
-    for lg, ws in _LANG_STOPWORDS.items()
-}
-
-
-def _simhash_sql(bits: int = 16) -> str:
-    vote = (
-        "list_sum(list_transform(th, h -> CASE WHEN (h >> {b}) & 1 = 1 "
-        "THEN 1 ELSE -1 END))"
-    )
-    sig_terms = " + ".join(
-        f"(CASE WHEN {vote.format(b=b)} >= 0 THEN {2 ** b} ELSE 0 END)"
-        for b in range(bits)
-    )
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         list_transform({_TOKS},
-           tk -> ('0x' || substr(md5(tk), 1, 15))::BIGINT) AS th
-  FROM documents
-)
-SELECT doc_id::BIGINT AS doc_id,
-       -- NULL text → NULL signature, like Spark's aggregate over a NULL
-       -- token array (the CASE terms would otherwise fold NULL votes to 0)
-       (CASE WHEN th IS NULL THEN NULL ELSE ({sig_terms}) END)::BIGINT
-         AS simhash
-FROM t
-"""
-
-
-def _simhash_near_sql(
-    bits: int = 16, max_hamming: int = 3, n_bands: int = 4
-) -> str:
-    bw = bits // n_bands
-    mask = (1 << bw) - 1
-    return f"""
-WITH sigs AS ({_simhash_sql(bits)}),
-stacked AS (
-  SELECT doc_id, simhash, b.band_no,
-         (simhash >> (b.band_no * {bw})) & {mask} AS band_val
-  FROM sigs, (SELECT unnest(range({n_bands})) AS band_no) b
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-  FROM stacked a JOIN stacked c
-    ON a.band_no = c.band_no AND a.band_val = c.band_val
-   AND a.doc_id < c.doc_id
-)
-SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, hamming FROM (
-  SELECT cand.id_a, cand.id_b,
-         bit_count(xor(sa.simhash, sb.simhash))::BIGINT AS hamming
-  FROM cand JOIN sigs sa ON sa.doc_id = cand.id_a
-            JOIN sigs sb ON sb.doc_id = cand.id_b
-) WHERE hamming <= {max_hamming}
-"""
-
-
-def _minhash_sql(n: int = 3, n_seeds: int = 4, rows_per_band: int = 2) -> str:
-    """3-gram shingles, mirroring doctor_spark.operators.dedup.shingles();
-    parameterized over the signature width so the same generator covers
-    the 4-seed demo AND the production 128-permutation/16-band operating
-    point (Lee et al. dedup / Dolma shape)."""
-    shingle = (
-        f"list_distinct(list_transform(range(1, len({_TOKS}) - {n - 2}), "
-        f"i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' ')))"
-    )
-    mh_cols = ", ".join(
-        f"list_aggregate(list_transform(sh, s -> md5('s{i}' || s)), 'min')"
-        f" AS mh{i}"
-        for i in range(n_seeds)
-    )
-    n_bands = n_seeds // rows_per_band
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_no, md5({key}) AS band_key FROM sigs".format(
-            b=b,
-            key=" || '|' || ".join(
-                f"mh{i}"
-                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return f"""
-WITH sh_t AS (
-  SELECT doc_id, {shingle} AS sh FROM documents WHERE len({_TOKS}) >= {n}
-), sigs AS (
-  SELECT doc_id, {mh_cols}
-  FROM sh_t
-), banded AS (
-  {band_selects}
-)
-SELECT DISTINCT a.doc_id::BIGINT AS id_a, b.doc_id::BIGINT AS id_b
-FROM banded a JOIN banded b
-  ON a.band_no = b.band_no AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-"""
-
-
-def _minhash_affine_sql(n_perms: int, rows_per_band: int, n: int = 3) -> str:
-    """Mirror of the universal-hash production MinHash: 32-bit md5-prefix
-    per shingle (hex→BIGINT), (a_i*h + b_i) mod 2^32 affine permutations
-    (exact int64 — a < 2^30 keeps products < 2^62), per-band md5 over the
-    decimal-string join of the row mins."""
-    from doctor_spark.operators.dedup import _affine_params
-
-    a, b = _affine_params(n_perms)
-    shingle = (
-        f"list_distinct(list_transform(range(1, len({_TOKS}) - {n - 2}), "
-        f"i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' ')))"
-    )
-    mh_cols = ", ".join(
-        "list_aggregate(list_transform(h32, "
-        f"h -> (h * {a[i]} + {b[i]}) % 4294967296), 'min') AS mh{i}"
-        for i in range(n_perms)
-    )
-    n_bands = n_perms // rows_per_band
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_no, md5({key}) AS band_key FROM sigs".format(
-            b=bi,
-            key=" || '|' || ".join(
-                f"mh{i}::VARCHAR"
-                for i in range(bi * rows_per_band, (bi + 1) * rows_per_band)
-            ),
-        )
-        for bi in range(n_bands)
-    )
-    return f"""
-WITH sh_t AS (
-  SELECT doc_id, {shingle} AS sh FROM documents WHERE len({_TOKS}) >= {n}
-), h_t AS (
-  SELECT doc_id,
-         list_transform(sh, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS h32
-  FROM sh_t
-), sigs AS (
-  SELECT doc_id, {mh_cols} FROM h_t
-), banded AS (
-  {band_selects}
-)
-SELECT DISTINCT a.doc_id::BIGINT AS id_a, b.doc_id::BIGINT AS id_b
-FROM banded a JOIN banded b
-  ON a.band_no = b.band_no AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-"""
-
-
-def _jaccard_sql(n: int = 3, threshold: float = 0.3, max_df: int = 100) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tk) - {n - 2}),
-           i -> array_to_string(tk[i:i+{n - 1}], ' '))) AS shl
-  FROM toks WHERE len(tk) >= {n}
-), ex0 AS (
-  -- 60-bit md5-prefix shingle keys, identical to the engine's Arrow
-  -- kernel (int(md5(s)[:15 hex], 16)) — 8-byte join keys both sides
-  SELECT doc_id, len(shl) AS n_sh,
-         ('0x' || substr(md5(unnest(shl)), 1, 15))::BIGINT AS shingle
-  FROM sh
-), ex AS (
-  -- document-frequency cap mirrors max_shingle_df (boilerplate shingles
-  -- are dropped before the self-join)
-  SELECT doc_id, n_sh, shingle FROM (
-    SELECT *, count(*) OVER (PARTITION BY shingle) AS df FROM ex0
-  ) WHERE df <= {max_df}
-)
-SELECT id_a, id_b, jaccard FROM (
-  SELECT a.doc_id::BIGINT AS id_a, b.doc_id::BIGINT AS id_b,
-         round(count(*)::DOUBLE /
-               (any_value(a.n_sh) + any_value(b.n_sh) - count(*)), 4) AS jaccard
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-) WHERE jaccard >= {threshold}
-"""
-
-
-def _containment_est_sql(
-    n_perms: int = 128, rows_per_band: int = 8, n: int = 3,
-    threshold: float = 0.5, min_shingles: int = 5,
-) -> str:
-    """Estimator oracle: the w128 signature replay (hex-prefix→BIGINT,
-    affine mod, list min) + per-pair agreement count over the 128
-    signature columns + the identical int64 c_est arithmetic."""
-    from doctor_spark.operators.dedup import _affine_params
-
-    a, b = _affine_params(n_perms)
-    shingle = (
-        f"list_distinct(list_transform(range(1, len({_TOKS}) - {n - 2}), "
-        f"i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' ')))"
-    )
-    mh_cols = ", ".join(
-        "list_aggregate(list_transform(h32, "
-        f"h -> (h * {a[i]} + {b[i]}) % 4294967296), 'min') AS mh{i}"
-        for i in range(n_perms)
-    )
-    n_bands = n_perms // rows_per_band
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_no, md5({key}) AS band_key FROM sigs".format(
-            b=bi,
-            key=" || '|' || ".join(
-                f"mh{i}::VARCHAR"
-                for i in range(bi * rows_per_band, (bi + 1) * rows_per_band)
-            ),
-        )
-        for bi in range(n_bands)
-    )
-    # chunked parenthesization: a flat 128-term `+` chain binds as a
-    # 128-deep left-assoc tree and trips DuckDB's recursion limit; 16
-    # groups of 8 keep every subtree shallow (integer addition is
-    # associative, so the grouping cannot change the value)
-    m_terms = [f"(sa.mh{i} = sb.mh{i})::BIGINT" for i in range(n_perms)]
-    m_sum = " + ".join(
-        "(" + " + ".join(m_terms[g:g + 8]) + ")"
-        for g in range(0, n_perms, 8)
-    )
-    thr_micro = int(round(threshold * 1_000_000))
-    return f"""
-WITH sh_t AS (
-  SELECT doc_id, {shingle} AS sh FROM documents WHERE len({_TOKS}) >= {n}
-), h_t AS (
-  SELECT doc_id, len(sh) AS n_sh,
-         list_transform(sh, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS h32
-  FROM sh_t
-), sigs AS (
-  SELECT doc_id, n_sh, {mh_cols} FROM h_t
-), banded AS (
-  {band_selects}
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_no = b.band_no AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-), scored AS (
-  SELECT p.id_a, p.id_b, sa.n_sh AS n_a, sb.n_sh AS n_b,
-         ({m_sum}) AS m
-  FROM pairs p
-  JOIN sigs sa ON sa.doc_id = p.id_a
-  JOIN sigs sb ON sb.doc_id = p.id_b
-), d AS (
-  SELECT id_a::BIGINT AS src_id, id_b::BIGINT AS dst_id,
-         n_a AS n_src, n_b AS n_dst, m FROM scored
-  UNION ALL
-  SELECT id_b::BIGINT, id_a::BIGINT, n_b, n_a, m FROM scored
-)
-SELECT src_id, dst_id, m::BIGINT AS m,
-       ((m * (n_src + n_dst) * 1000000)
-        // (({n_perms} + m) * n_src))::BIGINT AS c_est_micro
-FROM d
-WHERE n_src >= {min_shingles}
-  AND (m * (n_src + n_dst) * 1000000)
-      // (({n_perms} + m) * n_src) >= {thr_micro}
-"""
-
-
-def _crawl_depth_sql(n_iter: int = 4) -> str:
-    """Multi-source BFS oracle: the affine edge generators, seed rule
-    doc_id % 100 == 0, and an unrolled min-relaxation ladder."""
-    gens = " UNION ALL ".join(
-        f"SELECT d.doc_id AS src, (d.doc_id * {m} + {c}) % nn.n AS dst "
-        f"FROM documents d, nn"
-        for m, c in _PR_EDGE_GENS
-    )
-    cte = [f"""nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e AS (
-  SELECT DISTINCT ed.src, ed.dst
-  FROM ({gens}) ed JOIN documents dd ON dd.doc_id = ed.dst
-  WHERE ed.src <> ed.dst
-),
-d0 AS (
-  SELECT doc_id AS node, 0::BIGINT AS dist FROM documents
-  WHERE doc_id % 100 = 0
-)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""d{i} AS (
-  SELECT node, min(dist)::BIGINT AS dist FROM (
-    SELECT node, dist FROM d{i - 1}
-    UNION ALL
-    SELECT e.dst AS node, d{i - 1}.dist + 1 AS dist
-    FROM d{i - 1} JOIN e ON d{i - 1}.node = e.src
-  ) GROUP BY node
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT node::BIGINT AS doc_id, dist::BIGINT AS depth FROM d{n_iter}
-"""
-    )
-
-
-def _postings_compression_sql() -> str:
-    """VByte accounting oracle: per-doc distinct terms, lag-window
-    gaps (first = doc_id + 1), the identical started-7-bit-group CASE
-    sum, int64-micro ratio."""
-    return f"""
-WITH pres AS (
-  SELECT doc_id::BIGINT AS doc_id, unnest(list_distinct({_TOKS})) AS term
-  FROM documents WHERE length(trim(text)) > 0
-), gaps AS (
-  SELECT term,
-         coalesce(doc_id - lag(doc_id) OVER (
-           PARTITION BY term ORDER BY doc_id), doc_id + 1) AS gap
-  FROM pres
-), v AS (
-  SELECT term,
-         1 + (gap >= 128)::BIGINT + (gap >= 16384)::BIGINT
-           + (gap >= 2097152)::BIGINT + (gap >= 268435456)::BIGINT AS vlen
-  FROM gaps
-)
-SELECT term, count(*)::BIGINT AS df, sum(vlen)::BIGINT AS vbyte_bytes,
-       (count(*) * 8)::BIGINT AS fixed_bytes,
-       ((sum(vlen) * 1000000) // (count(*) * 8))::BIGINT AS ratio_micro
-FROM v GROUP BY term
-"""
-
-
-def _textrank_summary_sql(
-    k: int = 2, n_iter: int = 4, min_shared: int = 2, enc: int = 1024,
-) -> str:
-    """Summarization oracle: split-and-reappend sentence replay (exact
-    on the clean-split synthesis by construction), [a-z]+ word sets,
-    >= min_shared intersection edges within doc, the unrolled integer
-    PageRank CTE over encoded (doc_id*enc+sidx) nodes, top-k per doc."""
-    cte = [f"""t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_SUMM_SYNTH_SQL.strip()} AS text
-  FROM documents
-),
-ss AS (SELECT doc_id, string_split(text, '. ') AS p FROM t),
-sl AS (
-  SELECT doc_id,
-         list_transform(range(1, len(p) + 1),
-           i -> CASE WHEN i < len(p) THEN p[i] || '.' ELSE p[i] END) AS s
-  FROM ss
-),
-sn AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(s) + 1),
-           i -> {{'sidx': i - 1, 'sent': s[i]}})) AS r
-  FROM sl
-),
-sent_nodes AS (
-  SELECT doc_id, r.sidx::INT AS sidx, r.sent AS sent,
-         (doc_id * {enc} + r.sidx)::BIGINT AS node,
-         list_distinct(regexp_extract_all(lower(r.sent), '[a-z]+')) AS wset
-  FROM sn
-),
-und AS (
-  SELECT a.node AS src, b.node AS dst
-  FROM sent_nodes a JOIN sent_nodes b
-    ON a.doc_id = b.doc_id AND a.sidx < b.sidx
-  WHERE len(list_intersect(a.wset, b.wset)) >= {min_shared}
-),
-eb AS (
-  SELECT src, dst FROM und UNION ALL SELECT dst AS src, src AS dst FROM und
-),
-deg AS (SELECT src, count(*) AS deg FROM eb GROUP BY src),
-e AS (SELECT eb.src, eb.dst, deg.deg FROM eb JOIN deg USING (src)),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-r0 AS (SELECT node, 1000000::BIGINT AS rank_micro FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""r{i} AS (
-  SELECT nodes.node,
-         (150000 + (85 * coalesce(inf.inflow, 0)) // 100)::BIGINT
-           AS rank_micro
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(r{i - 1}.rank_micro // e.deg) AS inflow
-    FROM r{i - 1} JOIN e ON r{i - 1}.node = e.src
-    GROUP BY e.dst
-  ) inf USING (node)
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f""",
-scored AS (
-  SELECT (node // {enc})::BIGINT AS doc_id, (node % {enc})::INT AS sidx,
-         rank_micro::BIGINT AS rank_micro,
-         row_number() OVER (
-           PARTITION BY (node // {enc})
-           ORDER BY rank_micro DESC, (node % {enc}) ASC
-         )::INT AS rank
-  FROM r{n_iter}
-)
-SELECT s.doc_id, s.sidx, s.rank, s.rank_micro, sent_nodes.sent AS sentence
-FROM scored s JOIN sent_nodes
-  ON s.doc_id = sent_nodes.doc_id AND s.sidx = sent_nodes.sidx
-WHERE s.rank <= {k}
-"""
-    )
-
-
-def _para_lang_sql() -> str:
-    """Paragraph-level lang segmentation oracle: unnest on chr(10),
-    ASCII-space trim, the parameterized lang_guess mirror per paragraph,
-    then the identical plurality/int64-micro rollup."""
-    return f"""
-WITH paras AS (
-  SELECT doc_id, trim(unnest(string_split(text, chr(10)))) AS para
-  FROM documents WHERE text IS NOT NULL
-), pl AS (
-  SELECT doc_id, {_lang_guess_expr('para')} AS plang
-  FROM paras WHERE len(para) > 0
-), counts AS (
-  SELECT doc_id, plang, count(*)::BIGINT AS n FROM pl GROUP BY 1, 2
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY n DESC, plang ASC
-  ) AS rn FROM counts
-)
-SELECT doc_id::BIGINT AS doc_id,
-       sum(n)::BIGINT AS n_paras,
-       count(*)::BIGINT AS n_langs,
-       max(CASE WHEN rn = 1 THEN plang END) AS major_lang,
-       ((max(CASE WHEN rn = 1 THEN n END) * 1000000) // sum(n))::BIGINT
-         AS major_frac_micro,
-       (count(*) > 1) AS mixed
-FROM ranked GROUP BY doc_id
-"""
-
-
-def _prf_sql(k_fb: int = 5, m: int = 5) -> str:
-    """PRF expansion oracle: the BM25 replay (top-k_fb) as a subquery,
-    feedback-doc tf, query-term anti-join, corpus df restricted to the
-    candidate vocabulary, weight = tf * micro-idf (identical integer
-    quantization), (weight DESC, term ASC) row_number, m per query."""
-    return f"""
-WITH top AS ({_bm25_topk_sql(k_fb)}),
-t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-stats AS (SELECT count(*)::BIGINT AS n_docs FROM t),
-x AS (SELECT doc_id, unnest(tk) AS term FROM t),
-fb AS (SELECT query_id, doc_id FROM top),
-fb_tf AS (
-  SELECT fb.query_id, x.term, count(*)::BIGINT AS tf
-  FROM fb JOIN x USING (doc_id)
-  GROUP BY 1, 2
-),
-q(query_id, qtext) AS (VALUES {", ".join(
-    f"(CAST({i} AS BIGINT), '{q}')" for i, q in enumerate(_BM25_QUERIES)
-)}),
-qt2 AS (
-  SELECT query_id, term FROM (
-    SELECT query_id,
-           unnest(list_distinct(regexp_split_to_array(
-             trim(lower(qtext)), '{_JAVA_WS_CLASS}+'))) AS term
-    FROM q
-  ) WHERE term <> ''
-),
-cand AS (
-  SELECT fb_tf.query_id, fb_tf.term, fb_tf.tf FROM fb_tf
-  LEFT JOIN qt2 ON fb_tf.query_id = qt2.query_id
-              AND fb_tf.term = qt2.term
-  WHERE qt2.term IS NULL AND fb_tf.term <> ''
-),
-cdf AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df
-  FROM x WHERE term IN (SELECT DISTINCT term FROM cand)
-  GROUP BY 1
-),
-wgt AS (
-  SELECT query_id, cand.term,
-         (cand.tf * CAST(floor(
-            ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-               / (CAST(df AS DOUBLE) + 0.5) + 1.0) * 1000000 + 0.5
-          ) AS BIGINT))::BIGINT AS weight_micro
-  FROM cand JOIN cdf USING (term), stats
-),
-rw AS (
-  SELECT query_id,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY weight_micro DESC, term ASC
-         ) AS rank,
-         term, weight_micro
-  FROM wgt
-)
-SELECT query_id, CAST(rank AS INT) AS rank, term, weight_micro
-FROM rw WHERE rank <= {m}
-"""
-
-
-def _containment_sql(
-    n: int = 3, threshold: float = 0.5, max_df: int = 100,
-    min_shingles: int = 5,
-) -> str:
-    """Directed Broder containment over the jaccard oracle's shingle /
-    60-bit-hash / DF-cap CTEs: undirected (a<b) intersection counts,
-    then a two-way projection gated on the SOURCE set-size floor."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tk) - {n - 2}),
-           i -> array_to_string(tk[i:i+{n - 1}], ' '))) AS shl
-  FROM toks WHERE len(tk) >= {n}
-), ex0 AS (
-  SELECT doc_id, len(shl) AS n_sh,
-         ('0x' || substr(md5(unnest(shl)), 1, 15))::BIGINT AS shingle
-  FROM sh
-), ex AS (
-  SELECT doc_id, n_sh, shingle FROM (
-    SELECT *, count(*) OVER (PARTITION BY shingle) AS df FROM ex0
-  ) WHERE df <= {max_df}
-), p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b,
-         count(*) AS inter
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), d AS (
-  SELECT id_a::BIGINT AS src_id, id_b::BIGINT AS dst_id,
-         n_a AS n_src, inter FROM p
-  UNION ALL
-  SELECT id_b::BIGINT, id_a::BIGINT, n_b, inter FROM p
-)
-SELECT src_id, dst_id,
-       round(inter::DOUBLE / n_src, 4) AS containment
-FROM d
-WHERE n_src >= {min_shingles}
-  AND round(inter::DOUBLE / n_src, 4) >= {threshold}
-"""
-
-
-def _textrank_sql(k: int = 50, n_iter: int = 4, min_len: int = 3) -> str:
-    """TextRank oracle: list_transform adjacent-pair synthesis over the
-    shared tokenizer + en-stopword gate, then the unrolled integer
-    PageRank CTE (same 150000/85 micro-mass arithmetic as
-    _pagerank_sql) over VARCHAR word nodes."""
-    sw = ", ".join(f"'{s}'" for s in sorted(_LANG_STOPWORDS["en"]))
-    cte = [f"""toks AS (
-  SELECT {_TOKS} AS tk FROM documents
-),
-kept AS (
-  SELECT list_filter(tk, t -> regexp_matches(t, '^[a-z]{{{min_len},}}$')
-           AND NOT list_contains([{sw}], t)) AS kt
-  FROM toks
-),
-pairs0 AS (
-  SELECT unnest(list_transform(range(1, len(kt)),
-    i -> {{'u': least(kt[i], kt[i+1]), 'v': greatest(kt[i], kt[i+1])}})) AS p
-  FROM kept WHERE len(kt) >= 2
-),
-e0 AS (
-  SELECT DISTINCT p.u AS u, p.v AS v FROM pairs0 WHERE p.u <> p.v
-),
-eb AS (
-  SELECT u AS src, v AS dst FROM e0
-  UNION ALL
-  SELECT v AS src, u AS dst FROM e0
-),
-deg AS (SELECT src, count(*) AS deg FROM eb GROUP BY src),
-e AS (SELECT eb.src, eb.dst, deg.deg FROM eb JOIN deg USING (src)),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-r0 AS (SELECT node, 1000000::BIGINT AS rank_micro FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""r{i} AS (
-  SELECT nodes.node,
-         (150000 + (85 * coalesce(inf.inflow, 0)) // 100)::BIGINT
-           AS rank_micro
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(r{i - 1}.rank_micro // e.deg) AS inflow
-    FROM r{i - 1} JOIN e ON r{i - 1}.node = e.src
-    GROUP BY e.dst
-  ) inf USING (node)
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT rank, word, rank_micro FROM (
-  SELECT row_number() OVER (ORDER BY rank_micro DESC, node ASC)::INT
-           AS rank,
-         node AS word, rank_micro::BIGINT AS rank_micro
-  FROM r{n_iter}
-) WHERE rank <= {k}
-"""
-    )
-
-
-# ---- LSH / IVF oracle builders: the hyperplanes and centroids are
-# deterministic (md5-seeded / smallest-id), so DuckDB can enumerate the
-# exact same buckets the engine uses --------------------------------------
-
-_TWO60 = float(1 << 60)  # 16^15, the hyperplane hash normalizer
-
-
-def _plane_dot(vec: str, plane_no: int, dim: int) -> str:
-    """SQL for v · plane(plane_no) — mirrors similarity._hyperplane:
-    component j = (md5('plane{pn}:{j}')[:15 hex] / 16^15) * 2 - 1."""
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}), i -> {vec}[i] * "
-        f"((('0x' || substr(md5('plane{plane_no}:' || (i-1)::VARCHAR), 1, 15))"
-        f"::BIGINT / {_TWO60}) * 2.0 - 1.0)))"
-    )
-
-
-def _bucket_expr(vec: str, table_no: int, n_planes: int, dim: int) -> str:
-    bits = " + ".join(
-        f"(CASE WHEN {_plane_dot(vec, table_no * 1000 + p, dim)} >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(n_planes)
-    )
-    return f"({bits})::BIGINT"
-
-
-_COS_RAW = (
-    "round(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))"
-    " / (sqrt(list_sum(list_transform(qv, x -> x * x)))"
-    " * sqrt(list_sum(list_transform(cv, x -> x * x)))), 4)"
-)
-
-
-def _neardup_sql(
-    threshold: float = 0.35, dim: int = 64, n_planes: int = 4,
-    n_tables: int = 3,
-) -> str:
-    buckets = ", ".join(
-        f"{_bucket_expr('v', t, n_planes, dim)} AS b{t}" for t in range(n_tables)
-    )
-    same_bucket = " OR ".join(f"a.b{t} = c.b{t}" for t in range(n_tables))
-    return f"""
-WITH e AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), b AS (
-  SELECT id, {buckets} FROM e
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, c.id AS id_b
-  FROM b a JOIN b c ON a.id < c.id AND ({same_bucket})
-)
-SELECT id_a, id_b, cos_sim FROM (
-  SELECT p.id_a::BIGINT AS id_a, p.id_b::BIGINT AS id_b,
-         round(list_sum(list_transform(range(1, {dim + 1}),
-                                       i -> qe.v[i] * ce.v[i]))
-               / (sqrt(list_sum(list_transform(qe.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(ce.v, x -> x * x)))), 4)
-           AS cos_sim
-  FROM cand p JOIN e qe ON qe.id = p.id_a JOIN e ce ON ce.id = p.id_b
-) WHERE cos_sim >= {threshold}
-"""
-
-
-def _lsh_ann_sql(
-    n_queries: int = 10, k: int = 3, dim: int = 64, n_planes: int = 4,
-    n_tables: int = 3,
-) -> str:
-    buckets = ", ".join(
-        f"{_bucket_expr('v', t, n_planes, dim)} AS b{t}" for t in range(n_tables)
-    )
-    same_bucket = " OR ".join(f"q.b{t} = c.b{t}" for t in range(n_tables))
-    return f"""
-WITH e AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), b AS (
-  SELECT id, {buckets} FROM e
-), pairs AS (
-  SELECT DISTINCT q.id AS query_id, c.id AS neighbor_id
-  FROM b q JOIN b c ON ({same_bucket})
-  WHERE q.id < {n_queries} AND c.id >= {n_queries}
-), scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         round(list_sum(list_transform(range(1, {dim + 1}),
-                                       i -> qe.v[i] * ce.v[i]))
-               / (sqrt(list_sum(list_transform(qe.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(ce.v, x -> x * x)))), 4)
-           AS score
-  FROM pairs p JOIN e qe ON qe.id = p.query_id JOIN e ce ON ce.id = p.neighbor_id
-)
-SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-       score::DOUBLE AS score
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id ASC) AS rnk
-      FROM scored)
-WHERE rnk <= {k}
-"""
-
-
-def _lsh_ann_corpus_sql(
-    k: int = 2, dim: int = 64, n_planes: int = 4, n_tables: int = 3,
-) -> str:
-    """Corpus-vs-corpus mirror of _lsh_ann_sql: every id is a query,
-    directed same-bucket pairs (q ≠ c)."""
-    buckets = ", ".join(
-        f"{_bucket_expr('v', t, n_planes, dim)} AS b{t}" for t in range(n_tables)
-    )
-    same_bucket = " OR ".join(f"q.b{t} = c.b{t}" for t in range(n_tables))
-    return f"""
-WITH e AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), b AS (
-  SELECT id, {buckets} FROM e
-), pairs AS (
-  SELECT DISTINCT q.id AS query_id, c.id AS neighbor_id
-  FROM b q JOIN b c ON ({same_bucket})
-  WHERE q.id <> c.id
-), scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         round(list_sum(list_transform(range(1, {dim + 1}),
-                                       i -> qe.v[i] * ce.v[i]))
-               / (sqrt(list_sum(list_transform(qe.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(ce.v, x -> x * x)))), 4)
-           AS score
-  FROM pairs p JOIN e qe ON qe.id = p.query_id JOIN e ce ON ce.id = p.neighbor_id
-)
-SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-       score::DOUBLE AS score
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id ASC) AS rnk
-      FROM scored)
-WHERE rnk <= {k}
-"""
-
-
-def _ivf_ann_sql(
-    n_queries: int = 10, k: int = 3, dim: int = 64, n_centroids: int = 16,
-    nprobe: int = 6,
-) -> str:
-    ndot = (
-        f"round(list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> s.nv[i] * ct.cv[i])), 12)"
-    )
-    return f"""
-WITH e AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), norms AS (
-  SELECT id, v,
-         list_transform(v, x -> x / sqrt(list_sum(
-             list_transform(v, y -> y * y)))) AS nv
-  FROM e
-), cents AS (
-  SELECT id AS cid, nv AS cv FROM norms WHERE id < {n_centroids}
-), cand_sims AS (
-  SELECT s.id, ct.cid, {ndot} AS sim
-  FROM norms s CROSS JOIN cents ct WHERE s.id >= {n_queries}
-), assign AS (
-  SELECT id, cid AS bucket FROM (
-    SELECT id, cid, row_number() OVER (PARTITION BY id
-                                       ORDER BY sim DESC, cid ASC) AS rn
-    FROM cand_sims
-  ) WHERE rn = 1
-), query_sims AS (
-  SELECT s.id, ct.cid, {ndot} AS sim
-  FROM norms s CROSS JOIN cents ct WHERE s.id < {n_queries}
-), probes AS (
-  SELECT id AS query_id, cid AS bucket FROM (
-    SELECT id, cid, row_number() OVER (PARTITION BY id
-                                       ORDER BY sim DESC, cid ASC) AS rn
-    FROM query_sims
-  ) WHERE rn <= {nprobe}
-), pairs AS (
-  SELECT p.query_id, a.id AS neighbor_id
-  FROM probes p JOIN assign a ON p.bucket = a.bucket
-), scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         round(list_sum(list_transform(range(1, {dim + 1}),
-                                       i -> qe.v[i] * ce.v[i]))
-               / (sqrt(list_sum(list_transform(qe.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(ce.v, x -> x * x)))), 4)
-           AS score
-  FROM pairs p JOIN e qe ON qe.id = p.query_id JOIN e ce ON ce.id = p.neighbor_id
-)
-SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-       score::DOUBLE AS score
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id ASC) AS rnk
-      FROM scored)
-WHERE rnk <= {k}
-"""
-
-
-def _semdedup_sql(
-    n_clusters: int = 16, threshold: float = 0.35, dim: int = 64,
-) -> str:
-    """SemDeDup mirror: assignment replays the IVF oracle's normalize +
-    round-12 dot + (sim DESC, cid ASC) tie-break; pair cosine replays
-    the neardup oracle's raw-vector round-4 formula."""
-    ndot = (
-        f"round(list_sum(list_transform(range(1, {dim + 1}), "
-        f"i -> s.nv[i] * ct.cv[i])), 12)"
-    )
-    return f"""
-WITH e AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), norms AS (
-  SELECT id, v,
-         list_transform(v, x -> x / sqrt(list_sum(
-             list_transform(v, y -> y * y)))) AS nv
-  FROM e
-), cents AS (
-  SELECT id AS cid, nv AS cv FROM norms WHERE id < {n_clusters}
-), sims AS (
-  SELECT s.id, ct.cid, {ndot} AS sim
-  FROM norms s CROSS JOIN cents ct
-), assign AS (
-  SELECT id, cid AS cluster FROM (
-    SELECT id, cid, row_number() OVER (PARTITION BY id
-                                       ORDER BY sim DESC, cid ASC) AS rn
-    FROM sims
-  ) WHERE rn = 1
-), pairs AS (
-  SELECT b.id AS id_b,
-         round(list_sum(list_transform(range(1, {dim + 1}),
-                                       i -> ea.v[i] * eb.v[i]))
-               / (sqrt(list_sum(list_transform(ea.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(eb.v, x -> x * x)))), 4)
-           AS cos_sim
-  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.id < b.id
-  JOIN e ea ON ea.id = a.id JOIN e eb ON eb.id = b.id
-), removed AS (
-  SELECT DISTINCT id_b AS id FROM pairs WHERE cos_sim >= {threshold}
-)
-SELECT a.id::BIGINT AS id, a.cluster::INT AS cluster,
-       (r.id IS NULL) AS kept
-FROM assign a LEFT JOIN removed r ON r.id = a.id
-"""
-
-
-def _bpe_sql(n_merges: int = 8, final: str = "merges") -> str:
-    """EXACT oracle for the distributed BPE trainer: the merge loop is
-    UNROLLED into one CTE chain per rank (pair totals → argmax with the
-    concat-key tie-break → list_reduce LTR merge).  DuckDB's
-    list_reduce fold replays operators/bpe.merge_syms bit-for-bit, so
-    an iterative trainer still gets a hash-exact SQL oracle."""
-    sep = "chr(31)"
-    cte = [f"""w0 AS (
-  SELECT regexp_replace(word, '(.)', '\\1' || {sep}, 'g') || '</w>' AS syms,
-         cnt
-  FROM (SELECT token AS word, count(*) AS cnt
-        FROM (SELECT unnest({_TOKS}) AS token FROM documents)
-        WHERE token <> '' AND strpos(token, {sep}) = 0
-        GROUP BY token)
-)"""]
-    for i in range(1, n_merges + 1):
-        cte.append(f"""p{i} AS (
-  SELECT u.pair, sum(w.cnt) AS total
-  FROM w{i - 1} w,
-       unnest(list_transform(range(1, len(string_split(w.syms, {sep}))),
-              j -> string_split(w.syms, {sep})[j] || {sep}
-                   || string_split(w.syms, {sep})[j + 1])) AS u(pair)
-  GROUP BY u.pair
-)""")
-        cte.append(f"""m{i} AS (
-  SELECT {i} AS rnk,
-         string_split(pair, {sep})[1] AS l,
-         string_split(pair, {sep})[2] AS r,
-         total
-  FROM p{i} ORDER BY total DESC, pair ASC LIMIT 1
-)""")
-        cte.append(f"""w{i} AS (
-  SELECT CASE WHEN len(string_split(w.syms, {sep})) = 1 THEN w.syms
-         ELSE list_reduce(string_split(w.syms, {sep}),
-           (acc, x) -> CASE
-             WHEN x = m.r AND (acc = m.l
-                               OR right(acc, length(m.l) + 1) = {sep} || m.l)
-             THEN left(acc, length(acc) - length(m.l)) || m.l || m.r
-             ELSE acc || {sep} || x END) END AS syms,
-         w.cnt
-  FROM w{i - 1} w CROSS JOIN m{i} m
-)""")
-    union = "\nUNION ALL\n".join(f"SELECT * FROM m{i}"
-                                 for i in range(1, n_merges + 1))
-    if final == "tokens":
-        # the trainer's FINAL segmentation: token histogram of the last
-        # word-table level (what bpe_token_counts recomputes by replaying
-        # the learned merges through the same fold kernel)
-        return (
-            "WITH " + ",\n".join(cte)
-            + f"""
-SELECT u.token, sum(w.cnt)::BIGINT AS cnt
-FROM w{n_merges} w, unnest(string_split(w.syms, {sep})) AS u(token)
-GROUP BY u.token
-"""
-        )
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT rnk::INT AS rank, l AS "left", r AS "right", total::BIGINT AS freq
-FROM ({union})
-"""
-    )
-
-
-def _boilerplate_blocks_sql() -> str:
-    """The block catalog (kernels/boilerplate_fixtures.BLOCKS — text and
-    link-char literals authored by hand) with every feature, the
-    context-free CASE, and the context-sensitive stage recomputed in SQL:
-    the window functions below are an independent implementation of the
-    pure two-pass jusText context resolution the kernel runs in Python."""
-    from doctor_spark.kernels.boilerplate_fixtures import BLOCKS
-
-    def lit(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    vals = ",\n    ".join(
-        f"({lit(u)}, {i}, {lit(t)}, {lc})" for u, i, t, lc in BLOCKS
-    )
-    toks = "regexp_split_to_array(lower(btext), ' ')"
-    return f"""
-WITH lit(url, block_id, btext, link_chars) AS (VALUES
-    {vals}),
-f AS (SELECT url, block_id, btext, link_chars,
-        length(btext) AS nc,
-        len({toks}) AS nw,
-        len(list_filter({toks}, tk -> tk IN {_STOPS['en']})) AS hits
-      FROM lit),
-c AS (SELECT *, (1000 * link_chars) // nc AS link_milli,
-        (1000 * hits) // nw AS stop_milli FROM f),
-k AS (SELECT *, CASE
-        WHEN link_milli > 200 THEN 'bad'
-        WHEN position('©' IN btext) > 0 THEN 'bad'
-        WHEN nc < 70 THEN
-          CASE WHEN link_chars > 0 THEN 'bad' ELSE 'short' END
-        WHEN stop_milli > 320 THEN
-          CASE WHEN nc > 200 THEN 'good' ELSE 'neargood' END
-        WHEN stop_milli > 300 THEN 'neargood'
-        ELSE 'bad' END AS cf_class FROM c),
-w AS (SELECT *,
-   coalesce(last_value(CASE WHEN cf_class IN ('good','bad') THEN cf_class
-       END IGNORE NULLS) OVER (PARTITION BY url ORDER BY block_id
-       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 'bad') AS prev_gb,
-   coalesce(first_value(CASE WHEN cf_class IN ('good','bad') THEN cf_class
-       END IGNORE NULLS) OVER (PARTITION BY url ORDER BY block_id
-       ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 'bad') AS next_gb,
-   coalesce(last_value(CASE WHEN cf_class <> 'short' THEN cf_class
-       END IGNORE NULLS) OVER (PARTITION BY url ORDER BY block_id
-       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 'bad') AS prev_any,
-   coalesce(first_value(CASE WHEN cf_class <> 'short' THEN cf_class
-       END IGNORE NULLS) OVER (PARTITION BY url ORDER BY block_id
-       ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 'bad') AS next_any
-   FROM k)
-SELECT url, block_id::BIGINT AS block_id, btext,
-  nc::BIGINT AS n_chars, nw::BIGINT AS n_words,
-  link_chars::BIGINT AS link_chars, link_milli::BIGINT AS link_milli,
-  stop_milli::BIGINT AS stop_milli, cf_class,
-  CASE WHEN cf_class IN ('good', 'bad') THEN cf_class
-       WHEN cf_class = 'neargood' THEN
-         CASE WHEN prev_gb = 'bad' AND next_gb = 'bad'
-              THEN 'bad' ELSE 'good' END
-       WHEN prev_gb = 'good' AND next_gb = 'good' THEN 'good'
-       WHEN prev_gb = 'bad' AND next_gb = 'bad' THEN 'bad'
-       WHEN (prev_gb = 'bad' AND prev_any = 'neargood')
-         OR (next_gb = 'bad' AND next_any = 'neargood') THEN 'good'
-       ELSE 'bad' END AS final_class
-FROM w
-"""
-
-
-def _boilerplate_corpus_sql(per_lang: bool = False) -> str:
-    """Mirror of q_boilerplate_corpus: the static wrapper contributes a
-    link-only nav (bad) and a copyright footer (bad), so only the content
-    block's class varies; the SQL recomputes its normalization, features,
-    classification, and the kept-content md5 straight from ``text``.
-    With ``per_lang``, the stopword membership check dispatches on the
-    ``lang`` column through a CASE of list literals — the SQL form of
-    the operator's per-row inventory selection (unknown langs → en)."""
-    toks = "regexp_split_to_array(lower(norm), ' ')"
-    if per_lang:
-        def lst(lg: str) -> str:
-            return "[" + ",".join(
-                "'" + w.replace("'", "''") + "'"
-                for w in _LANG_STOPWORDS[lg]) + "]"
-
-        whens = "\n             ".join(
-            f"WHEN lang = '{lg}' THEN {lst(lg)}"
-            for lg in _LANG_STOPWORDS if lg != "en"
-        )
-        hits = (f"len(list_filter({toks}, tk -> list_contains("
-                f"CASE {whens} ELSE {lst('en')} END, tk)))")
-        lang_sel = ", lang"
-    else:
-        hits = f"len(list_filter({toks}, tk -> tk IN {_STOPS['en']}))"
-        lang_sel = ""
-    return f"""
-WITH n AS (SELECT doc_id{lang_sel},
-        trim(regexp_replace(coalesce(text, ''), '{_JAVA_WS_CLASS}+', ' ',
-             'g'), ' ') AS norm
-      FROM documents),
-f AS (SELECT doc_id, norm, length(norm) AS nc,
-        CASE WHEN norm = '' THEN 0 ELSE len({toks}) END AS nw,
-        CASE WHEN norm = '' THEN 0
-             ELSE {hits}
-        END AS hits
-      FROM n),
-c AS (SELECT doc_id, norm, nc,
-        CASE WHEN nc = 0 THEN 'none'
-             WHEN position('©' IN norm) > 0 THEN 'bad'
-             WHEN nc < 70 THEN 'short'
-             WHEN (1000 * hits) // nw > 320 THEN
-                CASE WHEN nc > 200 THEN 'good' ELSE 'neargood' END
-             WHEN (1000 * hits) // nw > 300 THEN 'neargood'
-             ELSE 'bad' END AS cf
-      FROM f)
-SELECT doc_id::BIGINT AS doc_id,
-  (CASE WHEN nc = 0 THEN 2 ELSE 3 END)::BIGINT AS n_blocks,
-  (CASE WHEN cf = 'good' THEN 1 ELSE 0 END)::BIGINT AS n_good,
-  (CASE WHEN cf = 'short' THEN 1 ELSE 0 END)::BIGINT AS n_short_cf,
-  (CASE WHEN cf = 'neargood' THEN 1 ELSE 0 END)::BIGINT AS n_neargood_cf,
-  (CASE WHEN cf = 'good' THEN nc ELSE 0 END)::BIGINT AS good_chars,
-  md5(CASE WHEN cf = 'good' THEN norm ELSE '' END) AS main_md5
-FROM c
-"""
-
-
-_C4_TRIM = "'^[ \\t]+|[ \\t]+$'"
-
-
-def _c4_clean_sql() -> str:
-    """Mirror of q_c4_clean: the page CTE is shared verbatim, then the
-    line-retention rule (trim → terminal punct → ≥5 words → no
-    'javascript') runs as a list_filter lambda and the four page gates
-    as a first-match CASE.  Kept lines are emitted TRIMMED, exactly as
-    the operator does."""
-    t = f"regexp_replace(ln, {_C4_TRIM}, '', 'g')"
-    keep = (f"right({t}, 1) IN ('.', '!', '?', '\"') AND "
-            f"len(list_filter(str_split({t}, ' '), w -> w <> '')) >= 5 AND "
-            f"position('javascript' IN lower({t})) = 0")
-    return _C4_PAGES_CTE + f"""
-, d AS (
-  SELECT doc_id, text, regexp_split_to_array(text, chr(10)) AS ls
-  FROM pagesx
-), k AS (
-  SELECT doc_id, text, ls,
-         list_filter(ls, ln -> {keep}) AS kept
-  FROM d
-), g AS (
-  SELECT doc_id, len(ls) AS n_lines, len(kept) AS n_kept, kept,
-         CASE WHEN position('lorem ipsum' IN lower(text)) > 0
-                THEN 'lorem_ipsum'
-              WHEN position('{{' IN text) > 0 THEN 'brace'
-              WHEN len(list_intersect(
-                     list_filter(regexp_split_to_array(lower(text),
-                                 '{_JAVA_WS_CLASS}'), w -> w <> ''),
-                     ['unsafeword'])) > 0 THEN 'banned_word'
-              WHEN len(kept) < 3 THEN 'too_few_lines' END AS drop_reason
-  FROM k
-)
-SELECT doc_id::BIGINT AS doc_id, n_lines::BIGINT AS n_lines,
-       n_kept::BIGINT AS n_kept, drop_reason,
-       drop_reason IS NULL AS page_ok,
-       md5(coalesce(array_to_string(
-             list_transform(kept,
-               ln -> regexp_replace(ln, {_C4_TRIM}, '', 'g')),
-             chr(10)), '')) AS clean_hash
-FROM g
-"""
-
-
-def _c4_span_sql(n: int = 3) -> str:
-    """Mirror of q_c4_span_dedup: spans built with DuckDB list lambdas
-    over the shared page CTE (trim-normalized lines, newline-joined,
-    60-bit md5 key), keeper = first (doc_id, start) per key via
-    row_number, removed line indices regenerated and set-subtracted,
-    cleaned text rebuilt from the RAW lines."""
-    return _C4_PAGES_CTE + f"""
-, d AS (
-  SELECT doc_id, regexp_split_to_array(text, chr(10)) AS ls,
-         list_transform(regexp_split_to_array(text, chr(10)),
-           x -> regexp_replace(x, {_C4_TRIM}, '', 'g')) AS nl
-  FROM pagesx
-), occ AS (
-  SELECT doc_id,
-    unnest(CASE WHEN len(nl) >= {n} THEN range(1, len(nl) - {n - 2})
-                ELSE [] END) AS start,
-    unnest(CASE WHEN len(nl) >= {n} THEN
-        list_transform(range(1, len(nl) - {n - 2}),
-          i -> ('0x' || substr(md5(array_to_string(
-                 list_slice(nl, i, i + {n - 1}), chr(10))), 1, 15))::BIGINT)
-      ELSE [] END) AS h
-  FROM d
-), mk AS (
-  SELECT doc_id, start,
-         count(*) OVER (PARTITION BY h) AS c,
-         row_number() OVER (PARTITION BY h ORDER BY doc_id, start) AS rn
-  FROM occ
-), rem AS (
-  SELECT doc_id, unnest(range(start, start + {n})) AS idx
-  FROM mk WHERE c > 1 AND rn > 1
-), remset AS (
-  SELECT doc_id, list_distinct(list(idx)) AS rl FROM rem GROUP BY doc_id
-)
-SELECT d.doc_id::BIGINT AS doc_id, len(d.ls)::BIGINT AS n_lines,
-       coalesce(len(r.rl), 0)::BIGINT AS n_removed,
-       md5(coalesce(array_to_string(
-             list_transform(
-               list_filter(range(1, len(d.ls) + 1),
-                 i -> NOT list_contains(coalesce(r.rl, []), i)),
-               i -> d.ls[i]),
-             chr(10)), '')) AS clean_hash
-FROM d LEFT JOIN remset r USING (doc_id)
-"""
-
-
-def _content_spans_sql() -> str:
-    """Mirror of q_content_spans: the wrapper geometry makes every offset
-    a closed-form function of the escaped-text length — nav text spans
-    [29, 60) inside the 73-char prefix, the content block spans
-    [73, 73+len(esc)), and the footer text ('© 2024 Example Corp',
-    19 chars) starts 12 chars into the suffix.  The classification CASE
-    is the corpus oracle's; the content row is absent when the
-    normalized text is empty (the kernel drops empty blocks), which also
-    shifts the footer's block_id from 2 to 1."""
-    toks = "regexp_split_to_array(lower(norm), ' ')"
-    hits = f"len(list_filter({toks}, tk -> tk IN {_STOPS['en']}))"
-    return f"""
-WITH n AS (SELECT doc_id,
-        length(replace(replace(replace(coalesce(text, ''),
-               '&', '&amp;'), '<', '&lt;'), '>', '&gt;')) AS esc_len,
-        trim(regexp_replace(coalesce(text, ''), '{_JAVA_WS_CLASS}+', ' ',
-             'g'), ' ') AS norm
-      FROM documents),
-f AS (SELECT doc_id, esc_len, norm, length(norm) AS nc,
-        CASE WHEN norm = '' THEN 0 ELSE len({toks}) END AS nw,
-        CASE WHEN norm = '' THEN 0 ELSE {hits} END AS hits
-      FROM n),
-c AS (SELECT doc_id, esc_len, nc,
-        CASE WHEN nc = 0 THEN 'none'
-             WHEN position('©' IN norm) > 0 THEN 'bad'
-             WHEN nc < 70 THEN 'short'
-             WHEN (1000 * hits) // nw > 320 THEN
-                CASE WHEN nc > 200 THEN 'good' ELSE 'neargood' END
-             WHEN (1000 * hits) // nw > 300 THEN 'neargood'
-             ELSE 'bad' END AS cf
-      FROM f)
-SELECT doc_id::BIGINT AS doc_id, 0::BIGINT AS block_id,
-       29::BIGINT AS start_off, 60::BIGINT AS end_off,
-       10::BIGINT AS n_chars, 'bad' AS final_class, false AS kept
-FROM c
-UNION ALL
-SELECT doc_id::BIGINT, 1::BIGINT, 73::BIGINT, (73 + esc_len)::BIGINT,
-       nc::BIGINT, CASE WHEN cf = 'good' THEN 'good' ELSE 'bad' END,
-       cf = 'good'
-FROM c WHERE cf <> 'none'
-UNION ALL
-SELECT doc_id::BIGINT, (CASE WHEN cf = 'none' THEN 1 ELSE 2 END)::BIGINT,
-       (73 + esc_len + 12)::BIGINT, (73 + esc_len + 31)::BIGINT,
-       19::BIGINT, 'bad', false
-FROM c
-"""
-
-
-def _kmeans_sql(k: int = 8, iters: int = 3, dim: int = 64) -> str:
-    """Unrolled mirror of operators/kmeans.py: quantize → (assign →
-    update) × iters → final assign → per-cluster summary.  Update uses
-    floor(sum::DOUBLE / count) — Python's // floors while DuckDB's //
-    truncates on negatives; the double division is exact at these
-    magnitudes (see the operator docstring's bound argument)."""
-    def assign(src: str, cents: str) -> str:
-        return f"""(SELECT id, cid AS cluster FROM (
-    SELECT s.id, ct.cid, row_number() OVER (PARTITION BY s.id ORDER BY
-      list_sum(list_transform(range(1, {dim + 1}),
-        i -> (s.qv[i] - ct.cv[i]) * (s.qv[i] - ct.cv[i]))) ASC,
-      ct.cid ASC) AS rn
-    FROM {src} s CROSS JOIN {cents} ct) WHERE rn = 1)"""
-
-    def update(a: str, prev: str) -> str:
-        return f"""(SELECT p.cid, CASE WHEN u.cv IS NULL THEN p.cv
-                       ELSE u.cv END AS cv
-  FROM {prev} p LEFT JOIN (
-    SELECT cid, list(val ORDER BY pos) AS cv FROM (
-      SELECT a.cluster AS cid, d.i AS pos,
-             CAST(floor(sum(s.qv[d.i])::DOUBLE / count(*)) AS BIGINT) AS val
-      FROM {a} a JOIN e s ON s.id = a.id
-      CROSS JOIN unnest(range(1, {dim + 1})) AS d(i)
-      GROUP BY a.cluster, d.i) GROUP BY cid) u USING (cid))"""
-
-    ctes = [f"""e AS (SELECT vec_id AS id,
-    list_transform(embedding::DOUBLE[],
-        x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS qv
-  FROM embeddings)""",
-            f"c0 AS (SELECT id::BIGINT AS cid, qv AS cv FROM e WHERE id < {k})"]
-    for r in range(1, iters + 1):
-        ctes.append(f"a{r} AS {assign('e', f'c{r - 1}')}")
-        ctes.append(f"c{r} AS {update(f'a{r}', f'c{r - 1}')}")
-    ctes.append(f"af AS {assign('e', f'c{iters}')}")
-    joined = ",\n".join(ctes)
-    return f"""
-WITH {joined}
-SELECT af.cluster::BIGINT AS cluster,
-  count(*)::BIGINT AS n_members,
-  sum(af.id)::BIGINT AS sum_ids,
-  c.cv[1]::BIGINT AS c0,
-  md5(array_to_string(list_transform(c.cv, x -> x::VARCHAR), ','))
-    AS centroid_md5
-FROM af JOIN c{iters} c ON c.cid = af.cluster
-GROUP BY af.cluster, c.cv
-"""
-
-
-def _char_entropy_sql() -> str:
-    """Mirror of functions/text.py:char_entropy_micro_row, recomputed the
-    slow honest way: explode the normalized text into code points
-    (regexp_extract_all '.', RE2 — norm is newline-free by construction),
-    groupBy, then the identical int64 micro-log10 fold.  NULL text →
-    NULL row; empty/ws-only → 0."""
-    mic = "CAST(floor(log10({x}) * 1000000 + 0.5) AS BIGINT)"
-    ent = ("(s.ntot * " + mic.format(x="s.ntot")
-           + " - s.tot) // s.ntot")
-    return f"""
-WITH n AS (SELECT doc_id,
-        CASE WHEN text IS NULL THEN NULL
-             ELSE trim(regexp_replace(text, '{_JAVA_WS_CLASS}+', ' ', 'g'),
-                       ' ') END AS norm
-      FROM documents),
-c AS (SELECT doc_id, ch, count(*)::BIGINT AS cnt
-      FROM n, unnest(regexp_extract_all(norm, '.')) AS t(ch)
-      WHERE norm IS NOT NULL AND norm <> ''
-      GROUP BY doc_id, ch),
-s AS (SELECT doc_id, sum(cnt) AS ntot,
-        sum(cnt * {mic.format(x="cnt")}) AS tot
-      FROM c GROUP BY doc_id),
-e AS (SELECT n.doc_id, n.norm,
-        CASE WHEN n.norm IS NULL THEN NULL
-             WHEN s.ntot IS NULL THEN 0
-             ELSE {ent} END AS em
-      FROM n LEFT JOIN s USING (doc_id))
-SELECT doc_id::BIGINT AS doc_id,
-  em::BIGINT AS entropy_micro,
-  (em < 300000) AS low_entropy
-FROM e
-"""
-
-
-def _markdown_sql() -> str:
-    """Literal golden hashes — md5 of the HAND-WRITTEN expected
-    markdown strings (markdown_goldens.py), computed here at SQL-build
-    time so the oracle can never be satisfied by a drifted kernel."""
-    import hashlib
-
-    from doctor_spark.kernels.markdown_goldens import GOLDENS
-
-    rows = "\nUNION ALL\n".join(
-        "SELECT '{}' AS golden, '{}' AS md_hash".format(
-            name.replace("'", "''"),
-            hashlib.md5(want.encode("utf-8")).hexdigest(),
-        )
-        for name, _html, want in GOLDENS
-    )
-    return rows
-
-
-def _pagerank_sql(n_iter: int = 4) -> str:
-    """Unrolled integer PageRank oracle: same edge generators, same
-    int64 micro-mass updates (// == Spark's div on non-negatives)."""
-    gens = " UNION ALL ".join(
-        f"SELECT d.doc_id AS src, (d.doc_id * {m} + {c}) % nn.n AS dst "
-        f"FROM documents d, nn"
-        for m, c in _PR_EDGE_GENS
-    )
-    cte = [f"""nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e0 AS (
-  SELECT DISTINCT ed.src, ed.dst
-  FROM ({gens}) ed JOIN documents dd ON dd.doc_id = ed.dst
-  WHERE ed.src <> ed.dst
-),
-deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
-e AS (SELECT e0.src, e0.dst, deg.deg FROM e0 JOIN deg USING (src)),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-r0 AS (SELECT node, 1000000::BIGINT AS rank_micro FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""r{i} AS (
-  SELECT nodes.node,
-         (150000 + (85 * coalesce(inf.inflow, 0)) // 100)::BIGINT
-           AS rank_micro
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(r{i - 1}.rank_micro // e.deg) AS inflow
-    FROM r{i - 1} JOIN e ON r{i - 1}.node = e.src
-    GROUP BY e.dst
-  ) inf USING (node)
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT node::BIGINT AS doc_id, rank_micro::BIGINT AS rank_micro
-FROM r{n_iter}
-"""
-    )
-
-
-def _link_host_rank_sql(n_iter: int = 4) -> str:
-    """Oracle for the host-graph query: regex replay of the href kernel
-    on the shared markup synthesis (double- and single-quoted attrs,
-    case-insensitive, entity decode, WHATWG whitespace strip, http(s)
-    scheme gate), url_host mirror, then the unrolled integer PageRank
-    over VARCHAR host nodes."""
-    ws = "' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)"
-    cte = [f"""pages AS (
-  SELECT {_LINK_SRC_HOST_SQL} AS src, {_LINK_HTML_SYNTH_SQL} AS html
-  FROM documents WHERE text IS NOT NULL
-),
-raw AS (
-  SELECT src, unnest(regexp_extract_all(html, '(?i)href="([^"]*)"', 1)) AS href
-  FROM pages
-  UNION ALL
-  SELECT src, unnest(regexp_extract_all(html, '(?i)href=''([^'']*)''', 1)) AS href
-  FROM pages
-),
-cand AS (
-  SELECT src, trim(replace(href, '&amp;', '&'), {ws}) AS href FROM raw
-),
-links AS (
-  SELECT src,
-         nullif(lower(split_part(regexp_extract(split_part(href, '#', 1),
-               '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]+)', 1), ':', 1)), '') AS dst
-  FROM cand
-  WHERE regexp_matches(href, '(?i)^https?://')
-),
-e0 AS (
-  SELECT DISTINCT src, dst FROM links
-  WHERE dst IS NOT NULL AND src <> dst
-),
-deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
-e AS (SELECT e0.src, e0.dst, deg.deg FROM e0 JOIN deg USING (src)),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-r0 AS (SELECT node, 1000000::BIGINT AS rank_micro FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""r{i} AS (
-  SELECT nodes.node,
-         (150000 + (85 * coalesce(inf.inflow, 0)) // 100)::BIGINT
-           AS rank_micro
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(r{i - 1}.rank_micro // e.deg) AS inflow
-    FROM r{i - 1} JOIN e ON r{i - 1}.node = e.src
-    GROUP BY e.dst
-  ) inf USING (node)
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT node AS host, rank_micro::BIGINT AS rank_micro
-FROM r{n_iter}
-"""
-    )
-
-
-def _page_metadata_sql() -> str:
-    """Oracle for the head-metadata query: the six EXPECTED fields
-    replayed per synthesis arm (the robots-oracle discipline — no
-    markup parsing in SQL, so the kernel's RCDATA title mode, attribute
-    unescaping, rel token-list matching, first-wins duplicates and the
-    meta-beats-<time> precedence are all verified independently)."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 6 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id,
-  CASE m WHEN 0 THEN 'Doc ' || i || ' & more'
-         WHEN 1 THEN 'T ' || i
-         WHEN 4 THEN 'A ' || i
-         WHEN 5 THEN 'R ' || i
-         ELSE NULL END AS title,
-  CASE m WHEN 0 THEN 'desc ' || i
-         WHEN 1 THEN 'D ' || i
-         WHEN 4 THEN 'first ' || i
-         WHEN 5 THEN 'x & y ' || i
-         ELSE NULL END AS description,
-  CASE m WHEN 0 THEN 'https://ex.com/d/' || i
-         WHEN 2 THEN 'https://c.example/p/' || i
-         WHEN 5 THEN '/relative/' || i
-         ELSE NULL END AS canonical_url,
-  CASE m WHEN 0 THEN 'og ' || i
-         WHEN 2 THEN 'OG ' || i
-         ELSE NULL END AS og_title,
-  CASE m WHEN 0 THEN '2024-01-02T03:04:05Z'
-         WHEN 1 THEN '2023-12-31T23:59:59Z'
-         WHEN 4 THEN '2020-05-06T07:08:09Z'
-         ELSE NULL END AS published_at,
-  CASE m WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 4 THEN 'de'
-         WHEN 5 THEN 'pt' ELSE NULL END AS lang_attr,
-  CASE m WHEN 4 THEN 'https://m.example/' || i ELSE NULL END AS refresh_url,
-  CASE m WHEN 1 THEN 'iso-8859-1' WHEN 2 THEN 'utf-8'
-         ELSE NULL END AS charset
-FROM p
-"""
-
-
-def _anchor_text_topk_sql() -> str:
-    """Oracle for the link-text query: the synthesis arms replayed as
-    UNION ALL branches (admitted anchors only — the image-only empty
-    text, relative and javascript links never produce a branch), the
-    same keyed count, and the same (count DESC, anchor ASC) rank
-    window."""
-    return f"""
-WITH e AS (
-  SELECT 't' || CAST(doc_id % {_ANCHOR_HOST_MOD} AS VARCHAR(4)) || '.example'
-           AS dst_host,
-         CASE WHEN doc_id % 4 = 3
-              THEN 'about ' || CAST(doc_id % {_ANCHOR_HOST_MOD} AS VARCHAR(4))
-              ELSE 'home' END AS anchor
-  FROM documents WHERE text IS NOT NULL
-  UNION ALL
-  SELECT 't' || CAST((doc_id * 3 + 1) % {_ANCHOR_HOST_MOD} AS VARCHAR(4))
-           || '.example',
-         CASE WHEN doc_id % 2 = 0 THEN 'news & views' ELSE 'contact' END
-  FROM documents WHERE text IS NOT NULL
-), c AS (
-  SELECT dst_host, anchor, CAST(COUNT(*) AS BIGINT) AS n_links
-  FROM e GROUP BY dst_host, anchor
-), r AS (
-  SELECT dst_host, anchor, n_links,
-         CAST(ROW_NUMBER() OVER (PARTITION BY dst_host
-                                 ORDER BY n_links DESC, anchor ASC) AS INT)
-           AS rnk
-  FROM c
-)
-SELECT dst_host, anchor, n_links, rnk FROM r WHERE rnk <= 3
-"""
-
-
-def _image_caption_table_sql() -> str:
-    """Oracle for the caption-pairing query: the three admitted
-    synthesis arms replayed as UNION ALL branches (the decorative
-    empty-alt, relative and data:-URI images never produce a branch),
-    the same keyed count, and the same modal pick via a
-    (count DESC, alt ASC) rank window."""
-    return f"""
-WITH e AS (
-  SELECT 'http://img' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4))
-           || '.example/a.png' AS src,
-         CASE WHEN doc_id % 3 = 0 THEN 'logo'
-              ELSE 'photo ' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4)) END
-           AS alt
-  FROM documents WHERE text IS NOT NULL
-  UNION ALL
-  SELECT 'http://img' || CAST((doc_id * 2 + 1) % {_IMG_SRC_MOD} AS VARCHAR(4))
-           || '.example/b.jpg',
-         'a & b'
-  FROM documents WHERE text IS NOT NULL
-  UNION ALL
-  SELECT 'http://lazy' || CAST(doc_id % {_IMG_SRC_MOD} AS VARCHAR(4))
-           || '.example/c.png',
-         'lazy ' || CAST(doc_id % 2 AS VARCHAR(2))
-  FROM documents WHERE text IS NOT NULL
-), c AS (
-  SELECT src, alt, CAST(COUNT(*) AS BIGINT) AS n_pairs
-  FROM e GROUP BY src, alt
-), r AS (
-  SELECT src, alt, n_pairs,
-         ROW_NUMBER() OVER (PARTITION BY src
-                            ORDER BY n_pairs DESC, alt ASC) AS rnk
-  FROM c
-)
-SELECT src, alt, n_pairs FROM r WHERE rnk = 1
-"""
-
-
-def _redirect_resolve_sql() -> str:
-    """Oracle for redirect resolution: the same block/cycle/sink edge
-    synthesis, walked per url by a hop-bounded recursive CTE (the
-    iterative pointer-doubling operator's sequential twin); a url is
-    resolved iff the deepest node reached has no outgoing edge."""
-    src, dst = _redirect_edges_expr("//")
-    return f"""
-WITH RECURSIVE e AS (
-  SELECT {src} AS src, {dst} AS dst FROM documents
-),
-walk(url, cur, hops) AS (
-  SELECT src, dst, 1 FROM e
-  UNION ALL
-  SELECT w.url, e2.dst, w.hops + 1
-  FROM walk w JOIN e e2 ON w.cur = e2.src
-  WHERE w.hops < 16
-),
-deepest AS (
-  SELECT url, cur, hops,
-         ROW_NUMBER() OVER (PARTITION BY url ORDER BY hops DESC) AS rn
-  FROM walk
-)
-SELECT d.url AS url,
-       CASE WHEN s.src IS NULL THEN d.cur END AS final_url,
-       CAST(CASE WHEN s.src IS NULL THEN d.hops END AS BIGINT) AS n_hops,
-       (s.src IS NULL) AS resolved
-FROM deepest d LEFT JOIN (SELECT DISTINCT src FROM e) s ON d.cur = s.src
-WHERE d.rn = 1
-"""
-
-
-def _sentence_stats_sql() -> str:
-    """Oracle for the sentence rollup: pure CASE arithmetic over the
-    known per-piece splits (A always 1 sentence/24 chars, C always
-    8+4; B/D/E gated on doc_id parity) — no text parsing in SQL."""
-    return """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(3 + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-              + CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END
-              + CASE WHEN doc_id % 5 = 0 THEN 2 ELSE 0 END AS BIGINT)
-         AS n_sentences,
-       CAST(36 + CASE WHEN doc_id % 2 = 0 THEN 21 ELSE 0 END
-               + CASE WHEN doc_id % 3 = 0 THEN 49 ELSE 0 END
-               + CASE WHEN doc_id % 5 = 0 THEN 32 ELSE 0 END AS BIGINT)
-         AS sum_chars,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN 36 ELSE 24 END AS BIGINT)
-         AS max_chars
-FROM documents
-"""
-
-
-def _fetch_schedule_sql() -> str:
-    """Oracle for the scheduler: the same frontier synthesis, the same
-    (priority DESC, url ASC) host window with the 12-slot cap, and the
-    same '0x'||substr(md5(host),1,4) worker band."""
-    return f"""
-WITH f AS (
-  SELECT 'https://h' || CAST(doc_id % {_SCHED_HOSTS} AS VARCHAR)
-           || '.example/p/' || CAST(doc_id AS VARCHAR) AS url,
-         'h' || CAST(doc_id % {_SCHED_HOSTS} AS VARCHAR) || '.example'
-           AS host,
-         doc_id % 17 AS priority,
-         (doc_id % {_SCHED_HOSTS}) % 4 * 5 + 1 AS delay
-  FROM documents
-), r AS (
-  SELECT url, host, delay,
-         ROW_NUMBER() OVER (PARTITION BY host
-                            ORDER BY priority DESC, url ASC) AS rn
-  FROM f
-)
-SELECT url, host,
-       (('0x' || substr(md5(host), 1, 4))::BIGINT
-          % {_SCHED_WORKERS})::BIGINT AS worker,
-       (rn - 1)::BIGINT AS seq,
-       ((rn - 1) * delay)::BIGINT AS fetch_at_sec
-FROM r WHERE rn <= {_SCHED_CAP}
-"""
-
-
-def _wet_export_sql() -> str:
-    """Oracle for WET serialization: the exact record byte layout
-    replayed as string concatenation — same fixed header order, CRLF
-    line ends, md5(url)-derived uuid, Content-Length in UTF-8 octets
-    (octet_length over the encoded text, NOT the char count)."""
-    return r"""
-WITH b AS (
-  SELECT doc_id,
-         'https://doc.example/' || CAST(doc_id AS VARCHAR) AS url,
-         '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-           || 'T00:00:00Z' AS date_s,
-         text
-  FROM documents WHERE text IS NOT NULL
-), r AS (
-  SELECT doc_id,
-         'WARC/1.0' || chr(13) || chr(10)
-         || 'WARC-Type: conversion' || chr(13) || chr(10)
-         || 'WARC-Target-URI: ' || url || chr(13) || chr(10)
-         || 'WARC-Date: ' || date_s || chr(13) || chr(10)
-         || 'WARC-Record-ID: <urn:uuid:'
-         || substr(md5(url), 1, 8) || '-' || substr(md5(url), 9, 4)
-         || '-' || substr(md5(url), 13, 4) || '-'
-         || substr(md5(url), 17, 4) || '-' || substr(md5(url), 21, 12)
-         || '>' || chr(13) || chr(10)
-         || 'Content-Type: text/plain' || chr(13) || chr(10)
-         || 'Content-Length: '
-         || CAST(octet_length(encode(text)) AS VARCHAR)
-         || chr(13) || chr(10) || chr(13) || chr(10)
-         || text || chr(13) || chr(10) || chr(13) || chr(10) AS rec
-  FROM b
-)
-SELECT doc_id::BIGINT AS doc_id,
-       md5(rec) AS wet_md5,
-       octet_length(encode(rec))::BIGINT AS wet_bytes
-FROM r
-"""
-
-
-def _cdx_index_sql() -> str:
-    """Oracle for the CDX index: SURT replayed from the shared URL
-    canonicalization CTE (host labels ``l`` reversed, www already
-    dropped there), the 14-digit timestamp arithmetic, and the exact
-    CDXJ line byte layout as string concatenation."""
-    return (
-        _url_canon_cte()
-        + r"""
-, s AS (
-  SELECT lab.doc_id,
-         array_to_string(list_reverse(lab.l), ',') || ')' || lower(lab.path)
-           || CASE WHEN len(lab.params) > 0
-                   THEN '?' || lower(array_to_string(lab.params, '&'))
-                   ELSE '' END AS surt,
-         '202401' || lpad(CAST(lab.doc_id % 28 + 1 AS VARCHAR), 2, '0')
-           || lpad(CAST(lab.doc_id % 24 AS VARCHAR), 2, '0') || '0000' AS ts,
-         c.canon_url, d.text
-  FROM labelled lab
-  JOIN canon c USING (doc_id)
-  JOIN documents d USING (doc_id)
-  WHERE d.text IS NOT NULL
-), r AS (
-  SELECT doc_id, surt, ts,
-         surt || ' ' || ts || ' {"url": "' || canon_url || '", "digest": "'
-           || md5(text) || '", "length": "'
-           || CAST(octet_length(encode(text)) AS VARCHAR) || '"}' AS line
-  FROM s
-)
-SELECT doc_id::BIGINT AS doc_id, surt, ts, md5(line) AS cdx_md5,
-       octet_length(encode(line))::BIGINT AS cdx_bytes
-FROM r
-"""
-    )
-
-
-def _wat_export_sql() -> str:
-    """Oracle for WAT serialization: per-arm expected title ('d'||id,
-    the RCDATA text) and outlink count (3 absolute hrefs on even pages,
-    2 on odd — relative/javascript/mailto/name-only drop), then the
-    exact JSON envelope + metadata-record byte layout replayed as
-    string concatenation (the _wet_export_sql discipline, record id
-    from md5(url || '#wat'))."""
-    return r"""
-WITH b AS (
-  SELECT doc_id,
-         'https://h' || CAST(doc_id % 997 AS VARCHAR) || '.example/p/'
-           || CAST(doc_id AS VARCHAR) AS url,
-         '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-           || 'T00:00:00Z' AS date_s,
-         'd' || CAST(doc_id AS VARCHAR) AS title,
-         CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 2 END AS outlinks,
-         text
-  FROM documents WHERE text IS NOT NULL
-), p AS (
-  SELECT doc_id, url, date_s,
-         '{"Envelope":{"WARC-Header-Metadata":{"WARC-Target-URI":"'
-           || url || '"},"Payload-Metadata":{"Title":"' || title
-           || '","Outlinks":' || CAST(outlinks AS VARCHAR)
-           || ',"Actual-Content-Length":"'
-           || CAST(octet_length(encode(text)) AS VARCHAR)
-           || '","Text-Digest":"md5:' || md5(text) || '"}}}' AS payload
-  FROM b
-), r AS (
-  SELECT doc_id,
-         'WARC/1.0' || chr(13) || chr(10)
-         || 'WARC-Type: metadata' || chr(13) || chr(10)
-         || 'WARC-Target-URI: ' || url || chr(13) || chr(10)
-         || 'WARC-Date: ' || date_s || chr(13) || chr(10)
-         || 'WARC-Record-ID: <urn:uuid:'
-         || substr(md5(url || '#wat'), 1, 8) || '-'
-         || substr(md5(url || '#wat'), 9, 4) || '-'
-         || substr(md5(url || '#wat'), 13, 4) || '-'
-         || substr(md5(url || '#wat'), 17, 4) || '-'
-         || substr(md5(url || '#wat'), 21, 12) || '>' || chr(13) || chr(10)
-         || 'Content-Type: application/json' || chr(13) || chr(10)
-         || 'Content-Length: '
-         || CAST(octet_length(encode(payload)) AS VARCHAR)
-         || chr(13) || chr(10) || chr(13) || chr(10)
-         || payload || chr(13) || chr(10) || chr(13) || chr(10) AS rec
-  FROM p
-)
-SELECT doc_id::BIGINT AS doc_id,
-       md5(rec) AS wat_md5,
-       octet_length(encode(rec))::BIGINT AS wat_bytes
-FROM r
-"""
-
-
-def _host_degree_stats_sql() -> str:
-    """Oracle for the degree histogram: the same affine edge generators,
-    distinct-ified with self-loops dropped, aggregated per direction."""
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id AS src, (doc_id * {m} + {c}) %"
-        f" (SELECT n FROM nn) AS dst FROM documents"
-        for m, c in _PR_EDGE_GENS
-    ) + " UNION ALL SELECT doc_id AS src, doc_id % 50 AS dst FROM documents"
-    return f"""
-WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e0 AS ({unions}),
-e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-o AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-i AS (SELECT dst, count(*) AS deg FROM e GROUP BY dst)
-SELECT 'out' AS side, deg::BIGINT AS deg, count(*)::BIGINT AS n_nodes
-FROM o GROUP BY deg
-UNION ALL
-SELECT 'in', deg::BIGINT, count(*)::BIGINT FROM i GROUP BY deg
-"""
-
-
-def _soft404_gate_sql() -> str:
-    """Oracle for the soft-404 gate: each synthesis arm's expected
-    verdict spelled out (title rule wins on arm 0, arms 2/4 flag by
-    short body, arm 3's long body stays clean under the token-length
-    guard)."""
-    return """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(doc_id % 11 AS INT) IN (0, 1, 2, 4, 5) AS soft404,
-       CASE WHEN CAST(doc_id % 11 AS INT) IN (0, 1, 5) THEN 'title'
-            WHEN CAST(doc_id % 11 AS INT) IN (2, 4) THEN 'body'
-            ELSE '' END AS reason
-FROM documents
-"""
-
-
-def _table_cells_sql() -> str:
-    """Oracle for the web-table query: each synthesis arm's expected
-    grid spelled out as UNION ALL literals — no markup parsing in
-    SQL."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, CAST(0 AS INT) AS tbl, CAST(0 AS INT) AS rw,
-       CAST(0 AS INT) AS cl, 'H1' AS cell FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, 0, 1, 'H2' FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, 1, 0, 'a' || i FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, 1, 1, 'b & c' FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, 0, 0, 'x ' || i FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 0, 0, 1, 'y' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 0, 1, 0, 'z' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 0, 0, 0, 'outer' || i FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 1, 0, 0, 'inner' FROM p WHERE m = 2
-"""
-
-
-def _bitext_align_sql() -> str:
-    """Oracle for the Gale–Church bitext query: each synthesis arm's
-    expected beads as UNION ALL literals — the alignments were verified
-    against the kernel spec (and their stability across doc_id digit
-    widths) in tests/test_bitext.py; no DP in SQL."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 5 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, CAST(0 AS INT) AS bead, TRUE AS ok,
-       CAST(0 AS INT) AS src_start, CAST(1 AS INT) AS n_src,
-       CAST(0 AS INT) AS tgt_start, CAST(1 AS INT) AS n_tgt,
-       'Alpha alpha ' || i || ' one.' AS src_text,
-       'Alfa alfa ' || i || ' eins.' AS tgt_text
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 1, TRUE, 1, 1, 1, 1,
-       'Bravo bravo two.', 'Brava brava zwei.' FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 2, TRUE, 2, 1, 2, 1,
-       'Charlie charlie three.', 'Karla karla drei.' FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, TRUE, 0, 1, 0, 1,
-       'Anchor number ' || i || ' one here.',
-       'Anker nummer ' || i || ' eins hier.' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 1, TRUE, 1, 2, 1, 1,
-       'Aa bb. Cc dd.', 'Aa bb und cc dd zusammen.' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 2, TRUE, 3, 1, 2, 1,
-       'Anchor sentence number two here.',
-       'Anker satz nummer zwei hier.' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 0, TRUE, 0, 1, 0, 1,
-       'Anchor number ' || i || ' one here.',
-       'Anker nummer ' || i || ' eins hier.' FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 1, TRUE, 1, 1, 1, 2,
-       'Anchor sentence number two here.',
-       'Eingefugt. Anker satz nummer zwei hier.' FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 0, TRUE, 0, 1, 0, 0,
-       'Solo one.', '' FROM p WHERE m = 3
-UNION ALL SELECT doc_id, 1, TRUE, 1, 1, 0, 0,
-       'Solo two.', '' FROM p WHERE m = 3
-UNION ALL SELECT doc_id, 0, TRUE, 0, 1, 0, 1,
-       'Only one sentence here.', 'Nur ein satz hier.' FROM p WHERE m = 4
-ORDER BY doc_id, bead
-"""
-
-
-def _sitemap_entries_sql() -> str:
-    """Oracle for the sitemap ingest: each synthesis arm's expected
-    entries as UNION ALL literals (no XML parsing in SQL)."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, 'urlset' AS kind,
-       'https://s.example/p/' || i || '?a=1&b=2' AS loc,
-       '2026-01-02' AS lastmod, 'daily' AS changefreq, '0.8' AS priority
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 'urlset', 'https://s.example/q/' || i,
-       NULL, NULL, NULL FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 'sitemapindex',
-       'https://s.example/sm/' || i || '.xml', '2025-12-31', NULL, NULL
-FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 'text', 'https://t.example/' || i,
-       NULL, NULL, NULL FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 'text', 'https://t.example/' || i || '/more',
-       NULL, NULL, NULL FROM p WHERE m = 2
-"""
-
-
-def _feed_entries_sql() -> str:
-    """Oracle for the feed ingest: expected entries per synthesis arm as
-    UNION ALL literals (no XML parsing in SQL)."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i,
-         CAST(doc_id % 10 AS VARCHAR(2)) AS d
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, 'rss' AS kind, 'News ' || i || ' & more' AS title,
-       'https://f.example/' || i AS link,
-       'Tue, 18 Aug 2026 06:00:00 GMT' AS published
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 'rss', 'only-title ' || i, NULL, NULL
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 'atom', 'E ' || i, 'https://a.example/e/' || i,
-       '2026-08-18T00:00:00Z' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 'rss', 'T & ' || i, NULL, '2026-08-1' || d
-FROM p WHERE m = 2
-"""
-
-
-def _frontier_admission_sql() -> str:
-    """Oracle for the fused frontier step: candidate rows, hosts,
-    blocklist verdicts and the seen arithmetic replayed per arm."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-), c AS (
-  SELECT doc_id, 'https://s.example/p/' || i || '?a=1&b=2' AS url,
-         's.example' AS host, FALSE AS blocked,
-         (doc_id % 8 = 0) AS seen
-  FROM p WHERE m = 0
-  UNION ALL SELECT doc_id, 'https://s.example/q/' || i, 's.example',
-         FALSE, FALSE FROM p WHERE m = 0
-  UNION ALL SELECT doc_id, 'https://t.example/' || i, 't.example',
-         TRUE, FALSE FROM p WHERE m = 2
-  UNION ALL SELECT doc_id, 'https://t.example/' || i || '/more',
-         't.example', TRUE, FALSE FROM p WHERE m = 2
-)
-SELECT doc_id, url, host, blocked, seen,
-       (NOT blocked AND NOT seen) AS admitted
-FROM c
-"""
-
-
-def _date_normalize_sql() -> str:
-    """Oracle for the date cast: raw value + EXPECTED UTC day per arm."""
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-  ({_DATE_SYNTH_SQL}) AS raw,
-  CASE CAST(doc_id % 6 AS INT)
-    WHEN 0 THEN '2026-08-19'
-    WHEN 1 THEN '2026-08-18'
-    WHEN 2 THEN '2026-08-18'
-    WHEN 3 THEN '2026-08-0' || CAST(doc_id % 9 + 1 AS VARCHAR(2))
-    WHEN 4 THEN '2026-08-19'
-    ELSE NULL END AS day
-FROM documents WHERE text IS NOT NULL
-"""
-
-
-def _code_blocks_sql() -> str:
-    """Oracle for the code-listing query: expected blocks per arm as
-    UNION ALL literals, newlines spliced via CHR(10)."""
-    return """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-), c AS (
-  SELECT doc_id, 0 AS blk, 'python' AS lang_hint,
-         'def f_' || i || '():' || CHR(10) || '    return ' || i || ' < 2'
-           AS code
-  FROM p WHERE m = 0
-  UNION ALL SELECT doc_id, 0, NULL, 'a ' || i FROM p WHERE m = 1
-  UNION ALL SELECT doc_id, 1, NULL, 'b ' || i FROM p WHERE m = 1
-  UNION ALL SELECT doc_id, 0, NULL, 'x' || CHR(10) || 'y' || i || '!'
-  FROM p WHERE m = 2
-)
-SELECT doc_id, CAST(blk AS INT) AS blk, lang_hint, code,
-       CAST(length(code) - length(replace(code, CHR(10), '')) + 1 AS INT)
-         AS n_lines,
-       CAST(length(code) AS BIGINT) AS n_chars
-FROM c
-"""
-
-
-def _robots_gate_sql() -> str:
-    """Oracle for the robots gate: host/path re-derived from doc_id (so
-    Spark's URL split is verified against the synthesis, not replayed) and
-    the RFC 9309 verdict hand-written per template from the spec —
-    longest-match Allow-under-Disallow (tpl 0), specific-agent group
-    excluding the '*' group (tpl 1), wildcard + '$' anchor (tpl 2),
-    missing robots.txt ⇒ allowed (tpl 3)."""
-    return f"""
-WITH p AS (
-  SELECT 'h' || CAST(doc_id % {_ROBOTS_HOST_MOD} AS VARCHAR(8)) || '.example'
-           AS host,
-         CAST((doc_id % {_ROBOTS_HOST_MOD}) % 4 AS INT) AS tpl,
-         CASE CAST(doc_id % 7 AS INT)
-           WHEN 0 THEN '/private/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 1 THEN '/private/public/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 2 THEN '/no-train/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 3 THEN '/'
-           WHEN 4 THEN '/docs/a' || CAST(doc_id AS VARCHAR(20)) || '.pdf'
-           WHEN 5 THEN '/tmp' || CAST(doc_id AS VARCHAR(20)) || '/logs/y'
-           ELSE '/ok' END AS path,
-         ({_ROBOTS_URL_SQL}) AS url
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT url, host, path,
-  CASE
-    WHEN tpl = 3 THEN TRUE
-    WHEN tpl = 0 THEN CASE WHEN path LIKE '/private/public/%' THEN TRUE
-                           WHEN path LIKE '/private/%' THEN FALSE
-                           ELSE TRUE END
-    WHEN tpl = 1 THEN NOT path LIKE '/no-train/%'
-    ELSE NOT (regexp_matches(path, '^/.*\\.pdf$')
-              OR regexp_matches(path, '^/tmp.*/logs/'))
-  END AS allowed
-FROM p
-"""
-
-
-def _domain_blocklist_sql() -> str:
-    """Oracle for the blocklist gate: re-derive host + verdict from
-    doc_id arithmetic.  Precedence hand-written: the deeper bad.* entry
-    (3 labels) beats the apex entry (2 labels) when both match."""
-    return f"""
-WITH p AS (
-  SELECT CAST(doc_id % 4 AS INT) AS v,
-         CAST(doc_id % {_ROBOTS_HOST_MOD} AS BIGINT) AS k,
-         ({_BL_URL_SQL}) AS url,
-         CASE CAST(doc_id % 4 AS INT)
-           WHEN 0 THEN ''
-           WHEN 1 THEN 'www.'
-           WHEN 2 THEN 'bad.'
-           ELSE 'x.y.' END
-         || 'h' || CAST(doc_id % {_ROBOTS_HOST_MOD} AS VARCHAR(8))
-         || '.example' AS host
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT url, host,
-  CASE WHEN v = 2 AND k % 7 = 0
-         THEN 'bad.h' || CAST(k AS VARCHAR(8)) || '.example'
-       WHEN k % 5 = 0
-         THEN 'h' || CAST(k AS VARCHAR(8)) || '.example'
-       ELSE NULL END AS blocked_domain,
-  (k % 5 = 0 OR (v = 2 AND k % 7 = 0)) AS blocked
-FROM p
-"""
-
-
-def _url_admission_sql() -> str:
-    """Oracle for the fused admission recipe: the blocklist and robots
-    spec replays composed, blocklist first."""
-    return f"""
-WITH p AS (
-  SELECT 'h' || CAST(doc_id % {_ROBOTS_HOST_MOD} AS VARCHAR(8)) || '.example'
-           AS host,
-         (doc_id % {_ROBOTS_HOST_MOD}) % 9 = 0 AS blocked,
-         CAST((doc_id % {_ROBOTS_HOST_MOD}) % 4 AS INT) AS tpl,
-         CASE CAST(doc_id % 7 AS INT)
-           WHEN 0 THEN '/private/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 1 THEN '/private/public/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 2 THEN '/no-train/x' || CAST(doc_id AS VARCHAR(20))
-           WHEN 3 THEN '/'
-           WHEN 4 THEN '/docs/a' || CAST(doc_id AS VARCHAR(20)) || '.pdf'
-           WHEN 5 THEN '/tmp' || CAST(doc_id AS VARCHAR(20)) || '/logs/y'
-           ELSE '/ok' END AS path,
-         ({_ROBOTS_URL_SQL}) AS url
-  FROM documents WHERE text IS NOT NULL
-), v AS (
-  SELECT url, host, blocked,
-    CASE
-      WHEN tpl = 3 THEN TRUE
-      WHEN tpl = 0 THEN CASE WHEN path LIKE '/private/public/%' THEN TRUE
-                             WHEN path LIKE '/private/%' THEN FALSE
-                             ELSE TRUE END
-      WHEN tpl = 1 THEN NOT path LIKE '/no-train/%'
-      ELSE NOT (regexp_matches(path, '^/.*\\.pdf$')
-                OR regexp_matches(path, '^/tmp.*/logs/'))
-    END AS allowed
-  FROM p
-)
-SELECT url, host,
-  CASE WHEN blocked THEN 'blocklist'
-       WHEN NOT allowed THEN 'robots'
-       ELSE NULL END AS reason,
-  (NOT blocked AND allowed) AS admitted
-FROM v
-"""
-
-
-def _quality_sql() -> str:
-    punct = r"""round(CASE WHEN length(text) = 0 THEN 0.0
-      ELSE (length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]-]', '', 'g')))::DOUBLE / length(text) END, 4)"""
-    n_tok = f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({_TOKS}) END"
-    stop_hits = f"len(list_filter({_TOKS}, tk -> tk IN {_STOPS['en']}))"
-    stop_ratio = f"""round(CASE WHEN len({_TOKS}) = 0 THEN 0.0
-      ELSE {stop_hits}::DOUBLE / len({_TOKS}) END, 4)"""
-    mean_wl = f"""round(CASE WHEN len({_TOKS}) = 0 THEN 0.0
-      ELSE list_sum(list_transform({_TOKS}, tk -> length(tk)))::DOUBLE / len({_TOKS}) END, 4)"""
-    quality = f"""round((least(({n_tok}) / 50.0, 1.0)
-      + greatest(0.0, 1.0 - ({punct}) * 5)
-      + least(({stop_ratio}) * 4, 1.0)) / 3, 4)"""
-    return f"""
-SELECT doc_id::BIGINT AS doc_id,
-       ({n_tok})::BIGINT AS n_tokens,
-       ({punct})::DOUBLE AS punct_ratio,
-       ({stop_ratio})::DOUBLE AS stopword_ratio,
-       ({mean_wl})::DOUBLE AS mean_word_len,
-       ({quality})::DOUBLE AS quality_score
-FROM documents
-"""
-
-
-def _repetition_gopher_sql() -> str:
-    """Exact mirror of functions/text.py:repetition_metrics_row: top
-    {2,3,4}-gram and duplicate {5..10}-gram character-coverage fractions
-    over the Java-\\s tokens; chars(gram) is the space-joined length;
-    NULL text → NULL row, missing n (too-short doc) → 0.0."""
-    top_t = {2: 0.20, 3: 0.18, 4: 0.16}
-    dup_t = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
-    values = ",".join(f"({n})" for n in (*top_t, *dup_t))
-    top_cols = ",\n         ".join(
-        f"CASE WHEN b.text IS NULL THEN NULL ELSE "
-        f"coalesce(max(CASE WHEN p.n = {n} THEN p.top_frac END), 0.0) END "
-        f"AS top{n}_frac"
-        for n in top_t
-    )
-    dup_cols = ",\n         ".join(
-        f"CASE WHEN b.text IS NULL THEN NULL ELSE "
-        f"coalesce(max(CASE WHEN p.n = {n} THEN p.dup_frac END), 0.0) END "
-        f"AS dup{n}_frac"
-        for n in dup_t
-    )
-    gates = " AND ".join(
-        [f"top{n}_frac <= {t}" for n, t in top_t.items()]
-        + [f"dup{n}_frac <= {t}" for n, t in dup_t.items()]
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, text, length(text) AS n_chars, {_TOKS} AS tk FROM documents
-), grams AS (
-  SELECT doc_id, n_chars, t.n AS n,
-         unnest(list_transform(range(1, len(tk) - t.n + 2),
-                i -> array_to_string(tk[i:i + t.n - 1], ' '))) AS g
-  FROM base, (VALUES {values}) t(n)
-  WHERE len(tk) >= t.n AND n_chars > 0
-), counts AS (
-  SELECT doc_id, n_chars, n, g, count(*) AS c
-  FROM grams GROUP BY doc_id, n_chars, n, g
-), per_n AS (
-  SELECT doc_id, n,
-         round(max(c * length(g))::DOUBLE / n_chars, 4) AS top_frac,
-         round(coalesce(sum(CASE WHEN c >= 2 THEN c * length(g) END), 0)::DOUBLE
-               / n_chars, 4) AS dup_frac
-  FROM counts GROUP BY doc_id, n, n_chars
-), piv AS (
-  SELECT b.doc_id, b.text,
-         {top_cols},
-         {dup_cols}
-  FROM base b LEFT JOIN per_n p ON b.doc_id = p.doc_id
-  GROUP BY b.doc_id, b.text
-)
-SELECT doc_id::BIGINT AS doc_id,
-       top2_frac::DOUBLE AS top2_frac, top3_frac::DOUBLE AS top3_frac,
-       top4_frac::DOUBLE AS top4_frac, dup5_frac::DOUBLE AS dup5_frac,
-       dup6_frac::DOUBLE AS dup6_frac, dup7_frac::DOUBLE AS dup7_frac,
-       dup8_frac::DOUBLE AS dup8_frac, dup9_frac::DOUBLE AS dup9_frac,
-       dup10_frac::DOUBLE AS dup10_frac,
-       (CASE WHEN text IS NULL THEN NULL ELSE ({gates}) END)::BOOLEAN AS passes
-FROM piv
-"""
-
-
-def _gopher_sql() -> str:
-    n_tok = f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({_TOKS}) END"
-    mean_wl = f"""round(CASE WHEN len({_TOKS}) = 0 THEN 0.0
-      ELSE list_sum(list_transform({_TOKS}, tk -> length(tk)))::DOUBLE / len({_TOKS}) END, 4)"""
-    n_sym = (
-        "((length(text) - length(replace(text, '#', '')))"
-        " + (length(text) - length(regexp_replace(text, '\\.\\.\\.', '', 'g'))) / 3"
-        " + (length(text) - length(replace(text, '…', ''))))"
-    )
-    symbol = f"""round(CASE WHEN ({n_tok}) = 0 THEN 0.0
-      ELSE ({n_sym})::DOUBLE / ({n_tok}) END, 4)"""
-    lines = "str_split(text, chr(10))"
-    bullets = (
-        f"len(list_filter({lines}, ln -> starts_with(trim(ln), '•')"
-        " OR starts_with(trim(ln), '-') OR starts_with(trim(ln), '*')))"
-    )
-    bullet = f"""round(CASE WHEN len({lines}) = 0 THEN 0.0
-      ELSE ({bullets})::DOUBLE / len({lines}) END, 4)"""
-    ells = (
-        f"len(list_filter({lines}, ln -> ends_with(rtrim(ln), '...')"
-        " OR ends_with(rtrim(ln), '…')))"
-    )
-    ellipsis = f"""round(CASE WHEN len({lines}) = 0 THEN 0.0
-      ELSE ({ells})::DOUBLE / len({lines}) END, 4)"""
-    ne_lines = f"list_filter({lines}, ln -> length(trim(ln)) > 0)"
-    dup = f"""round(CASE WHEN len({ne_lines}) = 0 THEN 0.0
-      ELSE 1.0 - len(list_distinct({ne_lines}))::DOUBLE / len({ne_lines}) END, 4)"""
-    n_alpha = f"len(list_filter({_TOKS}, tk -> regexp_matches(tk, '[a-z]')))"
-    alpha = f"""round(CASE WHEN ({n_tok}) = 0 THEN 0.0
-      ELSE ({n_alpha})::DOUBLE / ({n_tok}) END, 4)"""
-    stop_hits = f"len(list_filter({_TOKS}, tk -> tk IN {_STOPS['en']}))"
-    passes = f"""(({n_tok}) BETWEEN 50 AND 100000
-      AND ({mean_wl}) BETWEEN 3.0 AND 10.0
-      AND ({symbol}) <= 0.1 AND ({bullet}) <= 0.9
-      AND ({ellipsis}) <= 0.3 AND ({alpha}) >= 0.8
-      AND ({stop_hits}) >= 2 AND ({dup}) <= 0.3)"""
-    return f"""
-SELECT doc_id::BIGINT AS doc_id,
-       ({n_tok})::BIGINT AS n_words,
-       ({mean_wl})::DOUBLE AS mean_word_len,
-       ({symbol})::DOUBLE AS symbol_ratio,
-       ({bullet})::DOUBLE AS bullet_ratio,
-       ({ellipsis})::DOUBLE AS ellipsis_ratio,
-       ({alpha})::DOUBLE AS alpha_ratio,
-       ({dup})::DOUBLE AS dup_line_frac,
-       ({passes})::BOOLEAN AS passes
-FROM documents
-"""
-
-
-def _host_quality_sql() -> str:
-    """Gopher CTE + host synthesis + the integer host verdict."""
-    return f"""
-WITH g AS ({_gopher_sql()}),
-d AS (
-  SELECT g.doc_id,
-         CASE WHEN g.doc_id % 25 = 0
-              THEN 't' || CAST(g.doc_id AS VARCHAR(20)) || '.example'
-              ELSE 'h' || CAST(g.doc_id % 7 AS VARCHAR(2)) || '.example'
-         END AS host,
-         g.passes
-  FROM g JOIN documents USING (doc_id)
-  WHERE documents.text IS NOT NULL
-),
-h AS (
-  SELECT host, count(*) AS n_docs,
-         sum(CASE WHEN passes THEN 0 ELSE 1 END) AS n_fail
-  FROM d GROUP BY host
-)
-SELECT d.doc_id::BIGINT AS doc_id, d.host, d.passes,
-       (h.n_docs < 5 OR h.n_fail * 100 <= h.n_docs * 50)::BOOLEAN
-         AS host_ok
-FROM d JOIN h ON d.host = h.host
-ORDER BY doc_id
-"""
-
-
-def _readability_sql() -> str:
-    """FULL replay of functions/text.py readability_metrics on the raw
-    text: vowel-group syllables, terminal-run sentences, one terminal
-    round — identical IEEE double ops in both engines."""
-    w = f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({_TOKS}) END"
-    s = ("CASE WHEN length(trim(text)) = 0 THEN 0 ELSE "
-         "greatest(1, len(regexp_extract_all(text, '[.!?]+'))) END")
-    y = (f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE "
-         f"list_sum(list_transform({_TOKS}, tk -> "
-         f"greatest(1, len(regexp_extract_all(tk, '[aeiouy]+'))))) END")
-    return f"""
-WITH m AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         ({w})::DOUBLE AS w, ({s})::DOUBLE AS s, ({y})::DOUBLE AS y
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id,
-       w::BIGINT AS n_words, s::BIGINT AS n_sentences,
-       y::BIGINT AS n_syllables,
-       CASE WHEN w = 0 THEN NULL
-            ELSE round(0.39::DOUBLE * (w / s) + 11.8::DOUBLE * (y / w)
-                       - 15.59::DOUBLE, 4) END AS fk_grade,
-       CASE WHEN w = 0 THEN NULL
-            ELSE round(206.835::DOUBLE - 1.015::DOUBLE * (w / s)
-                       - 84.6::DOUBLE * (y / w), 4) END AS flesch_ease
-FROM m ORDER BY doc_id
-"""
-
-
-def _collocations_sql() -> str:
-    """FULL replay of operators/collocations.py on the raw text:
-    same token split, bigrams via list_zip, same micro-log10 sum."""
-    ml = "CAST(floor(log10({x}) * 1000000 + 0.5) AS BIGINT)"
-    return f"""
-WITH t AS (
-  SELECT {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-uni AS (
-  SELECT u.w AS w, count(*)::BIGINT AS n_w
-  FROM t, unnest(tk) AS u(w) GROUP BY 1
-),
-tot AS (
-  SELECT (SELECT sum(n_w) FROM uni)::BIGINT AS n_uni_total,
-         (SELECT sum(len(tk) - 1) FROM t)::BIGINT AS n_big_total
-),
-big AS (
-  SELECT p[1] AS w1, p[2] AS w2, count(*)::BIGINT AS n_pair FROM (
-    SELECT unnest(list_zip(tk[1:len(tk)-1], tk[2:len(tk)])) AS p FROM t
-  ) GROUP BY 1, 2 HAVING count(*) >= 5
-)
-SELECT w1, w2, n_pair,
-       ({ml.format(x='n_pair')}
-        + 2 * {ml.format(x='n_uni_total')}
-        - {ml.format(x='n_big_total')}
-        - {ml.format(x='u1.n_w')}
-        - {ml.format(x='u2.n_w')})::BIGINT AS pmi_micro
-FROM big
-JOIN uni u1 ON big.w1 = u1.w
-JOIN uni u2 ON big.w2 = u2.w
-CROSS JOIN tot
-ORDER BY w1, w2
-"""
-
-
-def _inverted_postings_sql() -> str:
-    """FULL replay of operators/postings.py on the raw text: positions
-    via list_zip(tk, range), df via count(DISTINCT doc_id), positions
-    string via ordered string_agg."""
-    return f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-x AS (
-  SELECT doc_id, p[1] AS term, CAST(p[2] AS INT) AS pos
-  FROM (
-    SELECT doc_id, unnest(list_zip(tk, range(0, len(tk)))) AS p FROM t
-  )
-),
-dfs AS (
-  SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM x GROUP BY 1
-),
-pd AS (
-  SELECT term, doc_id,
-         string_agg(pos::VARCHAR, ',' ORDER BY pos) AS positions
-  FROM x GROUP BY 1, 2
-)
-SELECT pd.term, dfs.df, pd.doc_id, pd.positions
-FROM pd JOIN dfs USING (term)
-WHERE dfs.df <= greatest(100, (SELECT count(*) FROM t) // 20)
-ORDER BY term, doc_id
-"""
-
-
-def _bm25_topk_sql(k: int = 10) -> str:
-    """FULL replay of operators/ranking.py: tokenize, broadcast-pruned
-    tf, df from tf, micro-quantized ln idf, the EXACT parenthesization
-    of the tf-normalization double arithmetic ((tf*(k1+1)) / (tf + k1*
-    ((1-b) + b*(dl/avgdl)))), per-term floor to int64 micro BEFORE the
-    integer score sum, (score DESC, doc_id) row_number, k=10."""
-    values = ", ".join(
-        f"(CAST({i} AS BIGINT), '{q}')" for i, q in enumerate(_BM25_QUERIES)
-    )
-    return f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-stats AS (
-  SELECT count(*)::BIGINT AS n_docs, CAST(sum(len(tk)) AS BIGINT) AS sum_dl
-  FROM t
-),
-q(query_id, qtext) AS (VALUES {values}),
-qt AS (
-  SELECT query_id,
-         unnest(list_distinct(regexp_split_to_array(
-           trim(lower(qtext)), '{_JAVA_WS_CLASS}+'))) AS term
-  FROM q
-),
-qt2 AS (SELECT query_id, term FROM qt WHERE term <> ''),
-tf AS (
-  SELECT doc_id, dl, term, count(*)::BIGINT AS tf
-  FROM (SELECT doc_id, len(tk)::BIGINT AS dl, unnest(tk) AS term FROM t) x
-  WHERE term IN (SELECT DISTINCT term FROM qt2)
-  GROUP BY 1, 2, 3
-),
-dfs AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-c AS (
-  SELECT qt2.query_id, tf.doc_id,
-    CAST(floor(
-      CAST(floor(ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-                    / (CAST(df AS DOUBLE) + 0.5) + 1.0)
-                 * 1000000 + 0.5) AS BIGINT)
-      * ((CAST(tf.tf AS DOUBLE) * (1.2 + 1.0)) /
-         (CAST(tf.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-           (CAST(tf.dl AS DOUBLE) /
-            (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))))
-      + 0.5) AS BIGINT) AS contrib_micro
-  FROM tf JOIN qt2 USING (term) JOIN dfs USING (term), stats
-),
-s AS (
-  SELECT query_id, doc_id, CAST(sum(contrib_micro) AS BIGINT) AS score_micro
-  FROM c GROUP BY 1, 2
-),
-r AS (
-  SELECT query_id,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY score_micro DESC, doc_id ASC
-         ) AS rank,
-         doc_id, score_micro
-  FROM s
-)
-SELECT query_id, CAST(rank AS INT) AS rank, doc_id, score_micro,
-       round(CAST(score_micro AS DOUBLE) / 1000000.0, 6) AS score
-FROM r WHERE rank <= {k}
-ORDER BY query_id, rank
-"""
-
-
-def _hits_sql(n_iter: int = 3) -> str:
-    """Unrolled integer HITS oracle: same affine edge generators, same
-    int64 micro scores, L-inf normalization with // (== Spark's div on
-    non-negatives), LEFT JOIN zero-fill for sources/sinks."""
-    gens = " UNION ALL ".join(
-        f"SELECT d.doc_id AS src, (d.doc_id * {m} + {c}) % nn.n AS dst "
-        f"FROM documents d, nn"
-        for m, c in _HITS_EDGE_GENS
-    )
-    cte = [f"""nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e AS MATERIALIZED (
-  SELECT DISTINCT ed.src, ed.dst
-  FROM ({gens}) ed JOIN documents dd ON dd.doc_id = ed.dst
-  WHERE ed.src <> ed.dst
-),
-nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-h0 AS (SELECT node, 1000000::BIGINT AS hub FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""a{i}r AS MATERIALIZED (
-  SELECT e.dst AS node, sum(h{i - 1}.hub) AS raw
-  FROM h{i - 1} JOIN e ON h{i - 1}.node = e.src GROUP BY 1
-),
-a{i}m AS (SELECT greatest(max(raw), 1) AS mx FROM a{i}r),
-a{i} AS MATERIALIZED (
-  SELECT nodes.node,
-         CAST((coalesce(raw, 0) * 1000000) // mx AS BIGINT) AS auth
-  FROM nodes LEFT JOIN a{i}r USING (node), a{i}m
-),
-h{i}r AS MATERIALIZED (
-  SELECT e.src AS node, sum(a{i}.auth) AS raw
-  FROM a{i} JOIN e ON a{i}.node = e.dst GROUP BY 1
-),
-h{i}m AS (SELECT greatest(max(raw), 1) AS mx FROM h{i}r),
-h{i} AS MATERIALIZED (
-  SELECT nodes.node,
-         CAST((coalesce(raw, 0) * 1000000) // mx AS BIGINT) AS hub
-  FROM nodes LEFT JOIN h{i}r USING (node), h{i}m
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT h{n_iter}.node::BIGINT AS doc_id, h{n_iter}.hub::BIGINT AS hub_micro,
-       a{n_iter}.auth::BIGINT AS auth_micro
-FROM h{n_iter} JOIN a{n_iter} USING (node)
-ORDER BY doc_id
-"""
-    )
-
-
-def _trustrank_sql(n_iter: int = 4) -> str:
-    """Unrolled integer TrustRank oracle: same affine edge generators,
-    same seed rule, same int64 micro updates with seed-only teleport
-    ((15 * seed * 1e6) // 100 + (85 * inflow) // 100)."""
-    gens = " UNION ALL ".join(
-        f"SELECT d.doc_id AS src, (d.doc_id * {m} + {c}) % nn.n AS dst "
-        f"FROM documents d, nn"
-        for m, c in _TR_EDGE_GENS
-    )
-    cte = [f"""nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT ed.src, ed.dst
-  FROM ({gens}) ed JOIN documents dd ON dd.doc_id = ed.dst
-  WHERE ed.src <> ed.dst
-),
-deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
-e AS MATERIALIZED (SELECT e0.src, e0.dst, deg.deg FROM e0 JOIN deg USING (src)),
-nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-seeds AS (
-  SELECT doc_id AS node FROM documents WHERE doc_id % {_TR_SEED_MOD} = 0
-),
-base AS MATERIALIZED (
-  SELECT nodes.node,
-         CASE WHEN s.node IS NOT NULL THEN 1 ELSE 0 END AS seed
-  FROM nodes LEFT JOIN seeds s USING (node)
-),
-t0 AS (SELECT node, (seed * 1000000)::BIGINT AS trust FROM base)"""]
-    for i in range(1, n_iter + 1):
-        cte.append(f"""t{i} AS MATERIALIZED (
-  SELECT base.node,
-         ((15 * base.seed * 1000000) // 100
-          + (85 * coalesce(inf.inflow, 0)) // 100)::BIGINT AS trust
-  FROM base LEFT JOIN (
-    SELECT e.dst AS node, sum(t{i - 1}.trust // e.deg) AS inflow
-    FROM t{i - 1} JOIN e ON t{i - 1}.node = e.src
-    GROUP BY e.dst
-  ) inf USING (node)
-)""")
-    return (
-        "WITH " + ",\n".join(cte)
-        + f"""
-SELECT node::BIGINT AS doc_id, trust::BIGINT AS trust_micro
-FROM t{n_iter}
-ORDER BY doc_id
-"""
-    )
-
-
-def _stem_conflation_sql() -> str:
-    """Replay of operators/stemming.py over the shared synthesis: token
-    split, the PINNED literal (term -> stem) CASE map (asserted against
-    the kernel in tests/test_stemming.py), and the same conflation
-    rollup (count, distinct forms, sorted comma-joined form list)."""
-    whens = " ".join(
-        f"WHEN '{w}' THEN '{s}'" for w, s in sorted(_STEM_MAP.items())
-    )
-    return f"""
-WITH p AS (
-  SELECT ({_STEM_SYNTH_SQL}) AS text FROM documents
-  WHERE text IS NOT NULL
-),
-x AS (
-  SELECT unnest(regexp_split_to_array(
-    trim(lower(text)), '{_JAVA_WS_CLASS}+')) AS term
-  FROM p
-),
-m AS (SELECT term, CASE term {whens} END AS stem FROM x)
-SELECT stem, count(*)::BIGINT AS n_tokens,
-       count(DISTINCT term)::INT AS n_forms,
-       array_to_string(list_sort(list(DISTINCT term)), ',') AS forms
-FROM m GROUP BY stem ORDER BY stem
-"""
-
-
-def _host_split_sql() -> str:
-    """FULL replay of operators/splits.py over the shared host
-    synthesis: registrable-domain regexes + second-level suffix list,
-    md5 4-hex bucket vs the (0.8, 0.1, 0.1) boundaries, and the
-    two-level (split, domain) -> split rollup."""
-    from doctor_spark.operators.splits import (
-        SECOND_LEVEL_TLDS,
-        split_boundaries,
-    )
-
-    train_hi, val_hi = split_boundaries((0.8, 0.1, 0.1))
-    suffixes = ", ".join(f"'{s}'" for s in SECOND_LEVEL_TLDS)
-    two = r"regexp_extract(lower(host), '([^.]+\.[^.]+)$', 1)"
-    three = r"regexp_extract(lower(host), '([^.]+\.[^.]+\.[^.]+)$', 1)"
-    return f"""
-WITH p AS (
-  SELECT ({_SPLIT_HOST_SQL}) AS host FROM documents WHERE text IS NOT NULL
-),
-d AS (
-  SELECT CASE
-    WHEN {three} <> '' AND {two} IN ({suffixes}) THEN {three}
-    WHEN {two} <> '' THEN {two}
-    ELSE lower(host) END AS domain
-  FROM p
-),
-a AS (
-  SELECT domain,
-    CASE WHEN substr(md5('split' || domain), 1, 4) < '{train_hi}'
-         THEN 'train'
-         WHEN substr(md5('split' || domain), 1, 4) < '{val_hi}'
-         THEN 'val'
-         ELSE 'test' END AS split
-  FROM d
-),
-pd AS (SELECT split, domain, count(*)::BIGINT AS n_pages FROM a GROUP BY 1, 2)
-SELECT split, CAST(sum(n_pages) AS BIGINT) AS n_pages,
-       count(*)::BIGINT AS n_domains
-FROM pd GROUP BY split ORDER BY split
-"""
-
-
-def _zipf_fit_sql(top_k: int = 1000) -> str:
-    """FULL replay of operators/zipf.py zipf_fit: tf, (freq DESC, term)
-    row_number, micro-quantized ln, int64 moment sums, and the EXACT
-    double parenthesization of the OLS ratios."""
-    slope = (
-        "((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))"
-    )
-    return f"""
-WITH tf AS (
-  SELECT term, count(*)::BIGINT AS freq FROM (
-    SELECT unnest({_TOKS}) AS term FROM documents
-    WHERE text IS NOT NULL AND length(trim(text)) > 0
-  ) GROUP BY 1
-),
-r AS (
-  SELECT row_number() OVER (ORDER BY freq DESC, term ASC) AS rank, freq
-  FROM tf
-),
-q AS (
-  SELECT
-    CAST(floor(ln(CAST(rank AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x,
-    CAST(floor(ln(CAST(freq AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y
-  FROM r WHERE rank <= {top_k}
-),
-m AS (
-  SELECT count(*)::BIGINT AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM q
-)
-SELECT n AS n_ranks,
-  CAST(floor({slope} * 1000000.0 + 0.5) AS BIGINT) AS slope_micro,
-  CAST(floor((CAST(sy AS DOUBLE) - {slope} * CAST(sx AS DOUBLE))
-             / CAST(n AS DOUBLE) + 0.5) AS BIGINT) AS intercept_micro
-FROM m
-"""
-
-
-def _freq_of_freqs_sql() -> str:
-    """Replay of freq_of_freqs: tf re-keyed by frequency."""
-    return f"""
-WITH tf AS (
-  SELECT term, count(*)::BIGINT AS freq FROM (
-    SELECT unnest({_TOKS}) AS term FROM documents
-    WHERE text IS NOT NULL AND length(trim(text)) > 0
-  ) GROUP BY 1
-)
-SELECT freq, count(*)::BIGINT AS n_terms
-FROM tf GROUP BY freq ORDER BY freq
-"""
-
-
-def _cdc_dedup_sql() -> str:
-    """Closed-form replay of q_cdc_dedup: the pinned per-arm chunk
-    VALUES table (tests/test_cdc.py asserts it equals the kernel)
-    joined to arm counts; totals and the distinct-hash rollup are plain
-    SQL arithmetic."""
-    values = ", ".join(
-        f"({a}, {o}, {ln}, '{h}')" for a, o, ln, h in _CDC_CHUNKS
-    )
-    return f"""
-WITH d AS (
-  SELECT CAST(doc_id % 8 AS INT) AS arm FROM documents
-  WHERE text IS NOT NULL
-),
-counts AS (SELECT arm, count(*)::BIGINT AS n FROM d GROUP BY arm),
-ch(arm, off, len, hash) AS (VALUES {values}),
-per AS (SELECT counts.n, ch.len, ch.hash FROM counts JOIN ch USING (arm)),
-tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS n_chunks,
-         CAST(sum(n * len) AS BIGINT) AS bytes_total
-  FROM per
-),
-dist AS (SELECT hash, min(len) AS len FROM per GROUP BY hash),
-ds AS (
-  SELECT count(*)::BIGINT AS n_distinct_chunks,
-         CAST(sum(len) AS BIGINT) AS bytes_distinct
-  FROM dist
-),
-np AS (SELECT count(*)::BIGINT AS n_payloads FROM d)
-SELECT np.n_payloads, tot.n_chunks, ds.n_distinct_chunks,
-       tot.bytes_total, ds.bytes_distinct,
-       CAST((ds.bytes_distinct * 1000000) // tot.bytes_total AS BIGINT)
-         AS dedup_ratio_micro
-FROM np, tot, ds
-"""
-
-
-def _layout_clusters_sql() -> str:
-    """Replay of q_layout_clusters with the fingerprint as a pinned
-    per-arm literal (tests/test_layout.py asserts kernel equality);
-    host-set arithmetic replayed in full on the shared synthesis."""
-    fps = " ".join(
-        f"WHEN {i} THEN '{fp}'" for i, fp in enumerate(_LAYOUT_FPS[:-1])
-    )
-    return f"""
-WITH d AS (
-  SELECT CASE CAST(doc_id % 5 AS INT) {fps}
-         ELSE '{_LAYOUT_FPS[-1]}' END AS layout_fp,
-         ({_LAYOUT_HOST_SQL}) AS host
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT layout_fp, count(*)::BIGINT AS n_pages,
-       count(DISTINCT host)::INT AS n_hosts,
-       array_to_string(list_sort(list(DISTINCT host))[1:8], ',') AS hosts
-FROM d GROUP BY layout_fp ORDER BY layout_fp
-"""
-
-
-def _verified_neardup_sql(threshold: int = 600_000) -> str:
-    """The demo-width minhash replay as a subquery, then DuckDB
-    levenshtein + the exact ((maxlen-lev)*1e6) DIV maxlen integer
-    similarity and the threshold filter."""
-    return f"""
-WITH pairs AS ({_minhash_sql()}),
-scored AS (
-  SELECT p.id_a, p.id_b,
-         levenshtein(da.text, db.text)::BIGINT AS lev,
-         greatest(length(da.text), length(db.text))::BIGINT AS mx
-  FROM pairs p
-  JOIN documents da ON da.doc_id = p.id_a
-  JOIN documents db ON db.doc_id = p.id_b
-),
-sim AS (
-  SELECT id_a, id_b, lev,
-         CASE WHEN mx = 0 THEN 1000000
-              ELSE ((mx - lev) * 1000000) // mx END::BIGINT AS sim_micro
-  FROM scored
-)
-SELECT id_a, id_b, lev, sim_micro FROM sim
-WHERE sim_micro >= {threshold}
-ORDER BY id_a, id_b
-"""
-
-
-def _temporal_leakage_sql() -> str:
-    """The verified-neardup replay as a subquery, the doc_id%30<15
-    partition arm on both sides, and the crossing-count/micro-fraction
-    arithmetic."""
-    return f"""
-WITH pairs AS ({_verified_neardup_sql()}),
-parts AS (
-  SELECT doc_id AS id,
-         CASE WHEN doc_id % 30 < 15 THEN 'train' ELSE 'test' END AS part
-  FROM documents
-),
-j AS (
-  SELECT pa.part AS p_a, pb.part AS p_b
-  FROM pairs
-  JOIN parts pa ON pa.id = pairs.id_a
-  JOIN parts pb ON pb.id = pairs.id_b
-),
-agg AS (
-  SELECT count(*)::BIGINT AS n_pairs,
-         coalesce(sum(CASE WHEN p_a <> p_b THEN 1 ELSE 0 END), 0)::BIGINT
-           AS n_cross
-  FROM j
-)
-SELECT n_pairs, n_cross,
-       CASE WHEN n_pairs = 0 THEN 0
-            ELSE (n_cross * 1000000) // n_pairs END::BIGINT AS leak_micro
-FROM agg
-"""
-
-
-def _best_passages_sql(k: int = 5, window: int = 12) -> str:
-    """The BM25 replay (top-k) as a subquery, then the EXACT sliding-
-    window replay: per-offset hit counts via list_sum over 1-based
-    clamped slices, argmax via list_position (first maximal window —
-    Spark's array_position semantics), snippet via the same slice."""
-    values = ", ".join(
-        f"(CAST({i} AS BIGINT), '{q}')" for i, q in enumerate(_BM25_QUERIES)
-    )
-    return f"""
-WITH top AS ({_bm25_topk_sql(k)}),
-q(query_id, qtext) AS (VALUES {values}),
-qt AS (
-  SELECT query_id,
-         list_distinct(regexp_split_to_array(
-           trim(lower(qtext)), '{_JAVA_WS_CLASS}+')) AS qt
-  FROM q
-),
-t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-j AS (
-  SELECT top.query_id, top.rank, top.doc_id, qt.qt, t.tk,
-         greatest(1, len(t.tk) - {window} + 1) AS nwin
-  FROM top JOIN qt USING (query_id) JOIN t USING (doc_id)
-),
-c AS (
-  SELECT query_id, rank, doc_id, tk,
-         list_transform(range(0, nwin), i ->
-           list_sum(list_transform(tk[i + 1:i + {window}], t2 ->
-             CASE WHEN list_contains(qt, t2) THEN 1 ELSE 0 END))) AS cnts
-  FROM j
-)
-SELECT query_id, rank, doc_id,
-       CAST(list_position(cnts, list_max(cnts)) - 1 AS INT) AS best_off,
-       CAST(list_max(cnts) AS INT) AS n_hits,
-       array_to_string(
-         tk[list_position(cnts, list_max(cnts))
-            :list_position(cnts, list_max(cnts)) + {window} - 1], ' ')
-         AS snippet
-FROM c ORDER BY query_id, rank
-"""
-
-
-def _mirror_pairs_sql() -> str:
-    """FULL replay of operators/mirrors.py over the shared synthesis:
-    (host, fp) distinct, per-host sizes, the host_cap=8 boilerplate
-    guard, pair expansion via fp self-join (host1 < host2 — binary
-    string order, same as sort_array), integer overlap arithmetic."""
-    return f"""
-WITH d AS (
-  SELECT ({_MIRROR_HOST_SQL}) AS host,
-         md5(({_MIRROR_CONTENT_SQL})) AS fp
-  FROM documents WHERE text IS NOT NULL
-),
-hf AS (SELECT DISTINCT host, fp FROM d),
-sizes AS (SELECT host, count(*)::BIGINT AS n FROM hf GROUP BY 1),
-keep AS (
-  SELECT fp FROM hf GROUP BY fp
-  HAVING count(*) BETWEEN 2 AND 8
-),
-x AS (SELECT hf.fp, hf.host FROM hf JOIN keep USING (fp)),
-p AS (
-  SELECT a.host AS host1, b.host AS host2
-  FROM x a JOIN x b ON a.fp = b.fp AND a.host < b.host
-),
-agg AS (
-  SELECT host1, host2, count(*)::BIGINT AS n_shared
-  FROM p GROUP BY 1, 2
-)
-SELECT agg.host1, agg.host2, agg.n_shared,
-       s1.n AS n1, s2.n AS n2,
-       CAST((agg.n_shared * 1000000) // least(s1.n, s2.n) AS BIGINT)
-         AS overlap_micro
-FROM agg
-JOIN sizes s1 ON agg.host1 = s1.host
-JOIN sizes s2 ON agg.host2 = s2.host
-ORDER BY host1, host2
-"""
-
-
-def _kwic_sql() -> str:
-    """FULL replay of operators/concordance.py on the raw text: hit
-    positions via list_zip(tk, range), 1-based clamped slices for the
-    k=3 contexts, coalesce('') because DuckDB's array_to_string of an
-    empty slice is NULL where Spark's array_join is ''."""
-    return f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-h AS (
-  SELECT doc_id, tk, CAST(p[2] AS INT) AS pos
-  FROM (
-    SELECT doc_id, tk, unnest(list_zip(tk, range(0, len(tk)))) AS p
-    FROM t
-  )
-  WHERE p[1] = 'spark'
-),
-o AS (
-  SELECT doc_id, pos,
-    coalesce(array_to_string(tk[greatest(1, pos - 2) : pos], ' '), '')
-      AS left_ctx,
-    coalesce(array_to_string(tk[pos + 2 : pos + 4], ' '), '')
-      AS right_ctx
-  FROM h
-)
-SELECT * FROM o ORDER BY doc_id, pos
-"""
-
-
-def _citations_sql() -> str:
-    """IDENTICAL regex (Java∩RE2 subset) replayed in DuckDB over the
-    shared synthesis; cite order via list_zip(matches, range)."""
-    from doctor_spark.functions.citations import CITATION_PATTERN
-
-    pat = CITATION_PATTERN
-    return f"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id, ({_CITE_SYNTH_SQL}) AS text
-  FROM documents WHERE text IS NOT NULL
-),
-x AS (
-  SELECT doc_id, p[1] AS cite, CAST(p[2] AS INT) AS cite_idx
-  FROM (
-    SELECT doc_id,
-           unnest(list_zip(m, range(0, len(m)))) AS p
-    FROM (
-      SELECT doc_id, regexp_extract_all(text, '{pat}', 0) AS m FROM d
-    )
-  )
-)
-SELECT doc_id, cite_idx,
-       CAST(regexp_extract(cite, '{pat}', 1) AS BIGINT) AS volume,
-       regexp_extract(cite, '{pat}', 2) AS reporter,
-       CAST(regexp_extract(cite, '{pat}', 3) AS BIGINT) AS page
-FROM x ORDER BY doc_id, cite_idx
-"""
-
-
-def _vocab_growth_sql() -> str:
-    """FULL replay of operators/vocab.py on the raw text: row-local
-    distinct, min-doc arrival, floor buckets of 100, running sums."""
-    return f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id, {_TOKS} AS tk FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-),
-x AS (SELECT doc_id, unnest(list_distinct(tk)) AS term FROM t),
-firsts AS (SELECT term, min(doc_id) AS fd FROM x GROUP BY 1),
-nt AS (
-  SELECT CAST(floor(fd / 100) AS BIGINT) AS bucket,
-         count(*)::BIGINT AS n_new_terms
-  FROM firsts GROUP BY 1
-),
-dc AS (
-  SELECT CAST(floor(doc_id / 100) AS BIGINT) AS bucket,
-         count(*)::BIGINT AS n_docs
-  FROM t GROUP BY 1
-)
-SELECT dc.bucket, dc.n_docs,
-       coalesce(nt.n_new_terms, 0)::BIGINT AS n_new_terms,
-       CAST(sum(dc.n_docs) OVER (ORDER BY dc.bucket) AS BIGINT)
-         AS n_docs_cum,
-       CAST(sum(coalesce(nt.n_new_terms, 0)) OVER (ORDER BY dc.bucket)
-         AS BIGINT) AS vocab_size
-FROM dc LEFT JOIN nt USING (bucket)
-ORDER BY bucket
-"""
-
-
-def _revisit_records_sql() -> str:
-    """Oracle for revisit assignment: the original pick replayed as a
-    lexicographic min over ``date || '#' || url`` (fixed-width ISO
-    dates: identical to struct order; '#' < every url char keeps the
-    tie-break consistent), plus the exact revisit-record byte layout
-    as string concatenation (empty body, Content-Length: 0)."""
-    return r"""
-WITH c AS (
-  SELECT 'https://cap.example/' || CAST(doc_id % 50 AS STRING) AS url,
-         '2024-02-' || lpad(CAST(doc_id % 28 + 1 AS STRING), 2, '0')
-           || 'T00:00:00Z' AS date_s,
-         md5('capture body ' || CAST(doc_id % 25 AS STRING)) AS digest
-  FROM documents WHERE text IS NOT NULL
-),
-o AS (SELECT digest, min(date_s || '#' || url) AS k FROM c GROUP BY 1),
-j AS (
-  SELECT c.url, c.date_s, c.digest,
-         substr(o.k, 1, strpos(o.k, '#') - 1) AS o_date,
-         substr(o.k, strpos(o.k, '#') + 1) AS o_url
-  FROM c JOIN o USING (digest)
-),
-a AS (
-  SELECT url, date_s, digest,
-         (date_s <> o_date OR url <> o_url) AS is_revisit,
-         CASE WHEN date_s <> o_date OR url <> o_url THEN o_url END
-           AS refers_url,
-         CASE WHEN date_s <> o_date OR url <> o_url THEN o_date END
-           AS refers_date
-  FROM j
-),
-r AS (
-  SELECT a.*,
-    CASE WHEN is_revisit THEN
-      'WARC/1.0' || chr(13) || chr(10)
-      || 'WARC-Type: revisit' || chr(13) || chr(10)
-      || 'WARC-Target-URI: ' || url || chr(13) || chr(10)
-      || 'WARC-Date: ' || date_s || chr(13) || chr(10)
-      || 'WARC-Record-ID: <urn:uuid:'
-      || substr(md5(url || '#' || date_s || '#revisit'), 1, 8) || '-'
-      || substr(md5(url || '#' || date_s || '#revisit'), 9, 4) || '-'
-      || substr(md5(url || '#' || date_s || '#revisit'), 13, 4) || '-'
-      || substr(md5(url || '#' || date_s || '#revisit'), 17, 4) || '-'
-      || substr(md5(url || '#' || date_s || '#revisit'), 21, 12)
-      || '>' || chr(13) || chr(10)
-      || 'WARC-Refers-To-Target-URI: ' || refers_url
-      || chr(13) || chr(10)
-      || 'WARC-Refers-To-Date: ' || refers_date || chr(13) || chr(10)
-      || 'WARC-Payload-Digest: md5:' || digest || chr(13) || chr(10)
-      || 'WARC-Profile: http://netpreserve.org/warc/1.1/'
-      || 'revisit/identical-payload-digest' || chr(13) || chr(10)
-      || 'Content-Length: 0' || chr(13) || chr(10) || chr(13)
-      || chr(10) || chr(13) || chr(10) || chr(13) || chr(10)
-    END AS rec
-  FROM a
-)
-SELECT url, date_s, digest, is_revisit, refers_url, refers_date,
-       md5(rec) AS rec_md5,
-       octet_length(encode(rec))::BIGINT AS rec_bytes
-FROM r ORDER BY url, date_s, digest
-"""
-
-
-def _rake_keywords_sql() -> str:
-    """Expected keyword rows per constant arm as literals (pinned
-    against the kernel in tests/test_rake.py::TestKernel)."""
-    return r"""
-WITH d AS (
-  SELECT doc_id::BIGINT AS doc_id, CAST(doc_id % 4 AS INT) AS arm
-  FROM documents WHERE text IS NOT NULL
-),
-e AS (
-  SELECT * FROM (VALUES
-    (0, 0, 'deep learning wins', 7833333, 3, 1),
-    (0, 1, 'deep learning',      4833333, 2, 1),
-    (0, 2, 'deep networks',      4333333, 2, 1),
-    (1, 0, 'jumps over a',       9000000, 3, 1),
-    (1, 1, 'quick brown fox',    9000000, 3, 1),
-    (1, 2, 'lazy dog',           4000000, 2, 1)
-  ) AS t(arm, kw_rank, phrase, score_micro, n_words, n_occurrences)
-  UNION ALL
-  SELECT 2, 0, 'stop', 1000000, 1, 1
-)
-SELECT d.doc_id,
-       CAST(e.kw_rank AS INT) AS kw_rank,
-       e.phrase,
-       CAST(e.score_micro AS BIGINT) AS score_micro,
-       CAST(e.n_words AS INT) AS n_words,
-       CAST(e.n_occurrences AS INT) AS n_occurrences
-FROM d JOIN e USING (arm)
-ORDER BY doc_id, kw_rank
-"""
-
-
-def _char_coverage_sql() -> str:
-    """FULL replay of operators/charcov.py on the raw text: per-char
-    counts via split(text, ''), (count desc, ch asc) rank, running
-    sum, integer-DIV micro coverage."""
-    return r"""
-WITH t AS (SELECT text FROM documents WHERE text IS NOT NULL),
-x AS (SELECT unnest(split(text, '')) AS ch FROM t),
-pc AS (SELECT ch, count(*)::BIGINT AS n FROM x GROUP BY 1),
-r AS (
-  SELECT ch, n,
-         row_number() OVER (ORDER BY n DESC, ch ASC)::BIGINT AS rank,
-         sum(n) OVER (ORDER BY n DESC, ch ASC
-                      ROWS UNBOUNDED PRECEDING)::BIGINT AS cum,
-         sum(n) OVER ()::BIGINT AS tot
-  FROM pc
-)
-SELECT ch, n, rank, CAST((cum * 1000000) // tot AS BIGINT) AS cum_micro
-FROM r ORDER BY rank
-"""
-
-
-def _crawler_traps_sql() -> str:
-    """FULL replay of operators/traps.py over the shared trap synth:
-    lowercase → structural host/path/query parse (the _url_canon_cte
-    regexes), per-URL signals, the threshold disjunction, per-host
-    rollup with int64-micro trap fraction.  Every regex is Java∩RE2
-    and matches at most once where replace is used."""
-    return f"""
-WITH raw AS (
-  SELECT lower(({_TRAP_SYNTH_SQL})) AS u FROM documents
-), p AS (
-  SELECT u, split_part(u, '#', 1) AS nofrag FROM raw
-), parsed AS (
-  SELECT u,
-    CASE WHEN lower(split_part(regexp_extract(nofrag,
-           '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]+)', 1), ':', 1)) = ''
-         THEN NULL
-         ELSE lower(split_part(regexp_extract(nofrag,
-           '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]+)', 1), ':', 1)) END AS host,
-    regexp_replace(regexp_extract(nofrag,
-      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?]+(/[^?]*)?', 1), '/+$', '') AS path,
-    regexp_extract(nofrag, '\\?(.*)$', 1) AS q
-  FROM p
-), sig AS (
-  SELECT host,
-    len(list_filter(str_split(path, '/'), s -> s <> '')) AS depth,
-    len(list_filter(str_split(path, '/'), s -> s <> ''))
-      - len(list_distinct(list_filter(str_split(path, '/'),
-            s -> s <> ''))) AS repeat_excess,
-    regexp_matches(path,
-      '/[0-9]{{4}}/[0-9]{{1,2}}/[0-9]{{1,2}}(/|$)') AS has_calendar,
-    len(list_filter(str_split(q, '&'), x -> x <> '')) AS n_params,
-    regexp_matches(u,
-      '([?&](jsessionid|phpsessid|sessionid|sid)=[0-9a-f]{{8,}}'
-      || '|;jsessionid=[0-9a-f]{{8,}})') AS has_session
-  FROM parsed
-), flagged AS (
-  SELECT *,
-    (depth >= 8 OR repeat_excess >= 2
-     OR (has_calendar AND depth >= 4)
-     OR has_session OR n_params >= 6) AS is_trap
-  FROM sig
-), roll AS (
-  SELECT host,
-    count(*)::BIGINT AS n_urls,
-    sum(CASE WHEN is_trap THEN 1 ELSE 0 END)::BIGINT AS n_trap,
-    sum(CASE WHEN depth >= 8 THEN 1 ELSE 0 END)::BIGINT AS n_deep,
-    sum(CASE WHEN repeat_excess >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_repeat,
-    sum(CASE WHEN has_calendar AND depth >= 4 THEN 1 ELSE 0 END)::BIGINT
-      AS n_calendar,
-    sum(CASE WHEN has_session THEN 1 ELSE 0 END)::BIGINT AS n_session,
-    sum(CASE WHEN n_params >= 6 THEN 1 ELSE 0 END)::BIGINT AS n_paramexp
-  FROM flagged WHERE host IS NOT NULL GROUP BY host
-)
-SELECT host, n_urls, n_trap, n_deep, n_repeat, n_calendar, n_session,
-       n_paramexp,
-       CAST((n_trap * 1000000) // n_urls AS BIGINT) AS trap_micro,
-       ((n_trap * 1000000) // n_urls) >= 500000 AS flagged
-FROM roll ORDER BY host
-"""
-
-
-def _idn_homographs_sql() -> str:
-    """Pinned decoded/flag/skeleton rows per constant host arm
-    (punycode is not SQL-expressible; tests/test_idn.py pins the same
-    values against the kernel).  Skeleton of пример.рф folds only the
-    mapped confusables (р→p, и kept, м→m, е→e) — the literal below is
-    the exact operator output."""
-    return """
-WITH arms AS (
-  SELECT DISTINCT CAST(doc_id % 8 AS INT) AS arm FROM documents
-), e AS (
-  SELECT * FROM (VALUES
-    (0, 'xn--mnchen-3ya.de', 'münchen.de', TRUE, FALSE,
-        'münchen.de', CAST(NULL AS VARCHAR)),
-    (1, 'xn--80ak6aa92e.com', 'аррӏе.com', TRUE, FALSE,
-        'apple.com', 'apple.com'),
-    (2, 'xn--pple-43d.com', 'аpple.com', TRUE, TRUE,
-        'apple.com', 'apple.com'),
-    (3, 'xn--e1afmkfd.xn--p1ai', 'пример.рф', TRUE, FALSE,
-        'пpиmep.pф', CAST(NULL AS VARCHAR)),
-    (4, 'apple.com', 'apple.com', FALSE, FALSE,
-        'apple.com', CAST(NULL AS VARCHAR)),
-    (5, 'munchen.de', 'munchen.de', FALSE, FALSE,
-        'munchen.de', CAST(NULL AS VARCHAR)),
-    (6, 'example.org', 'example.org', FALSE, FALSE,
-        'example.org', CAST(NULL AS VARCHAR)),
-    (7, 'xn--!!!.com', 'xn--!!!.com', TRUE, FALSE,
-        'xn--!!!.com', CAST(NULL AS VARCHAR))
-  ) AS t(arm, host, unicode_host, is_idn, mixed_script, skeleton,
-         homograph_of)
-)
-SELECT host, unicode_host, is_idn, mixed_script, skeleton, homograph_of
-FROM arms JOIN e USING (arm) ORDER BY host
-"""
-
-
-def _lang_guess_expr(col: str = "text") -> str:
-    """Mirror of functions.text.lang_guess as a single SQL expression
-    over ``col`` (default the document text; para_lang passes the
-    unnested paragraph): script vote (explicit BMP ranges,
-    character-identical classes), then the 18-language Latin stopword
-    argmax; both tie-break orders are the dict orders."""
-    toks = (
-        f"regexp_split_to_array(trim(lower({col})), '{_JAVA_WS_CLASS}+')"
-    )
-    s_cnt = {
-        s: f"len(regexp_extract_all({col}, '{_SCRIPT_RANGES[s]}'))"
-        for s in _SCRIPT_RANGES
-    }
-    latin = f"len(regexp_extract_all({col}, '{_LATIN_CLASS}'))"
-    best_script = (
-        "greatest(" + ", ".join([latin] + list(s_cnt.values())) + ")"
-    )
-    hits = {
-        lg: f"len(list_filter({toks}, tk -> tk IN {_STOPS[lg]}))"
-        for lg in _STOPS
-    }
-    best_stop = "greatest(" + ", ".join(hits.values()) + ")"
-    latin_case = (
-        f"CASE WHEN {best_stop} = 0 THEN 'und' "
-        + " ".join(
-            f"WHEN {hits[lg]} = {best_stop} THEN '{lg}'" for lg in _STOPS
-        )
-        + " ELSE 'und' END"
-    )
-    script_whens = []
-    for s in _SCRIPT_RANGES:
-        if s == "zh":
-            script_whens.append(
-                f"WHEN {s_cnt['zh']} = {best_script} THEN "
-                f"(CASE WHEN {s_cnt['ja']} > 0 THEN 'ja' ELSE 'zh' END)"
-            )
-        else:
-            script_whens.append(
-                f"WHEN {s_cnt[s]} = {best_script} THEN '{s}'"
-            )
-    return (
-        f"CASE WHEN {best_script} = 0 THEN 'und' "
-        f"WHEN {latin} = {best_script} THEN ({latin_case}) "
-        + " ".join(script_whens)
-        + " ELSE 'und' END"
-    )
-
-
-def _lang_id_sql() -> str:
-    return f"""
-SELECT lang, lang_guess, count(*)::BIGINT AS n_docs
-FROM (SELECT lang, {_lang_guess_expr()} AS lang_guess FROM documents)
-GROUP BY lang, lang_guess
-"""
-
-
-_FP = (
-    f"md5(regexp_replace(trim(lower(text)), '{_JAVA_WS_CLASS}+', ' ', 'g'))"
-)
-
-
-def _url_canon_cte() -> str:
-    """DuckDB mirror of functions/urls.py over the shared _URL_SYNTH_SQL
-    input: produces CTE ``canon(doc_id, n_chars, host, domain,
-    canon_url)``.  Every regex matches at most once, so DuckDB's
-    first-match regexp_replace equals Spark's replace-all."""
-    from doctor_spark.functions.urls import SUFFIX_2
-
-    suffixes = ",".join(f"'{s}'" for s in SUFFIX_2)
-    return f"""
-WITH raw AS (
-  SELECT doc_id, n_chars, ({_URL_SYNTH_SQL}) AS url FROM documents
-), parts AS (
-  SELECT doc_id, n_chars, split_part(url, '#', 1) AS nofrag FROM raw
-), comp AS (
-  SELECT doc_id, n_chars, nofrag,
-         lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-           AS scheme,
-         regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?]+)', 1)
-           AS auth
-  FROM parts
-), comp2 AS (
-  SELECT doc_id, n_chars, nofrag, scheme,
-         CASE WHEN lower(split_part(auth, ':', 1)) = '' THEN NULL
-              ELSE lower(split_part(auth, ':', 1)) END AS host,
-         CASE WHEN contains(auth, ':') THEN split_part(auth, ':', 2)
-              ELSE '' END AS port,
-         regexp_replace(regexp_extract(nofrag,
-             '^[A-Za-z][A-Za-z0-9+.-]*://[^/?]+(/[^?]*)?', 1),
-             '/+$', '') AS path,
-         list_sort(list_filter(
-             str_split(regexp_extract(nofrag, '\\?(.*)$', 1), '&'),
-             p -> p <> '' AND NOT regexp_matches(p,
-                  '^(utm_[A-Za-z0-9_]+|fbclid|gclid|msclkid|ref)=')))
-           AS params
-  FROM comp
-), labelled AS (
-  SELECT *,
-         CASE WHEN host IS NULL THEN NULL ELSE
-           CASE WHEN len(list_filter(str_split(host, '.'), x -> x <> '')) > 1
-                     AND list_filter(str_split(host, '.'), x -> x <> '')[1]
-                         = 'www'
-                THEN list_filter(str_split(host, '.'), x -> x <> '')[2:]
-                ELSE list_filter(str_split(host, '.'), x -> x <> '') END
-         END AS l
-  FROM comp2
-), canon AS (
-  SELECT doc_id, n_chars, host,
-         CASE WHEN host IS NULL THEN NULL
-              WHEN len(l) = 0 THEN NULL
-              WHEN len(l) = 1 THEN l[1]
-              WHEN len(l) >= 3
-                   AND (l[-2] || '.' || l[-1]) IN ({suffixes})
-              THEN l[-3] || '.' || l[-2] || '.' || l[-1]
-              ELSE l[-2] || '.' || l[-1] END AS domain,
-         CASE WHEN host IS NULL THEN nofrag
-              ELSE scheme || '://' || host ||
-                   CASE WHEN port <> ''
-                             AND NOT (scheme = 'http' AND port = '80')
-                             AND NOT (scheme = 'https' AND port = '443')
-                        THEN ':' || port ELSE '' END ||
-                   path ||
-                   CASE WHEN len(params) > 0
-                        THEN '?' || array_to_string(params, '&')
-                        ELSE '' END
-         END AS canon_url
-  FROM labelled
-)
-"""
+    return {name: q.fn for name, q in registered(ORDER).items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    fmt_rows = " UNION ALL ".join(
-        f"SELECT '{ext}' AS extension, {cnt * (CORPUS_N // 100)}::BIGINT AS n_docs"
-        for ext, cnt in sorted(_FORMAT_COUNTS.items())
-    )
-    return {
-        "extract_mismatches": (
-            "SELECT ''::VARCHAR AS url, ''::VARCHAR AS content WHERE 1 = 0"
-        ),
-        "extract_format_metrics": fmt_rows,
-        "extract_ocr_stats": (
-            # 5% image-only PDFs (OCR), 3% junk (err rows)
-            f"SELECT {CORPUS_N // 100 * 5}::BIGINT AS n_ocr,"
-            f" {CORPUS_N // 100 * 3}::BIGINT AS n_err,"
-            f" {CORPUS_N}::BIGINT AS n_total"
-        ),
-        "pdf_metadata": """
-SELECT 'https://pacer.test/doc0.pdf' AS url, '1-1' AS doc_number,
-       1::BIGINT AS page_count, 1::BIGINT AS n_redactions,
-       'Body of document 0' AS recovered_text
-UNION ALL SELECT 'https://pacer.test/doc1.pdf', '7-2', 1::BIGINT, 0::BIGINT, ''
-UNION ALL SELECT 'https://pacer.test/doc2.pdf', '12-3', 1::BIGINT, 1::BIGINT,
-       'Body of document 2'
-UNION ALL SELECT 'https://pacer.test/doc3.pdf', '', 1::BIGINT, 0::BIGINT, ''
-UNION ALL SELECT 'https://pacer.test/doc4.pdf', '9', 1::BIGINT, 1::BIGINT,
-       'Body of document 4'
-""",
-        "extract_recap_mismatch": (
-            "SELECT ''::VARCHAR AS url, ''::VARCHAR AS content WHERE 1 = 0"
-        ),
-        "reference_fixtures": " UNION ALL ".join(
-            [
-                "SELECT '{}' AS fixture, '{}' AS \"check\", '{}' AS value,"
-                " 'reference' AS source".format(f, c, v.replace("'", "''"))
-                for f, c, v in _REF_EXPECTED
-            ]
-            + [
-                "SELECT '{}' AS fixture, '{}' AS \"check\", '{}' AS value,"
-                " 'engine-divergence(reference={})' AS source".format(f, c, v, r)
-                for f, c, v, r in _ENGINE_DIVERGENCES
-            ]
-        ),
-        "doc_metrics_by_lang": """
-SELECT lang, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-       round(avg(n_chars), 4) AS avg_chars,
-       sum(length(text))::BIGINT AS total_text_len
-FROM documents GROUP BY lang
-""",
-        "dedup_exact": f"""
-SELECT {_FP} AS text_hash, count(*)::BIGINT AS n_dups,
-       min(doc_id)::BIGINT AS keep_id
-FROM documents GROUP BY 1 HAVING count(*) > 1
-""",
-        "dedup_stats": f"""
-SELECT count(*)::BIGINT AS n_total, count(DISTINCT {_FP})::BIGINT AS n_unique
-FROM documents
-""",
-        "dedup_minhash_pairs": _minhash_sql(),
-        "dedup_minhash_pairs_w128": _minhash_affine_sql(
-            MINHASH_PROD_PERMS, MINHASH_PROD_ROWS_PER_BAND
-        ),
-        "dedup_simhash": _simhash_sql(),
-        "dedup_simhash_near": _simhash_near_sql(),
-        "dedup_simhash_near_w48": _simhash_near_sql(bits=48),
-        "dedup_components": f"""
-WITH RECURSIVE pairs AS ({_minhash_sql()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-walk(doc_id, label) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, w.label FROM edges e JOIN walk w ON w.doc_id = e.dst
-)
-SELECT doc_id::BIGINT AS doc_id, min(label)::BIGINT AS component_id
-FROM walk GROUP BY doc_id
-""",
-        "clean_corpus": f"""
-WITH g AS ({_gopher_sql()}), r AS ({_repetition_gopher_sql()}),
-l AS (SELECT doc_id, {_lang_guess_expr()} AS lg FROM documents),
-f AS (SELECT doc_id, {_FP} AS fp, text FROM documents),
-kept AS (
-  SELECT f.doc_id, f.fp, f.text
-  FROM f JOIN g USING (doc_id) JOIN r USING (doc_id) JOIN l USING (doc_id)
-  WHERE g.passes AND r.passes AND l.lg = 'en'
-)
-SELECT doc_id::BIGINT AS doc_id,
-       md5(regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-           '\\b\\d{{3}}-\\d{{2}}-\\d{{4}}\\b', '<SSN>', 'g'),
-           '\\b\\d{{3}}[-.]\\d{{3}}[-.]\\d{{4}}\\b', '<PHONE>', 'g'),
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'),
-           '\\b\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\b', '<IP>', 'g'))
-         AS clean_md5
-FROM kept
-QUALIFY doc_id = min(doc_id) OVER (PARTITION BY fp)
-""",
-        "dedup_filtered_corpus": f"""
-WITH RECURSIVE pairs AS ({_minhash_sql()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-walk(doc_id, label) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, w.label FROM edges e JOIN walk w ON w.doc_id = e.dst
-),
-comp AS (
-  SELECT doc_id, min(label) AS component_id FROM walk GROUP BY doc_id
-)
-SELECT doc_id::BIGINT AS doc_id FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id != component_id)
-""",
-        "dedup_ngram_jaccard": _jaccard_sql(),
-        "winnow_fingerprints": """
-WITH norm AS (
-  SELECT doc_id, regexp_replace(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g') AS t
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         list_transform(range(1, length(t) - 8 + 2),
-                        i -> substr(md5(substr(t, i, 8)), 1, 15)) AS h
-  FROM norm WHERE length(t) >= 8
-), wnd AS (
-  SELECT doc_id, h,
-         unnest(range(1, greatest(1, len(h) - 4 + 1) + 1)) AS p
-  FROM g
-), sl AS (
-  SELECT doc_id, p, h[p : p + 3] AS s FROM wnd
-)
-SELECT DISTINCT doc_id::BIGINT AS doc_id,
-       (p - 1 + (len(s) - list_position(list_reverse(s), list_min(s))))::BIGINT
-         AS pos,
-       list_min(s) AS fp
-FROM sl
-""",
-        "text_quality": _quality_sql(),
-        "gopher_quality": _gopher_sql(),
-        "repetition_gopher": _repetition_gopher_sql(),
-        "corpus_sample": """
-WITH b AS (
-  SELECT doc_id,
-         substring(md5('mix1' || doc_id::VARCHAR), 1, 4) AS bucket
-  FROM documents
-)
-SELECT doc_id::BIGINT AS doc_id, 'train' AS split, bucket
-FROM b WHERE bucket >= '0000' AND bucket < printf('%04x', 13107)
-UNION ALL
-SELECT doc_id::BIGINT AS doc_id, 'val' AS split, bucket
-FROM b WHERE bucket >= printf('%04x', 13107) AND bucket < printf('%04x', 16384)
-""",
-        "decontaminate": r"""
-WITH bench AS (
-  SELECT doc_id AS bench_id, text FROM documents
-  WHERE text IS NOT NULL AND doc_id % 50 = 0
-), train AS (
-  SELECT d.doc_id,
-         CASE WHEN d.doc_id % 10 = 3 AND b.text IS NOT NULL
-              THEN d.text || ' ' || substring(b.text, 1, 80)
-              ELSE d.text END AS text
-  FROM documents d
-  LEFT JOIN bench b ON b.bench_id = d.doc_id - (d.doc_id % 50)
-  WHERE d.text IS NOT NULL AND d.doc_id % 50 <> 0
-), tg AS (
-  SELECT doc_id, md5(unnest(list_distinct(list_transform(
-           range(1, len(tk) - 6), i -> array_to_string(tk[i:i+7], ' '))))) AS gh
-  FROM (SELECT doc_id,
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS tk
-        FROM train)
-  WHERE len(tk) >= 8
-), bg AS (
-  SELECT bench_id AS bid, md5(unnest(list_distinct(list_transform(
-           range(1, len(tk) - 6), i -> array_to_string(tk[i:i+7], ' '))))) AS gh
-  FROM (SELECT bench_id,
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS tk
-        FROM bench)
-  WHERE len(tk) >= 8
-)
-SELECT t.doc_id::BIGINT AS doc_id,
-       count(DISTINCT t.gh)::BIGINT AS n_hits,
-       count(DISTINCT b.bid)::BIGINT AS n_bench_docs
-FROM tg t JOIN bg b ON t.gh = b.gh
-GROUP BY t.doc_id
-HAVING count(DISTINCT t.gh) >= 1
-""",
-        "pii_scrub": r"""
-WITH aug AS (
-  SELECT doc_id,
-         text || ' Contact user' || doc_id::VARCHAR || '@example.com or 555-010-'
-              || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-              || (CASE WHEN doc_id % 3 = 0
-                       THEN ' ssn 123-45-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-                       ELSE '' END)
-              || (CASE WHEN doc_id % 5 = 0
-                       THEN ' from 10.0.' || (doc_id % 256)::VARCHAR || '.7'
-                       ELSE '' END) AS text
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id::BIGINT AS doc_id,
-       len(regexp_extract_all(text,
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
-       len(regexp_extract_all(text,
-           '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))::BIGINT AS n_phones,
-       len(regexp_extract_all(text,
-           '\b\d{3}-\d{2}-\d{4}\b'))::BIGINT AS n_ssns,
-       len(regexp_extract_all(text,
-           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ips,
-       md5(regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-           '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'))
-         AS scrubbed_hash
-FROM aug
-""",
-        "line_dedup": """
-WITH aug AS (
-  SELECT doc_id,
-         'Subscribe to our newsletter!' || chr(10) ||
-         regexp_replace(text, '\\. ', '.' || chr(10), 'g') || chr(10) ||
-         CASE WHEN doc_id % 2 = 0 THEN 'All Rights Reserved.'
-              ELSE 'Privacy Policy | Terms of Use' END AS text
-  FROM documents WHERE text IS NOT NULL
-), d AS (
-  SELECT doc_id, str_split(text, chr(10)) AS ls FROM aug
-), lines AS (
-  SELECT doc_id, e.pos AS pos, e.ln AS ln,
-         regexp_replace(trim(lower(e.ln)), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g') AS norm
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(ls) + 1),
-                  i -> {'pos': i, 'ln': ls[i]})) AS e
-    FROM d
-  )
-), counts AS (
-  SELECT norm, count(*) AS line_df FROM lines GROUP BY norm
-), marked AS (
-  SELECT l.doc_id, l.pos, l.ln,
-         (l.norm = '' OR c.line_df <= 30) AS keep
-  FROM lines l JOIN counts c USING (norm)
-)
-SELECT doc_id::BIGINT AS doc_id,
-       sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       (count(*) - sum(CASE WHEN keep THEN 1 ELSE 0 END))::BIGINT AS n_dropped,
-       md5(coalesce(string_agg(CASE WHEN keep THEN ln END, chr(10)
-                               ORDER BY pos), '')) AS text_hash
-FROM marked GROUP BY doc_id
-""",
-        "url_canonicalize": _url_canon_cte() + f"""
-SELECT c.doc_id::BIGINT AS doc_id, c.canon_url, c.host, c.domain,
-       (b.domain IS NOT NULL) AS blocked
-FROM canon c LEFT JOIN (VALUES {_BL_VALUES}) b(domain)
-  ON c.domain = b.domain
-""",
-        "domain_topk": _url_canon_cte() + """
-, agg AS (
-  SELECT domain, count(*) AS n_docs, sum(n_chars) AS sum_chars
-  FROM canon GROUP BY domain
-), ranked AS (
-  SELECT row_number() OVER (ORDER BY n_docs DESC, sum_chars DESC, domain)
-           AS rank, domain, n_docs, sum_chars
-  FROM agg
-)
-SELECT rank::BIGINT AS rank, domain, n_docs::BIGINT AS n_docs,
-       sum_chars::BIGINT AS sum_chars
-FROM ranked WHERE rank <= 10
-""",
-        "quality_classifier": f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk, length(trim(text)) AS tl
-  FROM documents WHERE text IS NOT NULL
-), t AS (
-  SELECT doc_id, unnest(tk) AS tok FROM toks
-), w AS (
-  SELECT doc_id,
-         (('0x' || substr(md5('w' ||
-             ((('0x' || substr(md5(tok), 1, 15))::BIGINT % 1024 + 1024)
-              % 1024)::VARCHAR), 1, 15))::BIGINT % 2001 + 2001) % 2001
-           - 1000 AS wt
-  FROM t
-), s AS (
-  SELECT doc_id, sum(wt) AS raw_score FROM w GROUP BY doc_id
-)
-SELECT k.doc_id::BIGINT AS doc_id,
-       (CASE WHEN k.tl = 0 THEN 0 ELSE len(k.tk) END)::BIGINT AS n_tokens,
-       (CASE WHEN k.tl = 0 THEN 0 ELSE s.raw_score END)::BIGINT AS score,
-       (CASE WHEN k.tl = 0 THEN 0 ELSE s.raw_score END) > 0 AS keep
-FROM toks k JOIN s USING (doc_id)
-""",
-        "ccnet_perplexity": f"""
--- CCNet LM gate oracle: train stupid-backoff trigram counts on the
--- md5-band ref half (salt 'lm', rate 0.5), score every doc in int64
--- micro-log10 units, bucket per-lang terciles.  All arithmetic mirrors
--- operators/lm.py exactly: 60-bit md5 gram keys, floor(x*1e6+0.5)
--- quantization, alpha literal {_LM_ALPHA_MICRO} from the same Python
--- source of truth.
-WITH tk AS (
-  SELECT doc_id, lang,
-         regexp_split_to_array(trim(lower(text)), '{_JAVA_WS_CLASS}+') AS t
-  FROM documents WHERE text IS NOT NULL
-), ref AS (
-  SELECT t FROM tk
-  WHERE substring(md5('lm' || doc_id::VARCHAR), 1, 4)
-        < printf('%04x', 32768)
-), refg AS (
-  SELECT e.ord AS ord, e.g AS g, e.ctx AS ctx FROM (
-    SELECT unnest(flatten(list_transform(range(1, len(t) + 1), p ->
-      list_transform(range(1, least(p, 3) + 1), m ->
-        {{'ord': m,
-         'g': array_to_string(list_slice(t, p - m + 1, p), ' '),
-         'ctx': array_to_string(list_slice(t, p - m + 1, p - 1), ' ')
-        }})))) AS e
-    FROM ref
-  )
-), cnt AS (
-  SELECT ord, g, ctx, count(*) AS c FROM refg GROUP BY 1, 2, 3
-), ntot AS (
-  SELECT sum(c)::BIGINT AS n FROM cnt WHERE ord = 1
-), model AS (
-  SELECT ord, ('0x' || substr(md5(g), 1, 15))::BIGINT AS gh,
-         CAST(floor(log10(c::DOUBLE / den) * 1e6 + 0.5) AS BIGINT) AS lp
-  FROM (
-    SELECT c1.ord, c1.g, c1.c,
-           CASE WHEN c1.ord = 1 THEN (SELECT n FROM ntot)
-                ELSE c2.c END AS den
-    FROM cnt c1 LEFT JOIN cnt c2
-      ON c2.ord = c1.ord - 1 AND c2.g = c1.ctx
-    WHERE c1.ord = 1 OR c2.g IS NOT NULL
-  ) WHERE c >= 2
-), unk AS (
-  SELECT CAST(floor(log10(1.0 / greatest(n, 1)) * 1e6 + 0.5) AS BIGINT)
-         AS u FROM ntot
-), cand AS (
-  SELECT doc_id, lang, e.pos AS pos, e.ord AS ord,
-         ('0x' || substr(md5(e.g), 1, 15))::BIGINT AS gh
-  FROM (
-    SELECT doc_id, lang,
-      unnest(flatten(list_transform(range(1, len(t) + 1), p ->
-        list_transform(range(1, least(p, 3) + 1), m ->
-          {{'pos': p - 1, 'ord': m,
-           'g': array_to_string(list_slice(t, p - m + 1, p), ' ')
-          }})))) AS e
-    FROM tk
-  )
-), pos AS (
-  SELECT c.doc_id, c.lang, c.pos, least(c.pos + 1, 3) AS att,
-         max(CASE WHEN m.ord = 3 THEN m.lp END) AS lp3,
-         max(CASE WHEN m.ord = 2 THEN m.lp END) AS lp2,
-         max(CASE WHEN m.ord = 1 THEN m.lp END) AS lp1
-  FROM cand c LEFT JOIN model m ON m.ord = c.ord AND m.gh = c.gh
-  GROUP BY 1, 2, 3, 4
-), ps AS (
-  SELECT doc_id, lang,
-    CASE WHEN lp3 IS NOT NULL THEN lp3 + (att - 3) * ({_LM_ALPHA_MICRO})
-         WHEN lp2 IS NOT NULL THEN lp2 + (att - 2) * ({_LM_ALPHA_MICRO})
-         WHEN lp1 IS NOT NULL THEN lp1 + (att - 1) * ({_LM_ALPHA_MICRO})
-         ELSE (SELECT u FROM unk) + (att - 1) * ({_LM_ALPHA_MICRO})
-    END AS lp
-  FROM pos
-), agg AS (
-  SELECT doc_id, lang, count(*)::BIGINT AS n_tok,
-         sum(lp)::BIGINT AS sum_lp_micro
-  FROM ps GROUP BY 1, 2
-)
-SELECT doc_id::BIGINT AS doc_id, lang, n_tok, sum_lp_micro,
-       round(sum_lp_micro / (n_tok::DOUBLE * 1e6), 4) AS score,
-       CASE ntile(3) OVER (PARTITION BY lang
-              ORDER BY sum_lp_micro / (n_tok::DOUBLE * 1e6) DESC, doc_id)
-         WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-       END AS bucket
-FROM agg
-""",
-        "dsir_select": f"""
--- DSIR oracle: replay the hashed uni+bigram model fit (Laplace lp in
--- int64 micro-log10, same IEEE division + libm log10 as the driver-side
--- math.log10), the per-doc llr sum, the md5-grid Gumbel draw
--- (-log10(-log10 u) — constant-shifted Gumbel, order-exact), and the
--- (key DESC, doc_id) top-100.
-WITH d AS (
-  SELECT doc_id, {_TOKS} AS tk
-  FROM documents
-  WHERE text IS NOT NULL AND length(trim(text)) > 0
-), g AS (
-  SELECT doc_id, unnest(tk) AS g FROM d
-  UNION ALL
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(tk)),
-                i -> tk[i] || ' ' || tk[i + 1])) AS g
-  FROM d WHERE len(tk) >= 2
-), b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(g), 1, 15))::BIGINT % 1024 AS b
-  FROM g
-), tgt AS (
-  SELECT doc_id FROM d
-  WHERE substring(md5('dsir-t' || doc_id::VARCHAR), 1, 4) < '4000'
-), cnt AS (
-  SELECT b.b,
-         count(*)::BIGINT AS c_r,
-         sum(CASE WHEN t.doc_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-           AS c_t
-  FROM b LEFT JOIN tgt t USING (doc_id)
-  GROUP BY b.b
-), tot AS (
-  SELECT sum(c_r)::BIGINT AS cr, sum(c_t)::BIGINT AS ct FROM cnt
-), llr AS (
-  SELECT r.range AS b,
-         CAST(floor(log10((coalesce(c.c_t, 0) + 1)::DOUBLE
-                          / (tot.ct + 1024)) * 1e6 + 0.5) AS BIGINT)
-         - CAST(floor(log10((coalesce(c.c_r, 0) + 1)::DOUBLE
-                            / (tot.cr + 1024)) * 1e6 + 0.5) AS BIGINT)
-           AS llr
-  FROM range(0, 1024) r LEFT JOIN cnt c ON c.b = r.range, tot
-), lw AS (
-  SELECT b.doc_id, sum(l.llr)::BIGINT AS lw_micro
-  FROM b JOIN llr l ON l.b = b.b
-  GROUP BY b.doc_id
-), keyed AS (
-  SELECT d.doc_id, len(d.tk)::BIGINT AS n_tok, w.lw_micro,
-         (w.lw_micro + CAST(floor(-log10(-log10(
-             ((('0x' || substr(md5('dsir' || d.doc_id::VARCHAR), 1, 15))
-               ::BIGINT % 2147483648)::DOUBLE + 0.5) / 2.147483648e9
-           )) * 1e6 + 0.5) AS BIGINT))::BIGINT AS key_micro
-  FROM d JOIN lw w USING (doc_id)
-)
-SELECT row_number() OVER (ORDER BY key_micro DESC, doc_id)::BIGINT
-         AS rank,
-       doc_id::BIGINT AS doc_id, n_tok, lw_micro, key_micro
-FROM keyed
-ORDER BY key_micro DESC, doc_id
-LIMIT 100
-""",
-        "mix_weights": """
-WITH c AS (
-  SELECT source AS domain, count(*)::BIGINT AS n_docs
-  FROM documents GROUP BY 1
-), t AS (SELECT sum(n_docs)::BIGINT AS tot FROM c),
-w AS (
-  SELECT domain, n_docs, tot,
-         CAST(floor(pow(n_docs::DOUBLE / tot, 0.5) * 1e9 + 0.5)
-              AS BIGINT) AS pw
-  FROM c, t
-), z AS (SELECT sum(pw)::BIGINT AS z FROM w)
-SELECT domain, n_docs,
-       round(n_docs::DOUBLE / tot, 4) AS p,
-       round(pw::DOUBLE / z, 4) AS weight,
-       CAST(floor(tot::DOUBLE * pw / (z::DOUBLE * n_docs) * 1e6 + 0.5)
-            AS BIGINT) AS rate_micro
-FROM w, z
-""",
-        "mix_resample": """
-WITH c AS (
-  SELECT source AS domain, count(*)::BIGINT AS n_docs
-  FROM documents GROUP BY 1
-), t AS (SELECT sum(n_docs)::BIGINT AS tot FROM c),
-w AS (
-  SELECT domain, n_docs, tot,
-         CAST(floor(pow(n_docs::DOUBLE / tot, 0.5) * 1e9 + 0.5)
-              AS BIGINT) AS pw
-  FROM c, t
-), z AS (SELECT sum(pw)::BIGINT AS z FROM w),
-rates AS (
-  SELECT domain,
-         CAST(floor(tot::DOUBLE * pw / (z::DOUBLE * n_docs) * 1e6 + 0.5)
-              AS BIGINT) AS rate_micro
-  FROM w, z
-), docs AS (
-  SELECT d.doc_id, d.source AS domain, r.rate_micro,
-         ('0x' || substring(md5('mix' || d.doc_id::VARCHAR), 1, 4))::BIGINT
-           AS b
-  FROM documents d JOIN rates r ON d.source = r.domain
-), cp AS (
-  SELECT doc_id, domain,
-         rate_micro // 1000000
-           + CASE WHEN b * 1000000 < (rate_micro % 1000000) * 65536
-                  THEN 1 ELSE 0 END AS copies
-  FROM docs
-)
-SELECT doc_id::BIGINT AS doc_id, domain,
-       unnest(range(1, copies + 1))::BIGINT AS copy_no
-FROM cp WHERE copies >= 1
-""",
-        "tfidf_top_terms": f"""
-WITH base AS (
-  SELECT doc_id AS id, source AS domain, unnest({_TOKS}) AS term
-  FROM documents WHERE text IS NOT NULL
-), nd AS (
-  SELECT count(DISTINCT doc_id)::BIGINT AS n_docs
-  FROM documents WHERE text IS NOT NULL
-), tf AS (
-  SELECT domain, term, count(*)::BIGINT AS tf FROM base GROUP BY 1, 2
-), dft AS (
-  SELECT term, count(*)::BIGINT AS df_docs
-  FROM (SELECT DISTINCT id, term FROM base) GROUP BY 1
-  HAVING count(*) >= 2
-), s AS (
-  SELECT tf.domain, tf.term, tf.tf, dft.df_docs,
-         tf.tf::DOUBLE *
-           CAST(floor(log10((SELECT n_docs FROM nd)::DOUBLE / dft.df_docs)
-                      * 1e6 + 0.5) AS BIGINT)::DOUBLE AS key
-  FROM tf JOIN dft USING (term)
-), r AS (
-  SELECT domain, term, tf, df_docs, key,
-         row_number() OVER (PARTITION BY domain ORDER BY key DESC, term)
-           AS rank
-  FROM s
-)
-SELECT domain, rank::BIGINT AS rank, term, tf, df_docs,
-       round(key / 1e6, 4) AS score
-FROM r WHERE rank <= 10
-""",
-        "ngram_novelty": f"""
-WITH tk AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents WHERE text IS NOT NULL
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tk) - 5 + 2), i ->
-           ('0x' || substr(md5(
-              array_to_string(list_slice(tk, i, i + 4), ' ')), 1, 15)
-           )::BIGINT)) AS s
-  FROM tk WHERE len(tk) >= 5
-), refh AS (
-  SELECT DISTINCT unnest(s) AS h FROM sh
-  WHERE substring(md5('nov' || doc_id::VARCHAR), 1, 4)
-        < printf('%04x', 32768)
-), d AS (
-  SELECT doc_id, len(s)::BIGINT AS n_sh, unnest(s) AS h FROM sh
-)
-SELECT d.doc_id::BIGINT AS doc_id, d.n_sh,
-       count(r.h)::BIGINT AS n_seen,
-       round((d.n_sh - count(r.h))::DOUBLE / d.n_sh, 4) AS novel_frac
-FROM d LEFT JOIN refh r ON d.h = r.h
-GROUP BY d.doc_id, d.n_sh
-""",
-        "token_deciles": f"""
-WITH v AS (
-  SELECT lang,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len({_TOKS}) END AS v
-  FROM documents WHERE text IS NOT NULL
-), r AS (
-  SELECT lang, v, row_number() OVER (PARTITION BY lang ORDER BY v) AS rn
-  FROM v
-), c AS (
-  SELECT lang, count(*)::BIGINT AS n FROM v GROUP BY 1
-), q AS (
-  SELECT lang, n, unnest(range(1, 10)) AS q FROM c
-)
-SELECT q.lang, q.q::BIGINT AS q, q.n,
-       r.v::BIGINT AS value
-FROM q JOIN r ON r.lang = q.lang AND r.rn = (q.q * q.n + 9) // 10
-""",
-        "corpus_health": f"""
-WITH t AS (
-  SELECT text, lang, source,
-         (CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
-               ELSE len({_TOKS}) END) AS tok,
-         CASE WHEN text IS NULL THEN NULL ELSE {_FP} END AS fp
-  FROM documents
-)
-SELECT count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null_text,
-       sum(tok)::BIGINT AS total_tokens,
-       count(DISTINCT fp)::BIGINT AS n_distinct_fp,
-       count(DISTINCT lang)::BIGINT AS n_langs,
-       count(DISTINCT source)::BIGINT AS n_sources,
-       round(avg(tok), 4)::DOUBLE AS avg_tokens,
-       max(length(text))::BIGINT AS max_chars
-FROM t
-""",
-        "pack_sequences": f"""
-WITH t AS (
-  SELECT doc_id, source,
-         (CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
-               ELSE len({_TOKS}) END)::BIGINT AS n_tokens
-  FROM documents
-), s AS (
-  SELECT doc_id, source, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-           AS start_offset
-  FROM t
-)
-SELECT doc_id, source, n_tokens, start_offset,
-       seq_first, seq_last,
-       coalesce(seq_last - seq_first + 1, 0)::BIGINT AS n_seqs
-FROM (
-  SELECT doc_id::BIGINT AS doc_id, source, n_tokens,
-         start_offset::BIGINT AS start_offset,
-         (CASE WHEN n_tokens > 0 THEN start_offset // 256 END)::BIGINT
-           AS seq_first,
-         (CASE WHEN n_tokens > 0 THEN (start_offset + n_tokens - 1) // 256
-          END)::BIGINT AS seq_last
-  FROM s
-)
-""",
-        "snapshot_diff": f"""
-WITH a AS (
-  SELECT doc_id, md5(regexp_replace(trim(lower(coalesce(text, ''))),
-         '{_JAVA_WS_CLASS}+', ' ', 'g')) AS old_fp
-  FROM documents WHERE doc_id % 7 <> 0
-), b AS (
-  SELECT doc_id, md5(regexp_replace(trim(lower(
-           CASE WHEN doc_id % 3 = 0 THEN coalesce(text, '') || ' v2'
-                ELSE text END)),
-         '{_JAVA_WS_CLASS}+', ' ', 'g')) AS new_fp
-  FROM documents WHERE doc_id % 5 <> 0
-)
-SELECT coalesce(a.doc_id, b.doc_id)::BIGINT AS doc_id,
-       CASE WHEN a.doc_id IS NULL THEN 'new'
-            WHEN b.doc_id IS NULL THEN 'gone'
-            WHEN a.old_fp = b.new_fp THEN 'same'
-            ELSE 'changed' END AS status,
-       a.old_fp, b.new_fp
-FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-""",
-        "stratified_sample": """
-SELECT doc_id::BIGINT AS doc_id, lang, source, rk::BIGINT AS sample_rank
-FROM (
-  SELECT doc_id, lang, source,
-         row_number() OVER (
-           PARTITION BY lang, source
-           ORDER BY substr(md5(doc_id::VARCHAR), 1, 4), doc_id) AS rk
-  FROM documents
-) WHERE rk <= 5
-""",
-        "bloom_dedup": f"""
-WITH fp AS (
-  SELECT doc_id, {_FP} AS fp FROM documents WHERE text IS NOT NULL
-), pos AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('b' || j::VARCHAR || '|' || fp), 1, 15))::BIGINT
-           % 4096 AS bit
-  FROM fp, unnest(range(0, 4)) AS u(j)
-), abits AS (
-  SELECT DISTINCT bit FROM pos WHERE doc_id < 250
-), probes AS (
-  SELECT doc_id, bit FROM pos WHERE doc_id >= 200
-)
-SELECT p.doc_id::BIGINT AS doc_id, (count(a.bit) = 4) AS maybe_in_a
-FROM probes p LEFT JOIN abits a ON p.bit = a.bit
-GROUP BY p.doc_id
-""",
-        "paragraph_dedup": """
-WITH aug AS (
-  SELECT doc_id,
-         'Share this article on social media.' || chr(10) || chr(10) ||
-         regexp_replace(text, '\\. ', '.' || chr(10) || chr(10), 'g') AS text
-  FROM documents WHERE text IS NOT NULL
-), d AS (
-  SELECT doc_id, str_split(text, chr(10) || chr(10)) AS ps FROM aug
-), paras AS (
-  SELECT doc_id, e.pos AS pos, e.p AS p, md5(trim(e.p)) AS fp
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(ps) + 1),
-                      i -> {'pos': i, 'p': ps[i]})) AS e
-        FROM d)
-), marked AS (
-  SELECT doc_id, pos, p,
-         (trim(p) = '' OR
-          row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) = 1) AS keep
-  FROM paras
-)
-SELECT doc_id::BIGINT AS doc_id,
-       count(*)::BIGINT AS n_paras,
-       sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       (count(*) - sum(CASE WHEN keep THEN 1 ELSE 0 END))::BIGINT AS n_dropped,
-       md5(coalesce(string_agg(CASE WHEN keep THEN p END,
-                               chr(10) || chr(10) ORDER BY pos), '')) AS text_hash
-FROM marked GROUP BY doc_id
-""",
-        "para_dedup_intra": """
-WITH aug AS (
-  SELECT doc_id,
-         'Connect with us on social media.' || chr(10) || chr(10) ||
-         regexp_replace(text, '\\. ', '.' || chr(10) || chr(10), 'g') ||
-         chr(10) || chr(10) || 'Connect with us on social media.' AS text
-  FROM documents WHERE text IS NOT NULL
-), d AS (
-  SELECT doc_id, str_split(text, chr(10) || chr(10)) AS ps FROM aug
-), paras AS (
-  SELECT doc_id, e.pos AS pos, e.p AS p, md5(trim(e.p)) AS fp
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(ps) + 1),
-                      i -> {'pos': i, 'p': ps[i]})) AS e
-        FROM d)
-), marked AS (
-  SELECT doc_id, pos, p,
-         (trim(p) = '' OR
-          row_number() OVER (PARTITION BY doc_id, fp ORDER BY pos) = 1) AS keep
-  FROM paras
-)
-SELECT doc_id::BIGINT AS doc_id,
-       count(*)::BIGINT AS n_paras,
-       sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       (count(*) - sum(CASE WHEN keep THEN 1 ELSE 0 END))::BIGINT AS n_dropped,
-       md5(coalesce(string_agg(CASE WHEN keep THEN p END,
-                               chr(10) || chr(10) ORDER BY pos), '')) AS text_hash
-FROM marked GROUP BY doc_id
-""",
-        "dedup_exact_substring": """
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS tk
-  FROM documents WHERE text IS NOT NULL
-), wins AS (
-  SELECT doc_id, pos, md5(array_to_string(tk[pos+1 : pos+8], ' ')) AS wh
-  FROM toks, unnest(range(0, greatest(len(tk)-8+1, 0))) AS u(pos)
-), marked AS (
-  SELECT doc_id, pos FROM (
-    SELECT doc_id, pos, count(*) OVER (PARTITION BY wh) AS cnt,
-           row_number() OVER (PARTITION BY wh ORDER BY doc_id, pos) AS rn
-    FROM wins) WHERE cnt > 1 AND rn > 1
-), tok AS (
-  SELECT doc_id, e.i - 1 AS i, e.t AS t
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(tk) + 1),
-                      j -> {'i': j, 't': tk[j]})) AS e
-        FROM toks)
-), cov AS (
-  SELECT tok.doc_id, tok.i, tok.t,
-         EXISTS(SELECT 1 FROM marked m WHERE m.doc_id = tok.doc_id
-                AND m.pos <= tok.i AND tok.i < m.pos + 8) AS covered
-  FROM tok
-), dstats AS (
-  SELECT doc_id, count(*) AS n_dup_windows FROM marked GROUP BY doc_id
-)
-SELECT c.doc_id::BIGINT AS doc_id,
-       count(*)::BIGINT AS n_tokens,
-       greatest(count(*) - 8 + 1, 0)::BIGINT AS n_windows,
-       coalesce(any_value(d.n_dup_windows), 0)::BIGINT AS n_dup_windows,
-       sum(CASE WHEN covered THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-       md5(coalesce(string_agg(CASE WHEN NOT covered THEN t END,
-                               ' ' ORDER BY i), '')) AS text_hash
-FROM cov c LEFT JOIN dstats d USING (doc_id)
-GROUP BY c.doc_id
-""",
-        "repetition_stats": f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents
-), bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(tk)),
-                               i -> tk[i] || ' ' || tk[i + 1])) AS bg
-  FROM toks WHERE len(tk) >= 2
-), counts AS (
-  SELECT doc_id, bg, count(*) AS n FROM bg GROUP BY doc_id, bg
-)
-SELECT doc_id::BIGINT AS doc_id,
-       sum(n)::BIGINT AS n_bigrams,
-       round(max(n)::DOUBLE / sum(n), 4)::DOUBLE AS top_bigram_frac
-FROM counts GROUP BY doc_id
-""",
-        "token_stats": f"""
-SELECT doc_id::BIGINT AS doc_id,
-       (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({_TOKS}) END)::BIGINT
-         AS ws_tokens,
-       len(regexp_extract_all(text,
-         '''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+'
-         || '| ?[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]+|[ \\t\\n\\x0b\\f\\r]+'
-       ))::BIGINT AS bpe_tokens
-FROM documents
-""",
-        "lang_id": _lang_id_sql(),
-        "fingerprint": f"SELECT doc_id::BIGINT AS doc_id, {_FP} AS fp FROM documents",
-        "ann_cosine_topk": """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 10
-), c AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-  FROM embeddings WHERE vec_id >= 10
-), scored AS (
-  SELECT query_id, neighbor_id,
-         round(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * cv[i]))
-               / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-                  * sqrt(list_sum(list_transform(cv, x -> x * x)))), 4) AS score
-  FROM q, c
-), ranked AS (
-  SELECT query_id::BIGINT AS query_id, neighbor_id::BIGINT AS neighbor_id,
-         score::DOUBLE AS score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-)
-SELECT * FROM ranked WHERE rank <= 3
-""",
-        "lsh_ann_topk": _lsh_ann_sql(),
-        "lsh_ann_corpus_topk": _lsh_ann_corpus_sql(),
-        "ivf_ann_topk": _ivf_ann_sql(),
-        "embedding_neardup": _neardup_sql(),
-        "semdedup": _semdedup_sql(),
-        "bpe_merges": _bpe_sql(),
-        "bpe_token_counts": _bpe_sql(final="tokens"),
-        "link_pagerank": _pagerank_sql(),
-        "link_host_rank": _link_host_rank_sql(),
-        "robots_gate": _robots_gate_sql(),
-        "domain_blocklist": _domain_blocklist_sql(),
-        "image_dup_clusters": f"""
-SELECT MIN(doc_id)::BIGINT AS rep_doc, COUNT(*)::BIGINT AS n_images
-FROM documents WHERE text IS NOT NULL
-GROUP BY doc_id % {_IMG_PATTERNS}
-""",
-        "audio_dup_clusters": f"""
-SELECT MIN(doc_id)::BIGINT AS rep_doc, COUNT(*)::BIGINT AS n_clips
-FROM documents WHERE text IS NOT NULL
-GROUP BY doc_id % {_AUD_PATTERNS}
-""",
-        "video_dup_clusters": f"""
-SELECT MIN(doc_id)::BIGINT AS rep_doc, COUNT(*)::BIGINT AS n_clips
-FROM documents WHERE text IS NOT NULL
-GROUP BY doc_id % {_VID_PATTERNS}
-""",
-        "url_admission": _url_admission_sql(),
-        "page_metadata": _page_metadata_sql(),
-        "anchor_text_topk": _anchor_text_topk_sql(),
-        "image_caption_table": _image_caption_table_sql(),
-        "redirect_resolve": _redirect_resolve_sql(),
-        "sentence_stats": _sentence_stats_sql(),
-        "wet_export": _wet_export_sql(),
-        "fetch_schedule": _fetch_schedule_sql(),
-        "table_cells": _table_cells_sql(),
-        "cdx_index": _cdx_index_sql(),
-        "wat_export": _wat_export_sql(),
-        "host_degree_stats": _host_degree_stats_sql(),
-        "soft404_gate": _soft404_gate_sql(),
-        "sitemap_entries": _sitemap_entries_sql(),
-        "feed_entries": _feed_entries_sql(),
-        "frontier_admission": _frontier_admission_sql(),
-        "date_normalize": _date_normalize_sql(),
-        "code_blocks": _code_blocks_sql(),
-        "markdown_goldens": _markdown_sql(),
-        "boilerplate_blocks": _boilerplate_blocks_sql(),
-        "boilerplate_corpus": _boilerplate_corpus_sql(),
-        "boilerplate_corpus_lang": _boilerplate_corpus_sql(per_lang=True),
-        "content_spans": _content_spans_sql(),
-        "robots_meta": """
-SELECT doc_id::BIGINT AS doc_id,
-       (doc_id % 6 IN (0, 1, 3)) AS noindex,
-       (doc_id % 6 IN (0, 1, 2) OR doc_id % 7 = 5) AS nofollow,
-       NOT (doc_id % 6 IN (0, 1, 3)) AS index_ok
-FROM documents WHERE text IS NOT NULL
-""",
-        # pagination chains: edges re-derived from the synthesis arms,
-        # walked per url by a hop-bounded recursive CTE (the pointer-
-        # doubling operator's sequential twin), non-linking pages
-        # self-headed at index 0
-        "pagination_chains": """
-WITH RECURSIVE docs2 AS (
-  SELECT 'https://s.example/art/' || CAST(doc_id - doc_id % 4 AS VARCHAR)
-           || '/p' || CAST(doc_id % 4 AS VARCHAR) AS url,
-         CASE WHEN doc_id % 4 > 0 THEN
-           'https://s.example/art/' || CAST(doc_id - doc_id % 4 AS VARCHAR)
-           || '/p' || CAST(doc_id % 4 - 1 AS VARCHAR) END AS prev_url
-  FROM documents WHERE text IS NOT NULL
-), e AS (
-  SELECT url AS src, prev_url AS dst FROM docs2 WHERE prev_url IS NOT NULL
-),
-walk(url, cur, hops) AS (
-  SELECT src, dst, 1 FROM e
-  UNION ALL
-  SELECT w.url, e2.dst, w.hops + 1
-  FROM walk w JOIN e e2 ON w.cur = e2.src
-  WHERE w.hops < 64
-),
-deepest AS (
-  SELECT url, cur, hops,
-         ROW_NUMBER() OVER (PARTITION BY url ORDER BY hops DESC) AS rn
-  FROM walk
-),
-res AS (
-  SELECT d.url, CASE WHEN s.src IS NULL THEN d.cur END AS final_url,
-         CAST(CASE WHEN s.src IS NULL THEN d.hops END AS BIGINT) AS n_hops,
-         (s.src IS NULL) AS resolved
-  FROM deepest d
-  LEFT JOIN (SELECT DISTINCT src FROM e) s ON d.cur = s.src
-  WHERE d.rn = 1
-)
-SELECT p.url AS url,
-       CASE WHEN r.url IS NULL THEN p.url ELSE r.final_url END AS head_url,
-       coalesce(r.n_hops, 0)::BIGINT AS page_index,
-       coalesce(r.resolved, TRUE) AS resolved
-FROM docs2 p LEFT JOIN res r ON p.url = r.url
-ORDER BY p.url
-""",
-        # canonical clusters: the synthesis arms give the declared
-        # canonical closed-form (extraction itself is proven by the
-        # page_metadata oracle); the CLUSTERING is replayed independently
-        "canonical_clusters": """
-WITH base AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         'https://site.example/a/' ||
-             CAST(doc_id - doc_id % 3 AS VARCHAR) AS base_url,
-         CAST(doc_id % 3 AS INT) AS arm
-  FROM documents WHERE text IS NOT NULL
-), pages AS (
-  SELECT doc_id,
-    CASE arm WHEN 0 THEN base_url
-             WHEN 1 THEN base_url || '?print=1'
-             ELSE 'https://m.site.example/a/' ||
-                  CAST(doc_id - doc_id % 3 AS VARCHAR) END AS url,
-    CASE WHEN arm <> 0 THEN base_url ELSE NULL END AS canonical_url
-  FROM base
-), keyed AS (
-  SELECT doc_id, url, coalesce(canonical_url, url) AS cluster_key
-  FROM pages
-), per AS (
-  SELECT cluster_key,
-         coalesce(min(CASE WHEN url = cluster_key THEN doc_id END),
-                  min(doc_id)) AS keeper_id,
-         count(*)::BIGINT AS cluster_size
-  FROM keyed GROUP BY 1
-)
-SELECT doc_id, url, k.cluster_key AS cluster_key,
-       (doc_id = keeper_id) AS is_keeper, cluster_size
-FROM keyed k JOIN per USING (cluster_key)
-ORDER BY doc_id
-""",
-        # host-template lines: FULL replay (split / normalize /
-        # row-distinct / integer fraction) in the independent engine
-        "host_template_lines": """
-WITH base AS (
-  SELECT doc_id, 'h' || CAST(doc_id % 13 AS VARCHAR) AS host,
-         'Welcome to h' || CAST(doc_id % 13 AS VARCHAR) || chr(10) ||
-         CASE WHEN doc_id % 2 = 0
-              THEN 'Cookie notice - accept all' || chr(10) ELSE '' END ||
-         text AS t
-  FROM documents WHERE text IS NOT NULL
-), ln AS (
-  SELECT DISTINCT doc_id, host,
-         trim(regexp_replace(lower(u.ln),
-              '[ \t\n\x0b\x0c\r]+', ' ', 'g')) AS line
-  FROM base, unnest(string_split(t, chr(10))) AS u(ln)
-), pl AS (
-  SELECT host, line, count(*)::BIGINT AS n_docs
-  FROM ln WHERE line <> '' GROUP BY 1, 2
-), hd AS (
-  SELECT host, count(*)::BIGINT AS host_docs FROM base GROUP BY 1
-)
-SELECT pl.host AS host, line, n_docs, host_docs
-FROM pl JOIN hd ON pl.host = hd.host
-WHERE n_docs * 100 >= host_docs * 60 AND host_docs >= 2
-ORDER BY host, line
-""",
-        "bitext_align": _bitext_align_sql(),
-        # bitext URL pairs: four expected pairs per doc, closed-form
-        # (stem/lang extraction itself unit-tested in tests/test_urls.py)
-        "bitext_url_pairs": """
-WITH p AS (
-  SELECT CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-), s AS (
-  SELECT i, 'https://w.site' || i || '.example' AS site FROM p
-)
-SELECT site || '/{lang}/page' || i AS stem,
-       'de' AS src_lang, site || '/de-DE/page' || i AS src_url,
-       'en' AS tgt_lang, site || '/en/page' || i AS tgt_url
-FROM s
-UNION ALL
-SELECT site || '/{lang}/page' || i, 'de', site || '/de-DE/page' || i,
-       'fr', site || '/fr/page' || i FROM s
-UNION ALL
-SELECT site || '/{lang}/page' || i, 'en', site || '/en/page' || i,
-       'fr', site || '/fr/page' || i FROM s
-UNION ALL
-SELECT 'https://{lang}.h' || i || '.example/p/x', 'es',
-       'https://es.h' || i || '.example/p/x', 'pt',
-       'https://pt.h' || i || '.example/p/x' FROM s
-ORDER BY stem, src_lang, tgt_lang
-""",
-        "host_quality": _host_quality_sql(),
-        "readability": _readability_sql(),
-        "collocations": _collocations_sql(),
-        "inverted_postings": _inverted_postings_sql(),
-        "mirror_pairs": _mirror_pairs_sql(),
-        "kwic": _kwic_sql(),
-        "citations": _citations_sql(),
-        "vocab_growth": _vocab_growth_sql(),
-        "revisit_records": _revisit_records_sql(),
-        "rake_keywords": _rake_keywords_sql(),
-        "char_coverage": _char_coverage_sql(),
-        "crawler_traps": _crawler_traps_sql(),
-        "idn_homographs": _idn_homographs_sql(),
-        "bm25_topk": _bm25_topk_sql(),
-        "hits_scores": _hits_sql(),
-        "trustrank": _trustrank_sql(),
-        "stem_conflation": _stem_conflation_sql(),
-        "host_split": _host_split_sql(),
-        "zipf_fit": _zipf_fit_sql(),
-        "freq_of_freqs": _freq_of_freqs_sql(),
-        "cdc_dedup": _cdc_dedup_sql(),
-        "layout_clusters": _layout_clusters_sql(),
-        "verified_neardup": _verified_neardup_sql(),
-        "temporal_leakage": _temporal_leakage_sql(),
-        "best_passages": _best_passages_sql(),
-        "containment_pairs": _containment_sql(),
-        "textrank_keywords": _textrank_sql(),
-        "para_lang": _para_lang_sql(),
-        "prf_expansion": _prf_sql(),
-        "textrank_summary": _textrank_summary_sql(),
-        "postings_compression": _postings_compression_sql(),
-        "crawl_depth": _crawl_depth_sql(),
-        "containment_est": _containment_est_sql(),
-        # quote spans: constant-string arms, expected spans as literals
-        "quote_spans": """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, CAST(1 AS INT) AS quote_idx, CAST(8 AS INT) AS start_off,
-       CAST(30 AS INT) AS end_off, 'the motion is denied' AS quote_text
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 1, 0, 24, 'Curly quoted span here'
-FROM p WHERE m = 1
-ORDER BY doc_id, quote_idx
-""",
-        # chunk spans: each synthesis arm's expected chunks as UNION ALL
-        # literals (alignments verified in tests/test_chunking.py)
-        "chunk_spans": """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, CAST(1 AS INT) AS chunk_idx, CAST(5 AS INT) AS n_tokens,
-       'para' AS kind,
-       'alpha bravo charlie.' || chr(10) || chr(10) || 'delta echo.'
-         AS chunk_text
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 2, 6, 'para',
-       'fox golf hotel india juliet kilo.' FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 1, 6, 'sent', 'Aa bb cc. Dd ee ff.'
-FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 2, 6, 'hard', 'Gg hh ii jj kk ll'
-FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 3, 2, 'hard', 'mm nn.' FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 1, 6, 'hard', 'w1 w2 w3 w4 w5 w6'
-FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 2, 2, 'hard', 'w7 w8' FROM p WHERE m = 2
-ORDER BY doc_id, chunk_idx
-""",
-        # heading outline: each synthesis arm's expected rows as
-        # UNION ALL literals (alignments verified in tests/test_headings.py)
-        "heading_outline": """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 4 AS INT) AS m,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id, CAST(0 AS INT) AS seq, CAST(1 AS INT) AS level,
-       CAST(-1 AS INT) AS parent, 'Doc ' || i AS text,
-       FALSE AS truncated
-FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 1, 2, 0, 'Intro', FALSE FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 2, 3, 1, 'Sub & more', FALSE FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 3, 2, 0, 'End', FALSE FROM p WHERE m = 0
-UNION ALL SELECT doc_id, 0, 3, -1, 'Deep ' || i, FALSE FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 1, 1, -1, 'Top', FALSE FROM p WHERE m = 1
-UNION ALL SELECT doc_id, 0, 1, -1, 'Real one', FALSE FROM p WHERE m = 2
-UNION ALL SELECT doc_id, 1, 2, 0, 'Two', FALSE FROM p WHERE m = 2
-ORDER BY doc_id, seq
-""",
-        # url templates: independent replay — DuckDB rebuilds host,
-        # template, and the full url per synthesis arm and re-groups
-        "url_templates": """
-WITH p AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_id % 5 AS INT) AS m,
-         'h' || CAST(doc_id % 7 AS VARCHAR(2)) || '.example' AS host,
-         CAST(doc_id AS VARCHAR(20)) AS i
-  FROM documents WHERE text IS NOT NULL
-), u AS (
-  SELECT host,
-    CASE m WHEN 0 THEN '/article/{n}' WHEN 1 THEN '/img/{hex}'
-           WHEN 2 THEN '/u/{uuid}' WHEN 3 THEN '/about/team'
-           ELSE '/tag/{n}/page/{n}' END AS template,
-    'https://' || host ||
-    CASE m WHEN 0 THEN '/article/' || i
-           WHEN 1 THEN '/img/cafe' || lpad(i, 8, '0')
-           WHEN 2 THEN '/u/123e4567-e89b-12d3-a456-426614174000'
-           WHEN 3 THEN '/about/team'
-           ELSE '/tag/' || CAST(doc_id % 10 AS VARCHAR(2)) || '/page/' || i
-    END AS url
-  FROM p
-)
-SELECT host, template, count(*)::BIGINT AS n_urls,
-       min(url) AS sample_url
-FROM u GROUP BY 1, 2
-ORDER BY host, template
-""",
-        # hreflang pairs: each synthesis arm's expected pairs with
-        # count guards (a degenerate corpus missing an arm emits no row
-        # on either engine)
-        "hreflang_pairs": """
-WITH n AS (
-  SELECT
-    (SELECT count(*) FROM documents
-      WHERE text IS NOT NULL AND doc_id % 5 = 0) AS n0,
-    (SELECT count(*) FROM documents
-      WHERE text IS NOT NULL AND doc_id % 5 = 1) AS n1
-)
-SELECT * FROM (
-  SELECT 'de' AS lang_a, 'en' AS lang_b, n0::BIGINT AS n_pages
-    FROM n WHERE n0 > 0
-  UNION ALL SELECT 'de', 'fr', n0::BIGINT FROM n WHERE n0 > 0
-  UNION ALL SELECT 'en', 'fr', n0::BIGINT FROM n WHERE n0 > 0
-  UNION ALL SELECT 'en-US', 'es', n1::BIGINT FROM n WHERE n1 > 0
-) ORDER BY lang_a, lang_b
-""",
-        # unicode-clean: full replay on the same dirty synthesis —
-        # nfc_normalize (utf8proc) vs Python unicodedata checked on
-        # every row's TEXT, sets replayed as RE2 classes
-        "unicode_clean": f"""
-WITH dirty AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         CASE CAST(doc_id % 6 AS INT)
-           WHEN 0 THEN 'Cafe\u0301\u200b ' || text
-           WHEN 1 THEN 'A\u00a0B\u3000C ' || text
-           WHEN 2 THEN 'X\u0001Y\u007f\u0085Z ' || text
-           WHEN 3 THEN '\ufb01\u00adle ' || text
-           WHEN 4 THEN '\u1100\u1161 ' || text
-           ELSE text END AS t0
-  FROM documents WHERE text IS NOT NULL
-), nfc AS (
-  SELECT doc_id, t0, nfc_normalize(t0) AS t1 FROM dirty
-), cl AS (
-  SELECT doc_id, t0, t1,
-         regexp_replace(regexp_replace(regexp_replace(t1,
-             '{_UC_SP_CLS}', ' ', 'g'), '{_UC_ZW_CLS}', '', 'g'),
-             '{_UC_CTL_CLS}', '', 'g') AS clean
-  FROM nfc
-)
-SELECT doc_id, clean,
-  (length(t1) - length(regexp_replace(t1, '{_UC_SP_CLS}', '', 'g')))::INT
-      AS n_space_mapped,
-  (length(t1) - length(regexp_replace(t1, '{_UC_ZW_CLS}', '', 'g')))::INT
-      AS n_zero_width,
-  (length(t1) - length(regexp_replace(t1, '{_UC_CTL_CLS}', '', 'g')))::INT
-      AS n_controls,
-  (clean <> t0) AS changed
-FROM cl ORDER BY doc_id
-""",
-        # JSON-LD: each synthesis arm's expected record, closed-form
-        "structured_data": """
-SELECT doc_id::BIGINT AS doc_id,
-       CASE CAST(doc_id % 6 AS INT)
-         WHEN 0 THEN 'NewsArticle' WHEN 1 THEN 'NewsArticle'
-         WHEN 2 THEN 'BlogPosting' WHEN 3 THEN 'Article'
-         ELSE NULL END AS ld_type,
-       CASE CAST(doc_id % 6 AS INT)
-         WHEN 0 THEN 'Ruling ' || CAST(doc_id AS VARCHAR)
-         WHEN 1 THEN 'H-' || CAST(doc_id AS VARCHAR)
-         WHEN 2 THEN 'Blog é ' || CAST(doc_id AS VARCHAR)
-         WHEN 3 THEN 'good ' || CAST(doc_id AS VARCHAR)
-         ELSE NULL END AS headline,
-       CASE WHEN doc_id % 6 = 0
-            THEN '2024-03-0' || CAST(doc_id % 9 + 1 AS VARCHAR)
-                 || 'T08:00:00Z'
-            ELSE NULL END AS date_published,
-       CASE WHEN doc_id % 6 = 0 THEN 'A. Reporter'
-            WHEN doc_id % 6 = 2 THEN 'bare-author'
-            ELSE NULL END AS author_name,
-       CASE WHEN doc_id % 6 = 0 THEN 'The Daily'
-            ELSE NULL END AS publisher_name,
-       CASE CAST(doc_id % 6 AS INT) WHEN 3 THEN 2 WHEN 5 THEN 0
-            ELSE 1 END::INT AS n_blocks,
-       CASE WHEN doc_id % 6 = 3 THEN 1 ELSE 0 END::INT AS n_bad,
-       CASE CAST(doc_id % 6 AS INT) WHEN 1 THEN 3 WHEN 3 THEN 1
-            WHEN 5 THEN 0 ELSE 1 END::INT AS n_nodes
-FROM documents WHERE text IS NOT NULL ORDER BY doc_id
-""",
-        "c4_clean": _c4_clean_sql(),
-        "c4_span_dedup": _c4_span_sql(),
-        "char_entropy": _char_entropy_sql(),
-        "kmeans_clusters": _kmeans_sql(),
-        "nb_confusion": f"""
-WITH toks AS (
-  SELECT doc_id, lang, t.token
-  FROM documents, unnest({_TOKS}) AS t(token)
-  WHERE t.token <> ''
-), cnt AS (
-  SELECT lang AS label, token, count(*) AS c FROM toks GROUP BY 1, 2
-), tot AS (
-  SELECT label, sum(c) AS t FROM cnt GROUP BY 1
-), voc AS (
-  SELECT count(DISTINCT token) AS v FROM toks
-), mdl AS (
-  SELECT c.label, c.token,
-         floor(log10((c.c + 1)::DOUBLE / (t.t + voc.v)) * 1e6 + 0.5)::BIGINT
-           AS lp
-  FROM cnt c JOIN tot t USING (label), voc
-), lab AS (
-  SELECT d.lang AS label,
-         floor(log10(count(*)::DOUBLE
-                     / (SELECT count(*) FROM documents)) * 1e6 + 0.5)::BIGINT
-           AS lp_prior
-  FROM documents d GROUP BY 1
-), uns AS (
-  SELECT t.label,
-         floor(log10(1.0 / (t.t + voc.v)) * 1e6 + 0.5)::BIGINT AS lp_unseen
-  FROM tot t, voc
-), ntk AS (
-  SELECT doc_id, count(*) AS n FROM toks GROUP BY 1
-), mt AS (
-  SELECT tk.doc_id, m.label, sum(m.lp) AS s, count(*) AS k
-  FROM toks tk JOIN mdl m ON m.token = tk.token
-  GROUP BY 1, 2
-), sc AS (
-  SELECT d.doc_id, d.lang AS true_label, lab.label,
-         lab.lp_prior + coalesce(mt.s, 0)
-           + (ntk.n - coalesce(mt.k, 0)) * uns.lp_unseen AS score
-  FROM documents d
-  JOIN ntk USING (doc_id)
-  CROSS JOIN lab
-  JOIN uns ON uns.label = lab.label
-  LEFT JOIN mt ON mt.doc_id = d.doc_id AND mt.label = lab.label
-), pred AS (
-  SELECT true_label, label FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY score DESC, label ASC) AS rn
-    FROM sc
-  ) WHERE rn = 1
-)
-SELECT true_label AS lang, label AS predicted, count(*)::BIGINT AS n
-FROM pred GROUP BY 1, 2
-""",
-        "heavy_hitters": f"""
-WITH toks AS (
-  SELECT unnest({_TOKS}) AS token FROM documents
-)
-SELECT token, count(*)::BIGINT AS cnt
-FROM toks WHERE token <> ''
-GROUP BY token HAVING count(*) >= 200
-""",
-        # HLL: bit-for-bit replay of the register table and the
-        # scaled-integer estimator (constants imported from the module
-        # so the two sides can never drift)
-        "hll_host_distinct": f"""
-WITH pairs AS (
-  SELECT 'host-' || CAST((doc_id*7 + i) % 41 AS VARCHAR) AS host,
-         '/p/' || CAST((doc_id*13 + i*97)
-                       % (120 + ((doc_id*7 + i) % 41) * 11) AS VARCHAR)
-             AS url
-  FROM documents, (SELECT unnest(range(8)) AS i)
-), hashed AS (
-  SELECT host, ('0x' || substr(md5(url), 1, 15))::BIGINT AS h FROM pairs
-), regs AS (
-  SELECT host, h >> {_HLL_Q} AS reg,
-         MAX(CASE WHEN (h & ((1::BIGINT << {_HLL_Q}) - 1)) = 0
-                  THEN {_HLL_RHO_MAX}
-                  ELSE {_HLL_RHO_MAX} - length(printf('%b',
-                       h & ((1::BIGINT << {_HLL_Q}) - 1))) END) AS rho
-  FROM hashed GROUP BY host, reg
-), est AS (
-  SELECT host, count(*)::BIGINT AS n_regs,
-         ({_HLL_M} - count(*))::BIGINT AS v_zero,
-         (SUM(CASE WHEN rho <= {_HLL_RHO_CAP}
-                   THEN (1::BIGINT << ({_HLL_RHO_CAP} - rho))
-                   ELSE 0 END)
-          + ({_HLL_M} - count(*)) * (1::BIGINT << {_HLL_RHO_CAP})
-         )::BIGINT AS sum_scaled
-  FROM regs GROUP BY host
-)
-SELECT host, n_regs, v_zero, sum_scaled,
-       CASE WHEN sum_scaled >= {_HLL_DEN_MIN}
-            THEN (({_HLL_EST_NUM}::HUGEINT // sum_scaled::HUGEINT)
-                  // 1000000)::BIGINT
-            ELSE NULL END AS est_distinct
-FROM est ORDER BY host
-""",
-        "media_features_mismatch": (
-            "SELECT CAST(NULL AS BIGINT) AS media_id,"
-            " CAST(NULL AS DOUBLE) AS mean_value WHERE 1 = 0"
-        ),
-        "media_kind_stats": (
-            "SELECT 'image' AS kind, 40::BIGINT AS n_items"
-            " UNION ALL SELECT 'audio', 40::BIGINT"
-            " UNION ALL SELECT 'video', 40::BIGINT"
-        ),
-        # V1: the page tree the writer must produce — one page per image
-        "images_to_pdf": (
-            "SELECT doc_id, (1 + doc_id % 3)::INT AS n_images,"
-            " (1 + doc_id % 3)::INT AS page_count, true AS parse_ok"
-            " FROM documents ORDER BY doc_id"
-        ),
-        # S2 chain: fetched-URL count == page count for every document
-        "fetch_images_to_pdf": (
-            "SELECT doc_id, (1 + doc_id % 3)::INT AS n_urls,"
-            " (1 + doc_id % 3)::INT AS page_count, true AS parse_ok"
-            " FROM documents ORDER BY doc_id"
-        ),
-        # V5/V6: closed-form resample lengths + channel policy + duration
-        "audio_transcode": """
-SELECT doc_id AS media_id,
-       22050::INT AS mp3_rate,
-       ((n_in - 1) * 22050 // rate_in + 1)::BIGINT AS mp3_n,
-       (1 + doc_id % 2)::INT AS mp3_ch,
-       8000::INT AS voip_rate,
-       ((n_in - 1) * 8000 // rate_in + 1)::BIGINT AS voip_n,
-       1::INT AS voip_ch,
-       (((n_in - 1) * 22050 // rate_in + 1) / 22050.0)::DOUBLE
-           AS duration_sec,
-       true AS tag_ok
-FROM (
-  SELECT doc_id,
-         11025 * (1 + doc_id % 4) AS rate_in,
-         11025 * (1 + doc_id % 4) // 2 + (doc_id % 7) * 13 AS n_in
-  FROM documents
-) ORDER BY media_id
-""",
-        # V2: pdftoppm -scale-to geometry + decodable non-blank raster
-        "pdf_thumbnails": (
-            "SELECT doc_id, 270::INT AS thumb_w, 350::INT AS thumb_h,"
-            " true AS png_ok, true AS has_ink"
-            " FROM documents ORDER BY doc_id"
-        ),
-        # V4: the overlay round-trip properties hold for every document
-        "embed_text_overlay": (
-            "SELECT doc_id, 1::INT AS page_count, true AS has_words,"
-            " true AS tokens_match, true AS overlay_invisible"
-            " FROM documents ORDER BY doc_id"
-        ),
-        # V3: the strip round-trip properties hold for every document
-        "pdf_strip_roundtrip": (
-            "SELECT doc_id, true AS text_equal, true AS strip_stable,"
-            " true AS shrunk_or_equal FROM documents ORDER BY doc_id"
-        ),
-        "events_daily": """
-SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-       count(*)::BIGINT AS n_events,
-       round(sum(value::DECIMAL(18,2)), 2)::DOUBLE AS total_value
-FROM events GROUP BY 1, 2
-""",
-        "events_user_topk": """
-SELECT event_type, user_id::BIGINT AS user_id, total_value, rnk FROM (
-  SELECT event_type, user_id, sum(value::DECIMAL(18,2))::DOUBLE AS total_value,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY sum(value::DECIMAL(18,2)) DESC,
-                                     user_id ASC)::BIGINT AS rnk
-  FROM events GROUP BY event_type, user_id
-) WHERE rnk <= 5
-""",
-        "events_sessionize": """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, ts, value,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM flagged
-)
-SELECT user_id::BIGINT AS user_id, session_no::BIGINT AS session_no,
-       count(*)::BIGINT AS n_events,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       round(sum(value::DECIMAL(18,2)), 2)::DOUBLE AS total_value
-FROM sessions GROUP BY user_id, session_no
-""",
-        "lineitem_pricing": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
-       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base_price,
-       sum(l_extendedprice::DECIMAL(18,2)
-           * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DOUBLE
-         AS sum_disc_price,
-       count(*)::BIGINT AS count_order
-FROM lineitem WHERE l_shipdate <= '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-        "order_revenue_topk": """
-SELECT o_orderkey::BIGINT AS o_orderkey, revenue::DOUBLE AS revenue FROM (
-  SELECT o_orderkey,
-         sum(l_extendedprice::DECIMAL(18,2)
-             * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2))) AS revenue
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY o_orderkey
-) ORDER BY revenue DESC, o_orderkey ASC LIMIT 10
-""",
-    }
+    return {name: q.oracle for name, q in registered(ORDER).items()}

@@ -63,6 +63,61 @@ HEADLINE_QUERIES = (
 )
 
 
+# timed once, not min-of-3: the map-only codec stages (converters,
+# perceptual image/audio/video dedup), 48-bit SimHash, DSIR's two
+# corpus-wide gram passes, the sentence-graph summary and the uncapped
+# postings accounting each run tens of seconds at sf0.1, where the JIT
+# noise min-of-3 removes is a rounding error; one run bounds the bench wall
+SINGLE_REP = frozenset({
+    "audio_dup_clusters",
+    "audio_transcode",
+    "dedup_simhash_near_w48",
+    "dsir_select",
+    "embed_text_overlay",
+    "fetch_images_to_pdf",
+    "image_dup_clusters",
+    "images_to_pdf",
+    "pdf_strip_roundtrip",
+    "pdf_thumbnails",
+    "postings_compression",
+    "textrank_summary",
+    "video_dup_clusters",
+})
+
+# never timed: the extraction and fixture gates ("extract" times the
+# extractor) and the queries the bench has never reported
+UNTIMED = frozenset({
+    "boilerplate_blocks",
+    "dedup_components",
+    "dedup_simhash_near",
+    "dedup_stats",
+    "doc_metrics_by_lang",
+    "events_sessionize",
+    "extract_format_metrics",
+    "extract_mismatches",
+    "extract_ocr_stats",
+    "extract_recap_mismatch",
+    "ivf_ann_topk",
+    "markdown_goldens",
+    "media_features_mismatch",
+    "media_kind_stats",
+    "pdf_metadata",
+    "reference_fixtures",
+    "repetition_stats",
+    "token_stats",
+    "winnow_fingerprints",
+})
+
+
+def timed_queries(registry: list[str]) -> list[tuple[str, int]]:
+    """(name, reps) for every timed query: the headline set first, then
+    the rest of the registry in registry order."""
+    rest = [n for n in registry if n not in HEADLINE_QUERIES and n not in UNTIMED]
+    return [(n, 3) for n in HEADLINE_QUERIES] + [
+        (n, 1 if n in SINGLE_REP else 3) for n in rest
+    ]
+
+
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.1
@@ -202,178 +257,8 @@ def main() -> None:
         real_docs_per_sec = None
 
     qs = entry.queries()
-    for name in HEADLINE_QUERIES:
-        timed(name, lambda n=name: qs[n](spark, sf_dir).collect())
-    for name in (
-        # round-5 additions: reported per-query, EXCLUDED from the total
-        # so "value" stays comparable with earlier rounds; single timed
-        # rep — each is a 25-35 s map-only codec stage where the JIT
-        # noise above is a rounding error
-        "dedup_simhash_near_w48",
-        "images_to_pdf",
-        "pdf_strip_roundtrip",
-        "embed_text_overlay",
-        "pdf_thumbnails",
-        "audio_transcode",
-        "fetch_images_to_pdf",
-        # round-5 sixth wave: DSIR (two corpus-wide gram passes, ~25 s
-        # at sf0.1 — single rep like the codec stages)
-        "dsir_select",
-    ):
-        timed(name, lambda n=name: qs[n](spark, sf_dir).collect(), reps=1)
-    for name in (
-        # round-5 second wave (also excluded from the comparable total,
-        # normal min-of-3 timing — these are sub-second map/shuffle ops)
-        "dedup_exact_substring",
-        "paragraph_dedup",
-        "url_canonicalize",
-        "domain_topk",
-        "quality_classifier",
-        "bloom_dedup",
-        "stratified_sample",
-        "pack_sequences",
-        "snapshot_diff",
-        "corpus_health",
-        # third wave: CCNet LM gate, temperature mixing
-        "ccnet_perplexity",
-        "mix_weights",
-        "mix_resample",
-        "tfidf_top_terms",
-        "ngram_novelty",
-        "token_deciles",
-        # fourth wave: CMS heavy hitters, SemDeDup, BPE trainer
-        "heavy_hitters",
-        "semdedup",
-        "bpe_merges",
-        "bpe_token_counts",
-        "link_pagerank",
-        "nb_confusion",
-        # fifth wave: jusText main-content gate
-        "boilerplate_corpus",
-        "boilerplate_corpus_lang",
-        "char_entropy",
-        "kmeans_clusters",
-        "link_host_rank",
-        # seventh wave: zero-shuffle intra-doc paragraph dedup
-        "para_dedup_intra",
-        # eighth wave: RFC 9309 crawl-politeness gate + UT1 blocklist
-        "robots_gate",
-        "domain_blocklist",
-        "url_admission",
-        # ninth wave: head-metadata + link-text + web-table stages
-        "page_metadata",
-        "anchor_text_topk",
-        "table_cells",
-        "sitemap_entries",
-        "feed_entries",
-        "frontier_admission",
-        "date_normalize",
-        "code_blocks",
-        "image_caption_table",
-        "redirect_resolve",
-        "sentence_stats",
-        "wet_export",
-        "fetch_schedule",
-        # eleventh wave: CDX/WAT artifacts, degree stats, soft-404 gate
-        "cdx_index",
-        "wat_export",
-        "host_degree_stats",
-        "soft404_gate",
-        # twelfth wave: span-lineage main-content pass + C4 recipe +
-        # robots-meta admission gate
-        "content_spans",
-        "c4_clean",
-        "c4_span_dedup",
-        "robots_meta",
-        # thirteenth wave: integer-exact HyperLogLog crawl-coverage +
-        # schema.org JSON-LD extraction
-        "hll_host_distinct",
-        "structured_data",
-        "unicode_clean",
-        "hreflang_pairs",
-        "host_template_lines",
-        "canonical_clusters",
-        "pagination_chains",
-        # fourteenth wave: bitext alignment, URL templates, heading
-        # outlines
-        "bitext_align",
-        "url_templates",
-        "heading_outline",
-        # fifteenth wave: STRAND URL pairing, host quality gate,
-        # readability
-        "bitext_url_pairs",
-        "host_quality",
-        "readability",
-        # sixteenth wave: PMI collocations, boundary-aware chunking
-        "collocations",
-        "chunk_spans",
-        # seventeenth wave: inverted postings, quote spans
-        "inverted_postings",
-        "quote_spans",
-        # eighteenth wave: mirror-site detection, KWIC concordance
-        "mirror_pairs",
-        "kwic",
-        # nineteenth wave: legal citations, vocabulary growth
-        "citations",
-        "vocab_growth",
-        # twentieth wave: WARC revisit records
-        "revisit_records",
-        # twenty-first wave: RAKE keywords, character coverage
-        "rake_keywords",
-        "char_coverage",
-        # twenty-second wave: crawler traps, IDN homographs
-        "crawler_traps",
-        "idn_homographs",
-        # twenty-third wave: BM25 ranked retrieval
-        "bm25_topk",
-        # twenty-fourth wave: HITS hubs/authorities
-        "hits_scores",
-        # twenty-fifth wave: TrustRank
-        "trustrank",
-        # twenty-sixth wave: Porter stem conflation
-        "stem_conflation",
-        # twenty-seventh wave: host-disjoint split audit
-        "host_split",
-        # twenty-eighth wave: rank-frequency statistics
-        "zipf_fit",
-        "freq_of_freqs",
-        # twenty-ninth wave: content-defined chunking dedup
-        "cdc_dedup",
-        # thirtieth wave: DOM layout template clustering
-        "layout_clusters",
-        # thirty-first wave: minhash->levenshtein verify rung
-        "verified_neardup",
-        # thirty-second wave: temporal leakage audit
-        "temporal_leakage",
-        # thirty-third wave: passage extraction over BM25
-        "best_passages",
-        # thirty-fourth wave: directed Broder containment + TextRank
-        "containment_pairs",
-        "textrank_keywords",
-        # thirty-fifth wave: CCNet paragraph-lang profile + PRF expansion
-        "para_lang",
-        "prf_expansion",
-        # thirty-seventh wave: multi-source BFS crawl depth
-        "crawl_depth",
-        # thirty-eighth wave: MinHash-estimated containment
-        "containment_est",
-    ):
-        timed(name, lambda n=name: qs[n](spark, sf_dir).collect())
-    for name in (
-        # eighth wave, single rep: perceptual image/audio dedup — codec
-        # encode+decode+hash map stages at sf0.1, like the codec slots
-        "image_dup_clusters",
-        "audio_dup_clusters",
-        "video_dup_clusters",
-        # thirty-sixth wave, single rep: the sentence-graph summary and
-        # the uncapped postings accounting both run tens of seconds on
-        # the 31-term synthetic vocabulary (window parallelism == vocab
-        # size here, not at web scale) — one honest run each keeps the
-        # bench wall bounded
-        "textrank_summary",
-        "postings_compression",
-    ):
-        timed(name, lambda n=name: qs[n](spark, sf_dir).collect(), reps=1)
+    for name, reps in timed_queries(list(qs)):
+        timed(name, lambda n=name: qs[n](spark, sf_dir).collect(), reps=reps)
 
     # extract_real_docs only runs where the reference checkout exists; it
     # is reported per-query and as real_docs_per_sec, never in the total

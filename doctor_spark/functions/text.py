@@ -4,7 +4,7 @@ Language-ID (stopword-hit heuristic), quality scoring, token counting, and
 document fingerprinting — each a pure Column expression over built-in
 functions so Catalyst codegens the whole thing (no Python in the plan).
 Every function has an exact ANSI-SQL mirror used as the DuckDB oracle in
-``__spark_entry__.py``; keep the two in sync.
+the ``doctor_spark.queries`` family modules; keep the two in sync.
 """
 
 from __future__ import annotations
@@ -391,7 +391,7 @@ def sentence_stats_udf():
 # --------------------------------------------------------------------------
 # Gopher quality rules (Rae et al. 2021, §A1.1) — the standard web-text
 # filter set for LLM training corpora.  Pure Column expressions; the exact
-# SQL mirror lives in __spark_entry__._gopher_sql.
+# SQL mirror lives in doctor_spark.queries.quality._gopher_sql.
 # --------------------------------------------------------------------------
 
 

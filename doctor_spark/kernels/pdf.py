@@ -2966,8 +2966,9 @@ OcrBackend = Callable[[Page, bool], "list[dict] | None"]
 
 def synthetic_ocr_backend(page: Page, strip_margin: bool) -> list[dict] | None:
     """Test/bench backend: reads the word table embedded by pdfwriter inside
-    the page's image XObject (the sandbox has no tesseract; the real backend
-    below is pluggable, mirroring the reference's subprocess boundary).
+    the page's image XObject.  No tesseract backend ships: any
+    ``OcrBackend`` plugs in here, mirroring the reference's subprocess
+    boundary (tasks.py:271-284, text_extraction.py:148-213).
 
     A page without an embedded table is outside this backend's domain
     (a real scanned page) — raise NotImplementedError so callers treat the
@@ -2979,16 +2980,6 @@ def synthetic_ocr_backend(page: Page, strip_margin: bool) -> list[dict] | None:
             return im.synth_ocr
     raise NotImplementedError(
         "synthetic OCR backend: page carries no embedded word table"
-    )
-
-
-def tesseract_ocr_backend(page: Page, strip_margin: bool) -> list[dict] | None:
-    """Production backend stub: shells out to tesseract like the reference
-    (tasks.py:271-284, text_extraction.py:148-213). Not available in this
-    sandbox."""
-    raise NotImplementedError(
-        "tesseract/ghostscript are not installed in this environment; "
-        "use synthetic_ocr_backend for tests and benchmarks"
     )
 
 

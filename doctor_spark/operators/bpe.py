@@ -14,7 +14,7 @@ iterations is bounded with periodic localCheckpoints (the
 connected-components discipline).
 
 Exact semantics, engine-portable (this is what the unrolled SQL oracle
-in __spark_entry__ replays level by level):
+in doctor_spark/queries/trainers.py replays level by level):
 
 - words: trim+lower, Java-\\s+ split, empty tokens dropped; words
   containing U+001F excluded (it is the symbol separator in the

@@ -15,7 +15,7 @@ b")``) and DuckDB (``//``) implement identically for non-negative
 operands.  Floor-division mass leakage and vanishing dangling-node
 mass are the standard simplifications (documented, deterministic);
 what matters for the contract is that every engine computes the SAME
-int64, so the unrolled-CTE oracle in __spark_entry__ is hash-exact
+int64, so the unrolled-CTE oracle in doctor_spark/queries/linkgraph.py is hash-exact
 against an ITERATIVE distributed implementation.
 
 Scale shape: one exchange builds the degree-annotated edge table,
@@ -117,8 +117,8 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
     tail while the build side stays whole — settled rows still serve as
     join targets so a late walker entering a settled node jumps
     straight to its terminal with the summed hop count.  The equivalent
-    per-URL recursive CTE is the DuckDB oracle (``redirect_resolve`` in
-    __spark_entry__).
+    per-URL recursive CTE is the DuckDB oracle (in
+    ``doctor_spark.queries.linkgraph``).
     """
     e = edges.groupBy("src").agg(F.min("dst").alias("dst"))
     e = e.repartition(F.col("src")).localCheckpoint()

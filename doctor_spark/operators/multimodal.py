@@ -297,8 +297,8 @@ def images_to_pdf_row(did, blobs: list[bytes]) -> tuple:
     n_images, page_count, parse_ok)``, where ``parse_ok`` asserts the
     page tree round trips (one page per image, one image per page).
     The row core of the fused generate+convert query in
-    ``__spark_entry__``, so the generated PNG bytes never cross the
-    JVM↔Python boundary (guide §4.1).  Reference: doctor/tasks.py:55-72
+    ``doctor_spark.queries.media``, so the generated PNG bytes never
+    cross the JVM↔Python boundary (guide §4.1).  Reference: doctor/tasks.py:55-72
     (pdf_bytes_from_images) behind /convert/images/pdf/."""
     from ..kernels.pdf import parse_pdf
     from ..kernels.pdfwrite import PdfWriteError, pdf_from_png_bytes
@@ -340,7 +340,7 @@ def audio_transcode_row(mid, blob: bytes) -> tuple:
     kept) and the opus-voip analog (8000 Hz mono), each re-parsed, plus
     an ID3v2.4 retag round trip.  Sample counts follow the resampler's
     closed form ``(n-1)·out//in + 1``.  The row core of the fused
-    generate+transcode query in ``__spark_entry__``."""
+    generate+transcode query in ``doctor_spark.queries.media``."""
     from ..kernels.audio import (
         WavError,
         audio_duration_sec,
@@ -386,7 +386,7 @@ def pdf_thumbnail_row(did, blob: bytes) -> tuple:
     -singlefile -f 1 -scale-to 350 -png``, utils.py:164-189).
     ``png_ok``: the PNG round-trips through the independent decoder;
     ``has_ink``: non-white pixels rendered.  The row core of the fused
-    generate+rasterize query in ``__spark_entry__``."""
+    generate+rasterize query in ``doctor_spark.queries.media``."""
     from ..kernels.png import decode_png
     from ..kernels.raster import RasterError, pdf_thumbnail
 
@@ -415,7 +415,7 @@ def embed_text_overlay_row(did, b: bytes) -> tuple:
     parser that the re-extracted tokens equal the word table and that
     the overlay carries both invisibility mechanisms (``3 Tr`` +
     ``/ca 0``).  The row core of the fused generate+overlay query in
-    ``__spark_entry__``."""
+    ``doctor_spark.queries.media``."""
     import re as _re
 
     from ..kernels.pdf import (
@@ -460,7 +460,7 @@ def pdf_strip_roundtrip_row(did, b: bytes) -> tuple:
     the V3 writer (``kernels.pdfwrite.strip_pdf_metadata`` — reference
     tasks.py:39-53): layout text unchanged, double-strip deterministic,
     output not larger than a rewrite should be.  The row core of the
-    fused generate+strip query in ``__spark_entry__``."""
+    fused generate+strip query in ``doctor_spark.queries.media``."""
     from ..kernels.pdf import extract_pdf_layout_text
     from ..kernels.pdfwrite import PdfWriteError, strip_pdf_metadata
 

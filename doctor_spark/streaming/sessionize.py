@@ -2,7 +2,7 @@
 ``applyInPandasWithState``.
 
 The batch form of this operator (lag/cumsum window functions) lives in
-``__spark_entry__.q_events_sessionize`` with an exact SQL oracle; this is
+``doctor_spark.queries.relational`` with an exact SQL oracle; this is
 the unbounded-stream form: per-user state carries (current session id,
 last event time, running aggregates) across micro-batches, a >30-min gap
 closes the session, and closed sessions are emitted exactly once.

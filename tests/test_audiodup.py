@@ -51,7 +51,7 @@ class TestAfpKernel:
 
 class TestEntrySynthesisGuarantees:
     def test_noise_invariance_across_docs(self):
-        from __spark_entry__ import _AUD_PATTERNS, _synth_pattern_wav
+        from doctor_spark.queries.media import _AUD_PATTERNS, _synth_pattern_wav
         from doctor_spark.kernels.audio import parse_wav
 
         for p in (0, 11, 39):
@@ -62,7 +62,7 @@ class TestEntrySynthesisGuarantees:
             assert len(hashes) == 1, p
 
     def test_all_40_patterns_distinct(self):
-        from __spark_entry__ import _AUD_PATTERNS, _synth_pattern_wav
+        from doctor_spark.queries.media import _AUD_PATTERNS, _synth_pattern_wav
         from doctor_spark.kernels.audio import parse_wav
 
         hashes = [
@@ -74,7 +74,7 @@ class TestEntrySynthesisGuarantees:
 
 class TestOperators:
     def test_clusters_and_undecodable_excluded(self, spark):
-        from __spark_entry__ import _synth_pattern_wav
+        from doctor_spark.queries.media import _synth_pattern_wav
         from doctor_spark.operators.audiodup import audio_dup_clusters
 
         rows = [(i, _synth_pattern_wav(i % 3)) for i in range(9)]
@@ -110,7 +110,7 @@ class TestOperators:
         assert pairs == {(1, 2): 0, (1, 3): 1, (2, 3): 1}
 
     def test_cluster_plan_one_exchange(self, spark):
-        from __spark_entry__ import _synth_pattern_wav
+        from doctor_spark.queries.media import _synth_pattern_wav
         from doctor_spark.operators.audiodup import audio_dup_clusters
 
         df = spark.createDataFrame(

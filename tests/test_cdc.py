@@ -81,13 +81,13 @@ class TestCdcOperator:
     def test_oracle_literals_match_kernel(self):
         """The driver oracle's VALUES chunk table must be exactly what
         the kernel computes on the synthesis arms."""
-        import __spark_entry__ as e
+        from doctor_spark.queries.dedup import _CDC_ARMS, _CDC_CHUNKS
         from doctor_spark.kernels.cdc import chunk_payload
 
-        assert len(e._CDC_ARMS) == 8
-        for i, arm in enumerate(e._CDC_ARMS):
+        assert len(_CDC_ARMS) == 8
+        for i, arm in enumerate(_CDC_ARMS):
             got = chunk_payload(
                 arm.encode(), min_size=24, max_size=192, mask=0x3F
             )
-            want = [c for a, *c in e._CDC_CHUNKS if a == i]
+            want = [c for a, *c in _CDC_CHUNKS if a == i]
             assert [list(c) for c in got] == want, i

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry  # noqa: E402
+from doctor_spark.queries.extraction import _REF_ASSETS  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
@@ -93,8 +94,8 @@ def test_order_keys_found_for_every_ordered_oracle():
 
 @pytest.mark.parametrize("name", sorted(entry.oracle_sql().keys()))
 def test_query_matches_oracle(spark, name):
-    if name == "reference_fixtures" and not Path(entry._REF_ASSETS).is_dir():
-        pytest.skip(f"reference assets not present ({entry._REF_ASSETS})")
+    if name == "reference_fixtures" and not Path(_REF_ASSETS).is_dir():
+        pytest.skip(f"reference assets not present ({_REF_ASSETS})")
     q = entry.queries()[name]
     sql = entry.oracle_sql()[name]
     spark_raw, oracle_raw = q(spark, SF_DIR).toPandas(), _oracle_df(sql)
@@ -148,10 +149,10 @@ def test_entry_smoke(spark):
 
 def test_lsh_ann_recall(spark):
     """LSH ANN must find a decent fraction of the true top-3 neighbors."""
-    brute = entry.q_ann_cosine_topk(spark, SF_DIR).select(
+    brute = entry.queries()["ann_cosine_topk"](spark, SF_DIR).select(
         "query_id", "neighbor_id"
     ).collect()
-    approx = entry.q_lsh_ann_topk(spark, SF_DIR).select(
+    approx = entry.queries()["lsh_ann_topk"](spark, SF_DIR).select(
         "query_id", "neighbor_id"
     ).collect()
     truth = {(r.query_id, r.neighbor_id) for r in brute}
@@ -162,10 +163,10 @@ def test_lsh_ann_recall(spark):
 
 def test_ivf_ann_recall(spark):
     """IVF with nprobe=6 of 16 lists must recover most true neighbors."""
-    brute = entry.q_ann_cosine_topk(spark, SF_DIR).select(
+    brute = entry.queries()["ann_cosine_topk"](spark, SF_DIR).select(
         "query_id", "neighbor_id"
     ).collect()
-    approx = entry.q_ivf_ann_topk(spark, SF_DIR).select(
+    approx = entry.queries()["ivf_ann_topk"](spark, SF_DIR).select(
         "query_id", "neighbor_id"
     ).collect()
     truth = {(r.query_id, r.neighbor_id) for r in brute}

@@ -61,7 +61,7 @@ class TestEntrySynthesisGuarantees:
     pattern hashes are pairwise distinct.  Pin both."""
 
     def test_noise_invariance_across_docs(self):
-        from __spark_entry__ import _IMG_PATTERNS, _synth_pattern_png
+        from doctor_spark.queries.media import _IMG_PATTERNS, _synth_pattern_png
         from doctor_spark.kernels.png import decode_png
 
         for p in (0, 7, 49):
@@ -72,7 +72,7 @@ class TestEntrySynthesisGuarantees:
             assert len(hashes) == 1, p
 
     def test_all_50_patterns_distinct(self):
-        from __spark_entry__ import _IMG_PATTERNS, _synth_pattern_png
+        from doctor_spark.queries.media import _IMG_PATTERNS, _synth_pattern_png
         from doctor_spark.kernels.png import decode_png
 
         hashes = [
@@ -84,7 +84,7 @@ class TestEntrySynthesisGuarantees:
 
 class TestOperators:
     def test_clusters_and_undecodable_excluded(self, spark):
-        from __spark_entry__ import _synth_pattern_png
+        from doctor_spark.queries.media import _synth_pattern_png
         from doctor_spark.operators.imagedup import image_dup_clusters
 
         rows = [(i, _synth_pattern_png(i % 3)) for i in range(12)]
@@ -130,7 +130,7 @@ class TestOperators:
     def test_cluster_plan_one_exchange(self, spark):
         """decode+hash is one Arrow map stage; clusters cost ONE keyed
         exchange with map-side partial aggregation below it."""
-        from __spark_entry__ import _synth_pattern_png
+        from doctor_spark.queries.media import _synth_pattern_png
         from doctor_spark.operators.imagedup import image_dup_clusters
 
         df = spark.createDataFrame(

@@ -77,12 +77,12 @@ class TestLayoutClusters:
         assert len(out) == 2
 
     def test_oracle_literals_match_kernel(self):
-        import __spark_entry__ as e
+        from doctor_spark.queries.web import _LAYOUT_ARMS, _LAYOUT_FPS
         from doctor_spark.kernels.layout import layout_fingerprint
 
-        for i, arm in enumerate(e._LAYOUT_ARMS):
-            assert layout_fingerprint(arm) == e._LAYOUT_FPS[i], i
+        for i, arm in enumerate(_LAYOUT_ARMS):
+            assert layout_fingerprint(arm) == _LAYOUT_FPS[i], i
         # arms 0 and 1 are the same template with different copy —
         # that is the point of the operator
-        assert e._LAYOUT_FPS[0] == e._LAYOUT_FPS[1]
-        assert len(set(e._LAYOUT_FPS[1:])) == len(e._LAYOUT_FPS) - 1
+        assert _LAYOUT_FPS[0] == _LAYOUT_FPS[1]
+        assert len(set(_LAYOUT_FPS[1:])) == len(_LAYOUT_FPS) - 1

@@ -38,12 +38,12 @@ class TestStemConflation:
         """The driver oracle's CASE map must be exactly what the kernel
         computes — this is what makes the pinned-literal oracle honest
         (the RAKE/IDN discipline)."""
-        import __spark_entry__ as e
+        from doctor_spark.queries.text import _STEM_ARMS, _STEM_MAP
         from doctor_spark.kernels.porter import porter_stem
 
-        assert e._STEM_MAP  # non-empty
-        for word, stem in e._STEM_MAP.items():
+        assert _STEM_MAP  # non-empty
+        for word, stem in _STEM_MAP.items():
             assert porter_stem(word) == stem, (word, stem)
         # and the map covers every token the synthesis arms emit
-        toks = {w for arm in e._STEM_ARMS for w in arm.split()}
-        assert toks == set(e._STEM_MAP)
+        toks = {w for arm in _STEM_ARMS for w in arm.split()}
+        assert toks == set(_STEM_MAP)

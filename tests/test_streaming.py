@@ -70,7 +70,7 @@ def test_stateful_sessionize(spark, tmp_path):
     # final (still-open) session in a single availableNow batch
     import __spark_entry__ as e
 
-    batch = e.q_events_sessionize(spark, "/root/testdata/sf0.001").collect()
+    batch = e.queries()["events_sessionize"](spark, "/root/testdata/sf0.001").collect()
     batch_sessions = {(r.user_id, r.session_no): r.n_events for r in batch}
     open_sessions = {}
     for r in batch:
@@ -116,7 +116,7 @@ def test_drain_open_sessions(spark, tmp_path):
 
     import __spark_entry__ as e
 
-    batch = e.q_events_sessionize(spark, "/root/testdata/sf0.001").collect()
+    batch = e.queries()["events_sessionize"](spark, "/root/testdata/sf0.001").collect()
     batch_map = {
         (r.user_id, r.session_no): (r.n_events, float(r.total_value))
         for r in batch

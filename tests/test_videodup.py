@@ -39,7 +39,7 @@ class TestVhashKernel:
 
 class TestEntrySynthesisGuarantees:
     def test_noise_invariance_across_docs(self):
-        from __spark_entry__ import _VID_PATTERNS, _synth_pattern_video
+        from doctor_spark.queries.media import _VID_PATTERNS, _synth_pattern_video
         from doctor_spark.operators.multimodal import decode_video
 
         for p in (0, 13, 29):
@@ -50,7 +50,7 @@ class TestEntrySynthesisGuarantees:
             assert len(hashes) == 1, p
 
     def test_all_30_patterns_distinct(self):
-        from __spark_entry__ import _VID_PATTERNS, _synth_pattern_video
+        from doctor_spark.queries.media import _VID_PATTERNS, _synth_pattern_video
         from doctor_spark.operators.multimodal import decode_video
 
         hashes = [
@@ -62,7 +62,7 @@ class TestEntrySynthesisGuarantees:
 
 class TestOperators:
     def test_clusters_and_undecodable_excluded(self, spark):
-        from __spark_entry__ import _synth_pattern_video
+        from doctor_spark.queries.media import _synth_pattern_video
         from doctor_spark.operators.videodup import video_dup_clusters
 
         rows = [(i, _synth_pattern_video(i % 2)) for i in range(8)]
@@ -98,7 +98,7 @@ class TestOperators:
         assert pairs == {(1, 2): 0, (1, 3): 1, (2, 3): 1}
 
     def test_cluster_plan_one_exchange(self, spark):
-        from __spark_entry__ import _synth_pattern_video
+        from doctor_spark.queries.media import _synth_pattern_video
         from doctor_spark.operators.videodup import video_dup_clusters
 
         df = spark.createDataFrame(
