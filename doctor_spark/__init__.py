@@ -9,8 +9,10 @@ re-expressed Spark-first:
   own pure unit tests (doctor/tests.py:577-834);
 - Arrow-batched operators (``doctor_spark.operators``) that run those kernels
   over an Iceberg/parquet table of Common-Crawl-style pages ``(url, warc_ts,
-  html, text, lang)``: the extraction ``mapInPandas``, and one row boundary
-  (``doctor_spark.arrow``: ``row_udf``/``row_map``) for the row-wise kernels;
+  html, text, lang)``: the extraction ``mapInPandas``, one row boundary
+  (``doctor_spark.arrow``: ``row_udf``/``row_map``) for the row-wise kernels,
+  and one micro-unit quantizer (``doctor_spark.micro``) for every
+  oracle-exact log/pow statistic;
 - a batch pipeline (``doctor_spark.pipeline``) with classify-then-parse
   staging, a url-hash repartition that spreads extraction cost, a
   day-grouped write (at most T + D output files for T tasks and D crawl

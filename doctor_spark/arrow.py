@@ -14,9 +14,12 @@ straight from what it returns, typed by the DDL.  No pandas is involved:
   ``fn(*row)`` returns a list of output row tuples, zero or more per
   input row, and each input batch becomes one output batch.
 
-The kernels that do numpy math over a whole batch, or aggregate a batch,
-stay on ``pandas_udf``/``mapInPandas``; ``tests/test_arrow_boundary.py``
-lists each of those sites with its reason.
+The kernels that quantize a numpy result over a whole batch go through
+:func:`..micro.micro_udf`, also a scalar ``arrow_udf``.  The extraction
+operator and the kernels that aggregate a batch, emit timestamps, run a
+thread pool, or do numpy math over ``array<double>`` rows stay on
+``pandas_udf``/``mapInPandas``; ``tests/test_arrow_boundary.py`` lists
+each of those sites with its reason.
 """
 
 import pyarrow as pa

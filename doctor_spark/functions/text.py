@@ -9,11 +9,13 @@ the ``doctor_spark.queries`` family modules; keep the two in sync.
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column, functions as F
 
 from ..arrow import row_udf
+from ..micro import micro
 
 # stopword inventories for the language-ID heuristic: top function words
 # per language (public frequency-list knowledge).  Dict order is the
@@ -347,12 +349,6 @@ ENTROPY_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
 LOW_ENTROPY_MICRO = 300_000  # < 0.3 log10-units/char (~1 bit) = gibberish
 
 
-def _log10_micro(x: int) -> int:
-    import math
-
-    return math.floor(math.log10(x) * 1_000_000 + 0.5)
-
-
 def char_entropy_micro_row(s: str | None) -> int | None:
     """Shannon entropy (log10 units × 1e6, floor-div) of the Java-\\s
     whitespace-normalized text's code points; empty/whitespace-only → 0,
@@ -365,8 +361,8 @@ def char_entropy_micro_row(s: str | None) -> int | None:
     n = len(norm)
     if n == 0:
         return 0
-    tot = sum(c * _log10_micro(c) for c in Counter(norm).values())
-    return (n * _log10_micro(n) - tot) // n
+    tot = sum(c * micro(math.log10(c)) for c in Counter(norm).values())
+    return (n * micro(math.log10(n)) - tot) // n
 
 
 def char_entropy_udf():

@@ -46,8 +46,6 @@ OCR_FAIL_MSG = (
 UNABLE_MSG = "Unable to extract document content."
 UNKNOWN_EXT_MSG = "Unable to extract content due to unknown extension"
 
-EXTRACTABLE = frozenset({"pdf", "doc", "docx", "html", "txt", "wpd"})
-
 # 300 dpi rasterization scale over 72 dpi user space (reference
 # text_extraction.py:157: page.to_image(resolution=300))
 RASTER_SCALE = 300.0 / 72.0

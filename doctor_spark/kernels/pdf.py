@@ -205,7 +205,6 @@ class StreamObj:
 
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 
 class _Lexer:

@@ -50,6 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_map, row_udf
+from ..functions.text import tokens
 
 SEP = "\x1f"
 END = "</w>"
@@ -58,7 +59,7 @@ END = "</w>"
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt): the single corpus-scale exchange.  Words containing
     the U+001F separator are excluded by contract."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = tokens(F.col(text_col))
     return (
         df.select(F.explode(toks).alias("word"))
         .where((F.col("word") != "") & ~F.col("word").contains(SEP))

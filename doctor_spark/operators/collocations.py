@@ -32,19 +32,15 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_udf
-
-MICRO = 1_000_000
+from ..functions.text import tokens
+from ..micro import micro
 
 
 def _micro_log10_udf():
     def ml(v):
-        return None if v is None else math.floor(math.log10(v) * MICRO + 0.5)
+        return None if v is None else micro(math.log10(v))
 
     return row_udf(ml, "long")
-
-
-def _toks(col):
-    return F.split(F.trim(F.lower(col)), r"\s+")
 
 
 def collocations(
@@ -56,7 +52,7 @@ def collocations(
     occurring at least ``min_pair`` times.  Blank documents contribute
     nothing; a one-token document contributes to unigrams only."""
     base = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        _toks(F.col(text_col)).alias("tk")
+        tokens(F.col(text_col)).alias("tk")
     )
     n = F.size("tk")
     uni = base.select(F.explode("tk").alias("w")) \

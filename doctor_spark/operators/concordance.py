@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens
+
 
 def kwic(
     docs: DataFrame,
@@ -38,7 +40,7 @@ def kwic(
     )
     t = base.select(
         F.col(doc_col).alias("doc_id"),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("tk"),
+        tokens(F.col(text_col)).alias("tk"),
     )
     hits = t.select(
         "doc_id",

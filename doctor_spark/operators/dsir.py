@@ -14,10 +14,11 @@ selection is what a training pipeline does downstream), so this module
 is part of the engine's LLM-data surface, not reference parity.
 
 Exactness discipline (the lm.py/ccnet contract): every log-probability
-is quantized ONCE to int64 micro-log10 — ``floor(log10(x)·1e6 + 0.5)``,
-libm ``log10`` on both engines (CPython ``math.log10`` driver-side /
-numpy kernel / DuckDB), never Java's — so per-document sums are
-associative int64 arithmetic and a SQL oracle replays them exactly.
+is quantized ONCE to int64 micro-log10 by :mod:`..micro` —
+``floor(log10(x)·1e6 + 0.5)``, libm ``log10`` on both engines (CPython
+``math.log10`` driver-side / numpy under ``micro_udf`` / DuckDB), never
+Java's — so per-document sums are associative int64 arithmetic and a
+SQL oracle replays them exactly.
 
 Scale shape (the numbers that matter at 10^12 docs):
 
@@ -42,15 +43,15 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..arrow import row_udf
 from ..functions.text import _hash_bucket, tokens
+from ..micro import micro, micro_udf
 
 DIM = 1024
-MICRO = 1_000_000
 _U31 = 2_147_483_648  # 2^31 — the uniform grid for the Gumbel draw
 
 
@@ -141,7 +142,7 @@ def _lp_micro(c: int, total: int, dim: int) -> int:
     log10 runs for the table, driver-side CPython→libm, replayed by
     DuckDB's ``floor(log10((c+1)::DOUBLE / (total+dim)) * 1e6 + 0.5)``
     bit-for-bit (same IEEE division, same libm)."""
-    return math.floor(math.log10((c + 1) / (total + dim)) * MICRO + 0.5)
+    return micro(math.log10((c + 1) / (total + dim)))
 
 
 def dsir_llr_table(
@@ -236,24 +237,14 @@ def dsir_scores(
     ).select(F.col(id_col), "__s.*")
 
 
-def _gumbel_micro_udf():
-    import numpy as np
-
-    def gumbel(h: pa.Array) -> pa.Array:
-        u = (h.to_numpy().astype("float64") + 0.5) / float(_U31)
-        # −log10(−log10 u) is a Gumbel draw shifted by the constant
-        # log10(ln 10): argmax/top-k over (log10 w + this) is therefore
-        # EXACTLY the Gumbel-top-k set (Kool et al. 2019) — constant
-        # shifts cancel in the ordering — while keeping the whole draw
-        # inside the one libm primitive (log10) the oracle contract
-        # already pins.
-        g = -np.log10(-np.log10(u))
-        return pa.array(np.floor(g * 1e6 + 0.5).astype("int64"))
-
-    # numpy over the whole Arrow batch, as an Arrow UDF (eval type 250):
-    # Catalyst collapses it into the node that evaluates the row-wise
-    # score UDF, and UDFs of two eval types cannot share one node
-    return F.arrow_udf(gumbel, "long")
+def _gumbel(h):
+    """−log10(−log10 u) for the uniform draw u of grid index ``h`` — a
+    Gumbel draw shifted by the constant log10(ln 10): argmax/top-k over
+    (log10 w + this) is therefore EXACTLY the Gumbel-top-k set (Kool et
+    al. 2019) — constant shifts cancel in the ordering — while keeping
+    the whole draw inside the one libm primitive (log10) the oracle
+    contract already pins."""
+    return -np.log10(-np.log10((h + 0.5) / float(_U31)))
 
 
 def dsir_resample(
@@ -286,7 +277,7 @@ def dsir_resample(
     )
     keyed = scored.withColumn(
         "key_micro",
-        (F.col("lw_micro") + _gumbel_micro_udf()(h)).cast("long"),
+        (F.col("lw_micro") + micro_udf(_gumbel, h)).cast("long"),
     )
     top = keyed.orderBy(F.col("key_micro").desc(), F.col(id_col)).limit(k)
     from pyspark.sql import Window

@@ -33,11 +33,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..arrow import row_udf
+from ..micro import MICRO
 
-START_MICRO = 1_000_000
+START_MICRO = MICRO  # every node starts with mass 1.0
 TELEPORT_MICRO = 150_000
 DAMPING_PCT = 85
 
@@ -182,6 +183,17 @@ def pagerank(
     Returns (node, rank_micro) for every node that appears as a src or
     dst.  Nodes with no in-links settle at ``teleport_micro``; dangling
     mass vanishes (simplified variant, deterministic)."""
+    e, nodes = _rank_graph(edges)
+    return _propagate(
+        e, nodes, F.lit(start_micro), F.lit(teleport_micro), "rank_micro",
+        n_iter, damping_pct,
+    )
+
+
+def _rank_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The degree-annotated edges hash-partitioned on ``src``, and the
+    node set, both materialized once (eager localCheckpoint) so every
+    iteration re-reads them without recomputing or re-shuffling."""
     e = out_degrees(edges).repartition(F.col("src")).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -189,27 +201,45 @@ def pagerank(
         .distinct()
         .localCheckpoint()
     )
-    ranks = nodes.select("node", F.lit(start_micro).alias("rank_micro"))
+    return e, nodes
+
+
+def _propagate(
+    e: DataFrame,
+    base: DataFrame,
+    start: Column,
+    teleport: Column,
+    col: str,
+    n_iter: int,
+    damping_pct: int,
+) -> DataFrame:
+    """The one integer power iteration of :func:`pagerank` and
+    :func:`trustrank`: ``(node, col)`` over ``base``'s nodes, starting
+    at ``start`` and updated as ``teleport + (damping_pct · Σ_{u→v}
+    r(u) DIV deg(u)) DIV 100``; both mass columns are evaluated over
+    ``base``.  Each iteration is one ranks⋈edges equi-join on ``src``
+    plus one keyed agg, state checkpointed per iteration."""
+    ranks = base.select("node", start.alias(col))
     for _ in range(n_iter):
         contribs = (
             ranks.join(e, ranks["node"] == e["src"])
             .select(
                 F.col("dst").alias("node"),
-                F.expr("rank_micro div deg").alias("c"),
+                F.expr(f"{col} div deg").alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
         ranks = (
-            nodes.join(contribs, "node", "left")
+            base.join(contribs, "node", "left")
             .select(
                 "node",
                 (
-                    F.lit(teleport_micro)
+                    teleport
                     + F.expr(
                         f"({damping_pct} * coalesce(inflow, 0)) div 100"
                     )
-                ).cast("long").alias("rank_micro"),
+                ).cast("long").alias(col),
             )
             .localCheckpoint()
         )
@@ -360,13 +390,7 @@ def trustrank(
 
     Returns (node, trust_micro) for every node in the graph.
     """
-    e = out_degrees(edges).repartition(F.col("src")).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, nodes = _rank_graph(edges)
     teleport_pct = 100 - damping_pct
     base = nodes.join(
         F.broadcast(seeds.select("node").distinct()
@@ -380,31 +404,10 @@ def trustrank(
         (F.coalesce(F.col("__seed"), F.lit(0)) * F.lit(seed_micro))
         .cast("long").alias("t0"),
     ).localCheckpoint()
-    trust = base.select("node", F.col("t0").alias("trust_micro"))
-    for _ in range(n_iter):
-        contribs = (
-            trust.join(e, trust["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("trust_micro div deg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        trust = (
-            base.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("teleport_micro")
-                    + F.expr(
-                        f"({damping_pct} * coalesce(inflow, 0)) div 100"
-                    )
-                ).cast("long").alias("trust_micro"),
-            )
-            .localCheckpoint()
-        )
-    return trust
+    return _propagate(
+        e, base, F.col("t0"), F.col("teleport_micro"), "trust_micro",
+        n_iter, damping_pct,
+    )
 
 
 def textrank_keywords(

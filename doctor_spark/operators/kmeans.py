@@ -32,7 +32,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, functions as F
 
-MICRO = 1_000_000
+from ..micro import MICRO
 
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -19,15 +19,13 @@ can replay it bit-for-bit:
   (``int(md5(gram)[:15 hex], 16)`` == DuckDB
   ``('0x' || substr(md5(g), 1, 15))::BIGINT``);
 * log-probabilities are quantized ONCE per model row to integer
-  micro-log10 units — ``floor(log10(c/denom) * 1e6 + 0.5)`` as int64 —
-  and every downstream sum is int64: exact, associative, identical on
-  any engine and any partitioning.  ``floor(x + 0.5)`` instead of
-  ``round(x)`` because round-half semantics differ across engines
-  (numpy half-even, DuckDB half-away); floor is exactly defined on
-  doubles everywhere.  The only cross-engine float op left is log10
-  itself, computed by numpy (C libm) on the Spark side — deliberately
-  NOT ``F.log10`` (Java's Math.log10 may differ from libm in the last
-  ulp) — and by DuckDB (also libm) in the oracle.
+  micro-log10 units by :mod:`..micro` — ``floor(log10(c/denom) * 1e6 +
+  0.5)`` as int64 — and every downstream sum is int64: exact,
+  associative, identical on any engine and any partitioning.  The only
+  cross-engine float op left is log10 itself, computed by numpy (C
+  libm) on the Spark side — deliberately NOT ``F.log10`` (Java's
+  Math.log10 may differ from libm in the last ulp) — and by DuckDB
+  (also libm) in the oracle.
 
 Model: stupid backoff (Brants et al. 2007), the score KenLM-scale
 corpus LMs actually use at trillion-token scale because it needs no
@@ -66,20 +64,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_udf
+from ..micro import MICRO, log10_ratio, micro, micro_udf
 from .dedup import _java_ws_tokens
-
-MICRO = 1_000_000
-
-
-def _lp_micro(alpha: float) -> int:
-    """floor(log10(alpha)*1e6 + 0.5) — the backoff penalty in micro-log10
-    units.  Python's math.log10 is C libm, same as DuckDB's; the literal
-    is inlined into the oracle SQL so the two sides cannot drift."""
-    return math.floor(math.log10(alpha) * MICRO + 0.5)
 
 
 def _hash60(b: bytes) -> int:
@@ -138,24 +127,6 @@ def _candidates_udf(order: int):
         return (list(range(n)), tk, *higher)
 
     return row_udf(cands, f"struct<pos: array<int>, {fields}>")
-
-
-def _quantize_lp(num_col: str, den_col: str):
-    """int64 micro-log10 of a count ratio via a numpy (libm) kernel —
-    model-table-sized input, so the Arrow hop is off the hot path."""
-
-    @F.pandas_udf("long")
-    def lp(num: pd.Series, den: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            np.floor(
-                np.log10(num.to_numpy(float) / den.to_numpy(float)) * MICRO
-                + 0.5
-            ).astype("int64")
-        )
-
-    return lp(F.col(num_col), F.col(den_col))
 
 
 def train_ngram_lm(
@@ -225,7 +196,9 @@ def train_ngram_lm(
     for lv in levels[1:]:
         stacked = stacked.unionByName(lv)
     model = stacked.where(F.col("c") >= min_count).select(
-        "ord", "gh", _quantize_lp("c", "den").alias("lp_micro")
+        "ord",
+        "gh",
+        micro_udf(log10_ratio, F.col("c"), F.col("den")).alias("lp_micro"),
     )
     return model, int(n_tokens)
 
@@ -249,8 +222,8 @@ def score_perplexity(
     (higher = more fluent; CCNet's perplexity is the monotone transform
     ``10^(-score)``).  Empty-token docs can't occur (the tokenizer
     yields [''] for empty text, scored like any token)."""
-    a_mu = _lp_micro(alpha)
-    unk_mu = math.floor(math.log10(1.0 / max(n_tokens, 1)) * MICRO + 0.5)
+    a_mu = micro(math.log10(alpha))
+    unk_mu = micro(math.log10(1.0 / max(n_tokens, 1)))
 
     c = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col),

@@ -6,10 +6,11 @@ too expensive for a crawl-scale first pass.
 
 Exact and engine-portable by the LM module's discipline: every model
 weight is an int64 micro-log10 — ``floor(log10(count ratio)·1e6+0.5)``
-with log10 evaluated by libm on BOTH engines (numpy kernel on the
-Spark side, never Java's Math.log10) — so document scores are integer
-SUMS, associative and reorderable, and the argmax tie-break (score
-DESC, label ASC) is deterministic cross-engine.
+with log10 evaluated by libm on BOTH engines (numpy under
+:func:`..micro.micro_udf` on the Spark side, never Java's Math.log10) —
+so document scores are integer SUMS, associative and reorderable, and
+the argmax tie-break (score DESC, label ASC) is deterministic
+cross-engine.
 
 Model (Laplace α=1):
 
@@ -29,39 +30,22 @@ stream to the model on the token key (the model side is
 vocab×labels — broadcast when it fits, keyed join when it doesn't)
 and one (doc,label) aggregation.  No Python anywhere on the
 corpus-scale path; the only Arrow hop is the model-table-sized
-micro-log10 quantization.
+micro-log10 quantization (one ``micro_udf`` per weight column).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..functions.text import tokens
+from ..micro import log10_ratio, micro_udf
 
 
 def _toks(df: DataFrame, text_col: str, extra: list[str]) -> DataFrame:
-    t = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     return (
-        df.select(*extra, F.explode(t).alias("token"))
+        df.select(*extra, F.explode(tokens(F.col(text_col))).alias("token"))
         .where(F.col("token") != "")
     )
-
-
-def _mlog10_ratio(num_col, den_col):
-    """int64 micro-log10 of a ratio — numpy/libm kernel, model-sized."""
-
-    @F.pandas_udf("long")
-    def lp(num: pd.Series, den: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            np.floor(
-                np.log10(num.to_numpy(float) / den.to_numpy(float))
-                * 1_000_000.0
-                + 0.5
-            ).astype("int64")
-        )
-
-    return lp(num_col, den_col)
 
 
 def nb_train(
@@ -87,7 +71,8 @@ def nb_train(
         .select(
             "label",
             "token",
-            _mlog10_ratio(
+            micro_udf(
+                log10_ratio,
                 (F.col("c") + 1).cast("double"),
                 (F.col("t") + F.lit(v)).cast("double"),
             ).alias("lp"),
@@ -97,11 +82,13 @@ def nb_train(
         docs_l.join(tot, "label")
         .select(
             "label",
-            _mlog10_ratio(
-                F.col("nd").cast("double"), F.lit(float(n_docs))
+            micro_udf(
+                log10_ratio, F.col("nd").cast("double"), F.lit(float(n_docs))
             ).alias("lp_prior"),
-            _mlog10_ratio(
-                F.lit(1.0), (F.col("t") + F.lit(v)).cast("double")
+            micro_udf(
+                log10_ratio,
+                F.lit(1.0),
+                (F.col("t") + F.lit(v)).cast("double"),
             ).alias("lp_unseen"),
         )
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-MICRO = 1_000_000
+from ..micro import MICRO
 
 
 def paragraph_langs(

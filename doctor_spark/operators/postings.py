@@ -32,9 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _toks(col):
-    return F.split(F.trim(F.lower(col)), r"\s+")
+from ..functions.text import tokens
 
 
 def term_dfs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -42,7 +40,7 @@ def term_dfs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     distinct (array_distinct before the explode), ONE keyed count."""
     base = docs.where(F.length(F.trim(F.col(text_col))) > 0)
     return base.select(
-        F.explode(F.array_distinct(_toks(F.col(text_col)))).alias("term")
+        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term")
     ).groupBy("term").agg(F.count("*").alias("df"))
 
 
@@ -57,7 +55,7 @@ def inverted_postings(
     0-based token-position list joined with ``,`` (a string so the row
     is engine-portable and shard files stay columnar-friendly)."""
     base = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(doc_col).alias("doc_id"), _toks(F.col(text_col)).alias("tk")
+        F.col(doc_col).alias("doc_id"), tokens(F.col(text_col)).alias("tk")
     )
     dfs = term_dfs(docs.select(F.col(text_col)), text_col=text_col)
     hot = dfs.where(F.col("df") > df_cap).select("term")
@@ -123,7 +121,7 @@ def postings_compression(
         .select(
             F.col(doc_col).alias("doc_id"),
             F.explode(
-                F.array_distinct(_toks(F.col(text_col)))
+                F.array_distinct(tokens(F.col(text_col)))
             ).alias("term"),
         )
     )

@@ -15,8 +15,9 @@ Definition (Lucene's non-negative variant):
     score(Q, D) = sum over distinct t in Q of idf(t) * tfn(t, D)
 
 Engine-portability discipline (same as operators/tfidf.py / lm.py):
-``ln`` is the only transcendental and is quantized IMMEDIATELY to int64
-micro (``floor(ln(..) * 1e6 + 0.5)``).  Every later step is either a
+``ln`` is the only transcendental (numpy/libm over the batch) and is
+quantized IMMEDIATELY to int64 micro by :func:`..micro.micro_udf`
+(``floor(ln(..) * 1e6 + 0.5)``).  Every later step is either a
 correctly-rounded IEEE-double op on exactly-representable inputs with a
 FIXED association order (mirrored parenthesis-for-parenthesis in the
 DuckDB oracle) or int64 math; the per-(query, doc, term) contribution
@@ -39,33 +40,16 @@ composes trivially in front of this operator.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-MICRO = 1_000_000
+from ..functions.text import tokens
+from ..micro import MICRO, micro_udf
 
 
-def _toks(col):
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
-
-def _bm25_idf_micro(n_docs_col, df_col):
-    """int64 micro BM25 idf — numpy/libm kernel over the whole batch.
-    Built per call: a module-level pandas UDF needs a SparkContext at
-    import time."""
-
-    @F.pandas_udf("long")
-    def idf(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = n_docs.to_numpy("float64")
-        d = df_t.to_numpy("float64")
-        return pd.Series(
-            np.floor(np.log((n - d + 0.5) / (d + 0.5) + 1.0) * MICRO + 0.5)
-            .astype("int64")
-        )
-
-    return idf(n_docs_col, df_col)
+def _bm25_idf(n, d):
+    """BM25 idf over a batch of (corpus size, document frequency)."""
+    return np.log((n - d + 0.5) / (d + 0.5) + 1.0)
 
 
 def _bm25_topk_with_stats(
@@ -86,7 +70,7 @@ def _bm25_topk_with_stats(
         F.col(text_col).isNotNull()
         & (F.length(F.trim(F.col(text_col))) > 0)
     ).select(
-        F.col(doc_col).alias("doc_id"), _toks(F.col(text_col)).alias("tk")
+        F.col(doc_col).alias("doc_id"), tokens(F.col(text_col)).alias("tk")
     )
 
     # Corpus size + total token count piggyback on the tf pass below as
@@ -109,7 +93,7 @@ def _bm25_topk_with_stats(
     qterms = queries.select(
         "query_id",
         F.explode(
-            F.array_distinct(_toks(F.col("query_text")))
+            F.array_distinct(tokens(F.col("query_text")))
         ).alias("term"),
     ).where(F.col("term") != "")
     terms = qterms.select("term").distinct()
@@ -167,7 +151,7 @@ def _bm25_topk_with_stats(
     tfn = (tfd * (F.lit(k1) + F.lit(1.0))) / (
         tfd + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * (dld / avgdl))
     )
-    idf_micro = _bm25_idf_micro(F.lit(n_docs).cast("long"), F.col("df"))
+    idf_micro = micro_udf(_bm25_idf, F.lit(n_docs).cast("long"), F.col("df"))
     contrib = (
         tf.join(F.broadcast(qterms), "term")
         .join(F.broadcast(dfs), "term")
@@ -250,10 +234,10 @@ def best_passages(
     ).select("query_id", "rank", "doc_id")
     qt = queries.select(
         "query_id",
-        F.array_distinct(_toks(F.col("query_text"))).alias("__qt"),
+        F.array_distinct(tokens(F.col("query_text"))).alias("__qt"),
     )
     txt = docs.select(
-        F.col(doc_col).alias("doc_id"), _toks(F.col(text_col)).alias("__tk")
+        F.col(doc_col).alias("doc_id"), tokens(F.col(text_col)).alias("__tk")
     )
     j = top.join(F.broadcast(qt), "query_id").join(txt, "doc_id")
     n = F.size("__tk")
@@ -333,7 +317,7 @@ def prf_expansion(
     base = docs.where(
         F.col(text_col).isNotNull() & (F.length(F.trim(F.col(text_col))) > 0)
     ).select(F.col(doc_col).alias("doc_id"), F.col(text_col).alias("__txt"))
-    t = base.select("doc_id", _toks(F.col("__txt")).alias("tk"))
+    t = base.select("doc_id", tokens(F.col("__txt")).alias("tk"))
     exploded = t.select("doc_id", F.explode("tk").alias("term"))
 
     # feedback tf: prune to the k_fb·|Q| winning docs BEFORE tokenizing —
@@ -343,7 +327,7 @@ def prf_expansion(
     # third corpus pass whose output was immediately joined away)
     fb_tf = (
         base.join(F.broadcast(top), "doc_id")
-        .select("query_id", "doc_id", _toks(F.col("__txt")).alias("tk"))
+        .select("query_id", "doc_id", tokens(F.col("__txt")).alias("tk"))
         .select("query_id", F.explode("tk").alias("term"))
         .groupBy("query_id", "term")
         .agg(F.count("*").alias("tf"))
@@ -351,7 +335,7 @@ def prf_expansion(
     qt = queries.select(
         "query_id",
         F.explode(
-            F.array_distinct(_toks(F.col("query_text")))
+            F.array_distinct(tokens(F.col("query_text")))
         ).alias("term"),
     ).where(F.col("term") != "")
     cand = fb_tf.join(qt, ["query_id", "term"], "left_anti").where(
@@ -372,7 +356,7 @@ def prf_expansion(
         cand.join(cdf, "term")
         .withColumn(
             "idf_micro",
-            _bm25_idf_micro(F.lit(n_docs_v).cast("long"), F.col("df")),
+            micro_udf(_bm25_idf, F.lit(n_docs_v).cast("long"), F.col("df")),
         )
         .select(
             "query_id",

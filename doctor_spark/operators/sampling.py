@@ -20,8 +20,10 @@ Pure Column expressions: whole-stage codegen, zero shuffles — sampling
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ..micro import MICRO, micro_udf
 
 BUCKETS = 65_536  # 4 hex chars
 
@@ -98,7 +100,6 @@ def stratified_sample(
 # common crawl" recipe, computed instead of hand-tuned)
 # --------------------------------------------------------------------------
 
-MIX_MICRO = 1_000_000
 _PW_SCALE = 1_000_000_000  # pow() quantization: 9 decimal digits
 
 
@@ -115,59 +116,51 @@ def mixture_weights(
     size as the input).
 
     Engine-portability: ``pow`` is the only cross-engine float op and
-    its result is quantized IMMEDIATELY to int64 (``pw_micro =
-    floor(p^alpha * 1e9 + 0.5)``, numpy/libm on this side, DuckDB/libm
-    in the oracle) — the normalizer ``z = Σ pw_micro`` is then an exact
+    its result is quantized IMMEDIATELY to int64 by
+    :func:`..micro.micro_udf` at scale 1e9 (``pw_micro = floor(p^alpha
+    * 1e9 + 0.5)``, numpy/libm on this side, DuckDB/libm in the
+    oracle) — the normalizer ``z = Σ pw_micro`` is then an exact
     associative integer sum, and the copy rate is re-quantized to
     ``rate_micro`` int64 so the resampler downstream is pure integer
     arithmetic.  Output: (domain, n_docs, p, weight, rate_micro).
 
     Plan: ONE groupBy(domain) exchange (map-side partials — a domain
-    count over 10^12 rows ships one partial row per task), every later
-    step over the domain-sized table."""
-    counts = df.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.count("*").alias("n_docs")
+    count over 10^12 rows ships one partial row per task), then the
+    domain-sized table in one partition: ``tot`` and ``z`` are sums over
+    a whole-table window, so ``pw`` is evaluated once per domain (a
+    self-join for ``z`` would evaluate it on both join sides)."""
+    everything = Window.partitionBy()
+    w = (
+        df.groupBy(F.col(domain_col).alias("domain"))
+        .agg(F.count("*").alias("n_docs"))
+        .withColumn("tot", F.sum("n_docs").over(everything))
     )
-    tot = counts.agg(F.sum("n_docs").alias("tot"))
 
-    @F.pandas_udf("long")
-    def pw_micro(n: pd.Series, tot_: pd.Series) -> pd.Series:
-        import numpy as np
+    def pw(n, tot_):
+        return np.power(n / tot_, alpha)
 
-        p = n.to_numpy(float) / tot_.to_numpy(float)
-        return pd.Series(
-            np.floor(np.power(p, alpha) * _PW_SCALE + 0.5).astype("int64")
-        )
-
-    w = counts.join(F.broadcast(tot)).select(
-        "domain",
-        "n_docs",
-        "tot",
-        pw_micro(F.col("n_docs"), F.col("tot")).alias("pw"),
-    )
-    z = w.agg(F.sum("pw").alias("z"))
+    w = w.withColumn(
+        "pw", micro_udf(pw, F.col("n_docs"), F.col("tot"), scale=_PW_SCALE)
+    ).withColumn("z", F.sum("pw").over(everything))
     tgt = (
         F.lit(int(target_rows)).cast("double")
         if target_rows is not None
         else F.col("tot").cast("double")
     )
-    return (
-        w.join(F.broadcast(z))
-        .select(
-            "domain",
-            "n_docs",
-            F.round(F.col("n_docs") / F.col("tot"), 4).alias("p"),
-            F.round(F.col("pw") / F.col("z"), 4).alias("weight"),
-            F.floor(
-                tgt
-                * F.col("pw").cast("double")
-                / (F.col("z").cast("double") * F.col("n_docs").cast("double"))
-                * MIX_MICRO
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("rate_micro"),
+    return w.select(
+        "domain",
+        "n_docs",
+        F.round(F.col("n_docs") / F.col("tot"), 4).alias("p"),
+        F.round(F.col("pw") / F.col("z"), 4).alias("weight"),
+        F.floor(
+            tgt
+            * F.col("pw").cast("double")
+            / (F.col("z").cast("double") * F.col("n_docs").cast("double"))
+            * MICRO
+            + F.lit(0.5)
         )
+        .cast("long")
+        .alias("rate_micro"),
     )
 
 
@@ -201,11 +194,11 @@ def temperature_resample(
         16,
         10,
     ).cast("long")
-    base = (F.col("rate_micro") / MIX_MICRO).cast("long")
-    frac = F.col("rate_micro") % MIX_MICRO
+    base = (F.col("rate_micro") / MICRO).cast("long")
+    frac = F.col("rate_micro") % MICRO
     # keep the extra copy iff bucket/65536 < frac/1e6, cross-multiplied
     # so the comparison stays in exact int64 (65535 * 1e6 << 2^63)
-    extra = (bucket_int * MIX_MICRO < frac * BUCKETS).cast("long")
+    extra = (bucket_int * MICRO < frac * BUCKETS).cast("long")
     copies = base + extra
     # sequence(1, 0) would infer a DESCENDING step and yield [1, 0] —
     # zero-copy docs must produce an empty array instead

@@ -47,13 +47,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens
+
 DEPTH = 4  # md5 yields 4 independent 8-hex-digit row hashes for free
 
 
 def explode_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(token) rows: Java-\\s+ split of the trimmed, lowered text,
     empty tokens dropped.  Map-side only — no exchange."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = tokens(F.col(text_col))
     return (
         df.select(F.explode(toks).alias("token"))
         .where(F.col("token") != "")

@@ -19,12 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_udf
+from ..functions.text import tokens
 from ..kernels.porter import porter_stem
-
-
-def _toks(col):
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
 
 
 def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -34,7 +30,7 @@ def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
     toks = docs.where(
         F.col(text_col).isNotNull()
         & (F.length(F.trim(F.col(text_col))) > 0)
-    ).select(F.explode(_toks(F.col(text_col))).alias("term"))
+    ).select(F.explode(tokens(F.col(text_col))).alias("term"))
     # vocab is materialized (it is the SMALL side — distinct terms),
     # so the final join re-scans the corpus exactly once for the token
     # stream instead of re-exploding it a second time under the vocab

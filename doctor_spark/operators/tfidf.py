@@ -10,12 +10,13 @@ Definition (classic keyword-extraction form): for term t and domain d,
     score     = tf * idf
 
 Engine-portability, same discipline as operators/lm.py: idf is the only
-float born here and is quantized immediately to int64 micro-log10
-(``floor(log10(N/df) * 1e6 + 0.5)``, numpy/libm on this side, DuckDB/
-libm in the oracle).  The ranking key ``tf * idf_micro`` is computed as
-ONE IEEE double multiplication of two exactly-representable int64s —
-bit-identical on any engine — and the reported score is that product
-divided by 1e6, rounded to 4 decimals.  (A pure-int64 product can
+float born here and is quantized immediately to int64 micro-log10 by
+:func:`..micro.micro_udf` (``floor(log10(N/df) * 1e6 + 0.5)``,
+numpy/libm over the batch on this side, DuckDB/libm in the oracle).
+The ranking key ``tf * idf_micro`` is computed as ONE IEEE double
+multiplication of two exactly-representable int64s — bit-identical on
+any engine — and the reported score is that product divided by 1e6,
+rounded to 4 decimals.  (A pure-int64 product can
 overflow at tf ~ 10^12 x idf_micro ~ 10^7; the double form trades 53-bit
 mantissa precision — exact up to 9·10^15, far beyond any real
 tf·idf ranking gap — for overflow-freedom.)
@@ -31,31 +32,10 @@ cannot be a headline keyword).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import tokens
-
-MICRO = 1_000_000
-
-
-def _idf_micro(n_docs_col, df_col):
-    """int64 micro log10 idf — numpy/libm kernel over the whole batch.
-    Built per call: a module-level pandas UDF needs a SparkContext at
-    import time."""
-
-    @F.pandas_udf("long")
-    def idf(n_docs: pd.Series, df_t: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            np.floor(
-                np.log10(n_docs.to_numpy(float) / df_t.to_numpy(float)) * MICRO
-                + 0.5
-            ).astype("int64")
-        )
-
-    return idf(n_docs_col, df_col)
+from ..micro import MICRO, log10_ratio, micro_udf
 
 
 def tfidf_top_terms(
@@ -97,7 +77,9 @@ def tfidf_top_terms(
             "term",
             "tf",
             "df_docs",
-            _idf_micro(F.col("n_docs"), F.col("df_docs")).alias("idf_mu"),
+            micro_udf(
+                log10_ratio, F.col("n_docs"), F.col("df_docs")
+            ).alias("idf_mu"),
         )
         .withColumn(
             "__key",

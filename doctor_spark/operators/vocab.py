@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.text import tokens
+
 
 def vocab_growth(
     docs: DataFrame,
@@ -44,7 +46,7 @@ def vocab_growth(
             F.col(doc_col).alias("_doc"),
             F.explode(
                 F.array_distinct(
-                    F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+                    tokens(F.col(text_col))
                 )
             ).alias("term"),
         )

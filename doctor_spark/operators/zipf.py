@@ -6,11 +6,12 @@ like natural language (spam farms and boilerplate skew it), and the
 count-of-counts vector is the input to Good-Turing / Katz smoothing
 estimates of unseen-mass.
 
-Engine-portability (operators/tfidf.py discipline): ``ln`` is
-quantized IMMEDIATELY to int64 micro; the OLS moment sums (Σx, Σy,
-Σxy, Σx²) are int64 sums of int64 products — aggregation-order-free —
-and only the final slope/intercept ratios are IEEE doubles with a
-FIXED parenthesization mirrored in the oracle.  Overflow headroom:
+Engine-portability (operators/tfidf.py discipline): ``ln`` (numpy/libm)
+is quantized IMMEDIATELY to int64 micro by :func:`..micro.micro_udf`;
+the OLS moment sums (Σx, Σy, Σxy, Σx²) are int64 sums of int64
+products — aggregation-order-free — and only the final
+slope/intercept ratios are IEEE doubles with a FIXED parenthesization
+mirrored in the oracle.  Overflow headroom:
 log-micro values are < 3·10^7 even at 10^12 tokens, so each product is
 < 10^15 and the top-1000-rank cap bounds Σxy below 10^18 — inside
 int64.  The cap is also the statistically honest choice: a Zipf fit is
@@ -19,38 +20,18 @@ the standard regime.
 
 Scale shape: ONE corpus-sized exchange (term frequency agg, map-side
 combined); everything after runs on the vocabulary-sized aggregate —
-the ranking window, the log quantization (vectorized Arrow), and a
+the ranking window, the log quantization (one Arrow UDF), and a
 scalar moment rollup.  The count-of-counts query is the same tf agg
 re-keyed by frequency — two tiny keyed aggregates stacked.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-MICRO = 1_000_000
-
-
-def _toks(col):
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
-
-def _ln_micro(col):
-    """int64 micro natural log — numpy/libm kernel over the whole batch.
-    Built per call: a module-level pandas UDF needs a SparkContext at
-    import time."""
-
-    @F.pandas_udf("long")
-    def ln(x: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            np.floor(np.log(x.to_numpy("float64")) * MICRO + 0.5)
-            .astype("int64")
-        )
-
-    return ln(col)
+from ..functions.text import tokens
+from ..micro import MICRO, micro_udf
 
 
 def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -60,7 +41,7 @@ def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.col(text_col).isNotNull()
             & (F.length(F.trim(F.col(text_col))) > 0)
         )
-        .select(F.explode(_toks(F.col(text_col))).alias("term"))
+        .select(F.explode(tokens(F.col(text_col))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("freq"))
     )
@@ -82,8 +63,8 @@ def zipf_fit(
     ranked = (
         top.withColumn("rank", F.row_number().over(w))
         .select(
-            _ln_micro(F.col("rank").cast("double")).alias("x"),
-            _ln_micro(F.col("freq").cast("double")).alias("y"),
+            micro_udf(np.log, F.col("rank").cast("double")).alias("x"),
+            micro_udf(np.log, F.col("freq").cast("double")).alias("y"),
         )
     )
     m = ranked.agg(

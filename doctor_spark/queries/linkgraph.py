@@ -3,6 +3,8 @@ HITS, TrustRank, degree statistics, anchor text and redirect chains."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from doctor_spark.queries import _docs, _present, query
@@ -12,6 +14,27 @@ from doctor_spark.queries import _docs, _present, query
 # (shared between the Spark query and the SQL oracle — one source of
 # truth so the two can never drift)
 _PR_EDGE_GENS = ((37, 11), (101, 7), (193, 3))
+
+
+def _affine_edges(
+    spark: SparkSession, sf_dir: str, gens
+) -> tuple[DataFrame, DataFrame]:
+    """``(docs, edges)``: the ``doc_id`` column and the deterministic
+    link graph ``(dst, src)`` with one edge ``src → (src·m + c) mod n``
+    per generator ``(m, c)``, kept where the target is a document (n =
+    max doc_id + 1).  The oracles build the same graph in SQL."""
+    docs = _docs(spark, sf_dir).select("doc_id")
+    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
+    ids = docs.select(F.col("doc_id").alias("src"))
+    parts = [
+        ids.select(
+            "src",
+            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
+        )
+        for m, c in gens
+    ]
+    edges = reduce(DataFrame.unionByName, parts)
+    return docs, edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
 
 
 def _pagerank_sql(n_iter: int = 4) -> str:
@@ -61,20 +84,7 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from doctor_spark.operators.graph import pagerank
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
+    _, edges = _affine_edges(spark, sf_dir, _PR_EDGE_GENS)
     pr = pagerank(edges, n_iter=4)
     return pr.select(
         F.col("node").cast("bigint").alias("doc_id"),
@@ -263,20 +273,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE oracle."""
     from doctor_spark.operators.graph import hits
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _HITS_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
+    _, edges = _affine_edges(spark, sf_dir, _HITS_EDGE_GENS)
     out = hits(edges, n_iter=3)
     return _present(out.select(
         F.col("node").cast("bigint").alias("doc_id"),
@@ -353,20 +350,7 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle.  Pages unreachable from any seed settle at exactly 0."""
     from doctor_spark.operators.graph import trustrank
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _TR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
+    docs, edges = _affine_edges(spark, sf_dir, _TR_EDGE_GENS)
     seeds = docs.where(
         F.col("doc_id") % F.lit(_TR_SEED_MOD) == 0
     ).select(F.col("doc_id").alias("node"))
@@ -422,20 +406,7 @@ def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  Oracle: the identical 4-level min-relaxation CTE."""
     from doctor_spark.operators.graph import seed_distances
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    edges = edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
+    docs, edges = _affine_edges(spark, sf_dir, _PR_EDGE_GENS)
     seeds = docs.where(F.col("doc_id") % 100 == 0).select("doc_id")
     d = seed_distances(edges, seeds, n_iter=4)
     return d.select(

@@ -176,8 +176,8 @@ def q_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(rate) times plus one more iff its md5 bucket clears the
     fractional remainder — deterministic multinomial-expectation
     resampling on any engine/cluster/retry.  Map-only over a broadcast
-    domain→rate table + explode(sequence); the only exchange is the
-    weights' domain count."""
+    domain→rate table + explode(sequence); the only exchange over the
+    corpus is the weights' domain count."""
     from doctor_spark.operators.sampling import (
         mixture_weights,
         temperature_resample,

@@ -4,6 +4,8 @@ entropy and coverage, Unicode cleanup, readability and host rollups."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # stopwords and the unicode-clean character sets come from their single
@@ -14,9 +16,9 @@ from doctor_spark.functions.text import (
     LANG_STOPWORDS as _LANG_STOPWORDS, UC_CONTROLS as _UC_CONTROLS,
     UC_SPACE_LIKE as _UC_SPACE_LIKE, UC_ZERO_WIDTH as _UC_ZERO_WIDTH,
 )
-# stupid-backoff penalty literal, generated from the LM module's own
-# quantizer so the Spark side and the oracle can never drift
-from doctor_spark.operators.lm import _lp_micro as _lm_lp_micro
+# stupid-backoff penalty literal, generated by the quantizer the LM
+# module uses so the Spark side and the oracle can never drift
+from doctor_spark.micro import micro
 from doctor_spark.queries import (
     _JAVA_WS_CLASS, _TOKS, _docs, _docs_spread, _present, query,
 )
@@ -225,7 +227,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LM_ALPHA_MICRO = _lm_lp_micro(0.4)
+_LM_ALPHA_MICRO = micro(math.log10(0.4))
 
 
 @query(oracle=f"""

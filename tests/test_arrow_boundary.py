@@ -1,6 +1,8 @@
 """The Arrow row boundary (``doctor_spark.arrow``): the two adapters'
-contract, the allowlist of the Python sites that stay on pandas, and the
-no-duplicate-Python-UDF invariant of the queries that used to clone one."""
+contract, the micro-unit quantizer's batch UDF (``doctor_spark.micro``),
+the allowlist of the Python sites that stay on pandas, and the
+no-duplicate-Python-UDF invariant of the queries that used to clone or
+could share one."""
 
 import ast
 import math
@@ -9,10 +11,12 @@ import sys
 from collections import Counter
 from pathlib import Path
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from doctor_spark.arrow import row_map, row_udf
+from doctor_spark.micro import micro, micro_udf
 from doctor_spark.plans.checks import physical_plan
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -128,6 +132,31 @@ def test_row_map_binary_and_struct_columns(spark):
 
 
 # --------------------------------------------------------------------------
+# micro_udf
+# --------------------------------------------------------------------------
+
+
+def test_micro_udf_quantizes_like_micro(spark):
+    df = spark.createDataFrame(
+        [(1, 0.5), (7, 2.0), (10**6, 1e-9), (3, -0.25)], "n long, x double"
+    )
+    out = df.select(
+        "n",
+        "x",
+        micro_udf(np.log10, F.col("n")).alias("lg"),
+        micro_udf(
+            lambda n, x: n * x, F.col("n"), F.col("x"), scale=10**9
+        ).alias("nx"),
+    )
+    for r in out.collect():
+        assert r.lg == micro(float(np.log10(float(r.n))))
+        assert r.nx == math.floor(r.n * r.x * 1e9 + 0.5)
+    assert micro(2.5e-7) == 0 and micro(5e-7) == 1 and micro(-5e-7) == 0
+    plan = physical_plan(out, "simple")
+    assert re.search(r"ArrowEvalPython \[.*\], \[.*\], 250", plan), plan
+
+
+# --------------------------------------------------------------------------
 # the pandas allowlist
 # --------------------------------------------------------------------------
 
@@ -152,18 +181,6 @@ PANDAS_SITES = {
         "per-batch token aggregation (tok_kernel)",
     ("doctor_spark/operators/dsir.py", "dsir_llr_table"):
         "per-batch bucket aggregation (_fit_kernel)",
-    ("doctor_spark/operators/sampling.py", "mixture_weights.pw_micro"):
-        "numpy math over the whole batch",
-    ("doctor_spark/operators/nbayes.py", "_mlog10_ratio.lp"):
-        "numpy math over the whole batch",
-    ("doctor_spark/operators/zipf.py", "_ln_micro.ln"):
-        "numpy math over the whole batch",
-    ("doctor_spark/operators/ranking.py", "_bm25_idf_micro.idf"):
-        "numpy math over the whole batch",
-    ("doctor_spark/operators/tfidf.py", "_idf_micro.idf"):
-        "numpy math over the whole batch",
-    ("doctor_spark/operators/lm.py", "_quantize_lp.lp"):
-        "numpy math over the whole batch",
     ("doctor_spark/operators/similarity.py", "_lsh_buckets_udf.buckets"):
         "numpy matmul over the whole batch",
     ("doctor_spark/operators/similarity.py", "_cosine_pairs_udf.cos"):
@@ -199,7 +216,7 @@ def _pandas_sites() -> list[tuple[str, str]]:
 
 def test_pandas_sites_are_exactly_the_allowlist():
     sites = _pandas_sites()
-    assert len(sites) == len(set(sites)) == 17, Counter(sites)
+    assert len(sites) == len(set(sites)) == 11, Counter(sites)
     assert set(sites) == set(PANDAS_SITES), (
         f"new pandas sites (move row-wise kernels to doctor_spark.arrow): "
         f"{sorted(set(sites) - set(PANDAS_SITES))}; "
@@ -237,6 +254,17 @@ def _final_plan(df) -> str:
     return plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
 
 
+# Queries whose final plan evaluates one UDF call in more than one node by
+# design; every other query evaluates each call once.
+PLANNED_EVALS = {
+    # one per side of the groupBy+join form (operators/metadata.py)
+    "canonical_clusters": 2,
+    # one per n-gram order: the scorer's ``ord == m`` joins prune the
+    # model's union to one branch each, so the nodes see disjoint rows
+    "ccnet_perplexity": 3,
+}
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -245,6 +273,17 @@ def _final_plan(df) -> str:
         "dedup_simhash_near_w48",
         "embedding_neardup",
         "ivf_ann_topk",
+        # the queries that plan a doctor_spark.micro UDF
+        "bm25_topk",
+        "prf_expansion",
+        "best_passages",
+        "tfidf_top_terms",
+        "zipf_fit",
+        "nb_confusion",
+        "mix_weights",
+        "mix_resample",
+        "dsir_select",
+        "ccnet_perplexity",
     ],
 )
 def test_no_python_udf_evaluated_twice(spark, name):
@@ -253,10 +292,13 @@ def test_no_python_udf_evaluated_twice(spark, name):
     import __spark_entry__ as entry
 
     plan = _final_plan(entry.queries()[name](spark, SF_DIR))
+    # keyed by the call's result id: the two sides of a self-join rename
+    # the arguments of one call but keep its result id
     calls = Counter(
-        call
+        re.search(r"#\d+L?$", call).group(0)
         for m in re.finditer(r"\w*EvalPython\w* \[(.*?)\], \[", plan)
         for call in _udf_calls(m.group(1))
     )
     assert calls, plan
-    assert all(n == 1 for n in calls.values()), (calls, plan)
+    evals = PLANNED_EVALS.get(name, 1)
+    assert all(n <= evals for n in calls.values()), (calls, plan)

@@ -4,7 +4,8 @@ import math
 
 import pytest
 
-from doctor_spark.operators.collocations import MICRO, collocations
+from doctor_spark.micro import MICRO
+from doctor_spark.operators.collocations import collocations
 
 
 def _ml(x: int) -> int:

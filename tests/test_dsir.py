@@ -137,12 +137,13 @@ def test_gumbel_kernel_duckdb_parity(spark):
     and a spread of interior points."""
     hs = [0, 1, 2, 7, 123456, 10**6, 2**20, 2**30, 2**31 - 2, 2**31 - 1]
     df = spark.createDataFrame([(h,) for h in hs], "h long")
-    from doctor_spark.operators.dsir import _gumbel_micro_udf
+    from doctor_spark.micro import micro_udf
+    from doctor_spark.operators.dsir import _gumbel
 
     got = {
         r["h"]: r["g"]
         for r in df.select(
-            "h", _gumbel_micro_udf()(F.col("h")).alias("g")
+            "h", micro_udf(_gumbel, F.col("h")).alias("g")
         ).collect()
     }
     con = duckdb.connect()

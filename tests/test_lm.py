@@ -6,9 +6,8 @@ import math
 
 import pytest
 
+from doctor_spark.micro import MICRO, micro
 from doctor_spark.operators.lm import (
-    MICRO,
-    _lp_micro,
     perplexity_buckets,
     score_perplexity,
     train_ngram_lm,
@@ -63,7 +62,7 @@ def test_hand_computed_backoff(spark, tiny):
 
 def test_oov_and_backoff_penalties(spark, tiny):
     model, n = train_ngram_lm(tiny, order=3)
-    a = _lp_micro(0.4)
+    a = micro(math.log10(0.4))
     unk = math.floor(math.log10(1 / n) * MICRO + 0.5)
     fresh = spark.createDataFrame(
         [("x1", "en", "zz yy xx"), ("x2", "en", "the cat dort")],
@@ -94,7 +93,7 @@ def test_min_count_prunes_numerators_only(spark, tiny):
     # singleton unigram 'dort' pruned -> d4 backs off to unk at pos2?
     # no: 'le chat dort' pos2 trigram c=1 pruned, bigram 'chat dort'
     # c=1 pruned, unigram 'dort' c=1 pruned -> unk + 2a
-    a = _lp_micro(0.4)
+    a = micro(math.log10(0.4))
     unk = math.floor(math.log10(1 / n) * MICRO + 0.5)
     s = {
         r["doc_id"]: r
@@ -155,7 +154,7 @@ def test_empty_reference(spark, tiny):
     assert n == 0 and model.count() == 0
     s = score_perplexity(tiny, model, n).collect()
     # every position scores unk (log10(1/max(N,1)) = 0) + penalties
-    a = _lp_micro(0.4)
+    a = micro(math.log10(0.4))
     by_id = {r["doc_id"]: r for r in s}
     assert by_id["d6"]["sum_lp_micro"] == 0
     assert by_id["d3"]["sum_lp_micro"] == 0 + a + 2 * a

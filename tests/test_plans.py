@@ -936,9 +936,9 @@ def test_mixture_weights_and_resample(spark):
     integer rate arithmetic exactly."""
     import math
 
+    from doctor_spark.micro import MICRO
     from doctor_spark.operators.sampling import (
         BUCKETS,
-        MIX_MICRO,
         mixture_weights,
         temperature_resample,
     )
@@ -954,10 +954,10 @@ def test_mixture_weights_and_resample(spark):
     pw_r = math.floor(math.sqrt(0.1) * 1e9 + 0.5)
     z = pw_c + pw_r
     assert by_d["rare"]["rate_micro"] == math.floor(
-        1000.0 * pw_r / (float(z) * 100.0) * MIX_MICRO + 0.5
+        1000.0 * pw_r / (float(z) * 100.0) * MICRO + 0.5
     )
-    assert by_d["rare"]["rate_micro"] > MIX_MICRO  # rare upsampled
-    assert by_d["common"]["rate_micro"] < MIX_MICRO  # common downsampled
+    assert by_d["rare"]["rate_micro"] > MICRO  # rare upsampled
+    assert by_d["common"]["rate_micro"] < MICRO  # common downsampled
 
     out = temperature_resample(
         df, w, domain_col="source", key_col="doc_id", salt="t"
@@ -970,12 +970,12 @@ def test_mixture_weights_and_resample(spark):
 
     for dom, n in (("common", 900), ("rare", 100)):
         rm = by_d[dom]["rate_micro"]
-        base, frac = divmod(rm, MIX_MICRO)
+        base, frac = divmod(rm, MICRO)
         ids = range(900) if dom == "common" else range(900, 1000)
         extra = sum(
             1
             for i in ids
-            if int(md5(f"t{i}".encode()).hexdigest()[:4], 16) * MIX_MICRO
+            if int(md5(f"t{i}".encode()).hexdigest()[:4], 16) * MICRO
             < frac * BUCKETS
         )
         assert got.get(dom, 0) == base * n + extra
