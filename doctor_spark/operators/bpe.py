@@ -10,7 +10,7 @@ per merge, the argmax is a single-row driver action (bounded by
 contract, like the IVF centroids), and the merge application is again
 map-only.  A 100-TB crawl and a 1-GB sample train at the same
 per-iteration cost once the word table is built.  Lineage across
-iterations is bounded with periodic localCheckpoints (the
+iterations is bounded with periodic pins (``session.pin``, the
 connected-components discipline).
 
 Exact semantics, engine-portable (this is what the unrolled SQL oracle
@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_map, row_udf
 from ..functions.text import tokens
+from ..session import pin
 
 SEP = "\x1f"
 END = "</w>"
@@ -156,11 +157,11 @@ def bpe_train(
     than as stacked per-merge pandas UDFs — iteration k used to re-cross
     the JVM↔Python boundary k-times-since-checkpoint with the whole word
     table; now every iteration is exactly ONE Python stage.  The word
-    table is re-materialized (localCheckpoint, with the pending merges
+    table is re-materialized (``pin``, with the pending merges
     applied in one kernel) every ``checkpoint_every`` merges to bound
     the in-kernel replay work, and eagerly at entry so the corpus-scale
     word count runs once."""
-    words = wc.where(F.col("cnt") >= min_count).select(
+    words = pin(wc.where(F.col("cnt") >= min_count).select(
         F.concat_ws(
             SEP,
             F.concat(
@@ -169,7 +170,7 @@ def bpe_train(
             ),
         ).alias("syms"),
         "cnt",
-    ).localCheckpoint()
+    ))
 
     merges: list[tuple[int, str, str, int]] = []
     pending: list[tuple[str, str]] = []
@@ -192,9 +193,9 @@ def bpe_train(
         merges.append((rank, left, right, freq))
         pending.append((left, right))
         if len(pending) >= checkpoint_every and rank < n_merges:
-            words = row_map(
+            words = pin(row_map(
                 words, _apply_merges_kernel(tuple(pending)), "syms string, cnt long"
-            ).localCheckpoint()
+            ))
             pending = []
     return merges
 
@@ -259,7 +260,7 @@ def bpe_token_counts(
     learned merges through the same fold kernel the trainer used, so
     this is exactly the trainer's final state (the oracle reads its own
     final CTE level and must agree)."""
-    wc = word_counts(df, text_col).localCheckpoint()
+    wc = pin(word_counts(df, text_col))
     merges = bpe_train(wc, n_merges, min_count)
     words = wc.where(F.col("cnt") >= min_count).select(
         F.concat_ws(

@@ -53,22 +53,22 @@ def cdc_chunks(
 def cdc_dedup_stats(chunks: DataFrame, n_payloads: DataFrame) -> DataFrame:
     """One row: (n_payloads, n_chunks, n_distinct_chunks, bytes_total,
     bytes_distinct, dedup_ratio_micro) — ratio = distinct bytes per
-    stored byte, int64 micro (truncating div, engine-portable)."""
-    tot = chunks.agg(
-        F.count("*").alias("n_chunks"),
-        F.sum("len").alias("bytes_total"),
+    stored byte, int64 micro (truncating div, engine-portable).  Both
+    totals roll up from ONE per-hash aggregate, so ``chunks`` (and the
+    Python chunker under it) is evaluated once."""
+    per_hash = chunks.groupBy("hash").agg(
+        F.count("*").alias("n"),
+        F.sum("len").alias("bytes"),
+        F.min("len").alias("len"),
     )
-    dist = (
-        chunks.groupBy("hash")
-        .agg(F.min("len").alias("len"))
-        .agg(
-            F.count("*").alias("n_distinct_chunks"),
-            F.sum("len").alias("bytes_distinct"),
-        )
+    tot = per_hash.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_chunks"),
+        F.sum("bytes").alias("bytes_total"),
+        F.count("*").alias("n_distinct_chunks"),
+        F.sum("len").alias("bytes_distinct"),
     )
     return (
         n_payloads.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(dist))
         .select(
             F.col("n_payloads").cast("bigint"),
             F.col("n_chunks").cast("bigint"),

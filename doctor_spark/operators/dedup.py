@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..arrow import row_udf
 from ..functions.text import fingerprint, tokens
+from ..session import pin
 from .hamming import band_pairs, banded_hamming_pairs
 
 DEFAULT_SEEDS = ("s0", "s1", "s2", "s3")
@@ -504,26 +505,24 @@ def duplicate_components(
     label (label[label[v]]) — the doubling step makes convergence
     logarithmic in component diameter, so a 2^20-long near-dup chain
     converges inside the default budget.  Each round is two keyed
-    shuffles; ``localCheckpoint`` cuts the lineage so plans don't grow.
-    The convergence check piggybacks on the checkpoint action via
-    ``Observation`` (an ``observe()`` node above the checkpoint), so each
+    shuffles; ``pin`` cuts the lineage so plans don't grow.
+    The convergence check piggybacks on the pin's action via
+    ``Observation`` (an ``observe()`` on the pinned frame), so each
     round is ONE Spark job — no separate driver ``count()`` whose
     job-scheduling tail would add up at 10^9-edge graphs.  Raises if the
     budget is exhausted before convergence — silently returning
     unconverged labels would split clusters and break the exact oracle.
 
     Columns: doc_id, component_id."""
-    edges = (
+    edges = pin(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
     )
     for it in range(max_iters):
         neighbor_min = (
@@ -544,7 +543,7 @@ def duplicate_components(
             )
         )
         obs = Observation(f"cc_round_{it}")
-        updated = (
+        updated = pin(
             hop.join(parents, hop.component_id == parents.p_id, "left")
             .select(
                 "doc_id",
@@ -561,8 +560,8 @@ def duplicate_components(
                 (F.col("new_id") < F.col("old_id")).alias("changed"),
             )
             .observe(obs, F.sum(F.col("changed").cast("long")).alias("n"))
-        ).localCheckpoint(eager=True)
-        n_changed = obs.get["n"] or 0  # collected by the checkpoint job
+        )
+        n_changed = obs.get["n"] or 0  # collected by the pin's job
         labels = updated.drop("changed")
         if n_changed == 0:
             if stats is not None:  # convergence telemetry for benchmarks
@@ -587,7 +586,7 @@ def dedup_filtered_corpus(
     (cluster's smallest id survives) → filtered corpus.
 
     The candidate-pair join is computed exactly once: it flows straight
-    into the component iteration's eagerly-checkpointed edge set, and the
+    into the component iteration's pinned edge set, and the
     final filter anti-joins the input against the (already materialized)
     non-keeper labels — no stage recomputes signatures or pairs.  Scale
     shape: one banded exchange (ReusedExchange self-join), log-diameter
@@ -1553,7 +1552,7 @@ def containment_est_pairs(
     pytest bounds the estimation error against the exact operator).
 
     Plan shape: ONE Arrow kernel evaluation produces n_sh + signature +
-    band keys together; the signature table is localCheckpoint-pinned
+    band keys together; the signature table is pinned (``pin``)
     (≈ n_perms·8 bytes/doc — the artifact a production dedup would
     write to storage); candidates come from the same single-exchange
     band join as production MinHash; the estimator is then a keyed
@@ -1564,14 +1563,13 @@ def containment_est_pairs(
     exact form.
     """
     udf = _minhash_sig_affine_udf(n_perms, rows_per_band, n)
-    sigs = (
+    sigs = pin(
         df.select(F.col(id_col).alias("id"), udf(F.col(text_col)).alias("r"))
         .select(
             "id", F.col("r.n_sh").alias("n_sh"), F.col("r.sig").alias("sig"),
             F.col("r.bands").alias("bands"),
         )
         .where(F.col("n_sh") > 0)
-        .localCheckpoint()
     )
     banded = sigs.select(
         "id", F.posexplode("bands").alias("band_no", "band_key")

@@ -19,11 +19,11 @@ int64, so the unrolled-CTE oracle in doctor_spark/queries/linkgraph.py is hash-e
 against an ITERATIVE distributed implementation.
 
 Scale shape: one exchange builds the degree-annotated edge table,
-hash-partitioned on ``src`` and materialized (eager localCheckpoint —
+hash-partitioned on ``src`` and materialized (``pin`` —
 every iteration re-reads it without recomputing or re-shuffling the
 build side); each iteration is then a keyed equi-join ranks⋈edges on
 ``src`` plus one ``groupBy(dst)`` agg — the canonical Pregel-as-SQL
-step.  Rank state is checkpointed per iteration to bound lineage
+step.  Rank state is pinned per iteration to bound lineage
 (connected-components discipline).  A hub-skewed ``dst`` is the same
 hot-key problem every keyed agg here has; AQE skew handling and the
 frequency-cap discipline apply unchanged.
@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..arrow import row_udf
 from ..micro import MICRO
+from ..session import pin
 
 START_MICRO = MICRO  # every node starts with mass 1.0
 TELEPORT_MICRO = 150_000
@@ -108,7 +109,7 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
 
     Scale shape: pointer doubling, not per-hop iteration — ⌈log₂
     max_hops⌉ self-joins on the successor key, each one keyed exchange,
-    lineage bounded by localCheckpoint (the connected-components
+    lineage bounded by ``pin`` (the connected-components
     discipline at dedup.py:407).  A 10^12-row crawl resolves 16-hop
     chains in 4 joins instead of 16; no driver-side loop state beyond
     the round counter.  Rows that reach a terminal SETTLE out of the
@@ -122,7 +123,7 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
     ``doctor_spark.queries.linkgraph``).
     """
     e = edges.groupBy("src").agg(F.min("dst").alias("dst"))
-    e = e.repartition(F.col("src")).localCheckpoint()
+    e = pin(e.repartition(F.col("src")))
     state = e.select(
         F.col("src").alias("node"),
         F.col("dst").alias("nxt"),
@@ -140,7 +141,7 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
         # a miss means nxt is unmapped → terminal → hops is already the
         # TRUE distance and the row settles; a hit advances 2^k steps
         # (or jumps to a settled target's terminal in one go).
-        state = (
+        state = pin(
             active.join(succ, active["nxt"] == succ["j_node"], "left")
             .select(
                 "node",
@@ -151,7 +152,6 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 16) -> DataFrame:
                 F.col("j_node").isNull().alias("settled"),
             )
             .unionByName(done)
-            .localCheckpoint()
         )
     # settled rows proved terminal by the join miss; rows still active
     # after the last round need the explicit no-out-edge test (they may
@@ -192,14 +192,13 @@ def pagerank(
 
 def _rank_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The degree-annotated edges hash-partitioned on ``src``, and the
-    node set, both materialized once (eager localCheckpoint) so every
+    node set, both pinned once (``pin``) so every
     iteration re-reads them without recomputing or re-shuffling."""
-    e = out_degrees(edges).repartition(F.col("src")).localCheckpoint()
-    nodes = (
+    e = pin(out_degrees(edges).repartition(F.col("src")))
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     return e, nodes
 
@@ -218,7 +217,7 @@ def _propagate(
     at ``start`` and updated as ``teleport + (damping_pct · Σ_{u→v}
     r(u) DIV deg(u)) DIV 100``; both mass columns are evaluated over
     ``base``.  Each iteration is one ranks⋈edges equi-join on ``src``
-    plus one keyed agg, state checkpointed per iteration."""
+    plus one keyed agg, state pinned per iteration."""
     ranks = base.select("node", start.alias(col))
     for _ in range(n_iter):
         contribs = (
@@ -230,7 +229,7 @@ def _propagate(
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
+        ranks = pin(
             base.join(contribs, "node", "left")
             .select(
                 "node",
@@ -241,7 +240,6 @@ def _propagate(
                     )
                 ).cast("long").alias(col),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -303,9 +301,9 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
 
     Scale shape (pagerank discipline): the self-loop-free distinct
     edge table is materialized TWICE, hash-partitioned by src and by
-    dst (eager localCheckpoint), so each half-step's equi-join reuses
+    dst (``pin``), so each half-step's equi-join reuses
     a co-located build side instead of re-shuffling edges every
-    iteration; score state is checkpointed per iteration to bound
+    iteration; score state is pinned per iteration to bound
     lineage.  Each half-step is one keyed agg (map-side combined,
     hub-skew absorbed) plus one scalar max.
 
@@ -316,19 +314,18 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    e_src = e0.repartition(F.col("src")).localCheckpoint()
-    e_dst = e_src.repartition(F.col("dst")).localCheckpoint()
-    nodes = (
+    e_src = pin(e0.repartition(F.col("src")))
+    e_dst = pin(e_src.repartition(F.col("dst")))
+    nodes = pin(
         e_src.select(F.col("src").alias("node"))
         .unionByName(e_src.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     hub = nodes.select("node", F.lit(START_MICRO).alias("hub_micro"))
 
     def _norm(raw: DataFrame, col: str) -> DataFrame:
         mx = raw.agg(F.max("raw").alias("mx"))
-        return (
+        return pin(
             nodes.join(raw, "node", "left")
             .crossJoin(F.broadcast(mx))
             .select(
@@ -337,7 +334,6 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
                     "(coalesce(raw, 0) * 1000000) div greatest(mx, 1)"
                 ).cast("long").alias(col),
             )
-            .localCheckpoint()
         )
 
     auth = None
@@ -382,9 +378,9 @@ def trustrank(
     weighted instead of uniform.
 
     Scale shape is pagerank's verbatim: degree-annotated edges hash-
-    partitioned on src and materialized once (eager localCheckpoint),
-    each iteration one ranks-side equi-join plus one keyed agg, state
-    checkpointed per iteration.  ``seeds`` (one ``node`` column) is a
+    partitioned on src and pinned once (``pin``), each iteration one
+    ranks-side equi-join plus one keyed agg, state pinned per
+    iteration.  ``seeds`` (one ``node`` column) is a
     curated list — thousands of rows at any corpus size — and joins by
     BROADCAST.
 
@@ -392,7 +388,7 @@ def trustrank(
     """
     e, nodes = _rank_graph(edges)
     teleport_pct = 100 - damping_pct
-    base = nodes.join(
+    base = pin(nodes.join(
         F.broadcast(seeds.select("node").distinct()
                     .withColumn("__seed", F.lit(1))),
         "node", "left",
@@ -403,7 +399,7 @@ def trustrank(
         ).cast("long").alias("teleport_micro"),
         (F.coalesce(F.col("__seed"), F.lit(0)) * F.lit(seed_micro))
         .cast("long").alias("t0"),
-    ).localCheckpoint()
+    ))
     return _propagate(
         e, base, F.col("t0"), F.col("teleport_micro"), "trust_micro",
         n_iter, damping_pct,
@@ -622,19 +618,18 @@ def seed_distances(
     distributed iteration hash-matches the unrolled-CTE oracle.
 
     Scale shape: the edge table is degree-free (no prep beyond one
-    repartition+checkpoint on src); each round is ONE keyed equi-join
+    repartition+pin on src); each round is ONE keyed equi-join
     state⋈edges plus ONE min-aggregate — the Pregel step pagerank and
     the components iteration already use, lineage bounded per round by
-    localCheckpoint.  State size is monotone in reached nodes only,
+    ``pin``.  State size is monotone in reached nodes only,
     so early rounds are seed-sized, not graph-sized — the fan-out a
     real frontier has.
     """
-    e = (
+    e = pin(
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .repartition(F.col("src"))
-        .localCheckpoint()
     )
     state = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
@@ -648,10 +643,9 @@ def seed_distances(
                 (F.col("dist") + F.lit(1)).alias("dist"),
             )
         )
-        state = (
+        state = pin(
             state.unionByName(contribs)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
     return state.select("node", F.col("dist").cast("long").alias("depth"))

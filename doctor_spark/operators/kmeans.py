@@ -33,6 +33,7 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 
 from ..micro import MICRO
+from ..session import pin
 
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -40,13 +41,10 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         F.col(vec_col).cast("array<double>"),
         lambda x: F.floor(x * MICRO + F.lit(0.5)).cast("long"),
     )
-    # eager checkpoint: quantize exactly once (Catalyst would otherwise
+    # pinned: quantize exactly once (Catalyst would otherwise
     # re-evaluate the transform under every iteration's plan — the
     # semdedup lesson, similarity.py)
-    return (
-        df.select(F.col(id_col).alias("id"), qv.alias("qv"))
-        .localCheckpoint(eager=True)
-    )
+    return pin(df.select(F.col(id_col).alias("id"), qv.alias("qv")))
 
 
 def _assign(q: DataFrame, centroids: list[list[int]]) -> DataFrame:

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..arrow import row_udf
 from ..micro import MICRO, log10_ratio, micro, micro_udf
+from ..session import pin
 from .dedup import _java_ws_tokens
 
 
@@ -164,15 +165,15 @@ def train_ngram_lm(
         .groupBy("ord", "gh", "ctx")
         .agg(F.count("*").alias("c"))
     )
-    # materialize the counts ONCE: they are referenced by the N
+    # pin the counts ONCE: they are referenced by the N
     # aggregate, the unigram level and both sides of every denominator
     # join, and downstream by one broadcast build per order — without
     # this the reference corpus would be re-tokenized for each of those
     # subtrees (AQE's exchange reuse does not rescue plans that fork
-    # above the exchange).  localCheckpoint also truncates the Arrow-UDF
+    # above the exchange).  The pin also truncates the Arrow-UDF
     # lineage.  Counts are model-table-sized (the reference corpus in a
     # CCNet recipe is the small curated side, not the crawl).
-    counts = counts.localCheckpoint(eager=True)
+    counts = pin(counts)
     n_tokens = (
         counts.where(F.col("ord") == 1)
         .agg(F.sum("c").alias("n"))

@@ -46,10 +46,14 @@ def _meta_udf():
 def page_metadata(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """Append the six metadata fields to ``pages`` (str or binary
     ``html_col`` per the input contract).  One vectorized Arrow batch,
-    zero shuffles; undecodable/None pages get all-null fields."""
-    m = _meta_udf()(F.col(html_col))
-    return pages.select(
-        "*", *[m.getField(f).alias(f) for f in FIELDS]
+    zero shuffles; undecodable/None pages get all-null fields.  The struct
+    is one column of its own projection and the fields are read in the
+    next: the optimizer never inlines a nondeterministic producer, so the
+    kernel runs once per page, not once per field."""
+    return (
+        pages.select("*", _meta_udf()(F.col(html_col)).alias("_meta"))
+        .select("*", "_meta.*")
+        .drop("_meta")
     )
 
 
@@ -298,7 +302,7 @@ def pagination_chains(pages: DataFrame, url_col: str = "url",
     document (concatenate by ``(head_url, page_index)``).
 
     Reuses the redirect resolver's pointer doubling on the prev-link
-    edge set (⌈log₂ max_hops⌉ keyed self-joins, localCheckpoint-bounded
+    edge set (⌈log₂ max_hops⌉ keyed self-joins, pin-bounded
     lineage — operators/graph.py:91): ``head_url`` is the chain
     terminal, ``page_index`` the exact hop count; pages with no prev
     link are their own head at index 0; cycles/over-long chains (a

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.text import tokens
 from ..micro import MICRO, micro_udf
+from ..session import pin
 
 
 def _bm25_idf(n, d):
@@ -75,7 +76,7 @@ def _bm25_topk_with_stats(
 
     # Corpus size + total token count piggyback on the tf pass below as
     # an ``observe()`` aggregate (the connected-components trick): every
-    # base row streams through the checkpoint job exactly once, so a
+    # base row streams through the pin's job exactly once, so a
     # SEPARATE stats scan of the corpus — a second full tokenize pass —
     # is gone (guide §1.2: one unavoidable pass, everything measured on
     # it).  The values are exact integers and enter the score expression
@@ -102,7 +103,7 @@ def _bm25_topk_with_stats(
     # dependent on doc_id — no join to re-attach it).  The broadcast
     # semi-join prunes BEFORE the aggregation exchange — the ONE
     # corpus-sized shuffle this operator performs.
-    tf = (
+    tf = pin(
         base.select("doc_id", F.size("tk").alias("dl"),
                     F.explode("tk").alias("term"))
         .join(F.broadcast(terms), "term", "left_semi")
@@ -112,10 +113,9 @@ def _bm25_topk_with_stats(
         # an explicit materialization Spark recomputes the whole corpus
         # explode for each branch (column pruning gives the two
         # subtrees different canonical forms, so ReuseExchange cannot
-        # dedupe them).  localCheckpoint pins the query-matching tf
+        # dedupe them).  ``pin`` materializes the query-matching tf
         # rows — tiny relative to the corpus — exactly once (and that
         # one job populates the stats observation).
-        .localCheckpoint(eager=True)
     )
     try:
         st = obs.get

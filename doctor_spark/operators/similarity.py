@@ -13,6 +13,7 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve by name
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import pin
 from .hamming import band_pairs
 
 
@@ -544,18 +545,18 @@ def semdedup(
     cents = _ivf_centroids(df, n_clusters, id_col, vec_col)
     assign = _ivf_assign_udf(cents)
     # ONE assignment pass, hash-partitioned on the cluster id and
-    # materialized with an eager localCheckpoint (the ExactSubstr/LM
+    # materialized with ``pin`` (the ExactSubstr/LM
     # convention for a frame consumed by several branches).  Without it
     # Catalyst re-evaluates the Arrow kernel once per consumer and per
     # pushed null-key filter (6 evaluations observed), and exchange
     # reuse never fires because PythonUDF subtrees don't canonicalize
-    # equal.  After the checkpoint the partitioning survives in the
+    # equal.  After the pin the partitioning survives in the
     # plan, so the within-cluster self-join needs NO further exchange
     # and the small-looking side can't be broadcast (plan-pinned in
     # test_plans.py with the broadcast threshold disabled).  Contract:
     # a vector the quantizer can't place (null/ragged/zero-norm) has no
     # row in the decision table — absent means "kept, never compared".
-    clustered = (
+    clustered = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
@@ -563,7 +564,6 @@ def semdedup(
         )
         .where(F.col("cluster").isNotNull())
         .repartition(F.col("cluster"))
-        .localCheckpoint()
     )
     cos_udf = _cosine_pairs_udf(dim)
     pairs = (

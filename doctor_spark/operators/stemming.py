@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..arrow import row_udf
 from ..functions.text import tokens
 from ..kernels.porter import porter_stem
+from ..session import pin
 
 
 def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -31,15 +32,14 @@ def stem_conflation(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.col(text_col).isNotNull()
         & (F.length(F.trim(F.col(text_col))) > 0)
     ).select(F.explode(tokens(F.col(text_col))).alias("term"))
-    # vocab is materialized (it is the SMALL side — distinct terms),
+    # vocab is pinned (it is the SMALL side — distinct terms),
     # so the final join re-scans the corpus exactly once for the token
     # stream instead of re-exploding it a second time under the vocab
     # branch; the stemmer runs once per distinct term here and never
     # again.
-    vocab = (
+    vocab = pin(
         toks.distinct()
         .select("term", row_udf(porter_stem, "string")(F.col("term")).alias("stem"))
-        .localCheckpoint(eager=True)
     )
     return (
         toks.join(vocab, "term")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import pages_dataframe
 from .operators.classify import skew_repartition, with_classification
+from .session import get_spark, pin
 
 _LOG = logging.getLogger("doctor_spark.pipeline")
 from .operators.extract import extract_operator
@@ -110,7 +111,7 @@ def resume_done_urls(
       url; an in-flight footer-less file from a crashed run is skipped
       (corruption-tolerant scope) rather than failing resume.
 
-    The url set is localCheckpoint-materialized inside the corruption-
+    The url set is pinned (``session.pin``) inside the corruption-
     tolerant scope so the tolerant conf never applies to input scans;
     after pruning its size is proportional to one crawl window.
 
@@ -155,7 +156,7 @@ def resume_done_urls(
         # in-flight debris; if ALL files were debris, schema inference
         # already raised UNABLE_TO_INFER_SCHEMA and was handled as fresh
         # start.  A failure here is a real job error — propagate it.
-        return done.select("url").localCheckpoint(eager=True)
+        return pin(done.select("url"))
 
 
 def run_extraction_pipeline(
@@ -299,7 +300,7 @@ def run_extraction_pipeline(
     # metrics).
     with _tolerate_own_output_corruption(spark):
         results = spark.read.parquet(results_path)
-        fine = (
+        fine = pin(
             results.groupBy("run_id", "extension", "partition_id")
             .agg(
                 F.count("*").alias("n_docs"),
@@ -311,7 +312,6 @@ def run_extraction_pipeline(
                 F.min("warc_ts").alias("min_ts"),
                 F.max("warc_ts").alias("max_ts"),
             )
-            .localCheckpoint(eager=True)
         )
         metrics = fine.groupBy("run_id", "extension").agg(
             F.sum("n_docs").alias("n_docs"),
@@ -368,17 +368,15 @@ def verify_extraction(
         F.length(c).alias("len"), F.md5(c.cast("binary")).alias("md5")
     )
     with _tolerate_own_output_corruption(spark):
-        res_digest = (
+        res_digest = pin(
             spark.read.parquet(results_path)
             .select("url", digest(F.col("content")).alias("d"))
-            .localCheckpoint(eager=True)
         )
     gold = pages.select("url", digest(F.col("text")).alias("e"))
-    suspects = (
+    suspects = pin(
         res_digest.join(gold, "url")
         .where(~F.col("d").eqNullSafe(F.col("e")))
         .select("url")
-        .localCheckpoint(eager=True)
     )
     n_suspects = suspects.count()
     if n_suspects == 0:
@@ -422,8 +420,6 @@ def main() -> None:
                          "pressure; costs a shuffle).  Default: ceil(T/D) "
                          "behind the extraction shuffle, off without it")
     args = ap.parse_args()
-
-    from .session import get_spark
 
     spark = get_spark("doctor_spark.pipeline", cores=args.cores)
     if args.corpus and args.corpus.startswith("synth:"):

@@ -16,13 +16,13 @@ from doctor_spark.queries import _docs, _present, query
 _PR_EDGE_GENS = ((37, 11), (101, 7), (193, 3))
 
 
-def _affine_edges(
+def _affine_links(
     spark: SparkSession, sf_dir: str, gens
 ) -> tuple[DataFrame, DataFrame]:
-    """``(docs, edges)``: the ``doc_id`` column and the deterministic
-    link graph ``(dst, src)`` with one edge ``src → (src·m + c) mod n``
-    per generator ``(m, c)``, kept where the target is a document (n =
-    max doc_id + 1).  The oracles build the same graph in SQL."""
+    """``(docs, links)``: the ``doc_id`` column and the deterministic
+    link graph ``(src, dst)`` with one edge ``src → (src·m + c) mod n``
+    per generator ``(m, c)`` (n = max doc_id + 1), whether or not the
+    target is a document.  The oracles build the same graph in SQL."""
     docs = _docs(spark, sf_dir).select("doc_id")
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     ids = docs.select(F.col("doc_id").alias("src"))
@@ -33,8 +33,16 @@ def _affine_edges(
         )
         for m, c in gens
     ]
-    edges = reduce(DataFrame.unionByName, parts)
-    return docs, edges.join(docs.select(F.col("doc_id").alias("dst")), "dst")
+    return docs, reduce(DataFrame.unionByName, parts)
+
+
+def _affine_edges(
+    spark: SparkSession, sf_dir: str, gens
+) -> tuple[DataFrame, DataFrame]:
+    """``(docs, edges)``: :func:`_affine_links` kept where the target is
+    a document, as ``(dst, src)``."""
+    docs, links = _affine_links(spark, sf_dir, gens)
+    return docs, links.join(docs.select(F.col("doc_id").alias("dst")), "dst")
 
 
 def _pagerank_sql(n_iter: int = 4) -> str:
@@ -267,7 +275,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization via the truncating DIV both engines share) over a
     deterministic affine link graph on doc_ids — the query-independent
     hub/authority table webgraph toolkits ship next to PageRank.  The
-    ITERATIVE distributed operator (edge table checkpointed twice,
+    ITERATIVE distributed operator (edge table pinned twice,
     partitioned by src and by dst, so per-iteration joins never
     re-shuffle edges) is hash-checked against a 3-iteration unrolled
     CTE oracle."""
@@ -564,7 +572,7 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     url mapped to its terminal target and exact hop count within the
     16-hop browser budget, cycles and over-long chains marked
     unresolved.  Pointer doubling — ⌈log₂ 16⌉ = 4 keyed self-joins, not
-    16 per-hop iterations — with checkpoint-bounded lineage; the
+    16 per-hop iterations — with pin-bounded lineage; the
     oracle walks the same chains with a hop-bounded recursive CTE.  Plain
     ``_docs`` scan: the query runs no Python and every doubling job would
     re-pay a spread exchange (measured 0.657× with it)."""
@@ -615,24 +623,14 @@ def q_host_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregation before the exchange."""
     from doctor_spark.operators.graph import degree_histogram
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    ids = docs.select(F.col("doc_id").alias("src"))
-    parts = [
-        ids.select(
-            "src",
-            ((F.col("src") * F.lit(m) + F.lit(c)) % F.lit(n)).alias("dst"),
-        )
-        for m, c in _PR_EDGE_GENS
-    ]
+    docs, links = _affine_links(spark, sf_dir, _PR_EDGE_GENS)
     # hub term: every node also links to one of 50 hubs, so the in-degree
     # side carries the power-law-style mass concentration a real webgraph
     # has (the affine generators alone are permutation-like — uniform)
-    parts.append(ids.select("src", (F.col("src") % 50).alias("dst")))
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    h = degree_histogram(edges)
+    hubs = docs.select(
+        F.col("doc_id").alias("src"), (F.col("doc_id") % 50).alias("dst")
+    )
+    h = degree_histogram(links.unionByName(hubs))
     return h.select(
         "side",
         F.col("deg").cast("bigint").alias("deg"),

@@ -246,7 +246,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index artifact: four constant queries against every
     document, top-10 each.  The corpus-sized token stream is pruned by
     a BROADCAST semi-join against the query vocabulary BEFORE the one
-    real shuffle (the (doc, term) tf aggregation, checkpoint-
+    real shuffle (the (doc, term) tf aggregation,
     pinned so the df count reuses it instead of re-exploding the
     corpus); idf is micro-quantized int64 immediately after the only
     ``ln``, and per-term contributions floor to int64 micro BEFORE the

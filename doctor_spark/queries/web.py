@@ -1953,15 +1953,21 @@ def q_wat_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0"),
         F.lit("T00:00:00Z"),
     )
-    title = _meta_udf()(F.col("html")).getField("title")
-    n_links = F.size(_hrefs_udf()(F.col("html")))
+    # both kernels' results are columns of one projection: the optimizer
+    # never inlines the nondeterministic metadata UDF into rec's two
+    # references, so each kernel runs once per page, in one Python node
+    pages = pages.select(
+        "*",
+        _meta_udf()(F.col("html")).getField("title").alias("title"),
+        F.size(_hrefs_udf()(F.col("html"))).alias("n_links"),
+    )
     payload = F.concat(
         F.lit('{"Envelope":{"WARC-Header-Metadata":{"WARC-Target-URI":"'),
         url,
         F.lit('"},"Payload-Metadata":{"Title":"'),
-        title,
+        F.col("title"),
         F.lit('","Outlinks":'),
-        n_links.cast("string"),
+        F.col("n_links").cast("string"),
         F.lit(',"Actual-Content-Length":"'),
         F.octet_length(F.col("text")).cast("string"),
         F.lit('","Text-Digest":"md5:'),

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and ``pin``, the
+one way this package materializes a frame.
 
 Local mode stands in for the multi-executor cluster the pipeline targets
 (BASELINE.json: N vs 4N executors); every knob here is the one you would
@@ -10,7 +11,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -67,3 +68,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage: the one pin for a frame
+    that several branches or the next iteration re-read.
+
+    Without a checkpoint directory (local mode, the tests, perfbench) it
+    is ``localCheckpoint``: the blocks stay on the executors that computed
+    them and die with them, so an action after a lost executor fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.  A cluster that sets
+    ``spark.checkpoint.dir`` gets a reliable ``checkpoint`` into it, which
+    survives the loss.  Either way one eager action writes the pin (an
+    ``observe()`` on ``df`` fills from it) and ``df``'s partitioning
+    carries over to the plans that read it."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)

@@ -1,8 +1,8 @@
 """The Arrow row boundary (``doctor_spark.arrow``): the two adapters'
 contract, the micro-unit quantizer's batch UDF (``doctor_spark.micro``),
-the allowlist of the Python sites that stay on pandas, and the
-no-duplicate-Python-UDF invariant of the queries that used to clone or
-could share one."""
+the allowlist of the Python sites that stay on pandas (and the one
+checkpoint site, ``session.pin``), and the no-duplicate-Python-UDF
+invariant of the queries that used to clone or could share one."""
 
 import ast
 import math
@@ -189,10 +189,10 @@ PANDAS_SITES = {
         "numpy matmul over the whole batch",
 }
 
-_PANDAS_APIS = {"pandas_udf", "mapInPandas", "applyInPandas"}
 
-
-def _pandas_sites() -> list[tuple[str, str]]:
+def _call_sites(apis: set[str]) -> list[tuple[str, str]]:
+    """(file, enclosing scope) of every call to a function or method named
+    in ``apis`` in the package and the entry module."""
     files = sorted((ROOT / "doctor_spark").rglob("*.py")) + [ROOT / "__spark_entry__.py"]
     sites = []
     for path in files:
@@ -206,7 +206,7 @@ def _pandas_sites() -> list[tuple[str, str]]:
                 if isinstance(ch, ast.Call):
                     fn = ch.func
                     name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
-                    if name in _PANDAS_APIS:
+                    if name in apis:
                         sites.append((rel, ".".join(scope) or "<module>"))
                 walk(ch, scope)
 
@@ -215,7 +215,7 @@ def _pandas_sites() -> list[tuple[str, str]]:
 
 
 def test_pandas_sites_are_exactly_the_allowlist():
-    sites = _pandas_sites()
+    sites = _call_sites({"pandas_udf", "mapInPandas", "applyInPandas"})
     assert len(sites) == len(set(sites)) == 11, Counter(sites)
     assert set(sites) == set(PANDAS_SITES), (
         f"new pandas sites (move row-wise kernels to doctor_spark.arrow): "
@@ -223,6 +223,15 @@ def test_pandas_sites_are_exactly_the_allowlist():
         f"gone from the code: {sorted(set(PANDAS_SITES) - set(sites))}"
     )
     assert all(reason.strip() for reason in PANDAS_SITES.values())
+
+
+def test_checkpoint_is_called_only_in_pin():
+    # doctor_spark.session.pin picks a local or a reliable checkpoint;
+    # every other site materializes through it (tests/test_pin.py)
+    assert sorted(_call_sites({"localCheckpoint", "checkpoint"})) == [
+        ("doctor_spark/session.py", "pin"),
+        ("doctor_spark/session.py", "pin"),
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -247,9 +256,12 @@ def _udf_calls(udf_list: str) -> list[str]:
 
 def _final_plan(df) -> str:
     """The executed AQE plan's final section (its string also carries the
-    initial plan, which would list every UDF a second time)."""
+    initial plan, which would list every UDF a second time); a plan with
+    no exchange is not adaptive and is returned whole."""
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
+    if "AdaptiveSparkPlan" not in plan:
+        return plan
     assert "isFinalPlan=true" in plan, plan
     return plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
 
@@ -284,6 +296,11 @@ PLANNED_EVALS = {
         "mix_resample",
         "dsir_select",
         "ccnet_perplexity",
+        # a chunk table feeding two aggregates; a nondeterministic struct
+        # UDF read field by field
+        "cdc_dedup",
+        "page_metadata",
+        "wat_export",
     ],
 )
 def test_no_python_udf_evaluated_twice(spark, name):
