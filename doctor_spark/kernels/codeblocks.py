@@ -28,7 +28,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 _LANG_CLASS = re.compile(r"(?:^|\s)(?:language|lang)-([\w#+.-]+)", re.IGNORECASE)
 _BLOCK_CAP = 1 << 20  # one hostile unclosed <pre> stays O(page)
@@ -91,14 +91,10 @@ def extract_code_blocks(
     html: str | bytes | None,
 ) -> list[tuple[str | None, str]]:
     """Page → ``[(lang_hint, verbatim_text), …]`` in document order.
-    Undecodable input yields ``[]``; never raises."""
+    None yields ``[]``; never raises."""
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _CodeParser()
     parser.feed(html)
     parser.close()

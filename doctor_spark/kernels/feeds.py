@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 _WS = re.compile(r"\s+")
 
@@ -123,15 +123,11 @@ class _FeedParser(HTMLParser):
 def parse_feed(raw: str | bytes | None) -> tuple[str | None, list[dict]]:
     """Feed document → ``(kind, entries)`` with kind ``rss`` / ``atom``
     / ``None`` and entries ``[{title, link, published}, …]`` in document
-    order.  Entries with neither title nor link are skipped; anything
-    undecodable or non-feed yields ``(None, [])`` — never raises."""
+    order.  Entries with neither title nor link are skipped; None or a
+    non-feed yields ``(None, [])`` — never raises."""
+    raw = as_text(raw)
     if raw is None:
         return None, []
-    if isinstance(raw, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(raw))
-        if decoded is None:
-            return None, []
-        raw = decoded[0]
     parser = _FeedParser()
     parser.feed(raw)
     parser.close()

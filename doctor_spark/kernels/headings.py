@@ -22,9 +22,8 @@ expected outlines as literals):
 - headings are capped at :data:`MAX_HEADINGS` per page (counted, not
   silent: the return carries ``truncated``);
 - bytes decode via the shared reference ladder
-  (:func:`.html.decode_html_ladder`); undecodable / ``None`` pages
-  yield ``([], False)`` — one corrupt payload must produce zero rows,
-  not kill a Spark task.
+  (:func:`.textfile.as_text`); ``None`` pages yield ``([], False)`` —
+  one corrupt payload must produce zero rows, not kill a Spark task.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .html import decode_html_ladder
+from .textfile import as_text
 
 _WS_RUN = re.compile(r"\s+")
 _H_TAGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
@@ -90,13 +89,9 @@ def extract_headings(
 ) -> tuple[list[tuple[int, int, int, str]], bool]:
     """Page → ``([(seq, level, parent, text), ...], truncated)`` per the
     module spec.  Never raises on garbage input."""
+    html = as_text(html)
     if html is None:
         return [], False
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return [], False
-        html = decoded[0]
     parser = _OutlineParser()
     try:
         parser.feed(html)

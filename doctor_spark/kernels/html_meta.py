@@ -23,7 +23,7 @@ import re
 from html import unescape
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 _WS_RUN = re.compile(r"\s+")
 
@@ -199,18 +199,14 @@ def extract_page_metadata(html: str | bytes | None) -> dict[str, str | None]:
       (both are first-wins on the same field).
 
     bytes decode via the reference encoding ladder
-    (utf-8 → ISO8859 → cp1252 → latin-1); an undecodable page yields
-    the all-``None`` record rather than raising — one corrupt payload
-    must produce a null row, not kill a Spark task.
+    (utf-8 → ISO8859 → cp1252 → latin-1); a None page yields the
+    all-``None`` record rather than raising — one corrupt payload must
+    produce a null row, not kill a Spark task.
     """
     empty: dict[str, str | None] = {f: None for f in FIELDS}
+    html = as_text(html)
     if html is None:
         return empty
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return empty
-        html = decoded[0]
     parser = _MetaParser()
     try:
         parser.feed(html)
@@ -251,18 +247,14 @@ def extract_robots_flags(html: str | bytes | None) -> tuple[bool, bool]:
       tags applies — ``index`` in a later tag never clears an earlier
       ``noindex``.
 
-    bytes decode via the reference encoding ladder; an undecodable or
-    None page yields ``(False, False)`` — unknown pages are admitted by
+    bytes decode via the reference encoding ladder; a None page
+    yields ``(False, False)`` — unknown pages are admitted by
     the META gate (robots.txt and quality gates have their own say),
     and a corrupt payload must not kill a Spark task.
     """
+    html = as_text(html)
     if html is None:
         return (False, False)
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return (False, False)
-        html = decoded[0]
     parser = _MetaParser()
     try:
         parser.feed(html)

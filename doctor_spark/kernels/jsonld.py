@@ -34,7 +34,7 @@ from __future__ import annotations
 import json
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 # schema.org types accepted as "the article node", most-specific first
 # is irrelevant — matching is by document order of nodes, not by type
@@ -140,21 +140,14 @@ def extract_structured_data(html: str | bytes | None) -> dict:
     ``ld_type / headline / date_published / author_name /
     publisher_name`` from the first article-like JSON-LD node, plus
     ``n_blocks`` (ld+json scripts seen), ``n_bad`` (JSON parse
-    failures), ``n_nodes`` (candidate nodes scanned).  Undecodable or
-    None pages: all-null fields with zero counts — never raises.
+    failures), ``n_nodes`` (candidate nodes scanned).  None pages:
+    all-null fields with zero counts — never raises.
     """
     rec: dict = {f: None for f in FIELDS}
     rec.update(n_blocks=0, n_bad=0, n_nodes=0)
-    if html is None:
+    text = as_text(html)
+    if text is None:
         return rec
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return rec
-        text = decoded[0]
-    else:
-        text = html
-
     coll = _LdScriptCollector()
     try:
         coll.feed(text)

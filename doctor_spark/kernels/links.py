@@ -18,11 +18,23 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 # WHATWG URL pre-parse strips leading/trailing C0 controls and space;
 # stripping the ASCII whitespace subset covers every form markup emits.
 _HREF_STRIP = " \t\n\r\f\x0b"
+
+
+def _admit_http(href: str | None) -> str | None:
+    """``href`` whitespace-stripped when it is an absolute http(s) URL
+    (scheme case-insensitive), else None."""
+    if href is None:
+        return None
+    href = href.strip(_HREF_STRIP)
+    scheme = href[: href.find(":") + 1].lower() if ":" in href else ""
+    if scheme in ("http:", "https:") and href[len(scheme):].startswith("//"):
+        return href
+    return None
 
 
 class _LinkParser(HTMLParser):
@@ -54,23 +66,13 @@ def extract_hrefs(html: str | bytes | None) -> list[str]:
       recovers from unclosed/overlapping tags, stray ``<`` and broken
       attributes.
     """
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _LinkParser()
     parser.feed(html)
     parser.close()
-    out: list[str] = []
-    for href in parser.hrefs:
-        href = href.strip(_HREF_STRIP)
-        scheme = href[: href.find(":") + 1].lower() if ":" in href else ""
-        if scheme in ("http:", "https:") and href[len(scheme):].startswith("//"):
-            out.append(href)
-    return out
+    return [h for h in map(_admit_http, parser.hrefs) if h is not None]
 
 
 class _AnchorParser(HTMLParser):
@@ -133,21 +135,16 @@ def extract_anchors(html: str | bytes | None) -> list[tuple[str, str]]:
     ``''`` (image-only anchors) — empty text is the aggregation stage's
     call to drop, not the extractor's.
     """
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _AnchorParser()
     parser.feed(html)
     parser.close()
     out: list[tuple[str, str]] = []
     for href, text in parser.anchors:
-        href = href.strip(_HREF_STRIP)
-        scheme = href[: href.find(":") + 1].lower() if ":" in href else ""
-        if scheme in ("http:", "https:") and href[len(scheme):].startswith("//"):
+        href = _admit_http(href)
+        if href is not None:
             out.append((href, _WS_RUN.sub(" ", text).strip()))
     return out
 
@@ -190,20 +187,15 @@ def extract_image_alts(html: str | bytes | None) -> list[tuple[str, str]]:
     only ``srcset`` uses the first candidate URL.  Tag soup never
     raises; bytes go through the encoding ladder.
     """
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _ImgParser()
     parser.feed(html)
     parser.close()
     out: list[tuple[str, str]] = []
     for src, alt in parser.images:
-        scheme = src[: src.find(":") + 1].lower() if ":" in src else ""
-        if scheme in ("http:", "https:") and src[len(scheme):].startswith("//"):
+        if _admit_http(src) is not None:
             out.append((src, _WS_RUN.sub(" ", alt).strip()))
     return out
 
@@ -244,22 +236,16 @@ def extract_hreflang(html: str | bytes | None) -> list[tuple[str, str]]:
     are not ASCII-alnum-with-hyphens are dropped.  Duplicates kept —
     cluster semantics are the operator's job.
     """
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _HreflangParser()
     parser.feed(html)
     parser.close()
     out: list[tuple[str, str]] = []
     for lang, href in parser.alts:
-        href = href.strip(_HREF_STRIP)
-        scheme = href[: href.find(":") + 1].lower() if ":" in href else ""
-        if not (scheme in ("http:", "https:")
-                and href[len(scheme):].startswith("//")):
+        href = _admit_http(href)
+        if href is None:
             continue
         tag = lang.strip().lower()
         if tag != "x-default":
@@ -300,16 +286,6 @@ class _RelPaginationParser(HTMLParser):
             self.prev_url = href
 
 
-def _admit_http(href: str | None) -> str | None:
-    if href is None:
-        return None
-    href = href.strip(_HREF_STRIP)
-    scheme = href[: href.find(":") + 1].lower() if ":" in href else ""
-    if scheme in ("http:", "https:") and href[len(scheme):].startswith("//"):
-        return href
-    return None
-
-
 def extract_rel_pagination(
     html: str | bytes | None,
 ) -> tuple[str | None, str | None]:
@@ -317,15 +293,11 @@ def extract_rel_pagination(
     multi-page-article stitching signal (a paginated article is ONE
     training document; the chain these links form is what reassembles
     it).  First-wins per direction; same absolute-http(s) admission as
-    :func:`extract_hrefs`; tag soup and undecodable bytes yield
-    ``(None, None)``, never an exception."""
+    :func:`extract_hrefs`; tag soup and None yield ``(None, None)``,
+    never an exception."""
+    html = as_text(html)
     if html is None:
         return (None, None)
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return (None, None)
-        html = decoded[0]
     p = _RelPaginationParser()
     p.feed(html)
     p.close()

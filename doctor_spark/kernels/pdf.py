@@ -45,7 +45,7 @@ import re
 import zlib
 from array import array
 from dataclasses import dataclass, field
-from typing import Callable, NamedTuple
+from typing import Callable
 
 import numpy as np
 
@@ -1081,29 +1081,16 @@ def _mat_translate(m, tx, ty):
     return (a, b, c, d, tx * a + ty * c + e, tx * b + ty * d + f)
 
 
-class Char(NamedTuple):
-    """One positioned glyph in device space (kept for API compatibility;
-    the hot path now stores glyphs columnar in :class:`CharArray`)."""
-
-    text: str
-    x0: float
-    x1: float
-    y: float            # device baseline, bottom-up
-    size: float
-    skewed: bool
-    fontname: str
-
-
 class CharArray:
     """Columnar per-page glyph store (real-PDF layout path).
 
-    Replaces ``list[Char]``: one flat list of glyph texts plus float64
-    numpy arrays of device-space positions.  Built by
+    One flat list of glyph texts plus float64 numpy arrays of
+    device-space positions, in place of one tuple per glyph.  Built by
     :class:`_CharCollector`, which defers ALL position arithmetic out of
     the interpreter's per-glyph loop into one vectorized pass per page —
     elementwise numpy ops in the same IEEE order as the old scalar chain,
     so extracted text stays byte-identical.  Per round-3 profiling the
-    per-glyph ``Char`` construction alone was ~7% of wall."""
+    per-glyph tuple construction alone was ~7% of wall."""
 
     __slots__ = ("text", "x0", "x1", "y", "size", "skewed", "_isspace")
 

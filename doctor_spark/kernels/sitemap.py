@@ -22,7 +22,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 _WS = re.compile(r"\s+")
 
@@ -88,16 +88,12 @@ def parse_sitemap(raw: str | bytes | None) -> tuple[str | None, list[dict]]:
       entity-decoded, CDATA-unwrapped, whitespace-collapsed.
     - Plain-text sitemaps (no recognized root element, ≥1 line starting
       with ``http``) → ``("text", …)`` with one entry per http(s) line.
-    - Anything else (undecodable, empty, non-sitemap XML/HTML) →
+    - Anything else (None, empty, non-sitemap XML/HTML) →
       ``(None, [])`` — never raises.
     """
+    raw = as_text(raw)
     if raw is None:
         return None, []
-    if isinstance(raw, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(raw))
-        if decoded is None:
-            return None, []
-        raw = decoded[0]
     parser = _SitemapParser()
     parser.feed(raw)
     parser.close()

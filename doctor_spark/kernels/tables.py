@@ -33,7 +33,7 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from .textfile import decode_html_ladder
+from .textfile import as_text
 
 _WS_RUN = re.compile(r"\s+")
 
@@ -127,14 +127,10 @@ def extract_tables(html: str | bytes | None) -> list[list[list[str]]]:
     each a list of rows, each a list of cell strings.  Tables with no
     cells come back as ``[]`` (they still occupy their index — nested
     or decorative tables keep positions stable).  bytes decode via the
-    reference encoding ladder; undecodable input yields ``[]``."""
+    reference encoding ladder; None yields ``[]``."""
+    html = as_text(html)
     if html is None:
         return []
-    if isinstance(html, (bytes, bytearray)):
-        decoded = decode_html_ladder(bytes(html))
-        if decoded is None:
-            return []
-        html = decoded[0]
     parser = _TableParser()
     parser.feed(html)
     parser.close()

@@ -30,6 +30,16 @@ def decode_html_ladder(raw: bytes) -> tuple[str, str] | None:
     return None
 
 
+def as_text(page: str | bytes | bytearray | memoryview | None) -> str | None:
+    """A page payload as text, the one input door of the HTML-family
+    kernels: bytes-like decode through :func:`decode_html_ladder`, a str
+    or None passes through.  The ladder's ISO-8859-1 rung decodes any
+    byte string, so bytes always yield text."""
+    if isinstance(page, (bytes, bytearray, memoryview)):
+        return decode_html_ladder(bytes(page))[0]
+    return page
+
+
 def decode_txt(raw: bytes) -> tuple[str, str, int]:
     """(content, err, returncode) for a plain-text payload.
 

@@ -11,10 +11,11 @@ All four families from the task brief:
                     Jaccard on candidate pairs
 
 Signatures and shingles come from row-wise Arrow UDF kernels where
-the equivalent higher-order Catalyst expression would run interpreted
-(each kernel is pinned bit-identical to its expression form or to the
-DuckDB oracle); everything on the pair stream — joins, set algebra,
-rescoring — is built-in JVM expressions.
+the equivalent higher-order Catalyst expression would run interpreted;
+each kernel is pinned bit-identical to its DuckDB oracle mirror in
+:mod:`doctor_spark.queries.dedup` (SimHash also to its expression form,
+the one operator here that keeps two engines).  Everything on the pair
+stream — joins, set algebra, rescoring — is built-in JVM expressions.
 
 Scale notes: every candidate-pair generator is the keyed band self-join
 :func:`..operators.hamming.band_pairs` on a hash key (band/bucket/shingle),
@@ -90,60 +91,6 @@ def dedup_stats(
         F.count("*").alias("n_total"),
         F.countDistinct(fingerprint(F.col(text_col))).alias("n_unique"),
     )
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    seeds: tuple[str, ...] = DEFAULT_SEEDS,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """k seeded min-hashes over the ``shingle_n``-gram shingle set:
-    mh_i = min(md5(seed_i || shingle)).
-
-    Shingles (not unigram tokens) are the textbook MinHash unit: over a
-    small vocabulary every document shares most unigrams, so token-level
-    signatures collide for everything (observed: ~all-pairs candidates at
-    sf0.1).  String-min over hex digests — portable bit-for-bit to any
-    engine with md5 (the DuckDB oracle mirrors it exactly).
-
-    Documents with fewer than ``shingle_n`` tokens get NULL signatures and
-    never band-join (filtered downstream)."""
-    sh = shingles(F.col(text_col), shingle_n)
-    out = df
-    for i, seed in enumerate(seeds):
-        # closure factory: a 2-parameter lambda would be treated by
-        # F.transform as (element, index) and silently swallow the seed
-        def seeded(s):
-            return lambda t: F.md5(F.concat(F.lit(s), t))
-
-        out = out.withColumn(
-            f"mh{i}", F.array_min(F.transform(sh, seeded(seed)))
-        )
-    return out
-
-
-def minhash_band_keys(
-    df: DataFrame,
-    text_col: str = "text",
-    seeds: tuple[str, ...] = DEFAULT_SEEDS,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Adds band_0..band_{b-1}: md5 of the concatenated row hashes."""
-    out = with_minhash(df, text_col, seeds)
-    n_bands = len(seeds) // rows_per_band
-    for b in range(n_bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        # NULL signatures (sub-shingle-length docs) must yield NULL band
-        # keys: concat_ws silently drops NULLs, which would collide every
-        # short document into the shared md5('') bucket (k² false pairs)
-        out = out.withColumn(
-            f"band_{b}",
-            F.when(
-                cols[0].isNull(), F.lit(None).cast("string")
-            ).otherwise(F.md5(F.concat_ws("|", *cols).cast("binary"))),
-        )
-    return out
 
 
 def _minhash_bands_udf(seeds: tuple[str, ...], rows_per_band: int, n: int = 3):
@@ -288,11 +235,11 @@ def minhash_candidate_pairs(
     scheme (one md5 per shingle + k affine permutations; ``seeds`` is
     then ignored) — the production form for wide signatures, where the
     seeded-md5 scheme would pay k digests per shingle."""
-    # Band keys via a row-wise Arrow UDF: the pure-builtin expression
-    # (see with_minhash) is semantically identical but Catalyst evaluates
-    # nested higher-order functions interpreted (no codegen, no CSE) at
-    # ~1 ms/row; hashlib in an Arrow batch is ~100× faster and md5-of-utf8
-    # is bit-identical across Spark / Python / DuckDB, so the oracle holds.
+    # Band keys via a row-wise Arrow UDF: a pure-builtin expression would
+    # nest higher-order functions that Catalyst evaluates interpreted (no
+    # codegen, no CSE) at ~1 ms/row; hashlib in an Arrow batch is ~100×
+    # faster and md5-of-utf8 is bit-identical across Python / DuckDB, so
+    # the oracle (queries/dedup.py::_minhash_sql) holds.
     if affine_perms is not None:
         bands_udf = _minhash_bands_affine_udf(affine_perms, rows_per_band)
     else:
@@ -355,9 +302,9 @@ def with_simhash(
     signature is referenced by SEVERAL expressions (the band slices and
     the rescore of :func:`..operators.hamming.banded_hamming_pairs`, as
     :func:`simhash_near_pairs` uses it), projection collapse re-INLINES
-    the whole simhash expression into every reference (the
-    ``_shingle_structs_expr`` lesson) and the query pays ~n_bands
-    signature evaluations — there the Arrow kernel (``engine="arrow"``,
+    the whole simhash expression into every reference and the query
+    pays ~n_bands signature evaluations — there the Arrow kernel
+    (``engine="arrow"``,
     :func:`_simhash_udf`), which materializes ONCE in its ArrowEvalPython
     node, wins 1.65 s vs 1.95+ s.  The two engines give bit-identical
     signatures at 16 and 48 bits
@@ -398,8 +345,8 @@ def with_simhash(
 
 
 def _shingles_udf(n: int = 3, hashed: bool = False):
-    """Arrow-batched distinct n-gram shingles, bit-identical to the JVM
-    ``shingles()`` expression and the DuckDB oracle's list_transform.
+    """Arrow-batched distinct n-gram shingles, bit-identical to the DuckDB
+    oracle's ``list_distinct(list_transform(...))`` shingle list.
 
     Returns struct<n_sh, sh> so both the set size and the explode source
     come from ONE UDF column — separate size()/explode() references would
@@ -420,52 +367,6 @@ def _shingles_udf(n: int = 3, hashed: bool = False):
         return len(seen), list(seen)
 
     return row_udf(sh, f"struct<n_sh: int, sh: array<{'long' if hashed else 'string'}>>")
-
-
-def _shingle_structs_expr(col, n: int = 3):
-    """Pure-JVM equivalent of :func:`_hashed_shingles`: distinct n-gram
-    shingles as 60-bit md5 prefixes, packed as ``array<struct<n_sh,
-    shingle>>`` so ONE explode yields both the set size and the element
-    — no Python, no Arrow.
-
-    The naive expression form (``F.size(sh)`` + ``F.explode(sh)`` over a
-    projected ``sh``) re-inlines the whole shingling expression into BOTH
-    references when Catalyst collapses the projections — the reason the
-    Arrow kernel returns ``struct<n_sh, sh>``.  Here the distinct array
-    is bound to a higher-order LAMBDA VARIABLE instead:
-    ``transform(array(d), dd -> transform(dd, x -> struct(size(dd), x)))``
-    evaluates ``d`` exactly once per row and references the bound ``dd``
-    for free, giving the single-evaluation property in expression land.
-
-    The hash is ``conv(substring(md5(s), 1, 15), 16, 10)``, the JVM
-    form of ``int(md5_hex[:15], 16)``; n_sh counts DISTINCT HASHES (not
-    strings), so the two only differ if two distinct shingles of one
-    document collide in 60 bits."""
-    toks = tokens(col)
-
-    def elem(i):
-        return F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-
-    raw = F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), elem)
-    d = F.array_distinct(raw)
-    packed = F.flatten(
-        F.transform(
-            F.array(d),
-            lambda dd: F.transform(
-                dd,
-                lambda x: F.struct(
-                    F.size(dd).alias("n_sh"), x.alias("shingle")
-                ),
-            ),
-        )
-    )
-    return F.when(F.size(toks) >= n, packed).otherwise(
-        F.array().cast("array<struct<n_sh:int,shingle:long>>")
-    )
 
 
 def simhash_near_pairs(
@@ -656,19 +557,6 @@ def winnow_fingerprints(
     ).select("doc_id", "s.*")
 
 
-def shingles(col, n: int = 3):
-    """n-token shingle strings (higher-order expression)."""
-    toks = tokens(col)
-    return F.when(F.size(toks) < n, F.array()).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        )
-    )
-
-
 def _hashed_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
@@ -676,16 +564,15 @@ def _hashed_shingles(
     of a document, the shingle as its 60-bit md5 prefix (int64) and
     ``n_sh`` the document's distinct-shingle count.
 
-    The "hybrid" engine splits the work along the cheap/expensive seam:
-    the Arrow kernel (:func:`_shingles_udf`) emits distinct shingle
-    STRINGS (tokenize + join + dict.fromkeys — pure C string ops, no
-    hashlib), and the md5 lands in the JVM as an ordinary codegen
-    expression on the EXPLODED rows (``conv(substr(md5(s),1,15),16,10)``
-    — no higher-order lambda, so none of the ``"expr"`` interpretation
-    penalty).  The explode and the hash run in the same stage, so the
-    exchange after it carries 8-byte keys.  Strings are deduplicated
-    before hashing, exactly as the DuckDB oracle does (``list_distinct``
-    on shingle text, hash after)."""
+    The work splits along the cheap/expensive seam: the Arrow kernel
+    (:func:`_shingles_udf`) emits distinct shingle STRINGS (tokenize +
+    join + dict.fromkeys — pure C string ops, no hashlib), and the md5
+    lands in the JVM as an ordinary codegen expression on the EXPLODED
+    rows (``conv(substr(md5(s),1,15),16,10)`` — no higher-order lambda,
+    so no interpreted evaluation).  The explode and the hash run in the
+    same stage, so the exchange after it carries 8-byte keys.  Strings
+    are deduplicated before hashing, exactly as the DuckDB oracle does
+    (``list_distinct`` on shingle text, hash after)."""
     return df.select(
         F.col(id_col).alias("id"), _shingles_udf(n)(F.col(text_col)).alias("r")
     ).select(
@@ -732,7 +619,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    engine: str = "hybrid",
 ) -> DataFrame:
     """Exact n-gram Jaccard over shingle-sharing candidate pairs.
 
@@ -763,36 +649,17 @@ def ngram_jaccard_pairs(
     applies the identical hash, keeping the contract exact by
     construction.
 
-    ``engine`` selects the shingling kernel:
+    Shingling is :func:`_hashed_shingles`: Arrow emits the shingle
+    strings, the JVM hashes them.  It replaced an all-Python kernel that
+    hashed with hashlib in round 5: measured at sf1 synth (50k docs,
+    interleaved min-of-3) the shingle map stage was 2.0× faster (3.41 s
+    vs 6.85 s).  The pairs are pinned to the DuckDB oracle
+    (``queries/dedup.py::_jaccard_sql``), which tokenizes and hashes
+    the same way (tests/test_plans.py::test_ngram_jaccard_matches_oracle).
 
-    - ``"hybrid"`` (default, :func:`_hashed_shingles`): Arrow emits the
-      shingle strings, the JVM hashes them.  It replaced an all-Python
-      kernel that hashed with hashlib in round 5: measured at sf1 synth
-      (50k docs, interleaved min-of-3, BENCH/ngram_engine_ab.py) the
-      shingle map stage was 2.0× faster (3.41 s vs 6.85 s).
-    - ``"expr"`` (:func:`_shingle_structs_expr`): pure Catalyst
-      higher-order expressions, no Python worker in the plan.  It is a
-      cross-engine differential validator, not a performance option:
-      Catalyst evaluates higher-order lambdas INTERPRETED, and round 5
-      measured 7.7-21.8 s against 2.0-2.9 s for the Arrow kernel at
-      sf0.1 (BENCH/BASELINE.md).
-
-    Both engines give the same pairs
-    (tests/test_plans.py::test_ngram_shingle_engines_bit_identical).
     Plan shape: one exchange on the shingle hash, reused by the DF-cap
     window and the self-join (:func:`_shingle_overlaps`)."""
-    if engine == "hybrid":
-        shingled = _hashed_shingles(df, text_col, id_col, n)
-    elif engine == "expr":
-        shingled = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(_shingle_structs_expr(F.col(text_col), n)).alias("r"),
-        ).select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.col("r.shingle").alias("shingle"),
-        )
-    else:
-        raise ValueError(f"unknown shingle engine {engine!r}")
+    shingled = _hashed_shingles(df, text_col, id_col, n)
     union = F.col("n_sh_a") + F.col("n_sh_b") - F.col("inter")
     return (
         _shingle_overlaps(shingled, max_shingle_df)
@@ -957,8 +824,8 @@ def decontaminate(
     side is small in practice, so AQE broadcasts it when that is cheaper,
     but nothing forces a broadcast (corpus-scale benchmark sets still
     work as a shuffled join).  Shingling runs in the Arrow batch kernel
-    (the higher-order ``shingles()`` expression is Catalyst-interpreted
-    at ~1 ms/row — measured 5.3 s → 1.3 s at sf0.1 for this query)."""
+    (a higher-order Catalyst shingle expression runs interpreted at
+    ~1 ms/row — measured 5.3 s → 1.3 s at sf0.1 for this query)."""
     sh_udf = _shingles_udf(n)
 
     def grams(df, src_id, out_id):

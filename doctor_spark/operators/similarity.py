@@ -81,41 +81,16 @@ def _hyperplane(dim: int, plane_no: int) -> list[float]:
     return comps
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    table_no: int = 0,
-    out_col: str = "lsh_bucket",
-) -> DataFrame:
-    """Sign-random-projection bucket id: bit p = sign(v · plane_p).  Each
-    ``table_no`` uses an independent plane family (OR-amplification).
-
-    This is the EXPRESSION-form executable spec: pure Catalyst fold, used
-    to differential-test the vectorized Arrow kernel in
-    ``stacked_lsh_buckets`` (which is what production paths run — the
-    interpreted fold costs ~1 ms/row)."""
-    vec_d = F.col(vec_col).cast("array<double>")
-    bucket = F.lit(0).cast("bigint")
-    for p in range(n_planes):
-        plane = F.array(
-            *[F.lit(c) for c in _hyperplane(dim, table_no * 1000 + p)]
-        )
-        bit = F.when(_dot(vec_d, plane) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + (bit * F.lit(2 ** p)).cast("bigint")
-    return df.withColumn(out_col, bucket)
-
-
 def _lsh_buckets_udf(dim: int, n_planes: int, n_tables: int):
     """Arrow-batched bucket signatures for all OR tables at once.
 
-    Bit-identical to the sequential-fold expression AND the DuckDB
-    oracle's list_sum: the dot products accumulate vectorized over ROWS
-    but sequentially over COMPONENTS (same IEEE add order as the fold),
-    so the sign of every plane dot matches exactly.  ~100× the
-    interpreted higher-order Catalyst expression (measured 5.1 s → sub-s
-    at sf0.1; those exprs don't codegen)."""
+    Bit-identical to the DuckDB oracle's ``list_sum``
+    (``queries/similarity.py::_bucket_expr``): the dot products
+    accumulate vectorized over ROWS but sequentially over COMPONENTS
+    (the same IEEE add order as the oracle's fold), so the sign of every
+    plane dot matches exactly.  ~100× an interpreted higher-order
+    Catalyst fold (measured 5.1 s → sub-s at sf0.1; those exprs don't
+    codegen)."""
     import numpy as np
 
     planes = np.array(

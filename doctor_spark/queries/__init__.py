@@ -154,5 +154,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # must tokenize identically on both engines (caught by the adversarial
 # differential test, not by the sf tables)
 _JAVA_WS_CLASS = "[ \\t\\n\\x0b\\f\\r]"
+# DuckDB's trim() also strips U+00A0, U+2000-U+200A, U+3000 and the other
+# Unicode space separators, Spark's trim and the kernels only U+0020; no
+# text or line of the sf tables or the synthetic corpus starts or ends
+# with one (tests/test_entry_contract.py::
+# test_trim_divergence_excluded_by_construction)
 _TOKS = f"regexp_split_to_array(trim(lower(text)), '{_JAVA_WS_CLASS}+')"
 _FP = f"md5(regexp_replace(trim(lower(text)), '{_JAVA_WS_CLASS}+', ' ', 'g'))"

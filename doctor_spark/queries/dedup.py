@@ -45,10 +45,11 @@ def q_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sql(n: int = 3, n_seeds: int = 4, rows_per_band: int = 2) -> str:
-    """3-gram shingles, mirroring doctor_spark.operators.dedup.shingles();
-    parameterized over the signature width so the same generator covers
-    the 4-seed demo AND the production 128-permutation/16-band operating
-    point (Lee et al. dedup / Dolma shape)."""
+    """Seeded-md5 MinHash band pairs over distinct ``n``-gram shingles: the
+    exact mirror of ``operators/dedup.py::_minhash_bands_udf`` (same
+    Java-\\s tokens, shingle strings, ``min(md5(seed || shingle))`` and
+    per-band md5), so it is the kernel's one reference.  Parameterized
+    over the signature width (``n_seeds``, ``rows_per_band``)."""
     shingle = (
         f"list_distinct(list_transform(range(1, len({_TOKS}) - {n - 2}), "
         f"i -> array_to_string(({_TOKS})[i:i+{n - 1}], ' ')))"

@@ -62,6 +62,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # a reliable pin's files go once its frame is garbage-collected;
+        # without a checkpoint dir (local mode) there is nothing to clean
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -79,7 +82,8 @@ def pin(df: DataFrame) -> DataFrame:
     them and die with them, so an action after a lost executor fails with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.  A cluster that sets
     ``spark.checkpoint.dir`` gets a reliable ``checkpoint`` into it, which
-    survives the loss.  Either way one eager action writes the pin (an
+    survives the loss, and its files are deleted once the pinned frame
+    is garbage-collected.  Either way one eager action writes the pin (an
     ``observe()`` on ``df`` fills from it) and ``df``'s partitioning
     carries over to the plans that read it."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:

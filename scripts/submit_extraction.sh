@@ -2,7 +2,12 @@
 # Cluster launch per the north rule: spark-submit --py-files on a
 # multi-executor cluster at N and 4N executors.
 #
-#   ./scripts/submit_extraction.sh <pages_parquet_or_warc_glob> <out_dir> [num_executors]
+#   ./scripts/submit_extraction.sh <pages_parquet | synth:N> <out_dir> [num_executors]
+#
+# The corpus is a pages parquet path (a `pages_dataframe` schema) or
+# `synth:N` for N generated pages; `doctor_spark.pipeline` reads nothing
+# else (turn WARC files into a pages parquet with
+# `doctor_spark.sources.warc.read_warc_pages` first).
 #
 # In this sandbox there is no cluster manager, so the same launcher runs
 # against local[N] (set MASTER=local[8] / local[32]); on a real cluster set
@@ -10,7 +15,7 @@
 set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-CORPUS="${1:?pages parquet path}"
+CORPUS="${1:?pages parquet path or synth:N}"
 OUT="${2:?output dir}"
 NUM_EXECUTORS="${3:-8}"
 MASTER="${MASTER:-local[${NUM_EXECUTORS}]}"

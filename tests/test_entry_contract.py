@@ -224,6 +224,55 @@ def test_lowercase_divergence_excluded_by_construction(spark):
     )
 
 
+
+def test_trim_divergence_excluded_by_construction(spark):
+    """Cross-engine ``trim`` safety, the sibling of the ``lower`` case.
+
+    DuckDB's ``trim`` strips the Unicode space separators (U+00A0,
+    U+2000-U+200A, U+3000, ...) while Spark's ``trim`` and the kernels'
+    ``strip(" ")`` strip only U+0020, so an oracle that trims a text or a
+    line (``_TOKS``, ``_FP``, the Gopher and lang mirrors) would diverge
+    on one that starts or ends with such a character.  The contract
+    EXCLUDES them from oracle inputs: this test computes the divergent
+    set from the live engines and asserts that no text and no line of
+    the sf0.01 tables or the synthetic corpus starts or ends with one."""
+    import duckdb
+
+    chars = [chr(c) for c in range(1, 0x10000) if not 0xD800 <= c <= 0xDFFF]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT * FROM (SELECT unnest(?) AS ch)", [chars]
+    )
+    duck = {
+        ch for (ch,) in con.execute(
+            "SELECT ch FROM t WHERE trim(ch || 'a' || ch) = 'a'"
+        ).fetchall()
+    }
+    sdf = spark.createDataFrame([(c,) for c in sorted(duck)], "ch string")
+    divergent = {
+        r["ch"] for r in sdf.where(F.expr("trim(ch || 'a' || ch) <> 'a'")).collect()
+    }
+    assert divergent == duck - {" "}
+    assert {"\u00a0", "\u2009", "\u3000"} <= divergent
+
+    def edges(text):
+        for s in [text, *text.split("\n")]:
+            if s:
+                yield s[0]
+                yield s[-1]
+
+    texts = [
+        r["text"] for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("text").collect() if r["text"] is not None
+    ]
+    assert not any(ch in divergent for t in texts for ch in edges(t))
+
+    from doctor_spark.corpus import generate_pages
+
+    assert not any(
+        ch in divergent for p in generate_pages(0, 300) for ch in edges(p["text"])
+    )
+
 ADVERSARIAL_QUERIES = [
     "repetition_gopher", "gopher_quality", "token_stats", "fingerprint",
     "line_dedup", "pii_scrub", "text_quality", "dedup_simhash",

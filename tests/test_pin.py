@@ -15,7 +15,10 @@ The killed executor is the one holding the blocks of a bare
 holder.  ``killExecutor`` also lowers the requested executor count, so
 the executor is not replaced.  The pagerank process also checks that an
 ``observe()`` on a frame fills from the reliable pin's job, which
-``duplicate_components`` relies on.
+``duplicate_components`` relies on, and that once those frames are
+garbage-collected the checkpoint directory holds fewer ``rdd-*``
+directories than there were pins (``get_spark`` turns on Spark's
+checkpoint cleaning).
 """
 
 import json
@@ -102,6 +105,32 @@ def _killing_pin(spark, pin, at: int, report: dict):
     return patched
 
 
+def _counting(module, counter: list):
+    """Wrap ``module.pin`` so each call adds one to ``counter[0]``."""
+    pin = module.pin
+
+    def counted(df):
+        counter[0] += 1
+        return pin(df)
+
+    module.pin = counted
+
+
+def _cleaned(spark, checkpoints: Path, n_pins: int) -> bool:
+    """Whether, after Python and JVM garbage collection, the checkpoint
+    directory drops below one ``rdd-*`` directory per pin within 60 s."""
+    import gc
+
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.java.lang.System.gc()
+        if len(list(checkpoints.glob("*/rdd-*"))) < n_pins:
+            return True
+        time.sleep(1)
+    return False
+
+
 def _pagerank(spark, report):
     from pyspark.sql import functions as F
 
@@ -179,8 +208,14 @@ def _main(scenario: str, tmp: Path) -> dict:
             return {"skip": "local-cluster[2,1,1024] registered fewer than 2 executors in 90 s"}
         report = {"killed": False, "bare_pin_lost": False}
         if scenario == "pagerank":
+            from doctor_spark.operators import dedup, graph
+
+            pins = [0]
+            _counting(dedup, pins)
+            _counting(graph, pins)
             report["observed"] = _components(spark)
             report["same"] = _pagerank(spark, report)
+            report["cleaned"] = _cleaned(spark, tmp / "checkpoints", pins[0])
         else:
             report["same"] = _pipeline(spark, report, tmp)
         return report

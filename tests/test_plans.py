@@ -83,11 +83,23 @@ def test_output_partition_pruning(spark, tmp_path_factory):
     assert one_day.count() > 0
 
 
+def _duck_documents(rows, sql):
+    """Rows of ``sql`` run by DuckDB over a ``documents(doc_id, text)``
+    table holding ``rows``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return con.sql(sql).fetchall()
+
+
 def test_minhash_null_band_keys(spark):
-    """Sub-shingle-length docs must get NULL band keys (not a shared
+    """Sub-shingle-length docs must get no band keys (not a shared
     md5('') bucket) and produce zero candidate pairs."""
     from doctor_spark.operators.dedup import (
-        minhash_band_keys,
+        DEFAULT_SEEDS,
+        _minhash_bands_udf,
         minhash_candidate_pairs,
     )
 
@@ -95,41 +107,46 @@ def test_minhash_null_band_keys(spark):
         [(1, "a b"), (2, "x"), (3, ""), (4, "one two three four five")],
         "doc_id long, text string",
     )
-    bands = minhash_band_keys(df).select("doc_id", "band_0").collect()
-    keys = {r.doc_id: r.band_0 for r in bands}
-    assert keys[1] is None and keys[2] is None and keys[3] is None
-    assert keys[4] is not None
+    udf = _minhash_bands_udf(DEFAULT_SEEDS, 2)
+    got = {
+        r.doc_id: r.bands
+        for r in df.select("doc_id", udf(F.col("text")).alias("bands")).collect()
+    }
+    assert got[1] == got[2] == got[3] == []
+    assert len(got[4]) == 2
     assert minhash_candidate_pairs(df).count() == 0
 
 
-def test_minhash_udf_tokens_match_jvm_on_unicode_ws(spark):
-    """The Arrow band kernel must tokenize exactly like the JVM tokens()
-    path (Java \\s = ASCII): NBSP / thin-space / \\x85 are NOT separators;
-    tab/newline are.  Regression for the python str.split() divergence."""
-    from doctor_spark.operators.dedup import minhash_band_keys, _minhash_bands_udf
-    from pyspark.sql import functions as F
+def test_minhash_udf_tokens_match_oracle_on_unicode_ws(spark):
+    """The Arrow band kernel must tokenize exactly like the DuckDB oracle
+    (Java \\s = ASCII): NBSP / thin-space / \\x85 are NOT separators;
+    tab and padding spaces are.  Every text gets an ASCII-space twin and
+    the pairs must equal the oracle's.  The twins of the tab and padded
+    texts share every band; a text whose words are joined ONLY by NBSP,
+    thin space or NEL is one token (no shingle, no pair) — a python
+    str.split() tokenizer would pair it with its twin."""
+    from doctor_spark.operators.dedup import minhash_candidate_pairs
+    from doctor_spark.queries.dedup import _minhash_sql
 
+    words = "alpha beta gamma delta epsilon".split()
     texts = [
-        "alpha beta gamma delta epsilon",      # NBSP inside a token
-        "one two three four five six",          # thin space
+        "alpha\u00a0beta gamma delta epsilon",      # NBSP inside a token
+        "one\u2009two three four five six",          # thin space
         "line\x85break word word2 word3 word4",      # NEL
         "tab\tsplit works here fine ok",             # real separator
         " leading and trailing  spaces padded ok ",
+        "\u00a0".join(words),
+        "\u2009".join(words),
+        "\x85".join(words),
     ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    jvm = minhash_band_keys(df).select("doc_id", "band_0", "band_1")
-    jvm_rows = {r.doc_id: (r.band_0, r.band_1) for r in jvm.collect()}
-
-    udf = _minhash_bands_udf(("s0", "s1", "s2", "s3"), 2)
-    got = df.select("doc_id", udf(F.col("text")).alias("bands")).collect()
-    for r in got:
-        expect = jvm_rows[r.doc_id]
-        if expect[0] is None:
-            assert r.bands == []
-        else:
-            assert tuple(r.bands) == expect, r.doc_id
+    rows = [(i, t) for i, t in enumerate(texts)]
+    rows += [(10 + i, " ".join(t.split())) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.id_a, r.id_b) for r in minhash_candidate_pairs(df).collect()}
+    oracle = set(_duck_documents(rows, _minhash_sql()))
+    assert got == oracle, (got, oracle)
+    assert {(3, 13), (4, 14)} <= got
+    assert not got & {(5, 15), (6, 16), (7, 17)}, got
 
 
 def test_minhash_production_width_plan_and_fanout(spark):
@@ -185,15 +202,14 @@ def test_ngram_jaccard_shingle_df_cap(spark):
     assert elapsed < 120, f"quadratic bucket suspected: {elapsed:.0f}s"
 
 
-def test_ngram_shingle_engines_bit_identical(spark):
-    """The pure-Catalyst shingle engine (``engine="expr"``) must produce
-    the exact pair set of the hybrid Arrow kernel — the cross-engine
-    differential that pins the kernel's tokenization/hash semantics to
-    Spark's own expression evaluator (in addition to the DuckDB oracle).
-    Perf note: expr measured 4-8x SLOWER at sf0.1 (interpreted
-    higher-order lambdas); it is a validator, not an option — see
-    ngram_jaccard_pairs docs."""
+def test_ngram_jaccard_matches_oracle(spark):
+    """The hybrid shingle kernel (Arrow shingle strings, JVM md5) must
+    give the DuckDB oracle's exact pair set on hostile whitespace, case,
+    short, empty, duplicate and non-ASCII documents — the differential
+    that pins its tokenization and hash to an engine-independent
+    reference."""
     from doctor_spark.operators.dedup import ngram_jaccard_pairs
+    from doctor_spark.queries.dedup import _jaccard_sql
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -205,12 +221,12 @@ def test_ngram_shingle_engines_bit_identical(spark):
         (6, "unicode café naïve résumé tokens plus filler words"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {}
-    for engine in ("expr", "hybrid"):
-        pairs = ngram_jaccard_pairs(df, threshold=0.1, engine=engine).collect()
-        got[engine] = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs)
-    assert got["expr"] == got["hybrid"], got
-    assert len(got["expr"]) >= 2  # (0,1) near-dup and (0,5) exact
+    got = sorted(
+        (r.id_a, r.id_b, r.jaccard)
+        for r in ngram_jaccard_pairs(df, threshold=0.1).collect()
+    )
+    oracle = sorted(_duck_documents(rows, _jaccard_sql(threshold=0.1)))
+    assert got == oracle == [(0, 1, 0.75), (0, 5, 1.0), (1, 5, 0.75)], (got, oracle)
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -428,26 +444,57 @@ def test_winnowing_guarantee(spark):
 
 def test_lsh_bucket_kernel_matches_expression_spec(spark):
     """The vectorized Arrow bucket kernel must produce bit-identical
-    buckets to the expression-form spec (with_lsh_bucket) for every
-    (row, table)."""
-    from pyspark.sql import functions as F
+    buckets to the DuckDB oracle's bucket expression
+    (``queries/similarity.py::_bucket_expr``) for every (row, table) of
+    the embeddings table, plus crafted rows whose first plane dot
+    cancels between two huge components: their bucket flips with the
+    add order, so they pin the kernel's component-by-component fold."""
+    import duckdb
+    import numpy as np
 
-    from doctor_spark.operators.similarity import (
-        stacked_lsh_buckets,
-        with_lsh_bucket,
+    from doctor_spark.operators.similarity import _hyperplane, stacked_lsh_buckets
+    from doctor_spark.queries.similarity import _bucket_expr
+
+    plane = _hyperplane(64, 0)
+    rng = np.random.default_rng(0)
+    crafted = []
+    for _ in range(200):
+        v = [float(x) for x in rng.normal(size=64) * 1e-3]
+        v[0] = 1e17
+        v[1] = -(v[0] * plane[0]) / plane[1]
+        fwd = rev = 0.0
+        for x, c in zip(v, plane):
+            fwd += x * c
+        for x, c in zip(v[::-1], plane[::-1]):
+            rev += x * c
+        if (fwd >= 0) != (rev >= 0):
+            crafted.append((10**6 + len(crafted), v))
+    assert crafted
+
+    path = f"{SF}/embeddings.parquet"
+    emb = spark.read.parquet(path).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    ).unionByName(
+        spark.createDataFrame(crafted, "vec_id long, embedding array<double>")
     )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     got = {
         (r.id, r.table_no): r.bucket
         for r in stacked_lsh_buckets(emb, dim=64, n_planes=4, n_tables=3).collect()
     }
-    ref = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    for t in range(3):
-        ref = with_lsh_bucket(ref, 64, 4, "v", table_no=t, out_col=f"b{t}")
-    for r in ref.collect():
-        for t in range(3):
-            assert got[(r.vec_id, t)] == r[f"b{t}"], (r.vec_id, t)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE TABLE e AS SELECT vec_id, embedding::DOUBLE[] AS v "
+        f"FROM read_parquet('{path}')"
+    )
+    con.executemany("INSERT INTO e VALUES (?, ?)", crafted)
+    buckets = ", ".join(_bucket_expr("v", t, 4, 64) for t in range(3))
+    want = {
+        (r[0], t): r[1 + t]
+        for r in con.execute(f"SELECT vec_id, {buckets} FROM e").fetchall()
+        for t in range(3)
+    }
+    assert len(want) == 3 * emb.count()
+    assert got == want
 
 
 def test_strip_common_lines_behavior_and_plan(spark):
